@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Native Catalyst expression: |A ∩ B| for two SORTED (ascending),
   * duplicate-free, null-free int arrays — the per-pair kernel of the
@@ -24,11 +25,29 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * extension use [[TextFns.sortedIntersectCountIn]], which falls back
   * to `size(array_intersect(a, b))` (identical by the argument above).
   *
-  * Caller contract (not checked): elements sorted ascending, distinct,
-  * no null elements. Only top-level null arrays null out the result.
+  * Both arguments must be `array<int>`; any other type fails at analysis
+  * (the merge scan reads elements with getInt, so an `array<string>` or
+  * `array<bigint>` would otherwise count garbage). Caller contract (not
+  * checked): elements sorted ascending, distinct, no null elements. Only
+  * top-level null arrays null out the result.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
+
+  private def intArray(e: Expression): Boolean = e.dataType match {
+    case ArrayType(IntegerType, _) => true
+    case _                         => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).zip(Seq("first", "second")).collectFirst {
+      case (e, i) if !intArray(e) =>
+        TypeCheckResult.DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+          "paramIndex" -> i,
+          "requiredType" -> "\"ARRAY<INT>\"",
+          "inputSql" -> s"\"${e.sql}\"",
+          "inputType" -> s"\"${e.dataType.sql}\""))
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
 
   override def dataType: DataType = IntegerType
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.spark.Checkpoints
@@ -245,12 +245,19 @@ object ConnectedComponents {
 
     // convergence: edge-set checksum unchanged between consecutive rounds
     // (one aggregate per round — far cheaper than except/except at
-    // scale). bit_xor is safe: round outputs are distinct by
-    // construction and xor cannot overflow under ANSI.
-    def checksum(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    // scale), observed on the round's own cut so it costs no job of its
+    // own. bit_xor is safe: round outputs are distinct by construction
+    // and xor cannot overflow under ANSI.
+    def checksummedCut(df: DataFrame): (Checkpoints.Cut, (Long, Long)) = {
+      val o = Observation()
+      val c = Checkpoints.cut(df.observe(o, count(lit(1)).as("n"),
+        expr("bit_xor(xxhash64(src, dst))").as("x")))
+      // an empty round leaves x null, or the whole observation empty
+      // when the planner proves the round empty and skips the node
+      val m = o.get
+      def get(k: String) =
+        m.get(k).flatMap(Option(_)).fold(0L)(_.asInstanceOf[Long])
+      (c, (get("n"), get("x")))
     }
 
     // one large-star + small-star round (Kiveris et al. alternation).
@@ -383,8 +390,10 @@ object ConnectedComponents {
     if (roundDir.isDefined) {
       while (roundComplete(iteration + 1)) iteration += 1
       if (iteration > 0) {
-        e = Checkpoints.cut(spark.read.parquet(roundPath(iteration)))
-        prevChecksum = Some(checksum(e.df))
+        val (resumed, sum) =
+          checksummedCut(spark.read.parquet(roundPath(iteration)))
+        e = resumed
+        prevChecksum = Some(sum)
         if (timing) System.err.println(
           s"[cc-round] resumed from persisted round $iteration")
       }
@@ -401,8 +410,7 @@ object ConnectedComponents {
         orient(edges.select(key(col(srcCol)).as("src"),
           key(col(dstCol)).as("dst")))
       else e.df
-      val next = Checkpoints.cut(round(cur))
-      val nextChecksum = checksum(next.df)
+      val (next, nextChecksum) = checksummedCut(round(cur))
       converged = prevChecksum.contains(nextChecksum)
       prevChecksum = Some(nextChecksum)
       if (e != null) e.release()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{FastHash, Kernels}
@@ -74,7 +74,11 @@ final case class DedupConfig(
     s"substringMinLen ($substringMinLen) must be 0 (off) or >= shingleN ($shingleN)")
 }
 
-/** Per-stage counters, written to the metrics table by the runner. */
+/** Per-stage counters of one [[DedupPipeline.run]] pass, each collected by
+  * `Dataset.observe` on a job the pass runs anyway. Like any accumulator,
+  * a count can include a stage's rows twice if that stage is re-run after
+  * a lost executor.
+  */
 final case class DedupMetrics(
     nRows: Long,
     nExactGroups: Long,
@@ -124,7 +128,10 @@ object DedupPipeline {
 
   /** Run the full pipeline.
     *
-    * @param df    input with an id column (long) and a text column
+    * @param df    input with an id column (long or 128-bit binary) and a
+    *              text column. Ids must be unique: `nClusters` counts the
+    *              assignment rows whose cluster is their own id, so a
+    *              duplicated id would count once per copy.
     * @return (assignments DataFrame(id, cluster), metrics)
     *         cluster = min id of the connected component.
     */
@@ -134,14 +141,15 @@ object DedupPipeline {
       idCol: String,
       textCol: String,
       cfg: DedupConfig = DedupConfig(),
-      alphabet: Alphabet = Alphabet.test,
-      collectMetrics: Boolean = true
+      alphabet: Alphabet = Alphabet.test
   ): (DataFrame, DedupMetrics) = {
     val K = new Kernels(alphabet)
-    // each metric is a separate driver action (a full job); production /
-    // benchmark runs skip them — the checkpointed runner (ClipDedup)
-    // accounts rows per stage from the written tables instead
-    def metric(f: => Long): Long = if (collectMetrics) f else -1L
+    // every metric is a Dataset.observe counter on a plan this pass runs
+    // anyway (the eager cuts, the hot-key count agg, the candidate
+    // dedup), filled by that plan's own job: no metric costs a job of its
+    // own (except nDroppedBuckets on inputs without candidate buckets)
+    val Seq(rowsObs, groupsObs, droppedObs, candObs, edgesObs, clustersObs) =
+      Seq.fill(6)(Observation())
     // phase wall-times to stderr when SPARK_GRAFT_STAGE_TIMING is set —
     // the strong-scaling diagnosis tool (which phase is the serial floor?)
     val timing = sys.env.contains("SPARK_GRAFT_STAGE_TIMING")
@@ -170,34 +178,30 @@ object DedupPipeline {
     // kernel needs from the original text, so dropping text here shrinks
     // the materialized universe and the sketch shuffle by the full text
     // payload per row
-    val rowsCut = graft.spark.Checkpoints.cut(
+    val rowsCut = graft.spark.Checkpoints.cut(observeCount(
       df.select(idExpr.as("id"),
         col(textCol).cast("string").as("text"))
         .withColumn("norm", K.normKey(col("text")))
         .withColumn("nh", nhExpr(col("norm")))
         .withColumn("lc", K.caseClass(col("text")))
-        .drop("text"))
+        .drop("text"), Some(rowsObs)))
     val rows = rowsCut.df // read twice: exact stage + rep election
-    // unconditional cheap count over the just-materialized checkpoint
-    // blocks: sizes the verify-join partitioning below (memory-derived,
-    // see verifyParts). Reused as the nRows metric.
-    val nRowsAlways = rows.count()
-    val nRows = if (collectMetrics) nRowsAlways else -1L
+    // filled by the eager cut above; sizes the verify-join partitioning
+    // below (memory-derived, see verifyParts)
+    val nRows = counted(rowsObs).getOrElse(0L)
 
     // ---- 2. exact duplicates (hash group; no verification needed) ----
     val exactEdges = exactStarEdges(rows)
-    val nExactGroups = metric(exactEdges.select("src").distinct().count())
 
     // ---- 1b. sketch DISTINCT norms only (see [[sketchBase]]) ----
-    val baseCut = graft.spark.Checkpoints.cut(sketchBase(rows, cfg, K))
+    val baseCut = graft.spark.Checkpoints.cut(
+      sketchBase(rows, cfg, K, exactGroups = Some(groupsObs)))
     val base = baseCut.df // sketches reused by three candidate paths
     mark("sketch")
 
     // ---- 3+4+4b. candidate generation (shared with ClipDedup — see
     //      [[candidatePairs]]) ----
-    val nDroppedBuckets = metric(candidateKeys(base, cfg).groupBy("k")
-      .agg(count(lit(1)).as("n")).filter(col("n") > cfg.bucketCap).count())
-    val allPairs = candidatePairs(base, cfg)
+    val allPairs = candidatePairs(base, cfg, dropped = Some(droppedObs))
 
     // ---- 4c. substring-containment pass (see [[containmentEdges]]) ----
     val substringEdges: Option[DataFrame] =
@@ -226,21 +230,27 @@ object DedupPipeline {
     // leaves straggler tasks on the last wave).
     val dp = spark.sparkContext.defaultParallelism
     val verifyParts = (dp * math.max(1L,
-      (nRowsAlways + verifyBuildRows * dp - 1) / (verifyBuildRows * dp))).toInt
-    val candidates = allPairs.repartition(verifyParts, col("a"))
-      .dropDuplicates("a", "b")
-    val nCandidatePairs = metric(candidates.count())
+      (nRows + verifyBuildRows * dp - 1) / (verifyBuildRows * dp))).toInt
+    // counted in flight, not cut: a checkpoint here would split the
+    // fused dedup + verify-join exchange
+    val candidates = observeCount(allPairs.repartition(verifyParts, col("a"))
+      .dropDuplicates("a", "b"), Some(candObs))
 
     // ---- 5. verification (see [[verifyPairs]]) ----
     val verifiedEdges = verifyPairs(candidates, base, cfg, K,
       numParts = Some(verifyParts))
 
     // always checkpoint edges: CC iterates over them
-    val allEdgesCut = graft.spark.Checkpoints.cut(substringEdges
-      .foldLeft(verifiedEdges.union(exactEdges))(_ union _))
+    val allEdgesCut = graft.spark.Checkpoints.cut(observeCount(substringEdges
+      .foldLeft(verifiedEdges.union(exactEdges))(_ union _), Some(edgesObs)))
     val allEdges = allEdgesCut.df
     mark("candidates+verify")
-    val nVerifiedEdges = metric(allEdges.count())
+    // adaptive execution skips the hot-key broadcast, and its observation
+    // with it, when no bucket has 2..cap members (the bucket join is then
+    // provably empty); only in that case is the overflow counted by a job
+    val nDroppedBuckets = counted(droppedObs).getOrElse(
+      candidateKeys(base, cfg).groupBy("k").count()
+        .filter(col("count") > cfg.bucketCap).count())
 
     // ---- 6. clustering ----
     // withAllNodes=false: the left-join below supplies the full row
@@ -255,23 +265,46 @@ object DedupPipeline {
     // blocks — see Checkpoints)
     // SHUFFLE_HASH: both sides are stat-less checkpoints and planned
     // as a SortMergeJoin — at 3M rows that is two full sorts for a join
-    // a hash build does sort-free
-    val assignments = graft.spark.Checkpoints.cut(rows.select(col("id"))
-      .join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
-        Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("cluster"))).df
+    // a hash build does sort-free.
+    // nClusters: cluster is the component's min id, so exactly one row
+    // per cluster has cluster = id (given unique ids)
+    val assignments = graft.spark.Checkpoints.cut(observeCount(
+      rows.select(col("id"))
+        .join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
+          Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("component"), col("id")).as("cluster")),
+      Some(clustersObs), col("cluster") === col("id"))).df
     rowsCut.release()
     baseCut.release()
     allEdgesCut.release()
     cc.release()
     mark("finalize")
 
-    val nClusters = metric(assignments.select("cluster").distinct().count())
+    // every other observed node runs unless its input is empty (the
+    // candidate dedup sits in a join skipped only when no pairs exist),
+    // so a count the job never filled is 0
+    def count0(o: Observation) = counted(o).getOrElse(0L)
     (assignments,
-      DedupMetrics(nRows, nExactGroups, nCandidatePairs, nDroppedBuckets,
-        nVerifiedEdges, nClusters))
+      DedupMetrics(nRows, count0(groupsObs), count0(candObs),
+        nDroppedBuckets, count0(edgesObs), count0(clustersObs)))
   }
+
+  /** `df` with `obs` (when given) counting the rows where `cond` holds.
+    * The count is collected by whichever job runs `df`, so it costs no
+    * job of its own. Read it with [[counted]].
+    */
+  private def observeCount(df: DataFrame, obs: Option[Observation],
+      cond: Column = lit(true)): DataFrame =
+    obs.fold(df)(o => df.observe(o, count(when(cond, 1)).as("n")))
+
+  /** The count an [[observeCount]] observation collected. Blocks until
+    * the job that runs the observed plan has finished; None if that job
+    * skipped the observed node (adaptive execution drops a join input
+    * once the join is proven empty).
+    */
+  private def counted(o: Observation): Option[Long] =
+    o.get.get("n").map(_.asInstanceOf[Long])
 
   // ------------------------------------------------------------------
   // Shared stage builders (used by both run() and the checkpointed
@@ -290,11 +323,17 @@ object DedupPipeline {
     * the first codepoint; the min-id representative's lc is the same
     * either way because the struct min short-circuits at the unique id).
     * Output base: (id, norm, lc, len, sim, bands, anakey).
+    *
+    * @param exactGroups observation that counts the exact-duplicate
+    *        groups (norm hashes shared by more than one row) while the
+    *        group-by runs
     */
-  def sketchBase(rows: DataFrame, cfg: DedupConfig, K: Kernels): DataFrame =
-    rows
+  def sketchBase(rows: DataFrame, cfg: DedupConfig, K: Kernels,
+      exactGroups: Option[Observation] = None): DataFrame =
+    observeCount(rows
       .groupBy("nh")
-      .agg(min(struct(col("id"), col("norm"), col("lc"))).as("r"))
+      .agg(min(struct(col("id"), col("norm"), col("lc"))).as("r"),
+        count(lit(1)).as("m")), exactGroups, col("m") > 1)
       .select(col("r.id").as("id"), col("r.norm").as("norm"),
         col("r.lc").as("lc"))
       .withColumn("sk", FastHash.sketchFull(col("norm"), cfg.shingleN,
@@ -364,9 +403,14 @@ object DedupPipeline {
     *     over-generation without it) before the cross-path distinct, so
     *     the kernel scores each surviving pair exactly once no matter
     *     how many bands it collided in.
+    *
+    * @param dropped observation that counts the buckets over the cap
+    *        (the documented recall loss) on the count aggregation
     */
-  def pairsFromKeys(keyed: DataFrame, cfg: DedupConfig): DataFrame = {
-    val hot = keyed.groupBy("k").agg(count(lit(1)).as("n"))
+  def pairsFromKeys(keyed: DataFrame, cfg: DedupConfig,
+      dropped: Option[Observation] = None): DataFrame = {
+    val hot = observeCount(keyed.groupBy("k").agg(count(lit(1)).as("n")),
+        dropped, col("n") > cfg.bucketCap)
       .filter(col("n").between(2, cfg.bucketCap))
       .select(col("k"))
     keyed.join(broadcast(hot), Seq("k"))
@@ -380,8 +424,9 @@ object DedupPipeline {
   }
 
   /** Candidate pairs from a sketched base — all three paths, one pass. */
-  def candidatePairs(base: DataFrame, cfg: DedupConfig): DataFrame =
-    pairsFromKeys(candidateKeys(base, cfg), cfg)
+  def candidatePairs(base: DataFrame, cfg: DedupConfig,
+      dropped: Option[Observation] = None): DataFrame =
+    pairsFromKeys(candidateKeys(base, cfg), cfg, dropped)
 
   /** Per-host containment verification: one pass decides ALL of a host's
     * candidate probes. When the anchor join has funneled enough probes

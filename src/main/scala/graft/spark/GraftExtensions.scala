@@ -3,7 +3,8 @@ package graft.spark
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType,
+  NullType, ShortType}
 
 import graft.functions.{CosineSim, PairAccept, PairScoreMax, SortedIntersectCount}
 
@@ -90,12 +91,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           s"sorted_intersect_count takes 2 arguments, got ${children.length}")
-        // input coercion at the registration seam (the expression
-        // assumes int arrays; see the caller contract there)
-        def toInts(e: Expression): Expression =
-          if (e.dataType.isInstanceOf[ArrayType] &&
-              e.dataType.asInstanceOf[ArrayType].elementType == IntegerType) e
-          else Cast(e, ArrayType(IntegerType))
+        // input coercion at the registration seam: lossless widening
+        // only (tinyint/smallint elements, an untyped NULL); any other
+        // type reaches the expression's input check and fails analysis
+        // instead of casting strings or bigints into wrong counts
+        def toInts(e: Expression): Expression = e.dataType match {
+          case ArrayType(ByteType | ShortType, _) | NullType =>
+            Cast(e, ArrayType(IntegerType))
+          case _ => e
+        }
         SortedIntersectCount(toInts(children.head), toInts(children(1)))
       }))
   }

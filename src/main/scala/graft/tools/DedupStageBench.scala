@@ -3,11 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DedupConfig, DedupPipeline}
+import graft.operators.{DedupConfig, DedupMetrics, DedupPipeline}
 import graft.sources.ClipGen
 
 /** Strong-scaling diagnosis harness: run the dedup pipeline once at a
   * given core count with per-phase timing (SPARK_GRAFT_STAGE_TIMING).
+  * Every timed rep also returns the pipeline's stage counters, which
+  * `Dataset.observe` collects on the jobs the pass already runs; the
+  * RESULT line reports the last rep's as the guard values.
   * Usage: runMain graft.tools.DedupStageBench <cpus> <nClusters>
   */
 object DedupStageBench {
@@ -146,8 +149,7 @@ object DedupStageBench {
         if (args.length > 2) args(2).toInt else math.max(300, n / 8)
       val warm = ClipGen.transcriptTable(spark, 1L, warmClusters)
         .select(xxhash64(col("clip_id")).as("id"), col("transcript"))
-      DedupPipeline.run(spark, warm, "id", "transcript", DedupConfig(),
-        collectMetrics = false)._1
+      DedupPipeline.run(spark, warm, "id", "transcript", DedupConfig())._1
         .write.format("noop").mode("overwrite").save()
       val clips = ClipGen.transcriptTable(spark, 42L, n)
         .select(xxhash64(col("clip_id")).as("id"), col("transcript")).cache()
@@ -158,29 +160,23 @@ object DedupStageBench {
         math.min(maxReps, sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_REPS", "2").toInt)
       val deadlineSec = sys.env
         .getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "1e9").toDouble
+      // the guard counters (dropped buckets, candidate/verified pairs,
+      // clusters) are observed by the pass's own jobs, so every timed
+      // rep carries them at no cost; the last rep's are reported
+      var metrics: DedupMetrics = null
       val (times, calibs) =
         timedReps(minReps, maxReps, deadlineSec, "dedup-phase") { rep =>
           val t0 = System.nanoTime()
-          val (assignments, _) = DedupPipeline.run(spark, clips, "id",
-            "transcript", DedupConfig(), collectMetrics = false)
+          val (assignments, m) = DedupPipeline.run(spark, clips, "id",
+            "transcript", DedupConfig())
           assignments.write.format("noop").mode("overwrite").save()
+          metrics = m
           val dt = (System.nanoTime() - t0) / 1e9
           System.err.println(
             f"[dedup-phase] rep$rep $dt%.2fs clips=$total cpus=$cpus")
           dt
         }
-      // optional UNTIMED metrics pass (guard counters for the BENCH
-      // artifact: dropped buckets, candidate/verified pairs) — metric
-      // counts are extra driver actions, so they never run inside a
-      // timed rep
-      val guards =
-        if (sys.env.contains("SPARK_GRAFT_STAGE_METRICS")) {
-          val (_, m) = DedupPipeline.run(spark, clips, "id", "transcript",
-            DedupConfig(), collectMetrics = true)
-          System.err.println(s"[dedup-phase] $m")
-          s" dropped=${m.nDroppedBuckets} cand=${m.nCandidatePairs}" +
-            s" verified=${m.nVerifiedEdges} clusters=${m.nClusters}"
-        } else ""
+      System.err.println(s"[dedup-phase] $metrics")
       System.err.println(
         f"[dedup-phase] TOTAL ${times.min}%.2fs clips=$total cpus=$cpus " +
           s"calib=${calibs.map(c => f"$c%.2f").mkString("/")}")
@@ -188,7 +184,9 @@ object DedupStageBench {
       println(f"RESULT dedup min=${times.min}%.3f " +
         s"reps=${times.map(t => f"$t%.3f").mkString(",")} " +
         s"calib=${calibs.map(c => f"$c%.3f").mkString(",")} " +
-        s"clips=$total cpus=$cpus" + guards)
+        s"clips=$total cpus=$cpus" +
+        s" dropped=${metrics.nDroppedBuckets} cand=${metrics.nCandidatePairs}" +
+        s" verified=${metrics.nVerifiedEdges} clusters=${metrics.nClusters}")
     } finally spark.stop()
   }
 }

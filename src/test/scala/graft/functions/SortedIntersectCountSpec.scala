@@ -79,4 +79,19 @@ class SortedIntersectCountSpec extends SparkSpecBase {
       assert(withCodegen.toSeq == interpreted.toSeq)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
   }
+
+  test("non array<int> arguments fail at analysis") {
+    Seq("sorted_intersect_count(array('a'), array('b'))",
+      "sorted_intersect_count(array(1L), array(2L))",
+      "sorted_intersect_count(array(1), 'x')").foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $q").collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    // lossless widening still resolves
+    assert(spark.sql("SELECT sorted_intersect_count(array(1, 2), " +
+      "array(CAST(2 AS SMALLINT), CAST(3 AS SMALLINT)))").head().getInt(0) == 1)
+    assert(spark.sql("SELECT sorted_intersect_count(NULL, array(1))")
+      .head().isNullAt(0))
+  }
 }

@@ -144,12 +144,12 @@ class DedupPipelineSpec extends SparkSpecBase {
     ).toDF("id", "text")
     // off (default): the big length gap defeats the DL kernel -> no link
     val (offAssign, _) = DedupPipeline.run(spark, docs, "id", "text",
-      DedupConfig(), collectMetrics = false)
+      DedupConfig())
     val off = offAssign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(off(2L) != off(1L))
     // on: min-shingle anchor meets the pair, instr verifies containment
     val (onAssign, _) = DedupPipeline.run(spark, docs, "id", "text",
-      DedupConfig(substringMinLen = 12), collectMetrics = false)
+      DedupConfig(substringMinLen = 12))
     val on = onAssign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(on(2L) == on(1L))
     assert(on(3L) != on(1L))
@@ -191,6 +191,74 @@ class DedupPipelineSpec extends SparkSpecBase {
     } yield (math.min(a, b), math.max(a, b))).toSet
     assert(want.nonEmpty && want.size >= 9, s"fixture too weak: $want")
     assert(got == want)
+  }
+
+  test("observed metrics equal counts computed with plain DataFrame jobs") {
+    import org.apache.spark.sql.functions._
+    // one fixture with every counter live: exact-duplicate texts, a
+    // family of one-edit variants whose shared band keys overflow a
+    // small bucketCap, a containment pair for the substring pass, and
+    // 128-bit binary ids
+    val family = (1 to 6).map(i =>
+      s"the harbor lights flicker over the quiet water number $i")
+    val texts = corpus.map(_.text) ++ corpus.take(8).map(_.text) ++
+      family ++ Seq(
+        "a long transcript about lighthouses along the northern coast",
+        "lighthouses along the northern")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("n", "text")
+      .select(unhex(lpad(hex(col("n")), 32, "0")).as("id"), col("text"))
+    val cfg2 = DedupConfig(bucketCap = 3, substringMinLen = 12)
+    val (assign, m) = DedupPipeline.run(spark, df, "id", "text", cfg2)
+
+    val K = new graft.functions.Kernels(Alphabet.test)
+    val rows = df.select(col("id"), col("text"))
+      .withColumn("norm", K.normKey(col("text")))
+      .withColumn("nh", unhex(md5(col("norm"))))
+      .withColumn("lc", K.caseClass(col("text")))
+      .drop("text")
+    val base = DedupPipeline.sketchBase(rows, cfg2, K)
+    val candidates = DedupPipeline.candidatePairs(base, cfg2).distinct()
+    val edges = DedupPipeline.verifyPairs(candidates, base, cfg2, K)
+      .union(DedupPipeline.exactStarEdges(rows))
+      .union(DedupPipeline.containmentEdges(base, cfg2))
+    val want = DedupMetrics(
+      nRows = df.count(),
+      nExactGroups = rows.groupBy("nh").count()
+        .filter(col("count") > 1).count(),
+      nCandidatePairs = candidates.count(),
+      nDroppedBuckets = DedupPipeline.candidateKeys(base, cfg2)
+        .groupBy("k").count().filter(col("count") > cfg2.bucketCap).count(),
+      nVerifiedEdges = edges.count(),
+      nClusters = assign.select("cluster").distinct().count())
+    assert(m == want)
+    assert(m.nExactGroups > 0 && m.nDroppedBuckets > 0, s"fixture too weak: $m")
+    assert(assign.count() == m.nRows)
+    // fresh observations per call: a second pass reports the same counts
+    assert(DedupPipeline.run(spark, df, "id", "text", cfg2)._2 == m)
+  }
+
+  test("inputs with no candidate buckets still count every metric") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    // bucketCap = 1 drops every shared bucket: adaptive execution then
+    // skips the empty hot-key broadcast and its observation, yet the
+    // overflow is still counted
+    val docs = ((1 to 5).map(i => (i.toLong, "the same phrase again")) ++
+      Seq((8L, "the quick brown fox jumps over the dog"),
+        (9L, "the quick brown fox jumped over the dog"))).toDF("id", "text")
+    val cfg1 = DedupConfig(bucketCap = 1)
+    val (_, m) = DedupPipeline.run(spark, docs, "id", "text", cfg1)
+    val K = new graft.functions.Kernels(Alphabet.test)
+    val base = DedupPipeline.sketchBase(docs
+      .withColumn("norm", K.normKey(col("text")))
+      .withColumn("nh", xxhash64(col("norm")))
+      .withColumn("lc", K.caseClass(col("text"))), cfg1, K)
+    val dropped = DedupPipeline.candidateKeys(base, cfg1).groupBy("k")
+      .count().filter(col("count") > 1).count()
+    assert(dropped > 0)
+    assert(m == DedupMetrics(7, 1, 0, dropped, 4, 3), m.toString)
+    val (_, empty) = DedupPipeline.run(spark, docs.limit(0), "id", "text")
+    assert(empty == DedupMetrics(0, 0, 0, 0, 0, 0), empty.toString)
   }
 
   test("agrees with the reference-semantics matcher's cluster assignment") {
