@@ -397,7 +397,7 @@ object Queries {
             col("a.source") === col("b.source") &&
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-            T.sortedIntersectCountIn(s)(col("a.sh"), col("b.sh")).as("i"),
+            T.sortedIntersectCount(col("a.sh"), col("b.sh")).as("i"),
             size(col("a.sh")).as("na"), size(col("b.sh")).as("nb"))
           .select(col("a_id"), col("b_id"),
             round(col("i").cast("double") /
@@ -509,7 +509,7 @@ object Queries {
           .join(corpus.select(col("vec_id").as("b_id"), col("emb").as("bemb")),
             Seq("b_id"))
           .select(col("a_id"), col("b_id"),
-            round(T.cosineIn(s)(col("aemb"), col("bemb")), 6).as("cos"))
+            round(T.cosineSim(col("aemb"), col("bemb")), 6).as("cos"))
           .filter(col("cos") >= 0.90)
       },
       Some {
@@ -576,7 +576,7 @@ object Queries {
         val scored = probes.join(e, Seq("bucket"))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            round(T.cosineIn(s)(col("q_emb"), col("emb")), 6).as("cos"))
+            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
         scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
@@ -672,7 +672,7 @@ object Queries {
           .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
         val scored = q.join(e, col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            round(T.cosineIn(s)(col("q_emb"), col("emb")), 6).as("cos"))
+            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
         scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
@@ -1085,7 +1085,7 @@ object Queries {
           .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
         val cellCos = e.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("emb"), col("c_id"),
-            round(T.cosineIn(s)(col("emb"), col("c_emb")), 6).as("ccos"))
+            round(T.cosineSim(col("emb"), col("c_emb")), 6).as("ccos"))
         // ONE ranked pass serves both consumers: rn=1 is exactly the
         // former max_by(struct(ccos, -c_id)) nearest-cell assignment, and
         // rn<=2 the probe cells — sharing the window's exchange means the
@@ -1103,7 +1103,7 @@ object Queries {
         val scored = probes.hint("SHUFFLE_HASH").join(asgn, Seq("c_id"))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            round(T.cosineIn(s)(col("q_emb"), col("emb")), 6).as("cos"))
+            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
         scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
@@ -1161,7 +1161,7 @@ object Queries {
           transform(col("c_emb"), _.cast("double")).as("c_emb"))
         val cellCos = eD.crossJoin(broadcast(cD))
           .select(col("id"), col("emb"), col("c_id"),
-            round(T.cosineIn(s)(col("emb"), col("c_emb")), 6).as("ccos"))
+            round(T.cosineSim(col("emb"), col("c_emb")), 6).as("ccos"))
         // shared ranked pass (see emb_ann_ivf): rn=1 == the former
         // max_by(struct(ccos, -c_id)) assignment; one exchange, one
         // crossJoin+cosine evaluation for both branches
@@ -1176,7 +1176,7 @@ object Queries {
         val scored = probes.hint("SHUFFLE_HASH").join(asgn, Seq("c_id"))
           .filter(col("id") =!= col("q_id"))
           .select(col("q_id"), col("id").as("n_id"),
-            round(T.cosineIn(s)(col("q_emb"), col("emb")), 6).as("cos"))
+            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
         scored.withColumn("rank", row_number().over(w))

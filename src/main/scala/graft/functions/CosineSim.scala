@@ -1,37 +1,42 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over two double-array
   * columns — the hot kernel of the embedding ANN queries.
   *
-  * Spark's higher-order functions (`aggregate`/`zip_with`, the portable
-  * formulation in [[TextFns.cosine]]) are interpreted per element — three
-  * lambda invocations per dimension. This expression participates in
-  * whole-stage codegen (`doGenCode` emits one fused java loop), turning a
-  * 64-dim cosine into 64 straight-line multiply-adds inside the stage's
-  * generated method. Same IEEE operation order as the HOF form (dot and
-  * norms accumulated left-to-right, `dot / (sqrt(na) * sqrt(nb))`), so
-  * results are bit-identical and the DuckDB oracles are unaffected.
+  * Spark's higher-order functions (`aggregate`/`zip_with`) are interpreted
+  * per element — three lambda invocations per dimension. This expression
+  * participates in whole-stage codegen (`doGenCode` emits one fused java
+  * loop), turning a 64-dim cosine into 64 straight-line multiply-adds
+  * inside the stage's generated method. IEEE operation order: dot and
+  * norms accumulated left-to-right, then `dot / (sqrt(na) * sqrt(nb))`
+  * (CosineSimSpec pins it bit-for-bit against a Scala loop).
   *
-  * Registered as SQL function `cosine_sim` by [[graft.spark.GraftExtensions]]
-  * (the public `SparkSessionExtensions` route); callers that cannot assume
-  * the extension use [[TextFns.cosineIn]], which falls back to the HOF
-  * form when the function is not registered in the session.
+  * DataFrame callers build it with [[TextFns.cosineSim]] (native in any
+  * session); [[graft.spark.GraftExtensions]] registers the SQL name
+  * `cosine_sim`, widening other numeric arrays to `array<double>`.
   *
-  * Null elements inside the arrays are not expected (embedding vectors are
-  * dense); only top-level null arrays null out the result.
+  * Both arguments must be `array<double>`; any other type fails at
+  * analysis. Null elements inside the arrays are not expected (embedding
+  * vectors are dense); only top-level null arrays null out the result.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  // Input typing: `ExpectsInputTypes`' AbstractDataType is private[sql],
-  // so coercion is done at registration instead — GraftExtensions wraps
-  // both children in Cast(_, ArrayType(DoubleType)); the expression
-  // itself assumes double-array inputs.
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val doubleArray = (t: DataType) => t match {
+      case ArrayType(DoubleType, _) => true
+      case _                        => false
+    }
+    InputTypes.check((left, "ARRAY<DOUBLE>", doubleArray),
+      (right, "ARRAY<DOUBLE>", doubleArray))
+  }
+
   override def dataType: DataType = DoubleType
 
   override def prettyName: String = "cosine_sim"

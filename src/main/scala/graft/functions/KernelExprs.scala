@@ -1,19 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DoubleType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.kernel.{Distance, Distances, Scoring, Weights}
 
-/** JVM entry point shared by the [[PairScoreMax]] codegen path and its
-  * interpreted eval: the symmetric analiticcl verification score over
-  * precomputed normKey strings + case classes (the exact body of
-  * [[Kernels.pairScoreMaxPre]]'s UDF — bit-identical by construction,
-  * pinned by KernelExprsSpec). NaN encodes null (no DL within
+/** JVM entry points shared by the [[PairScoreMax]] / [[PairAccept]]
+  * codegen paths and their interpreted evals: the symmetric analiticcl
+  * verification score over precomputed normKey strings + case classes —
+  * [[graft.kernel.Scoring.score]] of the same [[Distance]] features in
+  * both directions, max (KernelExprsSpec pins it bit-for-bit against
+  * `Scoring` over the normalized texts). NaN encodes null (no DL within
   * maxEditDistance, or an empty/null side); a legitimate score is a
   * finite weighted mean in [0,1], never NaN.
   */
@@ -112,26 +115,76 @@ object KernelExprs {
   }
 }
 
-/** Native Catalyst expression for the dedup verify kernel — the largest
-  * single phase of the pipeline at 1 core (BASELINE.md: 263 s of 404).
-  * Same role as [[CosineSim]] for the embedding path: the ScalaUDF route
-  * pays a converter boundary per call (UTF8String -> String -> boxed
-  * Option[Double] through the encoder machinery, outside whole-stage
-  * codegen); this expression participates in codegen and calls the
-  * static kernel directly from the generated stage method. Results are
-  * bit-identical to [[Kernels.pairScoreMaxPre]] — both paths execute
-  * the same [[KernelExprs.pairScoreMax]] arithmetic (same
-  * Distances/Scoring calls in the same order).
+/** The children, input check and evaluation skeleton shared by
+  * [[PairScoreMax]] and [[PairAccept]]. Children: normA/normB (normKey
+  * strings), caseA/caseB (byte case classes: 0 lower, 1 not lower,
+  * 2 empty — see [[Kernels.caseClass]]); any other type fails at
+  * analysis. maxEditDistance, the weights and the threshold are
+  * plan-time constants, embedded in the generated code as Java literals.
+  */
+sealed trait PairKernel extends Expression {
+  def normA: Expression
+  def normB: Expression
+  def caseA: Expression
+  def caseB: Expression
+
+  override def children: Seq[Expression] = Seq(normA, normB, caseA, caseB)
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val string = (t: DataType) => t.isInstanceOf[StringType]
+    val byte = (t: DataType) => t == ByteType
+    InputTypes.check((normA, "STRING", string), (normB, "STRING", string),
+      (caseA, "TINYINT", byte), (caseB, "TINYINT", byte))
+  }
+
+  /** `kernel` over the four child values, or `absent` if any is null. */
+  protected def evalPresent(input: InternalRow, absent: Any)(
+      kernel: (UTF8String, UTF8String, Byte, Byte) => Any): Any = {
+    val a = normA.eval(input)
+    val b = normB.eval(input)
+    val ca = caseA.eval(input)
+    val cb = caseB.eval(input)
+    if (a == null || b == null || ca == null || cb == null) absent
+    else kernel(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String],
+      ca.asInstanceOf[Byte], cb.asInstanceOf[Byte])
+  }
+
+  /** Generated code: the four children, then `init` (the result's
+    * defaults), then `present(args)` when no child is null, where `args`
+    * is the child values as a Java argument list.
+    */
+  protected def genPresent(ctx: CodegenContext, ev: ExprCode, init: String)(
+      present: String => String): ExprCode = {
+    val evs = children.map(_.genCode(ctx))
+    ev.copy(code = code"""
+      ${evs(0).code}
+      ${evs(1).code}
+      ${evs(2).code}
+      ${evs(3).code}
+      $init
+      if (!${evs(0).isNull} && !${evs(1).isNull} &&
+          !${evs(2).isNull} && !${evs(3).isNull}) {
+        ${present(evs.map(_.value).mkString(", "))}
+      }
+    """)
+  }
+
+  /** Double.toString round-trips exactly, so the embedded literals are
+    * the same doubles the interpreted path uses.
+    */
+  protected def dlit(x: Double): String = java.lang.Double.toString(x) + "D"
+}
+
+/** Native Catalyst expression for the symmetric verify score — the
+  * largest single phase of the pipeline at 1 core (BASELINE.md: 263 s of
+  * 404). It participates in whole-stage codegen and calls the static
+  * kernel [[KernelExprs.pairScoreMax]] directly from the generated stage
+  * method, with no per-call UDF converter boundary.
   *
-  * Registered as SQL function `pair_score_max` by
-  * [[graft.spark.GraftExtensions]]; sessions without the extension fall
-  * back to the UDF via [[Kernels.pairScoreMaxPreIn]].
-  *
-  * Children: normA/normB (string normKeys), caseA/caseB (byte case
-  * classes: 0 lower, 1 not lower, 2 empty — see [[Kernels.caseClass]]).
-  * maxEditDistance and the weights are plan-time constants (extracted
-  * from foldable literals at registration), so codegen embeds them as
-  * Java literals.
+  * DataFrame callers build it with [[Kernels.pairScoreMax]] (native in any
+  * session); [[graft.spark.GraftExtensions]] registers the SQL name
+  * `pair_score_max`. Null when no DL is within maxEditDistance or a side
+  * is null/empty.
   */
 case class PairScoreMax(
     normA: Expression, normB: Expression,
@@ -139,54 +192,33 @@ case class PairScoreMax(
     maxEditDistance: Int,
     wLd: Double, wLcs: Double, wPrefix: Double,
     wSuffix: Double, wCase: Double)
-    extends Expression {
+    extends PairKernel {
 
-  override def children: Seq[Expression] = Seq(normA, normB, caseA, caseB)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "pair_score_max"
 
-  override def eval(input: InternalRow): Any = {
-    val a = normA.eval(input)
-    val b = normB.eval(input)
-    val ca = caseA.eval(input)
-    val cb = caseB.eval(input)
-    if (a == null || b == null || ca == null || cb == null) null
-    else {
-      val v = KernelExprs.pairScoreMax(
-        a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String],
-        ca.asInstanceOf[Byte], cb.asInstanceOf[Byte],
+  override def eval(input: InternalRow): Any =
+    evalPresent(input, null) { (a, b, ca, cb) =>
+      val v = KernelExprs.pairScoreMax(a, b, ca, cb,
         maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase)
       if (java.lang.Double.isNaN(v)) null else v
     }
-  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
     val v = ctx.freshName("pairScore")
-    // Double.toString round-trips exactly, so the embedded literals are
-    // the same doubles the interpreted path uses
-    def dlit(x: Double): String = java.lang.Double.toString(x) + "D"
-    val call = s"graft.functions.KernelExprs.pairScoreMax(" +
-      s"${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value}, " +
-      s"$maxEditDistance, ${dlit(wLd)}, ${dlit(wLcs)}, ${dlit(wPrefix)}, " +
-      s"${dlit(wSuffix)}, ${dlit(wCase)})"
-    ev.copy(code = code"""
-      ${evs(0).code}
-      ${evs(1).code}
-      ${evs(2).code}
-      ${evs(3).code}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = 0.0;
-      if (!${evs(0).isNull} && !${evs(1).isNull} &&
-          !${evs(2).isNull} && !${evs(3).isNull}) {
-        final double $v = $call;
+    genPresent(ctx, ev,
+      s"boolean ${ev.isNull} = true; double ${ev.value} = 0.0;") { args =>
+      s"""
+        final double $v = graft.functions.KernelExprs.pairScoreMax($args,
+          $maxEditDistance, ${dlit(wLd)}, ${dlit(wLcs)}, ${dlit(wPrefix)},
+          ${dlit(wSuffix)}, ${dlit(wCase)});
         if (!java.lang.Double.isNaN($v)) {
           ${ev.isNull} = false;
           ${ev.value} = $v;
         }
-      }
-    """)
+      """
+    }
   }
 
   override protected def withNewChildrenInternal(
@@ -201,6 +233,8 @@ case class PairScoreMax(
   * settle it; see [[KernelExprs.pairAccept]]). Never null: a null input
   * channel or an out-of-band DL is a reject, exactly like the
   * score-form filter `score IS NOT NULL AND score >= threshold`.
+  * DataFrame callers build it with [[Kernels.pairAccept]]; the SQL name
+  * `pair_accept` comes from [[graft.spark.GraftExtensions]].
   */
 case class PairAccept(
     normA: Expression, normB: Expression,
@@ -208,47 +242,27 @@ case class PairAccept(
     maxEditDistance: Int,
     wLd: Double, wLcs: Double, wPrefix: Double,
     wSuffix: Double, wCase: Double, threshold: Double)
-    extends Expression {
+    extends PairKernel {
 
-  override def children: Seq[Expression] = Seq(normA, normB, caseA, caseB)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def prettyName: String = "pair_accept"
 
-  override def eval(input: InternalRow): Any = {
-    val a = normA.eval(input)
-    val b = normB.eval(input)
-    val ca = caseA.eval(input)
-    val cb = caseB.eval(input)
-    if (a == null || b == null || ca == null || cb == null) false
-    else KernelExprs.pairAccept(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String],
-      ca.asInstanceOf[Byte], cb.asInstanceOf[Byte],
-      maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase, threshold)
-  }
+  override def eval(input: InternalRow): Any =
+    evalPresent(input, false) { (a, b, ca, cb) =>
+      KernelExprs.pairAccept(a, b, ca, cb,
+        maxEditDistance, wLd, wLcs, wPrefix, wSuffix, wCase, threshold)
+    }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    // Double.toString round-trips exactly, so the embedded literals are
-    // the same doubles the interpreted path uses
-    def dlit(x: Double): String = java.lang.Double.toString(x) + "D"
-    val call = s"graft.functions.KernelExprs.pairAccept(" +
-      s"${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value}, " +
-      s"$maxEditDistance, ${dlit(wLd)}, ${dlit(wLcs)}, ${dlit(wPrefix)}, " +
-      s"${dlit(wSuffix)}, ${dlit(wCase)}, ${dlit(threshold)})"
-    ev.copy(code = code"""
-      ${evs(0).code}
-      ${evs(1).code}
-      ${evs(2).code}
-      ${evs(3).code}
-      boolean ${ev.isNull} = false;
-      boolean ${ev.value} = false;
-      if (!${evs(0).isNull} && !${evs(1).isNull} &&
-          !${evs(2).isNull} && !${evs(3).isNull}) {
-        ${ev.value} = $call;
-      }
-    """)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genPresent(ctx, ev,
+      s"boolean ${ev.isNull} = false; boolean ${ev.value} = false;") { args =>
+      s"""
+        ${ev.value} = graft.functions.KernelExprs.pairAccept($args,
+          $maxEditDistance, ${dlit(wLd)}, ${dlit(wLcs)}, ${dlit(wPrefix)},
+          ${dlit(wSuffix)}, ${dlit(wCase)}, ${dlit(threshold)});
+      """
+    }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

@@ -1,18 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.ColumnFactory.{column, expression}
 import org.apache.spark.sql.functions.udf
 
 import graft.kernel._
 
 /** Spark column functions wrapping the analiticcl-semantics kernel
-  * (SURVEY.md §2.2 P1-P10). These are deterministic scalar UDFs closing
-  * over a (tiny, immutable) alphabet — Catalyst treats them as
-  * deterministic, so they are pushed/pruned normally; they are the only
-  * non-codegen expressions in the engine and sit exclusively in the
-  * *verify* stage of the dedup pipeline, after candidate pruning, where
-  * per-row cost dominates and codegen matters less than algorithmic
-  * pruning.
+  * (SURVEY.md §2.2 P1-P10). The per-row text functions are deterministic
+  * scalar UDFs closing over a (tiny, immutable) alphabet — Catalyst
+  * treats them as deterministic, so they are pushed/pruned normally. The
+  * pair verify kernels ([[pairScoreMax]], [[pairAccept]]) are native
+  * codegen expressions over the normKey/caseClass columns these UDFs
+  * produce once per row.
   *
   * Where a pure-builtin equivalent exists (shingles, minhash, exact
   * hashes...) we use builtins instead — see [[TextFns]].
@@ -101,28 +101,6 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
     f(a, b)
   }
 
-  /** P6-P10 fused: the full analiticcl similarity score of candidate `b`
-    * against query `a` (weighted DL + LCS + prefix + suffix + case,
-    * normalized by the query's normalized length; reference:
-    * src/lib.rs:1429-1452). Null when DL exceeds maxEditDistance — i.e.
-    * this single column IS the verify-stage filter.
-    */
-  def pairScore(a: Column, b: Column, maxEditDistance: Int,
-      weights: Weights = Weights()): Column = {
-    val f = udf { (x: String, y: String) =>
-      if (x == null || y == null || x.isEmpty) None
-      else {
-        val nx = alphabet.normalize(x)
-        if (nx.length == 0) None
-        else
-          Scoring
-            .distanceFeatures(nx, x, alphabet.normalize(y), y, maxEditDistance, weights)
-            .map(d => Scoring.score(d, nx.length, weights))
-      }
-    }
-    f(a, b)
-  }
-
   /** First-char case class for the precomputed-kernel path:
     * 0 = lowercase, 1 = not lowercase, 2 = empty text (reference case
     * semantics: empty side => sameCase true, lib.rs:1367-1377).
@@ -136,113 +114,34 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
     (c: Column) => f(c)
   }
 
-  /** [[pairScoreMax]] over PRECOMPUTED normKey strings + case classes:
-    * zero normalization work and zero per-call allocation in the pair
-    * loop (banded DL with thread-local scratch — see Distances.dlChars).
-    * This is the dedup verify kernel's production form: norm/case are
-    * computed once per row upstream, reused across every candidate pair
-    * the row appears in.
+  /** The symmetric analiticcl verification score (weighted DL + LCS +
+    * prefix + suffix + case, normalized by each side's length, max of the
+    * two directions; reference: src/lib.rs:1429-1452) over PRECOMPUTED
+    * [[normKey]] strings and [[caseClass]] bytes, as the native codegen
+    * [[PairScoreMax]] expression: zero normalization work and zero
+    * per-call allocation in the pair loop. Null when no DL is within
+    * maxEditDistance or a side is null/empty.
     */
-  def pairScoreMaxPre(normA: Column, normB: Column, caseA: Column,
+  def pairScoreMax(normA: Column, normB: Column, caseA: Column,
       caseB: Column, maxEditDistance: Int,
-      weights: Weights = Weights()): Column = {
-    val w = weights
-    val f = udf { (na: String, nb: String, la: Byte, lb: Byte) =>
-      if (na == null || nb == null || na.isEmpty || nb.isEmpty) None
-      else {
-        val ld = Distances.dlChars(na, nb, maxEditDistance)
-        if (ld < 0) None
-        else {
-          val d = Distance(
-            ld = ld,
-            lcs = if (w.lcs > 0.0) Distances.lcsChars(na, nb) else 0,
-            prefixLen = if (w.prefix > 0.0) Distances.prefixChars(na, nb) else 0,
-            suffixLen = if (w.suffix > 0.0) Distances.suffixChars(na, nb) else 0,
-            sameCase =
-              if (w.caseW > 0.0 && la != 2.toByte && lb != 2.toByte) la == lb
-              else true)
-          Some(math.max(
-            Scoring.score(d, na.length, w),
-            Scoring.score(d, nb.length, w)))
-        }
-      }
-    }
-    f(normA, normB, caseA, caseB)
-  }
-
-  /** [[pairScoreMaxPre]] through the fastest formulation the session
-    * offers: the native codegen [[PairScoreMax]] expression when
-    * [[graft.spark.GraftExtensions]] is installed (bit-identical — both
-    * paths run [[KernelExprs.pairScoreMax]]), else the UDF. Same picker
-    * pattern as [[TextFns.cosineIn]].
-    */
-  def pairScoreMaxPreIn(s: org.apache.spark.sql.SparkSession)(
-      normA: Column, normB: Column, caseA: Column, caseB: Column,
-      maxEditDistance: Int, weights: Weights = Weights()): Column =
-    if (s.catalog.functionExists("pair_score_max"))
-      org.apache.spark.sql.functions.call_function("pair_score_max",
-        normA, normB, caseA, caseB,
-        org.apache.spark.sql.functions.lit(maxEditDistance),
-        org.apache.spark.sql.functions.lit(weights.ld),
-        org.apache.spark.sql.functions.lit(weights.lcs),
-        org.apache.spark.sql.functions.lit(weights.prefix),
-        org.apache.spark.sql.functions.lit(weights.suffix),
-        org.apache.spark.sql.functions.lit(weights.caseW))
-    else pairScoreMaxPre(normA, normB, caseA, caseB, maxEditDistance, weights)
+      weights: Weights = Weights()): Column =
+    column(PairScoreMax(expression(normA), expression(normB),
+      expression(caseA), expression(caseB), maxEditDistance,
+      weights.ld, weights.lcs, weights.prefix, weights.suffix, weights.caseW))
 
   /** The dedup verify FILTER: exactly
-    * `pairScoreMaxPre(...) IS NOT NULL AND pairScoreMaxPre(...) >= threshold`,
-    * but through the native decision expression [[PairAccept]] when the
-    * session has GraftExtensions — which skips the exact-LCS DP whenever
-    * the score bounds already decide against the threshold (most pairs;
-    * see [[KernelExprs.pairAccept]]). Sessions without the extension get
-    * the exact-score UDF compared to the threshold — identical decisions
-    * either way (KernelExprsSpec).
+    * `pairScoreMax(...) IS NOT NULL AND pairScoreMax(...) >= threshold`,
+    * as the native decision expression [[PairAccept]], which skips the
+    * exact-LCS DP whenever the score bounds already decide against the
+    * threshold (most pairs; see [[KernelExprs.pairAccept]]).
     */
-  def pairAcceptPreIn(s: org.apache.spark.sql.SparkSession)(
-      normA: Column, normB: Column, caseA: Column, caseB: Column,
+  def pairAccept(normA: Column, normB: Column, caseA: Column, caseB: Column,
       maxEditDistance: Int, threshold: Double,
       weights: Weights = Weights()): Column =
-    if (s.catalog.functionExists("pair_accept"))
-      org.apache.spark.sql.functions.call_function("pair_accept",
-        normA, normB, caseA, caseB,
-        org.apache.spark.sql.functions.lit(maxEditDistance),
-        org.apache.spark.sql.functions.lit(weights.ld),
-        org.apache.spark.sql.functions.lit(weights.lcs),
-        org.apache.spark.sql.functions.lit(weights.prefix),
-        org.apache.spark.sql.functions.lit(weights.suffix),
-        org.apache.spark.sql.functions.lit(weights.caseW),
-        org.apache.spark.sql.functions.lit(threshold))
-    else {
-      val sc = pairScoreMaxPre(normA, normB, caseA, caseB,
-        maxEditDistance, weights)
-      sc.isNotNull && sc >= org.apache.spark.sql.functions.lit(threshold)
-    }
-
-  /** Symmetric verification kernel: the max of pairScore(a,b) and
-    * pairScore(b,a), with the distance features (DL, LCS, prefix, suffix,
-    * case — all symmetric) computed ONCE; only the length normalization
-    * differs per direction. Halves the verify-stage cost vs calling
-    * [[pairScore]] twice. A dup pair must be accepted regardless of which
-    * member plays the query role, hence max.
-    */
-  def pairScoreMax(a: Column, b: Column, maxEditDistance: Int,
-      weights: Weights = Weights()): Column = {
-    val f = udf { (x: String, y: String) =>
-      if (x == null || y == null || x.isEmpty || y.isEmpty) None
-      else {
-        val nx = alphabet.normalize(x)
-        val ny = alphabet.normalize(y)
-        if (nx.length == 0 || ny.length == 0) None
-        else
-          Scoring.distanceFeatures(nx, x, ny, y, maxEditDistance, weights)
-            .map(d => math.max(
-              Scoring.score(d, nx.length, weights),
-              Scoring.score(d, ny.length, weights)))
-      }
-    }
-    f(a, b)
-  }
+    column(PairAccept(expression(normA), expression(normB),
+      expression(caseA), expression(caseB), maxEditDistance,
+      weights.ld, weights.lcs, weights.prefix, weights.suffix, weights.caseW,
+      threshold))
 }
 
 object Kernels {

@@ -20,10 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * result equals `size(array_intersect(a, b))` on the same distinct
   * arrays exactly.
   *
-  * Registered as SQL function `sorted_intersect_count` by
-  * [[graft.spark.GraftExtensions]]; callers that cannot assume the
-  * extension use [[TextFns.sortedIntersectCountIn]], which falls back
-  * to `size(array_intersect(a, b))` (identical by the argument above).
+  * DataFrame callers build it with [[TextFns.sortedIntersectCount]] (native
+  * in any session); [[graft.spark.GraftExtensions]] registers the SQL
+  * name `sorted_intersect_count`.
   *
   * Both arguments must be `array<int>`; any other type fails at analysis
   * (the merge scan reads elements with getInt, so an `array<string>` or
@@ -34,20 +33,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def intArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _                         => false
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val intArray = (t: DataType) => t match {
+      case ArrayType(IntegerType, _) => true
+      case _                         => false
+    }
+    InputTypes.check((left, "ARRAY<INT>", intArray), (right, "ARRAY<INT>", intArray))
   }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Seq(left, right).zip(Seq("first", "second")).collectFirst {
-      case (e, i) if !intArray(e) =>
-        TypeCheckResult.DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
-          "paramIndex" -> i,
-          "requiredType" -> "\"ARRAY<INT>\"",
-          "inputSql" -> s"\"${e.sql}\"",
-          "inputType" -> s"\"${e.dataType.sql}\""))
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
 
   override def dataType: DataType = IntegerType
 

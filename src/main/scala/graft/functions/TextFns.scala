@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.ColumnFactory.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -247,42 +248,17 @@ object TextFns {
       (acc, x) => (acc * 31L + x) % 2147483647L
     )
 
-  /** Cosine similarity between two double-array columns via a single
-    * zip_with + aggregate pass — the engine-portable formulation (higher-
-    * order functions run INTERPRETED in Spark: three lambda dispatches
-    * per dimension; see [[graft.functions.CosineSim]] for the codegen
-    * path and [[cosineIn]] for the picker).
+  /** Cosine similarity of two `array<double>` columns as the native
+    * codegen [[CosineSim]] expression, in any session.
     */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (s, v) => s + v)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (s, v) => s + v))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0d), (s, v) => s + v))
-    dot / (na * nb)
-  }
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 
-  /** Cosine similarity through the fastest formulation the session
-    * offers: the native codegen `cosine_sim` expression when
-    * [[graft.spark.GraftExtensions]] is installed (bit-identical IEEE
-    * operation order to the HOF form), else the interpreted HOF form —
-    * a query authored with this runs correctly in ANY session and fast
-    * in ours.
+  /** |A ∩ B| of two SORTED, duplicate-free, null-free `array<int>`
+    * columns as the native allocation-free merge scan
+    * [[SortedIntersectCount]] (equal to `size(array_intersect(a, b))` on
+    * such arrays), in any session.
     */
-  def cosineIn(s: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("cosine_sim")) call_function("cosine_sim", a, b)
-    else cosine(a, b)
-
-  /** |A ∩ B| of two SORTED, duplicate-free, null-free int-array columns
-    * through the fastest formulation the session offers: the native
-    * allocation-free merge-scan `sorted_intersect_count`
-    * ([[graft.functions.SortedIntersectCount]]) when
-    * [[graft.spark.GraftExtensions]] is installed, else
-    * `size(array_intersect(a, b))` — identical on distinct arrays (set
-    * size is order-independent), so a query authored with this runs
-    * correctly in ANY session and fast in ours.
-    */
-  def sortedIntersectCountIn(s: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column =
-    if (s.catalog.functionExists("sorted_intersect_count"))
-      call_function("sorted_intersect_count", a, b)
-    else size(array_intersect(a, b))
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

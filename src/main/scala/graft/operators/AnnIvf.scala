@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns => T}
@@ -40,10 +40,6 @@ object AnnIvf {
     math.min(100000L,
       math.max(16L, math.round(math.sqrt(expectedRows.toDouble)))).toInt
 
-  /** Cosine column helper (native codegen'd expression when registered). */
-  private def cos(s: SparkSession)(a: Column, b: Column): Column =
-    T.cosineIn(s)(a, b)
-
   /** Nearest-centroid assignment: one row per vector with its cell id.
     * `vectors` must have (id, emb: array<double>); `centroids`
     * (c_id, c_emb). Ties break to the lowest c_id, matching the pinned
@@ -53,7 +49,7 @@ object AnnIvf {
       centroids: DataFrame): DataFrame = {
     val cellCos = vectors.crossJoin(broadcast(centroids))
       .select(col("id"), col("emb"), col("c_id"),
-        cos(spark)(col("emb"), col("c_emb")).as("ccos"))
+        T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
     cellCos.groupBy(col("id"))
       .agg(
         max_by(col("c_id"), struct(col("ccos"), col("c_id") * -1)).as("c_id"),
@@ -176,7 +172,7 @@ object AnnIvf {
         transform(col("c_emb"), _.cast("double")).as("cd")))
       val cellCos = vd.crossJoin(cd)
         .select(col("id"), col("q"), col("c_id"),
-          round(cos(spark)(col("qd"), col("cd")), 6).as("ccos"))
+          round(T.cosineSim(col("qd"), col("cd")), 6).as("ccos"))
       val asgn = cellCos.groupBy(col("id"))
         .agg(
           max_by(col("c_id"), struct(col("ccos"), col("c_id") * -1)).as("c_id"),
@@ -224,7 +220,7 @@ object AnnIvf {
     val asgn = assign(spark, vectors, centroids)
     val qCells = queries.crossJoin(broadcast(centroids))
       .select(col("id").as("q_id"), col("emb").as("q_emb"), col("c_id"),
-        cos(spark)(col("emb"), col("c_emb")).as("ccos"))
+        T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("q_id").orderBy(col("ccos").desc, col("c_id"))))
       .filter(col("rn") <= nprobe)
@@ -232,7 +228,7 @@ object AnnIvf {
     val scored = qCells.join(asgn, Seq("c_id"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        cos(spark)(col("q_emb"), col("emb")).as("cos"))
+        T.cosineSim(col("q_emb"), col("emb")).as("cos"))
     scored
       .withColumn("rank", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))))
@@ -253,7 +249,7 @@ object AnnIvf {
       .crossJoin(vectors.select(col("id").as("n_id"), col("emb")))
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
-        cos(spark)(col("q_emb"), col("emb")).as("cos"))
+        T.cosineSim(col("q_emb"), col("emb")).as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))))
       .filter(col("rank") <= topK)

@@ -40,14 +40,6 @@ final case class DedupConfig(
     scoreThreshold: Double = 0.7,
     maxEditDistance: Int = 3,
     weights: Weights = Weights(),
-    /** verify-stage text fetch: broadcast the distinct-norm reps table to
-      * the candidate pairs instead of shuffle-hash joining it. Only for
-      * SMALL reps tables (<~200k): the broadcast build is single-threaded
-      * driver work — at 1.5M reps it was measured to serialize the whole
-      * stage (8 and 32 cores identical wall time). Default off: the
-      * shuffle-hash join is parallel at every scale and sort-free.
-      */
-    broadcastTexts: Boolean = false,
     /** substring-containment pass: docs whose normalized text is a strict
       * substring of another's are dups even when the length gap defeats
       * both LSH (low Jaccard) and the DL verify (distance > max). 0 = off
@@ -216,7 +208,8 @@ object DedupPipeline {
     // buckets keep multiplicity low, and map-side partial-distinct
     // could not collapse cross-bucket copies anyway, they live in
     // different partitions). Measured min-of-reps: -8% on the
-    // distinct+verify segment at both 1 and 32 cores (Scratch exp 3).
+    // distinct+verify segment at both 1 and 32 cores (OPTIMIZATION_r06.md,
+    // exp 3).
     //
     // The partition COUNT is memory-derived, not the session default
     // (guide §2.2: size partitions by bytes, and §3.1: a shuffled-hash
@@ -372,9 +365,10 @@ object DedupPipeline {
     * the sketched base three times (3x the task count, three passes
     * over the checkpoint blocks) per consumer — and this plan is
     * consumed twice (hot-key count-agg, bucket pass). Same (id, len, k)
-    * multiset, measured 10-18% off the two candidate passes (Scratch
-    * A/B, 1.2M-cluster base: 1 core 62.8 -> 51.6s, 32 cores
-    * 3.6 -> 3.3s, pair count bit-identical at 5,089,778).
+    * multiset, measured 10-18% off the two candidate passes
+    * (OPTIMIZATION_r06.md, same-JVM A/B, 1.2M-cluster base: 1 core
+    * 62.8 -> 51.6s, 32 cores 3.6 -> 3.3s, pair count bit-identical at
+    * 5,089,778).
     */
   def candidateKeys(base: DataFrame, cfg: DedupConfig): DataFrame = {
     val chunkBits = 64 / cfg.simhashBands
@@ -509,15 +503,14 @@ object DedupPipeline {
 
   /** Verification: analiticcl kernel, each distinct pair DECIDED once on
     * PRECOMPUTED norms (features once per pair, both direction
-    * normalizations, max, compared to the threshold). The filter goes
-    * through [[Kernels.pairAcceptPreIn]]: the native codegen PairAccept
-    * expression when GraftExtensions is installed — the verify decision
-    * runs inside the stage's generated method (no per-pair UDF converter
-    * boundary on the pipeline's largest 1-core phase) AND skips the
-    * exact-LCS DP whenever the prefix/suffix lower bound or the minLen
-    * upper bound already decides the score against the threshold (most
-    * pairs — see [[graft.functions.KernelExprs.pairAccept]]);
-    * bit-identical exact-score UDF fallback otherwise. Norms arrive by
+    * normalizations, max, compared to the threshold). The filter is
+    * [[Kernels.pairAccept]], the native codegen PairAccept expression in
+    * any session: the verify decision runs inside the stage's generated
+    * method (no per-pair UDF converter boundary on the pipeline's largest
+    * 1-core phase) AND skips the exact-LCS DP whenever the prefix/suffix
+    * lower bound or the minLen upper bound already decides the score
+    * against the threshold (most pairs — see
+    * [[graft.functions.KernelExprs.pairAccept]]). Norms arrive by
     * SHUFFLE-HASH joins (hinted): no sort of the candidate stream
     * (sort-merge measured 2-3x slower) and no single-threaded driver
     * broadcast build (at 1.5M reps a broadcast serialized the whole
@@ -542,22 +535,14 @@ object DedupPipeline {
       col("lc").as("lca"))
     val textsB = texts0.select(col("id").as("b"), col("norm").as("nb"),
       col("lc").as("lcb"))
-    val joined =
-      if (cfg.broadcastTexts)
-        candidates.join(broadcast(textsA), Seq("a"))
-          .join(broadcast(textsB), Seq("b"))
-      else {
-        val j1 = candidates.hint("SHUFFLE_HASH").join(textsA, Seq("a"))
-        // align join 2's exchange to the same memory-derived partition
-        // count (the session default is core-count-sized and puts the
-        // whole textsB build in one task at low parallelism); the
-        // repartition IS join 2's left-side exchange, not an extra one
-        val j1p = numParts.fold(j1)(p => j1.repartition(p, col("b")))
-        j1p.join(textsB.hint("SHUFFLE_HASH"), Seq("b"))
-      }
-    joined
-      .filter(K.pairAcceptPreIn(candidates.sparkSession)(
-        col("na"), col("nb"), col("lca"), col("lcb"),
+    val j1 = candidates.hint("SHUFFLE_HASH").join(textsA, Seq("a"))
+    // align join 2's exchange to the same memory-derived partition count
+    // (the session default is core-count-sized and puts the whole textsB
+    // build in one task at low parallelism); the repartition IS join 2's
+    // left-side exchange, not an extra one
+    val j1p = numParts.fold(j1)(p => j1.repartition(p, col("b")))
+    j1p.join(textsB.hint("SHUFFLE_HASH"), Seq("b"))
+      .filter(K.pairAccept(col("na"), col("nb"), col("lca"), col("lcb"),
         cfg.maxEditDistance, cfg.scoreThreshold, cfg.weights))
       .select(col("a").as("src"), col("b").as("dst"))
   }

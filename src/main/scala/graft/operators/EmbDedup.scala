@@ -242,8 +242,7 @@ object EmbDedup {
       .join(embs.select(col("id").as("b"), col("emb").as("bemb"))
         .hint("SHUFFLE_HASH"), Seq("b"))
       .select(col("a"), col("b"),
-        graft.functions.TextFns.cosineIn(spark)(col("aemb"), col("bemb"))
-          .as("cos"))
+        graft.functions.TextFns.cosineSim(col("aemb"), col("bemb")).as("cos"))
       .filter(col("cos") >= cfg.cosThreshold)
     val verified = if (collectMetrics) verified0.persist() else verified0
     val nVerified = metric(verified.count())

@@ -32,7 +32,7 @@ import graft.operators.DedupConfig
   * expires idle buckets, so total state ~ O(active buckets × cap).
   *
   * Emitted rows are (band-local) candidate matches, kernel-verified with
-  * the exact batch scoring (pairScoreMaxPre semantics); a clip colliding
+  * the exact batch scoring (pair_score_max semantics); a clip colliding
   * with the same prior clip in several bands emits duplicates — the
   * downstream sink dedupes on (id, match_id) like the batch path's
   * `distinct()` (kept outside this operator: streaming aggregation would

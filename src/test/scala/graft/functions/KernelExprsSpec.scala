@@ -1,15 +1,18 @@
 package graft.functions
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.kernel.Weights
+import graft.kernel.{Alphabet, Scoring, Weights}
 
-/** Parity pin for the native codegen verify kernel: the PairScoreMax
-  * expression must be BIT-identical to the pairScoreMaxPre UDF on every
-  * input class (both run [[KernelExprs.pairScoreMax]]; this spec guards
-  * the expression plumbing — null channels, byte casts, literal
-  * embedding in generated code).
+/** Parity pin for the native codegen verify kernels: the PairScoreMax
+  * expression, fed the production normKey/caseClass columns, must be
+  * BIT-identical to the reference scoring ([[Scoring]] over the
+  * normalized texts, computed in the driver) on every input class; the
+  * PairAccept decision must equal score >= threshold. The spec guards the
+  * expression plumbing — null channels, byte case classes, literal
+  * embedding in generated code — and the SQL seam's argument handling.
   */
 class KernelExprsSpec extends SparkSpecBase {
 
@@ -49,50 +52,78 @@ class KernelExprsSpec extends SparkSpecBase {
       ("abc", "abc", 0.toByte, 1.toByte))
   }
 
-  test("PairScoreMax expression == pairScoreMaxPre UDF, bit for bit") {
+  /** Text pairs over the test alphabet: transcript-like phrases and
+    * their 1-3 edit corruptions (near dups), unrelated phrases, case
+    * flips, unknown-class characters, empty and null sides.
+    */
+  private def texts: Seq[(String, String)] = {
+    val rng = new scala.util.Random(77L)
+    def phrase(): String =
+      graft.sources.SyntheticText.phrase(rng, 1 + rng.nextInt(6))
+    val rand = (1 to 400).map { _ =>
+      val a = phrase()
+      val b = rng.nextInt(4) match {
+        case 0 => phrase()
+        case 1 => a.capitalize
+        case _ => graft.sources.SyntheticText.corrupt(rng, a, 1 + rng.nextInt(3))
+      }
+      (a, b)
+    }
+    rand ++ Seq(
+      (null, "abc"), ("abc", null), ("", "abc"), ("abc", ""),
+      ("abc", "abc"), ("abc", "Abc"), ("a-b!", "a b?"), ("!!", "??"))
+  }
+
+  /** The reference: symmetric analiticcl score over the normalized texts,
+    * None where the native kernel is null.
+    */
+  private def reference(x: String, y: String, maxEditDistance: Int,
+      w: Weights): Option[Double] =
+    if (x == null || y == null) None
+    else {
+      val nx = Alphabet.test.normalize(x)
+      val ny = Alphabet.test.normalize(y)
+      if (nx.isEmpty || ny.isEmpty) None
+      else Scoring.distanceFeatures(nx, x, ny, y, maxEditDistance, w)
+        .map(d => math.max(Scoring.score(d, nx.length, w),
+          Scoring.score(d, ny.length, w)))
+    }
+
+  /** Native pair_score_max over the texts' normKey/caseClass columns,
+    * zipped with the reference, per maxEditDistance and weights.
+    */
+  private def scored(maxEditDistance: Int, w: Weights)
+      : Seq[(Option[Double], Option[Double])] = {
     import spark.implicits._
-    assert(spark.catalog.functionExists("pair_score_max"),
-      "SparkSpecBase must install GraftExtensions")
-    val df = pairs.toDF("na", "nb", "ca", "cb")
-      .select(col("na"), col("nb"),
-        col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val w = Weights()
-    val both = df.select(
-      K.pairScoreMaxPre(col("na"), col("nb"), col("ca"), col("cb"), 3, w)
-        .as("udf"),
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3, w)
-        .as("native"))
+    // an RDD source, not a local table: the projection runs in generated
+    // code instead of being folded at plan time
+    val out = spark.sparkContext.parallelize(texts, 4).toDF("x", "y")
+      .select(K.pairScoreMax(K.normKey(col("x")), K.normKey(col("y")),
+        K.caseClass(col("x")), K.caseClass(col("y")), maxEditDistance, w))
       .collect()
-    assert(both.length == pairs.length)
-    var scored = 0
-    both.foreach { r =>
-      val u = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
-      assert(u == n, s"udf=$u native=$n") // exact, not tolerance
-      if (n.isDefined) scored += 1
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(out.length == texts.length)
+    texts.zip(out).map { case ((x, y), n) =>
+      (reference(x, y, maxEditDistance, w), n)
+    }
+  }
+
+  test("PairScoreMax == Scoring over the normalized texts, bit for bit") {
+    val both = scored(3, Weights())
+    both.foreach { case (ref, n) =>
+      assert(ref == n, s"reference=$ref native=$n") // exact, not tolerance
     }
     // the fixture must exercise BOTH channels meaningfully
-    assert(scored > 50, s"only $scored scored pairs — fixture too thin")
-    assert(scored < both.length, "no null results — fixture too easy")
+    val nScored = both.count(_._2.isDefined)
+    assert(nScored > 50, s"only $nScored scored pairs — fixture too thin")
+    assert(nScored < both.length, "no null results — fixture too easy")
   }
 
   test("non-default weights and maxEditDistance reach the generated code") {
-    import spark.implicits._
     val w = Weights(ld = 0.7, lcs = 0.1, prefix = 0.1, suffix = 0.05,
       caseW = 0.05)
-    val df = pairs.toDF("na", "nb", "ca", "cb")
-      .select(col("na"), col("nb"),
-        col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val both = df.select(
-      K.pairScoreMaxPre(col("na"), col("nb"), col("ca"), col("cb"), 1, w)
-        .as("udf"),
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 1, w)
-        .as("native"))
-      .collect()
-    both.foreach { r =>
-      val u = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
-      assert(u == n, s"udf=$u native=$n")
+    scored(1, w).foreach { case (ref, n) =>
+      assert(ref == n, s"reference=$ref native=$n")
     }
   }
 
@@ -139,19 +170,16 @@ class KernelExprsSpec extends SparkSpecBase {
 
   test("PairAccept expression == pair_score_max >= threshold in a plan") {
     import spark.implicits._
-    assert(spark.catalog.functionExists("pair_accept"),
-      "SparkSpecBase must install GraftExtensions")
     val w = Weights()
     val df = pairs.toDF("na", "nb", "ca", "cb")
       .select(col("na"), col("nb"),
         col("ca").cast("byte").as("ca"), col("cb").cast("byte").as("cb"))
-    val score = K.pairScoreMaxPreIn(spark)(
-      col("na"), col("nb"), col("ca"), col("cb"), 3, w)
+    val score = K.pairScoreMax(col("na"), col("nb"), col("ca"), col("cb"), 3, w)
     for (t <- Seq(0.5, 0.7, 0.9)) {
       val both = df.select(
         (score.isNotNull && score >= t).as("viaScore"),
-        K.pairAcceptPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"),
-          3, t, w).as("viaAccept"))
+        K.pairAccept(col("na"), col("nb"), col("ca"), col("cb"), 3, t, w)
+          .as("viaAccept"))
         .collect()
       both.foreach { r =>
         assert(!r.isNullAt(1), "pair_accept must never be null")
@@ -167,8 +195,8 @@ class KernelExprsSpec extends SparkSpecBase {
       (col("id") % 3).cast("byte").as("ca"),
       (col("id") % 3).cast("byte").as("cb"))
     val plan = df.filter(
-      K.pairAcceptPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3,
-        0.7, Weights()))
+      K.pairAccept(col("na"), col("nb"), col("ca"), col("cb"), 3, 0.7,
+        Weights()))
       .queryExecution.executedPlan.toString
     assert(plan.contains("pair_accept"), plan)
     assert(!plan.contains("UDF"), s"native path still routes through a UDF:\n$plan")
@@ -184,10 +212,41 @@ class KernelExprsSpec extends SparkSpecBase {
       (col("id") % 3).cast("byte").as("ca"),
       (col("id") % 3).cast("byte").as("cb"))
     val plan = df.select(
-      K.pairScoreMaxPreIn(spark)(col("na"), col("nb"), col("ca"), col("cb"), 3,
+      K.pairScoreMax(col("na"), col("nb"), col("ca"), col("cb"), 3,
         Weights()).as("s"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("pair_score_max"), plan)
     assert(!plan.contains("UDF"), s"native path still routes through a UDF:\n$plan")
+  }
+
+  test("SQL calls accept any foldable numeric constant, decimals included") {
+    import org.apache.spark.unsafe.types.UTF8String.{fromString => u8}
+    val w = Weights(0.5, 0.125, 0.125, 0.125, 0.125)
+    // `0.5` is a DECIMAL literal, `1/8` a foldable division
+    val accept = spark.sql("SELECT pair_accept('abc', 'abd', 0, 0, 3, " +
+      "0.5, 0.125, 0.125, 1/8, 0.125, 0.7)").head().getBoolean(0)
+    assert(accept == KernelExprs.pairAccept(u8("abc"), u8("abd"), 0, 0, 3,
+      w.ld, w.lcs, w.prefix, w.suffix, w.caseW, 0.7))
+    val score = spark.sql("SELECT pair_score_max('abc', 'abd', 0, 0, 3.0, " +
+      "0.5, 0.125, 0.125, 0.125, CAST(0.125 AS FLOAT))").head().getDouble(0)
+    assert(score == KernelExprs.pairScoreMax(u8("abc"), u8("abd"), 0, 0, 3,
+      w.ld, w.lcs, w.prefix, w.suffix, w.caseW))
+    assert(spark.sql("SELECT pair_score_max(NULL, 'abd', 0, 0, 3, " +
+      "0.5, 0.125, 0.125, 0.125, 0.125)").head().isNullAt(0))
+  }
+
+  test("bad pair kernel arguments fail at analysis") {
+    val weights = "3, 0.5D, 0.125D, 0.125D, 0.125D, 0.125D"
+    Seq(
+      s"pair_accept(id, id, 0, 0, $weights, 0.7D)",
+      s"pair_score_max(array(id), 'x', 0, 0, $weights)",
+      s"pair_score_max('a', 'b', 'x', 0, $weights)",
+      s"pair_accept('a', 'b', 0, 0, 3, id, 0.125, 0.125, 0.125, 0.125, 0.7)",
+      s"pair_accept('a', 'b', 0, 0, 3, 0.5, 0.125, 0.125, 0.125, 0.125, '0.7')"
+    ).foreach { q =>
+      val e = intercept[AnalysisException](
+        spark.sql(s"SELECT $q FROM range(3)").collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
   }
 }

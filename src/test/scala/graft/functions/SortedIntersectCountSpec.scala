@@ -26,13 +26,13 @@ class SortedIntersectCountSpec extends SparkSpecBase {
   }
 
   test("sorted_intersect_count is registered and equals size(array_intersect) exactly") {
-    assert(spark.catalog.functionExists("sorted_intersect_count"))
     val df = randomSortedSets(2000, 42L).toDF("id", "a", "b")
     val out = df.select(
       call_function("sorted_intersect_count", col("a"), col("b")).as("native"),
+      T.sortedIntersectCount(col("a"), col("b")).as("column"),
       size(array_intersect(col("a"), col("b"))).as("builtin")
     ).collect()
-    assert(out.forall(r => r.getInt(0) == r.getInt(1)))
+    assert(out.forall(r => r.getInt(0) == r.getInt(2) && r.getInt(1) == r.getInt(2)))
   }
 
   test("edge cases: empty, disjoint, identical, subset") {
@@ -50,7 +50,7 @@ class SortedIntersectCountSpec extends SparkSpecBase {
     assert(out == Map(1L -> 0, 2L -> 0, 3L -> 0, 4L -> 3, 5L -> 2, 6L -> 2))
   }
 
-  test("null arrays null out; picker falls back to array_intersect form") {
+  test("null arrays null out; the Column form plans natively") {
     val df = Seq(
       (1L, Option(Seq(1, 2)), Option(Seq(2, 3))),
       (2L, Option(Seq(1, 2)), None: Option[Seq[Int]])
@@ -61,11 +61,11 @@ class SortedIntersectCountSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1))))
       .toMap
     assert(out == Map(1L -> Some(1), 2L -> None))
-    // picker resolves to the native function in this session
     val plan = df.select(
-      T.sortedIntersectCountIn(spark)(col("a"), col("b")).as("c"))
+      T.sortedIntersectCount(col("a"), col("b")).as("c"))
       .queryExecution.analyzed.toString
-    assert(plan.contains("sorted_intersect_count"))
+    assert(plan.contains("sorted_intersect_count"), plan)
+    assert(!plan.contains("array_intersect"), plan)
   }
 
   test("interpreted eval path agrees with codegen (whole-stage off)") {
