@@ -524,7 +524,7 @@ object Queries {
 
     // --- Dedup: the production embedding near-dup operator END-TO-END —
     //     [[graft.operators.EmbDedup.run]] itself (xxhash64 band keys,
-    //     count-agg capped pairsFromKeys, SHUFFLE_HASH cosine verify,
+    //     count-agg CappedPairs.fromKeys, SHUFFLE_HASH cosine verify,
     //     connected components) pinned against a DuckDB recursive-CTE
     //     transitive closure over the same twin corpus. The oracle
     //     states the bucket SEMANTICS ((band, bits) equality); the
@@ -539,7 +539,7 @@ object Queries {
         val cfg = Queries.embCfg
         val corpus = embTwinCorpus(s, d)
         val (assignments, _) = graft.operators.EmbDedup.run(
-          s, corpus, "vec_id", "emb", cfg, collectMetrics = false)
+          s, corpus, "vec_id", "emb", cfg)
         assignments.select(col("id").as("vec_id"),
           col("cluster").as("cluster_id"))
       },
@@ -1154,7 +1154,7 @@ object Queries {
         val init = e.filter(col("id") % 50 === 0)
           .select(col("id").as("c_id"), col("q").as("c_emb"))
         val cents = graft.operators.AnnIvf
-          .trainCentroidsQuant(s, e, init, iterations = 3)
+          .trainCentroidsQuant(e, init, iterations = 3)
         val eD = e.select(col("id"),
           transform(col("q"), _.cast("double")).as("emb"))
         val cD = cents.select(col("c_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns => T}
@@ -45,8 +45,7 @@ object AnnIvf {
     * (c_id, c_emb). Ties break to the lowest c_id, matching the pinned
     * oracle query's ordering.
     */
-  def assign(spark: SparkSession, vectors: DataFrame,
-      centroids: DataFrame): DataFrame = {
+  def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     val cellCos = vectors.crossJoin(broadcast(centroids))
       .select(col("id"), col("emb"), col("c_id"),
         T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
@@ -77,7 +76,6 @@ object AnnIvf {
     * compares with tolerance).
     */
   def trainCentroids(
-      spark: SparkSession,
       vectors: DataFrame,
       k: Int,
       iterations: Int = 3,
@@ -105,7 +103,7 @@ object AnnIvf {
         .persist()
       cents.count() // materialize before the loop re-plans
       for (_ <- 1 to iterations) {
-        val asgn = assign(spark, train, cents)
+        val asgn = assign(train, cents)
         // element-wise mean per cell: (c_id, pos) keyed avg, then one
         // bounded per-cell gather (dim entries) back into an array
         val means = asgn
@@ -148,7 +146,6 @@ object AnnIvf {
     * changes the element type, not the plan.
     */
   def trainCentroidsQuant(
-      spark: SparkSession,
       vectors: DataFrame,
       init: DataFrame,
       iterations: Int = 3
@@ -209,7 +206,6 @@ object AnnIvf {
     * both (id, emb); output (q_id, n_id, cos, rank).
     */
   def queryTopK(
-      spark: SparkSession,
       vectors: DataFrame,
       queries: DataFrame,
       centroids: DataFrame,
@@ -217,7 +213,7 @@ object AnnIvf {
       nprobe: Int = 2
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val asgn = assign(spark, vectors, centroids)
+    val asgn = assign(vectors, centroids)
     val qCells = queries.crossJoin(broadcast(centroids))
       .select(col("id").as("q_id"), col("emb").as("q_emb"), col("c_id"),
         T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
@@ -239,7 +235,6 @@ object AnnIvf {
     * baseline (intentionally quadratic; for specs and small query sets).
     */
   def bruteTopK(
-      spark: SparkSession,
       vectors: DataFrame,
       queries: DataFrame,
       topK: Int = 3

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.audio.{Fingerprint, Wav}
 import graft.functions.FastHash
+import graft.spark.Checkpoints
+import graft.spark.Checkpoints.{countedOrZero, observeCount}
 
 /** Configuration of the acoustic near-duplicate pipeline — the AUDIO
   * twin of [[DedupConfig]] (transcripts) and [[EmbDedupConfig]]
@@ -80,7 +82,7 @@ final case class AudioDedupConfig(
 }
 
 /** Per-stage counters (same accounting as [[DedupMetrics]] /
-  * [[EmbDedupMetrics]]); -1 when metrics were not collected.
+  * [[EmbDedupMetrics]]). `nRows` counts the rows with non-null bytes.
   */
 final case class AudioDedupMetrics(
     nRows: Long,
@@ -119,9 +121,9 @@ object AudioDedup {
   /** Upper bound on fingerprint rows per verify-join hash build
     * (~150-200 MB of (id, fp: array<int> of ~100-300 frame words)
     * rows): a ShuffledHashJoin build is non-spillable, so this — not
-    * the core count — must size the verify partitioning (same
-    * discipline as [[DedupPipeline.verifyBuildRows]]). Memory-derived;
-    * NOT a parallelism tunable.
+    * the core count — must size the verify partitioning
+    * ([[CappedPairs.verifyParts]]). Memory-derived; NOT a parallelism
+    * tunable.
     */
   val verifyBuildRows: Long = 125000L
 
@@ -198,112 +200,63 @@ object AudioDedup {
     }
   }
 
-  /** Materialized per-clip fingerprints: (id, fp: array<int>,
-    * keys: array<long>) as a lineage [[graft.spark.Checkpoints.Cut]] —
-    * the caller releases it once downstream consumers are materialized.
+  /** Per-clip fingerprints (id, fp: array<int>, keys: array<long>).
     * Rows with null bytes are dropped here (no acoustic evidence);
     * undecodable rows survive with fp = null so they can be counted.
     */
   def fingerprints(df: DataFrame, idCol: String, bytesCol: String,
-      cfg: AudioDedupConfig): graft.spark.Checkpoints.Cut = {
+      cfg: AudioDedupConfig): DataFrame = {
     val su = sketchUdf(cfg)
-    graft.spark.Checkpoints.cut(
-      df.filter(col(bytesCol).isNotNull)
-        .select(col(idCol).as("id"), su(col(bytesCol)).as("s"))
-        .select(col("id"), col("s._1").as("fp"), col("s._2").as("keys")))
+    df.filter(col(bytesCol).isNotNull)
+      .select(col(idCol).as("id"), su(col(bytesCol)).as("s"))
+      .select(col("id"), col("s._1").as("fp"), col("s._2").as("keys"))
   }
 
   /** Verified acoustic near-dup pairs: banded candidates → BER ≤ maxBer.
-    * Returns (pairs(a, b, ber), metrics). The returned frame is
-    * lineage-cut (materialized); [[run]] — or any long-lived caller —
-    * releases its blocks via another cut/action of its own once
-    * consumed. collectMetrics=false skips every counting job.
+    * Returns the lineage-cut pairs(a, b, ber), which the caller releases
+    * once consumed, and the metrics, each observed on the pass's own
+    * jobs; `nClusters` is left -1 ([[run]] clusters).
     */
   def nearDupPairs(spark: SparkSession, df: DataFrame, idCol: String,
-      bytesCol: String, cfg: AudioDedupConfig = AudioDedupConfig(),
-      collectMetrics: Boolean = true): (DataFrame, AudioDedupMetrics) = {
-    val (cut, m) = nearDupPairsCut(spark, df, idCol, bytesCol, cfg,
-      collectMetrics)
-    (cut.df, m)
-  }
-
-  private[operators] def nearDupPairsCut(spark: SparkSession,
-      df: DataFrame, idCol: String, bytesCol: String,
-      cfg: AudioDedupConfig, collectMetrics: Boolean)
-      : (graft.spark.Checkpoints.Cut, AudioDedupMetrics) = {
-    def metric(f: => Long): Long = if (collectMetrics) f else -1L
-    val fpsCut = fingerprints(df, idCol, bytesCol, cfg)
-    val fps = fpsCut.df
-    // unconditional cheap count over the just-materialized checkpoint
-    // blocks: sizes the verify-join partitioning below (memory-derived,
-    // see vParts). Reused as the nRows metric.
-    val nRowsAlways = fps.count()
-    val nRows = if (collectMetrics) nRowsAlways else -1L
-    val nUndecodable = metric(fps.filter(col("fp").isNull).count())
-    val good = fps.filter(col("fp").isNotNull)
-    val keyed = good.select(col("id"), explode(col("keys")).as("k"))
-    val nDropped = metric(keyed.groupBy("k").agg(count(lit(1)).as("n"))
-      .filter(col("n") > cfg.bucketCap).count())
-    // memory-derived verify partitioning (see [[verifyBuildRows]] and
-    // DedupPipeline.run): each verify-join task holds at most
-    // ~verifyBuildRows fingerprint rows in its non-spillable hash
-    // build; rounded UP to a multiple of defaultParallelism.
-    val dp = spark.sparkContext.defaultParallelism
-    val vParts = (dp * math.max(1L,
-      (nRowsAlways + verifyBuildRows * dp - 1) /
-        (verifyBuildRows * dp))).toInt
-    val cand = CappedPairs.fromKeys(keyed, cfg.bucketCap, Some(vParts))
-    val nCand = metric(cand.count())
-    // word sequences arrive by shuffle-hash join: no sort of the pair
-    // stream, no driver-side broadcast of an N-row fingerprint table.
-    // Join 1 builds the CAPPED PAIR side and streams the fingerprints;
-    // only join 2 builds a fingerprint relation, on the derived
-    // partitioning (the DedupPipeline.verifyPairs build-side
-    // discipline). Inner equi-joins: build side is physical only.
+      bytesCol: String, cfg: AudioDedupConfig = AudioDedupConfig())
+      : (Checkpoints.Cut, AudioDedupMetrics) = {
+    val Seq(rowsObs, undecodableObs) = Seq.fill(2)(Observation())
+    // ONE decode+FFT pass, materialized so no later stage re-decodes
+    val fpsCut = Checkpoints.cut(observeCount(observeCount(
+      fingerprints(df, idCol, bytesCol, cfg), Some(rowsObs)),
+      Some(undecodableObs), col("fp").isNull))
+    val nRows = countedOrZero(rowsObs)
+    val good = fpsCut.df.filter(col("fp").isNotNull)
     val berU = udf { (a: Seq[Int], b: Seq[Int]) =>
       Fingerprint.ber(a.toArray, b.toArray, cfg.maxShiftFrames)
     }
-    val fetch = good.select(col("id"), col("fp"))
-    val verified = cand.hint("SHUFFLE_HASH")
-      .join(fetch.select(col("id").as("a"), col("fp").as("afp")), Seq("a"))
-      .repartition(vParts, col("b"))
-      .join(fetch.select(col("id").as("b"), col("fp").as("bfp"))
-        .hint("SHUFFLE_HASH"), Seq("b"))
-      .select(col("a"), col("b"), berU(col("afp"), col("bfp")).as("ber"))
-      .filter(col("ber") <= cfg.maxBer)
-    val vCut = graft.spark.Checkpoints.cut(verified)
-    val nVerified = metric(vCut.df.count())
+    val (vCut, nCand, nDropped, nVerified) = CappedPairs.verified(spark,
+      good.select(col("id"), explode(col("keys")).as("k")),
+      good.select(col("id"), col("fp").as("p")), nRows, verifyBuildRows,
+      cfg.bucketCap, "ber", berU(_, _), _ <= cfg.maxBer)
     // the verified edges are materialized — the decode+FFT blocks can go
     fpsCut.release()
-    (vCut,
-      AudioDedupMetrics(nRows, nUndecodable, nCand, nDropped, nVerified,
-        -1L))
+    (vCut, AudioDedupMetrics(nRows, countedOrZero(undecodableObs), nCand,
+      nDropped, nVerified, -1L))
   }
 
   /** Full acoustic clustering: verified edges → connected components.
     * Returns (assignments(id, cluster), metrics); cluster = min id of
     * the component; rows without acoustic evidence (null/undecodable
-    * bytes) and isolated clips map to themselves.
+    * bytes) and isolated clips map to themselves. Ids must be unique:
+    * `nClusters` counts the assignment rows whose cluster is their own
+    * id, so a duplicated id would count once per copy.
+    *
+    * Every metric is observed on the pass's own jobs; `collectMetrics`
+    * is accepted and ignored, kept only because [[graft.Bench]] passes
+    * it by name.
     */
   def run(spark: SparkSession, df: DataFrame, idCol: String,
       bytesCol: String, cfg: AudioDedupConfig = AudioDedupConfig(),
       collectMetrics: Boolean = true): (DataFrame, AudioDedupMetrics) = {
-    val (vCut, m) = nearDupPairsCut(spark, df, idCol, bytesCol, cfg,
-      collectMetrics)
-    val edges = vCut.df.select(col("a").as("src"), col("b").as("dst"))
-    val cc = ConnectedComponents.runCut(spark, edges, withAllNodes = false,
-      edgesMaterialized = true) // vCut is an eager checkpoint
-    val assignments = graft.spark.Checkpoints.cut(
-      df.select(col(idCol).as("id")) // SHUFFLE_HASH: sort-free (see DedupPipeline)
-        .join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("cluster"))).df
-    cc.release()
-    vCut.release()
-    val nClusters =
-      if (collectMetrics) assignments.select("cluster").distinct().count()
-      else -1L
+    val (vCut, m) = nearDupPairs(spark, df, idCol, bytesCol, cfg)
+    val (assignments, nClusters) = ConnectedComponents.assignClusters(
+      spark, df.select(col(idCol).as("id")), vCut, "a", "b")
     (assignments, m.copy(nClusters = nClusters))
   }
 }

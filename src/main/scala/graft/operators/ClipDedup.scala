@@ -119,15 +119,12 @@ object ClipDedup {
     // ---- stage 4: verified edges (kernel score on candidates + exact
     //      star edges + optional containment pass) ----
     val edges = r.stage("edges", Seq("src", "dst")) {
-      // memory-derived verify partitioning (see DedupPipeline.run): a
-      // SHUFFLE_HASH texts build is non-spillable, so the partition
-      // count must bound build rows, not follow the session default.
-      // sketches is a materialized stage parquet — the count is cheap.
-      val dp = spark.sparkContext.defaultParallelism
-      val nSk = sketches.count()
-      val vParts = (dp * math.max(1L,
-        (nSk + DedupPipeline.verifyBuildRows * dp - 1) /
-          (DedupPipeline.verifyBuildRows * dp))).toInt
+      // memory-derived verify partitioning (see
+      // [[CappedPairs.verifyParts]]), from the row count the sketches
+      // stage already logged
+      val nSk = r.stageLog.find(_.name == "sketches").get.rows
+      val vParts = CappedPairs.verifyParts(spark, nSk,
+        DedupPipeline.verifyBuildRows)
       val verified = DedupPipeline.verifyPairs(
         candidates.repartition(vParts, col("a")), sketches, cfg, K,
         numParts = Some(vParts))

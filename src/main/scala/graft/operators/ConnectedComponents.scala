@@ -215,6 +215,32 @@ object ConnectedComponents {
     } finally if (!transferred) inputCut.foreach(_.release())
   }
 
+  /** Cut assignments (id, cluster = component min id, or id itself) of
+    * `ids` over the cut `edges`, whose release this takes over so the
+    * small-graph kernel runs inside the assignments job. Returned with
+    * the cluster count, observed as the rows whose cluster is their own
+    * id, so ids must be unique.
+    */
+  def assignClusters(spark: SparkSession, ids: DataFrame,
+      edges: Checkpoints.Cut, srcCol: String,
+      dstCol: String): (DataFrame, Long) = {
+    val clustersObs = Observation()
+    // withAllNodes=false: the left join supplies the full id universe
+    val (cc, ownsEdges) = runCutOnEdges(spark, edges.df, srcCol, dstCol,
+      maxIterations = 50, withAllNodes = false, defaultLocalKernelMaxEdges,
+      resumeKey = None, inputOwner = Some(edges))
+    // SHUFFLE_HASH: sort-free (see DedupPipeline)
+    val assignments = Checkpoints.cut(Checkpoints.observeCount(
+      ids.join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
+          Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("component"), col("id")).as("cluster")),
+      Some(clustersObs), col("cluster") === col("id"))).df
+    cc.release()
+    if (!ownsEdges) edges.release()
+    (assignments, Checkpoints.countedOrZero(clustersObs))
+  }
+
   /** [[runCut]] body over edges whose plan is already materialized (every
     * full pass over them is a cheap block read, never a DAG re-run).
     * Returns (result, ownsInput): ownsInput=true means the result is a

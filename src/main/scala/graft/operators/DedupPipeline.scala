@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{FastHash, Kernels}
 import graft.kernel.{Alphabet, SearchParameters, Weights}
+import graft.spark.Checkpoints.{countedOrZero, observeCount}
 
 /** Configuration of the near-duplicate pipeline — the fixed
   * "shingle/signature config" (BASELINE.json): holding these constant is
@@ -180,7 +181,7 @@ object DedupPipeline {
     val rows = rowsCut.df // read twice: exact stage + rep election
     // filled by the eager cut above; sizes the verify-join partitioning
     // below (memory-derived, see verifyParts)
-    val nRows = counted(rowsObs).getOrElse(0L)
+    val nRows = countedOrZero(rowsObs)
 
     // ---- 2. exact duplicates (hash group; no verification needed) ----
     val exactEdges = exactStarEdges(rows)
@@ -213,17 +214,8 @@ object DedupPipeline {
     //
     // The partition COUNT is memory-derived, not the session default
     // (guide §2.2: size partitions by bytes, and §3.1: a shuffled-hash
-    // build must fit per task). A SHUFFLE_HASH texts build is
-    // non-spillable, so each verify-join task must hold at most
-    // ~verifyBuildRows text rows; at low parallelism the session
-    // default (shuffle.partitions = cores) put ALL text rows in one
-    // build — the 3M-clip 1-core 8 GiB bench child died in
-    // LongToUnsafeRowMap.grow. Rounded UP to a multiple of
-    // defaultParallelism so every level runs even waves (a non-multiple
-    // leaves straggler tasks on the last wave).
-    val dp = spark.sparkContext.defaultParallelism
-    val verifyParts = (dp * math.max(1L,
-      (nRows + verifyBuildRows * dp - 1) / (verifyBuildRows * dp))).toInt
+    // build must fit per task): see [[CappedPairs.verifyParts]].
+    val verifyParts = CappedPairs.verifyParts(spark, nRows, verifyBuildRows)
     // counted in flight, not cut: a checkpoint here would split the
     // fused dedup + verify-join exchange
     val candidates = observeCount(allPairs.repartition(verifyParts, col("a"))
@@ -238,12 +230,8 @@ object DedupPipeline {
       .foldLeft(verifiedEdges.union(exactEdges))(_ union _), Some(edgesObs)))
     val allEdges = allEdgesCut.df
     mark("candidates+verify")
-    // adaptive execution skips the hot-key broadcast, and its observation
-    // with it, when no bucket has 2..cap members (the bucket join is then
-    // provably empty); only in that case is the overflow counted by a job
-    val nDroppedBuckets = counted(droppedObs).getOrElse(
-      candidateKeys(base, cfg).groupBy("k").count()
-        .filter(col("count") > cfg.bucketCap).count())
+    val nDroppedBuckets = CappedPairs.droppedBuckets(droppedObs,
+      candidateKeys(base, cfg), cfg.bucketCap)
 
     // ---- 6. clustering ----
     // withAllNodes=false: the left-join below supplies the full row
@@ -275,29 +263,12 @@ object DedupPipeline {
     mark("finalize")
 
     // every other observed node runs unless its input is empty (the
-    // candidate dedup sits in a join skipped only when no pairs exist),
-    // so a count the job never filled is 0
-    def count0(o: Observation) = counted(o).getOrElse(0L)
+    // candidate dedup sits in a join skipped only when no pairs exist)
     (assignments,
-      DedupMetrics(nRows, count0(groupsObs), count0(candObs),
-        nDroppedBuckets, count0(edgesObs), count0(clustersObs)))
+      DedupMetrics(nRows, countedOrZero(groupsObs), countedOrZero(candObs),
+        nDroppedBuckets, countedOrZero(edgesObs),
+        countedOrZero(clustersObs)))
   }
-
-  /** `df` with `obs` (when given) counting the rows where `cond` holds.
-    * The count is collected by whichever job runs `df`, so it costs no
-    * job of its own. Read it with [[counted]].
-    */
-  private def observeCount(df: DataFrame, obs: Option[Observation],
-      cond: Column = lit(true)): DataFrame =
-    obs.fold(df)(o => df.observe(o, count(when(cond, 1)).as("n")))
-
-  /** The count an [[observeCount]] observation collected. Blocks until
-    * the job that runs the observed plan has finished; None if that job
-    * skipped the observed node (adaptive execution drops a join input
-    * once the join is proven empty).
-    */
-  private def counted(o: Observation): Option[Long] =
-    o.get.get("n").map(_.asInstanceOf[Long])
 
   // ------------------------------------------------------------------
   // Shared stage builders (used by both run() and the checkpointed
@@ -403,10 +374,7 @@ object DedupPipeline {
     */
   def pairsFromKeys(keyed: DataFrame, cfg: DedupConfig,
       dropped: Option[Observation] = None): DataFrame = {
-    val hot = observeCount(keyed.groupBy("k").agg(count(lit(1)).as("n")),
-        dropped, col("n") > cfg.bucketCap)
-      .filter(col("n").between(2, cfg.bucketCap))
-      .select(col("k"))
+    val hot = CappedPairs.hotKeys(keyed, cfg.bucketCap, dropped)
     keyed.join(broadcast(hot), Seq("k"))
       .groupBy("k")
       .agg(sort_array(collect_list(struct(col("id"), col("len")))).as("ms"))

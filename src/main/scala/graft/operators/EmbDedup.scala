@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.spark.Checkpoints
+import graft.spark.Checkpoints.{countedOrZero, observeCount}
 
 /** Configuration of the embedding near-duplicate pipeline (the embedding
   * twin of [[DedupConfig]] — same role as the text pipeline's
@@ -75,7 +78,9 @@ final case class EmbDedupMetrics(
   * on candidate pairs only, connected-components clustering.
   *
   * Stage layout and shuffle budget (at N input rows):
-  *   1. quantize + band keys: narrow map (one kernel call per row)
+  *   1. quantize + band signatures: narrow map (one kernel call per
+  *      row), materialized once with the vectors (lineage cut) so the
+  *      candidate and verify stages never re-run the kernel
   *   2. candidates: 1 shuffle (count-agg on the band key) + broadcast
   *      hot-key filter + capped in-row pair expansion — never a
   *      self-join on the key column, never a collect_list over the full
@@ -130,7 +135,7 @@ object EmbDedup {
       // a dims mismatch means the config doesn't match the data — a
       // silently truncated dot product would produce WRONG signatures
       // (bucket misses = quietly lost recall), so fail loudly; null
-      // embeddings are filtered upstream in bandKeys
+      // embeddings are filtered upstream in signed
       require(qa.length == dims,
         s"embedding length ${qa.length} != configured dims $dims")
       val out = new Array[Long](bands)
@@ -153,132 +158,76 @@ object EmbDedup {
     }
   }
 
-  /** (id, k) band-key rows: one row per (vector, band), k a mixed
-    * 64-bit key (band index salted in, so equal signatures in different
-    * bands never collide into one bucket).
+  /** Signed rows (id, emb: array<double>, sig: per-band signatures) of
+    * the non-null embeddings: the one pass of the signature kernel.
     */
-  def bandKeys(df: DataFrame, idCol: String, embCol: String,
-      cfg: EmbDedupConfig): DataFrame = {
-    val bb = bandBitsUdf(cfg)
+  def signed(df: DataFrame, idCol: String, embCol: String,
+      cfg: EmbDedupConfig): DataFrame =
     // null embeddings can't be signed — they drop out of candidate
     // generation (an unembedded row has no near-dup evidence to offer);
     // a wrong-LENGTH embedding still fails loudly inside the kernel
     df.filter(col(embCol).isNotNull)
       .select(col(idCol).as("id"),
-        posexplode(bb(quantize(col(embCol), cfg))).as(Seq("band", "bits")))
+        transform(col(embCol), _.cast("double")).as("emb"),
+        bandBitsUdf(cfg)(quantize(col(embCol), cfg)).as("sig"))
+
+  /** (id, k) band-key rows of [[signed]] rows: one row per (vector,
+    * band), k a mixed 64-bit key (band index salted in, so equal
+    * signatures in different bands never collide into one bucket).
+    */
+  def bandKeys(signedRows: DataFrame): DataFrame =
+    signedRows.select(col("id"),
+        posexplode(col("sig")).as(Seq("band", "bits")))
       .select(col("id"), xxhash64(col("band"), col("bits")).as("k"))
-  }
 
   /** Upper bound on vector rows per verify-join hash build (~150-200 MB
     * of (id, array<double> dims) rows at dims=64): a ShuffledHashJoin
     * build is non-spillable, so this — not the core count — must size
-    * the verify partitioning (same discipline as
-    * [[DedupPipeline.verifyBuildRows]]). Memory-derived; NOT a
-    * parallelism tunable.
+    * the verify partitioning ([[CappedPairs.verifyParts]]).
+    * Memory-derived; NOT a parallelism tunable.
     */
   val verifyBuildRows: Long = 250000L
 
-  /** Bucket -> pair expansion — the shared capped shape
-    * ([[CappedPairs.fromKeys]]; the text pipeline's variant adds an
-    * edit-distance length prefilter, which embeddings don't have).
-    */
-  def pairsFromKeys(keyed: DataFrame, cfg: EmbDedupConfig,
-      numParts: Option[Int] = None): DataFrame =
-    CappedPairs.fromKeys(keyed, cfg.bucketCap, numParts)
-
   /** Verified near-dup pairs: banded candidates -> exact cosine >=
-    * threshold. Returns (pairs(a, b, cos), metrics).
-    *
-    * With collectMetrics=true the metric counts are extra actions, so
-    * the intermediate frames (band keys, candidate pairs, the verified
-    * result) are persisted around them — without that, each count
-    * recomputed the signature UDF over all rows and the candidate DAG
-    * 4-5x, a hidden multiplier at 10^9-row scale. keyed/cand are
-    * unpersisted here; the RETURNED verified frame stays persisted so
-    * the caller's first action reuses it instead of re-verifying —
-    * [[run]] releases it once the clustering is materialized, other
-    * callers own that unpersist. collectMetrics=false (the oracle/bench
-    * path) persists nothing and runs exactly one job.
+    * threshold. Returns the lineage-cut pairs(a, b, cos), which the
+    * caller releases once consumed, and the metrics, each observed on
+    * the pass's own jobs; `nClusters` is left -1 ([[run]] clusters).
     */
   def nearDupPairs(spark: SparkSession, df: DataFrame, idCol: String,
-      embCol: String, cfg: EmbDedupConfig = EmbDedupConfig(),
-      collectMetrics: Boolean = true): (DataFrame, EmbDedupMetrics) = {
-    def metric(f: => Long): Long = if (collectMetrics) f else -1L
-    val rows = df.select(col(idCol).as("id"),
-      transform(col(embCol), _.cast("double")).as("emb"))
-    val nRows = metric(rows.count())
-    // memory-derived verify partitioning (see [[verifyBuildRows]] and
-    // DedupPipeline.run): each verify-join task must hold at most
-    // ~verifyBuildRows vector rows in its non-spillable hash build;
-    // rounded UP to a multiple of defaultParallelism for even waves.
-    // Derivable only when the row count was taken (the metrics path —
-    // checkpointed production runs); the metric-free oracle/bench path
-    // keeps the session partitioning rather than pay a counting job.
-    val vParts: Option[Int] = if (collectMetrics) {
-      val dp = spark.sparkContext.defaultParallelism
-      Some((dp * math.max(1L,
-        (nRows + verifyBuildRows * dp - 1) / (verifyBuildRows * dp))).toInt)
-    } else None
-    val keyed0 = bandKeys(df, idCol, embCol, cfg)
-    val keyed = if (collectMetrics) keyed0.persist() else keyed0
-    val nDropped = metric(keyed.groupBy("k").agg(count(lit(1)).as("n"))
-      .filter(col("n") > cfg.bucketCap).count())
-    val cand0 = pairsFromKeys(keyed, cfg, vParts)
-    val cand = if (collectMetrics) cand0.persist() else cand0
-    val nCand = metric(cand.count())
-    // vectors arrive by shuffle-hash join: no sort of the candidate
-    // stream, no driver-side broadcast build of an N-row vector table.
-    // Join 1 builds the CAPPED PAIR side (16-byte rows) and streams the
-    // vectors; only join 2 builds a vector relation, on the derived
-    // partitioning — the same build-side discipline as
-    // DedupPipeline.verifyPairs (a vector build on BOTH joins is the
-    // non-spillable low-parallelism exposure change 16 fixed for text).
-    // Inner equi-joins: the build side is a physical choice only.
-    val embs = rows
-    val j1 = cand.hint("SHUFFLE_HASH")
-      .join(embs.select(col("id").as("a"), col("emb").as("aemb")), Seq("a"))
-    val j1p = vParts.fold(j1)(p => j1.repartition(p, col("b")))
-    val verified0 = j1p
-      .join(embs.select(col("id").as("b"), col("emb").as("bemb"))
-        .hint("SHUFFLE_HASH"), Seq("b"))
-      .select(col("a"), col("b"),
-        graft.functions.TextFns.cosineSim(col("aemb"), col("bemb")).as("cos"))
-      .filter(col("cos") >= cfg.cosThreshold)
-    val verified = if (collectMetrics) verified0.persist() else verified0
-    val nVerified = metric(verified.count())
-    if (collectMetrics) { keyed.unpersist(); cand.unpersist() }
-    (verified,
-      EmbDedupMetrics(nRows, nCand, nDropped, nVerified, -1L))
+      embCol: String, cfg: EmbDedupConfig = EmbDedupConfig())
+      : (Checkpoints.Cut, EmbDedupMetrics) = {
+    val rowsObs = Observation()
+    // one signature pass per row, read by the bucket count agg, the
+    // bucket pass and both verify joins; nRows counts every input row,
+    // null embeddings included (observed below their filter)
+    val signedCut = Checkpoints.cut(signed(observeCount(
+      df.select(col(idCol), col(embCol)), Some(rowsObs)), idCol, embCol, cfg))
+    val nRows = countedOrZero(rowsObs)
+    val vecs = signedCut.df
+    val (vCut, nCand, nDropped, nVerified) = CappedPairs.verified(spark,
+      bandKeys(vecs), vecs.select(col("id"), col("emb").as("p")), nRows,
+      verifyBuildRows, cfg.bucketCap, "cos",
+      graft.functions.TextFns.cosineSim, _ >= cfg.cosThreshold)
+    signedCut.release()
+    (vCut, EmbDedupMetrics(nRows, nCand, nDropped, nVerified, -1L))
   }
 
   /** Full clustering: verified near-dup edges -> connected components.
     * Returns (assignments(id, cluster), metrics); cluster = min id of
-    * the component, isolated vectors map to themselves.
+    * the component, isolated vectors map to themselves. Ids must be
+    * unique: `nClusters` counts the assignment rows whose cluster is
+    * their own id, so a duplicated id would count once per copy.
+    *
+    * Every metric is observed on the pass's own jobs; `collectMetrics`
+    * is accepted and ignored, kept only because [[graft.Bench]] passes
+    * it by name.
     */
   def run(spark: SparkSession, df: DataFrame, idCol: String,
       embCol: String, cfg: EmbDedupConfig = EmbDedupConfig(),
       collectMetrics: Boolean = true): (DataFrame, EmbDedupMetrics) = {
-    val (pairs, m) =
-      nearDupPairs(spark, df, idCol, embCol, cfg, collectMetrics)
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-    // metrics path: `pairs` is persisted + counted above (materialized);
-    // the metric-free path hands a raw plan — let CC cut it once instead
-    // of re-running the signature+verify DAG for the election count
-    val cc = ConnectedComponents.runCut(spark, edges, withAllNodes = false,
-      edgesMaterialized = collectMetrics)
-    val assignments = graft.spark.Checkpoints.cut(
-      df.select(col(idCol).as("id")) // SHUFFLE_HASH: sort-free (see DedupPipeline)
-        .join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("cluster"))).df
-    cc.release()
-    // the clustering is materialized (eager cut) — release the verified
-    // cache nearDupPairs left for us on the metrics path
-    if (collectMetrics) pairs.unpersist()
-    val nClusters =
-      if (collectMetrics) assignments.select("cluster").distinct().count()
-      else -1L
+    val (vCut, m) = nearDupPairs(spark, df, idCol, embCol, cfg)
+    val (assignments, nClusters) = ConnectedComponents.assignClusters(
+      spark, df.select(col(idCol).as("id")), vCut, "a", "b")
     (assignments, m.copy(nClusters = nClusters))
   }
 }

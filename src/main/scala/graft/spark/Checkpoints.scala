@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit, when}
 
 /** Lineage-cut seam for iterative jobs (CC rounds, learn iterations).
   *
@@ -21,6 +22,7 @@ import org.apache.spark.sql.DataFrame
   * CacheManager entries, and otherwise linger until the JVM happens to GC
   * the plan — measured as block-manager growth across iterative runs).
   * Callers release each cut as soon as its consumer is materialized.
+  * Stage counters ride on the same jobs ([[observeCount]]).
   */
 object Checkpoints {
 
@@ -49,4 +51,26 @@ object Checkpoints {
     val added = (sc.getPersistentRDDs.keySet -- before).toSeq
     Cut(out, added)
   }
+
+  /** `df` with `obs` (when given) counting the rows where `cond` holds,
+    * collected by whichever job runs `df` (a cut, an aggregation, a
+    * dedup the operator runs anyway), so no counter costs a job of its
+    * own. Read it with [[counted]].
+    */
+  def observeCount(df: DataFrame, obs: Option[Observation],
+      cond: Column = lit(true)): DataFrame =
+    obs.fold(df)(o => df.observe(o, count(when(cond, 1)).as("n")))
+
+  /** The count an [[observeCount]] observation collected. Blocks until
+    * the job that runs the observed plan has finished; None if that job
+    * skipped the observed node (adaptive execution drops a join input
+    * once the join is proven empty).
+    */
+  def counted(o: Observation): Option[Long] =
+    o.get.get("n").map(_.asInstanceOf[Long])
+
+  /** [[counted]] for a node that runs unless its input is empty, so a
+    * count the job never filled is 0.
+    */
+  def countedOrZero(o: Observation): Long = counted(o).getOrElse(0L)
 }

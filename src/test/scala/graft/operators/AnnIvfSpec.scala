@@ -34,13 +34,13 @@ class AnnIvfSpec extends SparkSpecBase {
     val data = clusteredVectors(nClusters = 10, perCluster = 60, dim = 16)
     val vectors = data.toDF("id", "emb")
     val queries = vectors.filter(col("id") % 7 === 0) // ~86 queries
-    val cents = AnnIvf.trainCentroids(spark, vectors, k = 10,
+    val cents = AnnIvf.trainCentroids(vectors, k = 10,
       iterations = 3, seed = 42L)
     assert(cents.count() == 10)
-    val ivf = AnnIvf.queryTopK(spark, vectors, queries, cents,
+    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
       topK = 3, nprobe = 2)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(spark, vectors, queries, topK = 3)
+    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     info(f"recall@3 = $recall%.3f (${ivf.intersect(brute).size}/${brute.size})")
@@ -53,7 +53,7 @@ class AnnIvfSpec extends SparkSpecBase {
     val data = clusteredVectors(nClusters = 4, perCluster = 20, dim = 8)
     val vectors = data.toDF("id", "emb")
     def centroidRows() = {
-      val c = AnnIvf.trainCentroids(spark, vectors, k = 4, iterations = 2,
+      val c = AnnIvf.trainCentroids(vectors, k = 4, iterations = 2,
         seed = 7L)
       val rows = c.orderBy("c_id").as[(Long, Seq[Double])].collect().toSeq
       c.unpersist()
@@ -79,16 +79,16 @@ class AnnIvfSpec extends SparkSpecBase {
     val queries = vectors.filter(col("id") % 13 === 0)
     val k = AnnIvf.kForScale(data.size) // 600 rows -> 24 cells (not the default 10/12)
     assert(k == 24)
-    val cents = AnnIvf.trainCentroids(spark, vectors, k = k,
+    val cents = AnnIvf.trainCentroids(vectors, k = k,
       iterations = 2, seed = 42L)
     assert(cents.count() == k)
     // finer cells need proportionally more probes for the same recall:
     // nprobe scales with k (here 4/24 ~ the 2/10 cell share of the
     // default test)
-    val ivf = AnnIvf.queryTopK(spark, vectors, queries, cents,
+    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
       topK = 3, nprobe = 5)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(spark, vectors, queries, topK = 3)
+    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     info(f"k=$k recall@3 = $recall%.3f")
@@ -108,7 +108,7 @@ class AnnIvfSpec extends SparkSpecBase {
     val init = vectors.filter(col("id") % 30 === 0)
       .select(col("id").as("c_id"), col("q").as("c_emb"))
     def centroidRows(parts: Int) = {
-      val c = AnnIvf.trainCentroidsQuant(spark,
+      val c = AnnIvf.trainCentroidsQuant(
         vectors.repartition(parts), init, iterations = 3)
       val rows = c.orderBy("c_id").as[(Long, Seq[Long])].collect().toSeq
       c.unpersist()
@@ -129,12 +129,12 @@ class AnnIvfSpec extends SparkSpecBase {
     val data = clusteredVectors(nClusters = 5, perCluster = 40, dim = 8)
     val vectors = data.toDF("id", "emb")
     val queries = vectors.filter(col("id") % 11 === 0)
-    val cents = AnnIvf.trainCentroids(spark, vectors, k = 5,
+    val cents = AnnIvf.trainCentroids(vectors, k = 5,
       iterations = 2, seed = 42L, sampleN = 100)
-    val ivf = AnnIvf.queryTopK(spark, vectors, queries, cents,
+    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
       topK = 3, nprobe = 2)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(spark, vectors, queries, topK = 3)
+    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     info(f"sampled recall@3 = $recall%.3f")

@@ -56,7 +56,7 @@ class AudioDedupSpec extends SparkSpecBase {
   test("verified edge set is invariant to input partitioning") {
     def edges(parts: Int): Set[(Long, Long)] =
       AudioDedup.nearDupPairs(spark, clips.repartition(parts), "id",
-        "bytes", collectMetrics = false)._1
+        "bytes")._1.df
         .select("a", "b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges(3) == edges(13))
@@ -67,7 +67,7 @@ class AudioDedupSpec extends SparkSpecBase {
     // candidates survive and the drop counter owns the loss
     val (pairs, m) = AudioDedup.nearDupPairs(spark, clips, "id", "bytes",
       AudioDedupConfig(bucketCap = 1))
-    assert(pairs.count() == 0)
+    assert(pairs.df.count() == 0)
     assert(m.nCandidatePairs == 0)
     assert(m.nDroppedBuckets > 0)
   }
@@ -84,5 +84,51 @@ class AudioDedupSpec extends SparkSpecBase {
     assert(out == Map(900001L -> 900001L, 900002L -> 900002L))
     assert(m.nRows == 1) // only the non-null-bytes row reaches decode
     assert(m.nUndecodable == 1)
+  }
+
+  test("observed counters equal counts computed with plain DataFrame jobs") {
+    import spark.implicits._
+    val bad = Seq(
+      (900001L, null.asInstanceOf[Array[Byte]]),
+      (900002L, "not a wav".getBytes("UTF-8"))
+    ).toDF("id", "bytes")
+    val df = clips.select("id", "bytes").union(bad)
+    val fps = AudioDedup.fingerprints(df, "id", "bytes", AudioDedupConfig())
+    fps.persist()
+    val good = fps.filter(col("fp").isNotNull)
+    val keyed = good.select(col("id"), explode(col("keys")).as("k"))
+    val sizes = keyed.groupBy("k").count()
+    def fp(side: String) = good.select(col("id").as(side),
+      col("fp").as(side + "fp"))
+    // bucketCap = 1 keeps no bucket: adaptive execution skips the empty
+    // hot-key broadcast and its observation, so the overflow is counted
+    // by the fallback job
+    for (cfg <- Seq(AudioDedupConfig(), AudioDedupConfig(bucketCap = 1))) {
+      val (assign, m) = AudioDedup.run(spark, df, "id", "bytes", cfg)
+      val capped = keyed.join(
+        sizes.filter(col("count").between(2, cfg.bucketCap)), "k")
+      val cand = capped.select(col("k"), col("id").as("a"))
+        .join(capped.select(col("k"), col("id").as("b")), "k")
+        .filter(col("a") < col("b")).select("a", "b").distinct()
+      val ber = udf { (a: Seq[Int], b: Seq[Int]) =>
+        graft.audio.Fingerprint.ber(a.toArray, b.toArray, cfg.maxShiftFrames)
+      }
+      val verified = cand.join(fp("a"), "a").join(fp("b"), "b")
+        .filter(ber(col("afp"), col("bfp")) <= cfg.maxBer)
+      val want = AudioDedupMetrics(
+        nRows = df.filter(col("bytes").isNotNull).count(),
+        nUndecodable = fps.filter(col("fp").isNull).count(),
+        nCandidatePairs = cand.count(),
+        nDroppedBuckets = sizes.filter(col("count") > cfg.bucketCap).count(),
+        nVerifiedEdges = verified.count(),
+        nClusters = assign.select("cluster").distinct().count())
+      assert(m == want, cfg.toString)
+      assert(m.nUndecodable == 1, m.toString)
+      assert(if (cfg.bucketCap == 1) m.nDroppedBuckets > 0
+        else m.nVerifiedEdges > 0, m.toString)
+      // fresh observations per call: a second pass reports the same counts
+      assert(AudioDedup.run(spark, df, "id", "bytes", cfg)._2 == m)
+    }
+    fps.unpersist()
   }
 }

@@ -73,7 +73,7 @@ class EmbDedupSpec extends SparkSpecBase {
     val cfg = EmbDedupConfig(dims = dims, bands = 16, bitsPerBand = 10,
       cosThreshold = 0.9)
     val (pairs, m) = EmbDedup.nearDupPairs(spark, df, "id", "embedding", cfg)
-    val got = pairs.select("a", "b").as[(Long, Long)].collect().toSet
+    val got = pairs.df.select("a", "b").as[(Long, Long)].collect().toSet
     // verification is EXACT cosine: anything returned must be in truth
     assert(got.subsetOf(truth),
       s"false edges: ${got.diff(truth).take(5)}")
@@ -90,8 +90,7 @@ class EmbDedupSpec extends SparkSpecBase {
     val cfg = EmbDedupConfig(dims = dims, bands = 8, bitsPerBand = 10)
     def run(parts: Int): Set[(Long, Long)] = {
       val df = rows.toDF("id", "embedding").repartition(parts)
-      EmbDedup.nearDupPairs(spark, df, "id", "embedding", cfg,
-        collectMetrics = false)._1
+      EmbDedup.nearDupPairs(spark, df, "id", "embedding", cfg)._1.df
         .select("a", "b").as[(Long, Long)].collect().toSet
     }
     assert(run(1) == run(7))
@@ -103,9 +102,9 @@ class EmbDedupSpec extends SparkSpecBase {
       jitter = 0.02)
     val cfg = EmbDedupConfig(dims = dims, bands = 8, bitsPerBand = 10)
     val df = rows.toDF("id", "embedding").repartition(3)
-    val keyed = EmbDedup.bandKeys(df, "id", "embedding", cfg)
+    val keyed = EmbDedup.bandKeys(EmbDedup.signed(df, "id", "embedding", cfg))
     def pairsAt(numParts: Option[Int]) =
-      EmbDedup.pairsFromKeys(keyed, cfg, numParts)
+      CappedPairs.fromKeys(keyed, cfg.bucketCap, numParts)
     val default = pairsAt(None)
     val derived = pairsAt(Some(5))
     // the a-keyed dedup exchange honors the memory-derived count...
@@ -115,15 +114,97 @@ class EmbDedupSpec extends SparkSpecBase {
     // dedup clustering)
     assert(default.select("a", "b").as[(Long, Long)].collect().toSet ==
       derived.select("a", "b").as[(Long, Long)].collect().toSet)
-    // metrics-path end-to-end (nearDupPairs derives vParts from nRows):
-    // identical verified edges to the metric-free session-default path
-    val viaMetrics = EmbDedup.nearDupPairs(spark, df, "id", "embedding",
-      cfg, collectMetrics = true)._1
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    val viaDefault = EmbDedup.nearDupPairs(spark, df, "id", "embedding",
-      cfg, collectMetrics = false)._1
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(viaMetrics == viaDefault)
+  }
+
+  test("verify joins take the memory-derived partition count, not the session default") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends AdaptiveSparkPlanHelper
+    val joinParts =
+      new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val js = plans.collect(qe.executedPlan) {
+          case j: ShuffledHashJoinExec => j.outputPartitioning.numPartitions
+        }
+        if (js.nonEmpty) joinParts.add(js)
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val rows = clusteredEmbeddings(nClusters = 40, dupsPer = 2,
+      jitter = 0.02)
+    val cfg = EmbDedupConfig(dims = dims, bands = 8, bitsPerBand = 10)
+    val dp = spark.sparkContext.defaultParallelism
+    assert(dp > 1, "the session needs a default parallelism above 1")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1") // a core-count default far below the rule's
+    spark.listenerManager.register(listener)
+    try {
+      val (pairs, m) = EmbDedup.nearDupPairs(spark,
+        rows.toDF("id", "embedding"), "id", "embedding", cfg)
+      assert(pairs.df.count() > 0)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (joinParts.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      val want = CappedPairs.verifyParts(spark, m.nRows,
+        EmbDedup.verifyBuildRows)
+      assert(want == dp)
+      // exactly one executed plan, the verify cut, holds the two joins
+      assert(joinParts.size == 1, joinParts)
+      assert(joinParts.peek() == Seq(want, want), joinParts)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, saved)
+    }
+  }
+
+  test("observed counters equal counts computed with plain DataFrame jobs") {
+    import spark.implicits._
+    // clustered near-dups, a null-embedding row and 12 identical
+    // vectors whose band buckets overflow a cap of 8
+    val same = Array.fill(dims)(0.1f)
+    val rows: Seq[(Long, Array[Float])] =
+      clusteredEmbeddings(nClusters = 30, dupsPer = 2, jitter = 0.02) ++
+        (0L until 12L).map(i => (500000L + i, same)) :+
+        ((999999L, null.asInstanceOf[Array[Float]]))
+    val df = rows.toDF("id", "embedding")
+    val cfg = EmbDedupConfig(dims = dims, bands = 8, bitsPerBand = 10,
+      bucketCap = 8)
+    val (assign, m) = EmbDedup.run(spark, df, "id", "embedding", cfg)
+
+    val keyed = EmbDedup.bandKeys(EmbDedup.signed(df, "id", "embedding", cfg))
+    val sizes = keyed.groupBy("k").count()
+    val capped = keyed.join(
+      sizes.filter(col("count").between(2, cfg.bucketCap)), "k")
+    val cand = capped.select(col("k"), col("id").as("a"))
+      .join(capped.select(col("k"), col("id").as("b")), "k")
+      .filter(col("a") < col("b")).select("a", "b").distinct()
+    def vec(side: String) = df.select(col("id").as(side),
+      col("embedding").as(side + "e"))
+    def dot(x: String, y: String) = aggregate(
+      zip_with(col(x), col(y), (p, q) => p.cast("double") * q),
+      lit(0.0), (acc, v) => acc + v)
+    val verified = cand.join(vec("a"), "a").join(vec("b"), "b")
+      .filter(dot("ae", "be") /
+        sqrt(dot("ae", "ae") * dot("be", "be")) >= cfg.cosThreshold)
+    val want = EmbDedupMetrics(
+      nRows = df.count(),
+      nCandidatePairs = cand.count(),
+      nDroppedBuckets = sizes.filter(col("count") > cfg.bucketCap).count(),
+      nVerifiedEdges = verified.count(),
+      nClusters = assign.select("cluster").distinct().count())
+    assert(m == want)
+    assert(m.nDroppedBuckets > 0 && m.nVerifiedEdges > 0,
+      s"fixture too weak: $m")
+    assert(assign.count() == m.nRows)
+    // fresh observations per call: a second pass reports the same counts
+    assert(EmbDedup.run(spark, df, "id", "embedding", cfg)._2 == m)
+    val (_, empty) = EmbDedup.run(spark, df.limit(0), "id", "embedding", cfg)
+    assert(empty == EmbDedupMetrics(0, 0, 0, 0, 0), empty.toString)
   }
 
   test("hot-bucket cap drops mega-buckets and accounts for them") {
@@ -139,7 +220,7 @@ class EmbDedupSpec extends SparkSpecBase {
     val (pairs, m) = EmbDedup.nearDupPairs(spark, df, "id", "embedding", cfg)
     assert(m.nDroppedBuckets == 4, "all 4 band buckets over the cap")
     assert(m.nCandidatePairs == 0)
-    assert(pairs.count() == 0)
+    assert(pairs.df.count() == 0)
   }
 
   test("run clusters the verified edges; isolated vectors self-assign") {

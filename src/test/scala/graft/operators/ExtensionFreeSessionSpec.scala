@@ -70,7 +70,7 @@ class ExtensionFreeSessionSpec extends SparkSpecBase {
       val rng = new scala.util.Random(5L)
       val vecs = s.createDataFrame((0 until 40).map(i =>
         (i.toLong, Seq.fill(8)(rng.nextGaussian())))).toDF("id", "emb")
-      AnnIvf.bruteTopK(s, vecs, vecs.filter(col("id") % 10 === 0), topK = 3)
+      AnnIvf.bruteTopK(vecs, vecs.filter(col("id") % 10 === 0), topK = 3)
     }
     val (bareRows, plan) = executed(topK(bare))
     val (extRows, _) = executed(topK(spark))
