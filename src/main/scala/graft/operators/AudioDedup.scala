@@ -220,24 +220,25 @@ object AudioDedup {
   def nearDupPairs(spark: SparkSession, df: DataFrame, idCol: String,
       bytesCol: String, cfg: AudioDedupConfig = AudioDedupConfig())
       : (Checkpoints.Cut, AudioDedupMetrics) = {
-    val Seq(rowsObs, undecodableObs) = Seq.fill(2)(Observation())
+    val undecodableObs = Observation()
     // ONE decode+FFT pass, materialized so no later stage re-decodes
-    val fpsCut = Checkpoints.cut(observeCount(observeCount(
-      fingerprints(df, idCol, bytesCol, cfg), Some(rowsObs)),
-      Some(undecodableObs), col("fp").isNull))
-    val nRows = countedOrZero(rowsObs)
+    val (fpsCut, nRows) = Checkpoints.cutCounted(observeCount(
+      fingerprints(df, idCol, bytesCol, cfg), Some(undecodableObs),
+      col("fp").isNull))
     val good = fpsCut.df.filter(col("fp").isNotNull)
     val berU = udf { (a: Seq[Int], b: Seq[Int]) =>
       Fingerprint.ber(a.toArray, b.toArray, cfg.maxShiftFrames)
     }
-    val (vCut, nCand, nDropped, nVerified) = CappedPairs.verified(spark,
+    val v = CappedPairs.verified(spark,
       good.select(col("id"), explode(col("keys")).as("k")),
-      good.select(col("id"), col("fp").as("p")), nRows, verifyBuildRows,
-      cfg.bucketCap, "ber", berU(_, _), _ <= cfg.maxBer)
+      good.select("id", "fp"), nRows, verifyBuildRows, cfg.bucketCap, "ber",
+      (a, b) => berU(a("fp"), b("fp")), _ <= cfg.maxBer)
+    val (vCut, nVerified) = Checkpoints.cutCounted(v.edges)
+    val m = AudioDedupMetrics(nRows, countedOrZero(undecodableObs),
+      v.candidatePairs, v.droppedBuckets, nVerified, -1L)
     // the verified edges are materialized — the decode+FFT blocks can go
     fpsCut.release()
-    (vCut, AudioDedupMetrics(nRows, countedOrZero(undecodableObs), nCand,
-      nDropped, nVerified, -1L))
+    (vCut, m)
   }
 
   /** Full acoustic clustering: verified edges → connected components.

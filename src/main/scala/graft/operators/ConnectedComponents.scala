@@ -172,7 +172,7 @@ object ConnectedComponents {
     *
     * @param withAllNodes when false, the result covers only nodes that
     *        appear in an edge. Callers that left-join the assignment onto
-    *        their full row universe (like DedupPipeline) don't need the
+    *        their full row universe (like [[assignClusters]]) don't need the
     *        extra edges-union-distinct + join that materializing isolated
     *        nodes would cost — at iterative-loop scale that is two whole
     *        shuffle stages of the input edge volume.
@@ -183,14 +183,14 @@ object ConnectedComponents {
     *        value above 2M cannot opt a wide-key graph into the local
     *        kernel; it still takes the distributed loop.
     * @param edgesMaterialized set true when `edges` is already
-    *        checkpointed/persisted (DedupPipeline's cut edge table,
-    *        ClipDedup's stage parquet). When false (default), the input
-    *        is lineage-cut ONCE here before the strategy election:
-    *        the election's edge count is a full action, and without the
-    *        cut both it and the elected strategy re-ran the caller's
-    *        entire edge-producing DAG (candidate generation + verify) —
-    *        measured as ~2x the whole query cost for the oracle CC
-    *        queries, which hand raw un-materialized edge plans in.
+    *        checkpointed/persisted (ClipDedup's stage parquet). When false
+    *        (default), the input is lineage-cut ONCE here before the
+    *        strategy election: the election's edge count is a full
+    *        action, and without the cut both it and the elected strategy
+    *        re-ran the caller's entire edge-producing DAG (candidate
+    *        generation + verify) — measured as ~2x the whole query cost
+    *        for the oracle CC queries, which hand raw un-materialized edge
+    *        plans in.
     */
   def runCut(
       spark: SparkSession,
@@ -224,21 +224,22 @@ object ConnectedComponents {
   def assignClusters(spark: SparkSession, ids: DataFrame,
       edges: Checkpoints.Cut, srcCol: String,
       dstCol: String): (DataFrame, Long) = {
-    val clustersObs = Observation()
     // withAllNodes=false: the left join supplies the full id universe
     val (cc, ownsEdges) = runCutOnEdges(spark, edges.df, srcCol, dstCol,
       maxIterations = 50, withAllNodes = false, defaultLocalKernelMaxEdges,
       resumeKey = None, inputOwner = Some(edges))
-    // SHUFFLE_HASH: sort-free (see DedupPipeline)
-    val assignments = Checkpoints.cut(Checkpoints.observeCount(
+    // SHUFFLE_HASH: both sides are stat-less checkpoints and would plan
+    // as a SortMergeJoin — at 3M rows that is two full sorts for a join a
+    // hash build does sort-free
+    val (assignments, nClusters) = Checkpoints.cutCounted(
       ids.join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
           Seq("id"), "left")
         .select(col("id"),
           coalesce(col("component"), col("id")).as("cluster")),
-      Some(clustersObs), col("cluster") === col("id"))).df
+      col("cluster") === col("id"))
     cc.release()
     if (!ownsEdges) edges.release()
-    (assignments, Checkpoints.countedOrZero(clustersObs))
+    (assignments.df, nClusters)
   }
 
   /** [[runCut]] body over edges whose plan is already materialized (every
@@ -409,7 +410,6 @@ object ConnectedComponents {
     // read is cheaper than a dedicated distinct+materialize init pass).
     // Duplicate input edges are harmless to the round's min-aggregations;
     // the first checksum lands after round 1.
-    val timing = sys.env.contains("SPARK_GRAFT_STAGE_TIMING")
     var e: Checkpoints.Cut = null
     var prevChecksum: Option[(Long, Long)] = None
     var iteration = 0
@@ -420,13 +420,10 @@ object ConnectedComponents {
           checksummedCut(spark.read.parquet(roundPath(iteration)))
         e = resumed
         prevChecksum = Some(sum)
-        if (timing) System.err.println(
-          s"[cc-round] resumed from persisted round $iteration")
       }
     }
     var converged = false
     while (!converged && iteration < maxIterations) {
-      val tRound = System.nanoTime()
       // one materialized round per convergence check: `round` reads its
       // input several times (nbrs both directions, the large-star union),
       // so composing rounds without a checkpoint re-executes the inner
@@ -444,9 +441,6 @@ object ConnectedComponents {
       iteration += 1
       if (roundDir.isDefined && !roundComplete(iteration))
         next.df.write.mode("overwrite").parquet(roundPath(iteration))
-      if (timing) System.err.println(
-        f"[cc-round] $iteration edges=${nextChecksum._1} " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
 
     // components: every node points at its root (min of its final star);

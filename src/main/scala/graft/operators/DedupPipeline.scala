@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{FastHash, Kernels}
 import graft.kernel.{Alphabet, SearchParameters, Weights}
+import graft.spark.Checkpoints
 import graft.spark.Checkpoints.{countedOrZero, observeCount}
 
 /** Configuration of the near-duplicate pipeline — the fixed
@@ -82,20 +83,25 @@ final case class DedupMetrics(
 )
 
 /** The web-scale near-duplicate detection + clustering pipeline
-  * (SURVEY.md §7): MinHash-LSH + SimHash candidate generation over
-  * alphabet-normalized text, analiticcl-kernel verification, iterative
-  * DataFrame connected components.
+  * (SURVEY.md §7): MinHash-LSH + SimHash + anagram candidate generation
+  * over alphabet-normalized text, analiticcl-kernel verification,
+  * connected components — the candidate → verify → cluster pass every
+  * dedup operator shares ([[CappedPairs.verified]],
+  * [[ConnectedComponents.assignClusters]]).
   *
   * Stage layout and shuffle budget (at N input rows):
-  *   1. sketch: narrow map (one text pass per row; no shuffle)
-  *   2. exact-dup fast path: 1 shuffle (groupBy text hash)
-  *   3. LSH candidates: 1 shuffle (groupBy band key), capped buckets,
-  *      in-row pair expansion — no self-join, no second signature pass
-  *   4. simhash candidates: 1 shuffle (groupBy simhash band)
-  *   5. verify: 1 shuffle (join pair ids back to text), then narrow
-  *      kernel filter — the only non-codegen stage, run on the small
-  *      candidate set, never on the N-row table
-  *   6. connected components: O(log n) rounds over verified edges only
+  *   1. normalize: narrow map (one text pass per row), cut
+  *   2. sketch distinct norms: 1 shuffle (groupBy norm hash), cut; the
+  *      exact-dup star edges: 1 shuffle (window on the same hash)
+  *   3. candidates: ONE fused explode of the band, simhash-chunk and
+  *      anagram keys ([[candidateKeys]]) -> 1 shuffle (count agg) +
+  *      broadcast hot keys + 1 shuffle (capped buckets), in-row
+  *      length-prefiltered pair expansion — no self-join
+  *   4. verify: the a-keyed pair dedup exchange doubles as join 1's,
+  *      join 2 on b, native pair_accept filter — the kernel only ever
+  *      sees candidate pairs, never the N-row table
+  *   5. one observed edge cut (verified + exact + containment edges),
+  *      connected components over it, left-join onto the N row ids
   *
   * Candidate generation never compares texts; verification never sees
   * more than the candidate pairs. This is the structure that holds at
@@ -111,13 +117,6 @@ object DedupPipeline {
     * verify partitioning. Memory-derived; NOT a parallelism tunable.
     */
   val verifyBuildRows: Long = 500000L
-
-  /** Normalized text column used for sketching: the alphabet-normalized
-    * form rendered to a compact string (one char per class index) so
-    * shingle identity == normalized-class n-gram identity — exactly the
-    * reference's alphabet semantics.
-    */
-  def normColumn(K: Kernels): Column => Column = K.normKey
 
   /** Run the full pipeline.
     *
@@ -141,17 +140,7 @@ object DedupPipeline {
     // anyway (the eager cuts, the hot-key count agg, the candidate
     // dedup), filled by that plan's own job: no metric costs a job of its
     // own (except nDroppedBuckets on inputs without candidate buckets)
-    val Seq(rowsObs, groupsObs, droppedObs, candObs, edgesObs, clustersObs) =
-      Seq.fill(6)(Observation())
-    // phase wall-times to stderr when SPARK_GRAFT_STAGE_TIMING is set —
-    // the strong-scaling diagnosis tool (which phase is the serial floor?)
-    val timing = sys.env.contains("SPARK_GRAFT_STAGE_TIMING")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[dedup-phase] $phase ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
+    val groupsObs = Observation()
 
     // ---- 1a. normalize (one narrow pass over all rows) ----
     // id keying is type-agnostic downstream (every stage uses generic
@@ -170,104 +159,44 @@ object DedupPipeline {
     // (first-codepoint case class) is the only other fact the verify
     // kernel needs from the original text, so dropping text here shrinks
     // the materialized universe and the sketch shuffle by the full text
-    // payload per row
-    val rowsCut = graft.spark.Checkpoints.cut(observeCount(
-      df.select(idExpr.as("id"),
-        col(textCol).cast("string").as("text"))
+    // payload per row. nRows sizes the verify joins (verifyParts).
+    val (rowsCut, nRows) = Checkpoints.cutCounted(
+      df.select(idExpr.as("id"), col(textCol).cast("string").as("text"))
         .withColumn("norm", K.normKey(col("text")))
         .withColumn("nh", nhExpr(col("norm")))
         .withColumn("lc", K.caseClass(col("text")))
-        .drop("text"), Some(rowsObs)))
-    val rows = rowsCut.df // read twice: exact stage + rep election
-    // filled by the eager cut above; sizes the verify-join partitioning
-    // below (memory-derived, see verifyParts)
-    val nRows = countedOrZero(rowsObs)
-
-    // ---- 2. exact duplicates (hash group; no verification needed) ----
-    val exactEdges = exactStarEdges(rows)
+        .drop("text"))
+    val rows = rowsCut.df // read by the exact stage, sketch and finalize
 
     // ---- 1b. sketch DISTINCT norms only (see [[sketchBase]]) ----
-    val baseCut = graft.spark.Checkpoints.cut(
+    val baseCut = Checkpoints.cut(
       sketchBase(rows, cfg, K, exactGroups = Some(groupsObs)))
-    val base = baseCut.df // sketches reused by three candidate paths
-    mark("sketch")
+    val base = baseCut.df // read by candidates, verify and containment
 
-    // ---- 3+4+4b. candidate generation (shared with ClipDedup — see
-    //      [[candidatePairs]]) ----
-    val allPairs = candidatePairs(base, cfg, dropped = Some(droppedObs))
+    // ---- 2+3+4. capped candidates -> a-keyed dedup -> verify ----
+    val v = CappedPairs.verified(spark, candidateKeys(base, cfg),
+      texts(base), nRows, verifyBuildRows, cfg.bucketCap, "accepted",
+      accepted(cfg, K), identity, keep = lengthFilter(cfg))
 
-    // ---- 4c. substring-containment pass (see [[containmentEdges]]) ----
-    val substringEdges: Option[DataFrame] =
-      if (cfg.substringMinLen > 0) Some(containmentEdges(base, cfg)) else None
+    // ---- 5. one observed edge cut (CC iterates over it): verified,
+    //      exact-star and containment edges ----
+    val (edgesCut, nEdges) = Checkpoints.cutCounted(
+      (Seq(srcDst(v.edges), exactStarEdges(rows)) ++
+        Option.when(cfg.substringMinLen > 0)(containmentEdges(base, cfg)))
+        .reduce(_ union _))
 
-    // the cross-path dedup is keyed by a ONLY: hashpartitioning(a)
-    // satisfies both the (a, b) dedup clustering and verifyPairs' first
-    // join distribution, so the dedup exchange and the join-on-a
-    // exchange collapse into one (plan: 8 -> 7 Exchanges). The raw
-    // stream it shuffles is only ~1.2x the distinct volume (6.21M vs
-    // 5.09M at the 3M-clip bench — the length prefilter and capped
-    // buckets keep multiplicity low, and map-side partial-distinct
-    // could not collapse cross-bucket copies anyway, they live in
-    // different partitions). Measured min-of-reps: -8% on the
-    // distinct+verify segment at both 1 and 32 cores (OPTIMIZATION_r06.md,
-    // exp 3).
-    //
-    // The partition COUNT is memory-derived, not the session default
-    // (guide §2.2: size partitions by bytes, and §3.1: a shuffled-hash
-    // build must fit per task): see [[CappedPairs.verifyParts]].
-    val verifyParts = CappedPairs.verifyParts(spark, nRows, verifyBuildRows)
-    // counted in flight, not cut: a checkpoint here would split the
-    // fused dedup + verify-join exchange
-    val candidates = observeCount(allPairs.repartition(verifyParts, col("a"))
-      .dropDuplicates("a", "b"), Some(candObs))
-
-    // ---- 5. verification (see [[verifyPairs]]) ----
-    val verifiedEdges = verifyPairs(candidates, base, cfg, K,
-      numParts = Some(verifyParts))
-
-    // always checkpoint edges: CC iterates over them
-    val allEdgesCut = graft.spark.Checkpoints.cut(observeCount(substringEdges
-      .foldLeft(verifiedEdges.union(exactEdges))(_ union _), Some(edgesObs)))
-    val allEdges = allEdgesCut.df
-    mark("candidates+verify")
-    val nDroppedBuckets = CappedPairs.droppedBuckets(droppedObs,
-      candidateKeys(base, cfg), cfg.bucketCap)
-
-    // ---- 6. clustering ----
-    // withAllNodes=false: the left-join below supplies the full row
-    // universe, so CC skips materializing isolated nodes (roots absent
-    // from the assignment resolve to themselves via the coalesce)
-    val cc = ConnectedComponents.runCut(spark, allEdges,
-      withAllNodes = false, edgesMaterialized = true)
-    mark("cc")
-    // materialize the result, then free EVERY intermediate checkpoint:
-    // iterative pipelines that leak block-manager storage degrade the
-    // session they run in (unpersist() alone never frees localCheckpoint
-    // blocks — see Checkpoints)
-    // SHUFFLE_HASH: both sides are stat-less checkpoints and planned
-    // as a SortMergeJoin — at 3M rows that is two full sorts for a join
-    // a hash build does sort-free.
-    // nClusters: cluster is the component's min id, so exactly one row
-    // per cluster has cluster = id (given unique ids)
-    val assignments = graft.spark.Checkpoints.cut(observeCount(
-      rows.select(col("id"))
-        .join(cc.df.withColumnRenamed("node", "id").hint("SHUFFLE_HASH"),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("cluster")),
-      Some(clustersObs), col("cluster") === col("id"))).df
+    // ---- 6. clustering; frees the edge cut ----
+    val (assignments, nClusters) = ConnectedComponents.assignClusters(
+      spark, rows.select(col("id")), edgesCut, "src", "dst")
+    val m = DedupMetrics(nRows, countedOrZero(groupsObs), v.candidatePairs,
+      v.droppedBuckets, nEdges, nClusters)
+    // free every intermediate checkpoint: iterative pipelines that leak
+    // block-manager storage degrade the session they run in
+    // (unpersist() alone never frees localCheckpoint blocks — see
+    // Checkpoints)
     rowsCut.release()
     baseCut.release()
-    allEdgesCut.release()
-    cc.release()
-    mark("finalize")
-
-    // every other observed node runs unless its input is empty (the
-    // candidate dedup sits in a join skipped only when no pairs exist)
-    (assignments,
-      DedupMetrics(nRows, countedOrZero(groupsObs), countedOrZero(candObs),
-        nDroppedBuckets, countedOrZero(edgesObs),
-        countedOrZero(clustersObs)))
+    (assignments, m)
   }
 
   // ------------------------------------------------------------------
@@ -353,42 +282,26 @@ object DedupPipeline {
         array(col("anakey")))).as("k"))
   }
 
-  /** Bucket -> pair expansion. Three scale facts shape this:
-    *  1. almost every bucket key is a SINGLETON (one row), so the first
-    *     pass is a pure `count` aggregation — whole-stage-codegen'd,
-    *     map-side partial — never a collect_list over the full volume
-    *     (ObjectHashAggregate falls back to SORT-based aggregation at
-    *     128 distinct keys per partition, i.e. collect_list over 60M
-    *     keys degenerates to a full sort of the band rows);
-    *  2. the surviving hot-key set (2..cap rows) is small — broadcast
-    *     it and filter the band rows MAP-SIDE, so the only full-volume
-    *     shuffle is the count agg;
-    *  3. pairs are LENGTH-PREFILTERED (a DL <= maxEditDistance verify
-    *     needs |lenA-lenB| <= maxEditDistance — measured 170x
-    *     over-generation without it) before the cross-path distinct, so
-    *     the kernel scores each surviving pair exactly once no matter
-    *     how many bands it collided in.
+  /** Candidate pairs from a sketched base — all three key families, one
+    * capped expansion ([[CappedPairs.expand]]), LENGTH-PREFILTERED and
+    * not deduplicated.
     *
     * @param dropped observation that counts the buckets over the cap
     *        (the documented recall loss) on the count aggregation
     */
-  def pairsFromKeys(keyed: DataFrame, cfg: DedupConfig,
-      dropped: Option[Observation] = None): DataFrame = {
-    val hot = CappedPairs.hotKeys(keyed, cfg.bucketCap, dropped)
-    keyed.join(broadcast(hot), Seq("k"))
-      .groupBy("k")
-      .agg(sort_array(collect_list(struct(col("id"), col("len")))).as("ms"))
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .filter(col("a.id") < col("b.id") &&
-        abs(col("a.len") - col("b.len")) <= cfg.maxEditDistance)
-      .select(col("a.id").as("a"), col("b.id").as("b"))
-  }
-
-  /** Candidate pairs from a sketched base — all three paths, one pass. */
   def candidatePairs(base: DataFrame, cfg: DedupConfig,
       dropped: Option[Observation] = None): DataFrame =
-    pairsFromKeys(candidateKeys(base, cfg), cfg, dropped)
+    CappedPairs.expand(candidateKeys(base, cfg), cfg.bucketCap, dropped,
+      lengthFilter(cfg))
+
+  /** The text pair filter inside the candidate expansion: a DL <=
+    * maxEditDistance verify needs |lenA-lenB| <= maxEditDistance
+    * (measured 170x over-generation without it), so such pairs never
+    * reach the cross-path dedup and the kernel scores each surviving
+    * pair exactly once no matter how many buckets it collided in.
+    */
+  private def lengthFilter(cfg: DedupConfig): (Column, Column) => Column =
+    (a, b) => abs(a.getField("len") - b.getField("len")) <= cfg.maxEditDistance
 
   /** Per-host containment verification: one pass decides ALL of a host's
     * candidate probes. When the anchor join has funneled enough probes
@@ -471,47 +384,31 @@ object DedupPipeline {
 
   /** Verification: analiticcl kernel, each distinct pair DECIDED once on
     * PRECOMPUTED norms (features once per pair, both direction
-    * normalizations, max, compared to the threshold). The filter is
+    * normalizations, max, compared to the threshold) by the shared
+    * two-join verify ([[CappedPairs.verify]]). The keep predicate is
     * [[Kernels.pairAccept]], the native codegen PairAccept expression in
     * any session: the verify decision runs inside the stage's generated
     * method (no per-pair UDF converter boundary on the pipeline's largest
     * 1-core phase) AND skips the exact-LCS DP whenever the prefix/suffix
     * lower bound or the minLen upper bound already decides the score
     * against the threshold (most pairs — see
-    * [[graft.functions.KernelExprs.pairAccept]]). Norms arrive by
-    * SHUFFLE-HASH joins (hinted): no sort of the candidate stream
-    * (sort-merge measured 2-3x slower) and no single-threaded driver
-    * broadcast build (at 1.5M reps a broadcast serialized the whole
-    * stage). The FIRST join builds the CANDIDATES side (16-byte pair
-    * rows, ~300 MB at the 3M-clip bench) and streams the texts; only
-    * the second builds a texts relation. Building texts on BOTH joins
-    * OOM'd the 1-core 8 GiB bench child once the a-keyed dedup (change
-    * 13) fused the dedup hash-agg and join 1 into one stage: two
-    * non-spillable ~1-2 GiB text hash relations plus the agg map
-    * co-resided in a single task ("Can't acquire 1073741824 bytes to
-    * build hash relation"). With the pair side built, the two large
-    * structures live in different stages, the per-task non-spillable
-    * peak drops severalfold, and join 1 probes 3M text rows against a
-    * small hash instead of 5M pairs against a large one. Results are
-    * identical: inner equi-joins — the build side is a physical choice.
+    * [[graft.functions.KernelExprs.pairAccept]]).
     */
   def verifyPairs(candidates: DataFrame, base: DataFrame,
       cfg: DedupConfig, K: Kernels,
-      numParts: Option[Int] = None): DataFrame = {
-    val texts0 = base.select(col("id"), col("norm"), col("lc"))
-    val textsA = texts0.select(col("id").as("a"), col("norm").as("na"),
-      col("lc").as("lca"))
-    val textsB = texts0.select(col("id").as("b"), col("norm").as("nb"),
-      col("lc").as("lcb"))
-    val j1 = candidates.hint("SHUFFLE_HASH").join(textsA, Seq("a"))
-    // align join 2's exchange to the same memory-derived partition count
-    // (the session default is core-count-sized and puts the whole textsB
-    // build in one task at low parallelism); the repartition IS join 2's
-    // left-side exchange, not an extra one
-    val j1p = numParts.fold(j1)(p => j1.repartition(p, col("b")))
-    j1p.join(textsB.hint("SHUFFLE_HASH"), Seq("b"))
-      .filter(K.pairAccept(col("na"), col("nb"), col("lca"), col("lcb"),
-        cfg.maxEditDistance, cfg.scoreThreshold, cfg.weights))
-      .select(col("a").as("src"), col("b").as("dst"))
-  }
+      numParts: Option[Int] = None): DataFrame =
+    srcDst(CappedPairs.verify(candidates, texts(base), numParts, "accepted",
+      accepted(cfg, K), identity))
+
+  /** The verify payload of a sketched base: (id, norm, lc). */
+  private def texts(base: DataFrame): DataFrame =
+    base.select(col("id"), col("norm"), col("lc"))
+
+  private def accepted(cfg: DedupConfig, K: Kernels)
+      : (String => Column, String => Column) => Column = (a, b) =>
+    K.pairAccept(a("norm"), b("norm"), a("lc"), b("lc"),
+      cfg.maxEditDistance, cfg.scoreThreshold, cfg.weights)
+
+  private def srcDst(pairs: DataFrame): DataFrame =
+    pairs.select(col("a").as("src"), col("b").as("dst"))
 }

@@ -204,12 +204,15 @@ object EmbDedup {
       df.select(col(idCol), col(embCol)), Some(rowsObs)), idCol, embCol, cfg))
     val nRows = countedOrZero(rowsObs)
     val vecs = signedCut.df
-    val (vCut, nCand, nDropped, nVerified) = CappedPairs.verified(spark,
-      bandKeys(vecs), vecs.select(col("id"), col("emb").as("p")), nRows,
-      verifyBuildRows, cfg.bucketCap, "cos",
-      graft.functions.TextFns.cosineSim, _ >= cfg.cosThreshold)
+    val v = CappedPairs.verified(spark, bandKeys(vecs),
+      vecs.select("id", "emb"), nRows, verifyBuildRows, cfg.bucketCap, "cos",
+      (a, b) => graft.functions.TextFns.cosineSim(a("emb"), b("emb")),
+      _ >= cfg.cosThreshold)
+    val (vCut, nVerified) = Checkpoints.cutCounted(v.edges)
+    val m = EmbDedupMetrics(nRows, v.candidatePairs, v.droppedBuckets,
+      nVerified, -1L)
     signedCut.release()
-    (vCut, EmbDedupMetrics(nRows, nCand, nDropped, nVerified, -1L))
+    (vCut, m)
   }
 
   /** Full clustering: verified near-dup edges -> connected components.

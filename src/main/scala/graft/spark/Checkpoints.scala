@@ -52,6 +52,15 @@ object Checkpoints {
     Cut(out, added)
   }
 
+  /** [[cut]] of `df` with the rows where `cond` holds counted on the
+    * cut's own job.
+    */
+  def cutCounted(df: DataFrame, cond: Column = lit(true)): (Cut, Long) = {
+    val o = Observation()
+    val c = cut(observeCount(df, Some(o), cond))
+    (c, countedOrZero(o))
+  }
+
   /** `df` with `obs` (when given) counting the rows where `cond` holds,
     * collected by whichever job runs `df` (a cut, an aggregation, a
     * dedup the operator runs anyway), so no counter costs a job of its

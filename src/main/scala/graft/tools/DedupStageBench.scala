@@ -7,8 +7,10 @@ import graft.operators.{DedupConfig, DedupMetrics, DedupPipeline}
 import graft.sources.ClipGen
 
 /** Strong-scaling diagnosis harness: run the dedup pipeline once at a
-  * given core count with per-phase timing (SPARK_GRAFT_STAGE_TIMING).
-  * Every timed rep also returns the pipeline's stage counters, which
+  * given core count. The per-phase split (rows, sketch, candidates,
+  * verify, cc, finalize) comes from the traced benchmark run,
+  * `python3 perfbench/run.py --workload dedup_near --trace 1`. Every
+  * timed rep also returns the pipeline's stage counters, which
   * `Dataset.observe` collects on the jobs the pass already runs; the
   * RESULT line reports the last rep's as the guard values.
   * Usage: runMain graft.tools.DedupStageBench <cpus> <nClusters>

@@ -261,6 +261,94 @@ class DedupPipelineSpec extends SparkSpecBase {
     assert(empty == DedupMetrics(0, 0, 0, 0, 0, 0), empty.toString)
   }
 
+  /** The executed plans of the queries `body` runs, in completion order. */
+  def executedPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously but in order: once a
+      // marker query's plan is in, so are the body's
+      spark.range(1).selectExpr("id AS plans_marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def marked = plans.stream().anyMatch(_.toString.contains("plans_marker"))
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan])
+      .toSeq.filterNot(_.toString.contains("plans_marker"))
+  }
+
+  object planHelper
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("run()'s edge cut fuses the candidate dedup with verify join 1") {
+    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // the dedup_near input (ClipGen seed 1, 2,000 clusters)
+    val in = graft.sources.ClipGen.transcriptTable(spark, 1L, 2000)
+      .select((col("cluster_id") * 4 + substring_index(col("clip_id"), "_", -1)
+        .cast("long")).as("id"), col("transcript"))
+    var m: DedupMetrics = null
+    val plans = executedPlans {
+      m = DedupPipeline.run(spark, in, "id", "transcript")._2
+    }
+    assert(m.nCandidatePairs == 35998 && m.nVerifiedEdges == 4540, m)
+    val verify = plans.filter(_.toString.contains("pair_accept("))
+    assert(verify.size == 1, s"${verify.size} plans run the verify kernel")
+    // count agg, hot-key broadcast, bucket collect, the a-keyed dedup
+    // that is also join 1's pair-side exchange, join 1's text side (which
+    // join 2's text side reuses), join 2's pair side and the exact-star
+    // window: a dedup split from join 1 adds one
+    val exchanges = planHelper.collect(verify.head) { case e: Exchange => e }
+    assert(exchanges.size == 7, verify.head.toString)
+  }
+
+  test("verifyPairs skips join 2's pair-side exchange at one partition") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val K = new graft.functions.Kernels(Alphabet.test)
+    val base = DedupPipeline.sketchBase(corpus.map(d => (d.id, d.text))
+      .toDF("id", "text")
+      .withColumn("norm", K.normKey(col("text")))
+      .withColumn("nh", xxhash64(col("norm")))
+      .withColumn("lc", K.caseClass(col("text"))), cfg, K)
+    val candidates = DedupPipeline.candidatePairs(base, cfg)
+    // the shuffle origins of every exchange, and the edges, of a verify
+    // whose candidates come from run()'s a-keyed dedup at `parts`
+    def verify(parts: Int): (Seq[String], Set[(Long, Long)]) = {
+      val df = DedupPipeline.verifyPairs(
+        candidates.repartition(parts, col("a")).dropDuplicates("a", "b"),
+        base, cfg, K, numParts = Some(parts))
+      val edges = df.as[(Long, Long)].collect().toSet
+      (planHelper.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.shuffleOrigin.toString
+      }, edges)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1") // the session of a one-core run
+    try {
+      val (onePlan, one) = verify(1)
+      val (fourPlan, four) = verify(4)
+      // one partition already satisfies join 2's distribution: the only
+      // explicit repartition is the candidate dedup's, and no exchange
+      // takes the place of the one skipped
+      assert(onePlan.count(_ == "REPARTITION_BY_NUM") == 1, onePlan)
+      assert(fourPlan.count(_ == "REPARTITION_BY_NUM") == 2, fourPlan)
+      assert(onePlan.size == fourPlan.size - 1, (onePlan, fourPlan))
+      assert(one.nonEmpty && one == four)
+    } finally spark.conf.set(key, saved)
+  }
+
   test("agrees with the reference-semantics matcher's cluster assignment") {
     // reference path: match every doc against the canonical lexicon with
     // the LocalVariantModel (pinned to the reference's unit tests);
