@@ -153,35 +153,6 @@ object FastHash {
     out
   }
 
-  /** Column: MinHash signature (array<long>) of n-shingles of a string. */
-  def minhashSig(c: Column, n: Int, k: Int): Column = {
-    val f = udf { (s: String) =>
-      Option(s).map(x => minhash(shingleHashes(x, n), k))
-    }
-    f(c)
-  }
-
-  /** Column: SimHash-64 (long) of n-shingles of a string. */
-  def simhash64(c: Column, n: Int): Column = {
-    val f = udf { (s: String) =>
-      Option(s).map(x => simhash(shingleHashes(x, n)))
-    }
-    f(c)
-  }
-
-  /** Column: both at once (struct<sig:array<long>, sim:long>) — one text
-    * pass when the pipeline needs both.
-    */
-  def sketch(c: Column, n: Int, k: Int): Column = {
-    val f = udf { (s: String) =>
-      Option(s).map { x =>
-        val hs = shingleHashes(x, n)
-        (minhash(hs, k), simhash(hs))
-      }
-    }
-    f(c)
-  }
-
   /** LSH band keys from a MinHash signature, numerically (band index
     * mixed with the band's rows — no string building): one Long per band.
     */

@@ -11,11 +11,10 @@ import org.apache.spark.sql.types.LongType
   * so Catalyst folds constants, pushes filters, prunes columns and keeps
   * the hot path inside WholeStageCodegen.
   *
-  * Two hash families are provided for MinHash:
-  *  - md5-based ("portable"): bit-identical SQL exists for DuckDB/any
-  *    ANSI engine — used by the correctness oracle;
-  *  - xxhash64-based ("fast"): Spark-native codegen'd hashing — used by
-  *    the production/bench path. Same pipeline shape, same recall math.
+  * The MinHash here is the md5-based ("portable") family: bit-identical
+  * SQL exists for DuckDB/any ANSI engine, so the oracle-checked queries
+  * use it. The pipeline's own sketch is [[FastHash]]'s. Same pipeline
+  * shape, same recall math.
   */
 object TextFns {
 
@@ -61,13 +60,6 @@ object TextFns {
     array((0 until k).map(i =>
       array_min(transform(shingles, s => md5Hash60Seeded(i, s)))): _*)
 
-  /** Fast MinHash signature: one xxhash64 pass per (seed, shingle);
-    * xxhash64 is a native codegen'd Catalyst expression.
-    */
-  def minhashFast(shingles: Column, k: Int): Column =
-    array((0 until k).map(i =>
-      array_min(transform(shingles, s => xxhash64(lit(i), s)))): _*)
-
   /** Bit-identical JVM implementation of
     * `minhashPortable(charShingles(c, n), k)`: same md5("<seed>:<shingle>")
     * → first-15-hex-digits-as-long → per-seed min math, computed in one
@@ -106,34 +98,6 @@ object TextFns {
     }
     f(c)
   }
-
-  /** LSH band keys: split a k-long signature into `bands` rows of
-    * `rowsPerBand`, hash each band slice; returns
-    * array<struct<band:int, key:long>> ready to explode. Candidate pairs
-    * = equal (band, key). Pairs joined on this key need no further
-    * shuffle by construction.
-    */
-  private def bandSliceStr(sig: Column, b: Int, rowsPerBand: Int): Column =
-    concat_ws("_",
-      transform(slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string")))
-
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(lit(b), bandSliceStr(sig, b, rowsPerBand)).as("key")
-      )
-    }: _*)
-
-  /** Portable band key (md5-based) for oracle-checked LSH queries. */
-  def lshBandsPortable(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        md5Hash60(concat_ws("_", lit(b), bandSliceStr(sig, b, rowsPerBand)))
-          .as("key")
-      )
-    }: _*)
 
   /** SimHash from an array of (already-computed) 60-bit shingle hashes:
     * bit j of the result is the sign of Σ (bit j of hash ? 1 : -1).
@@ -188,10 +152,6 @@ object TextFns {
     }
     f(c)
   }
-
-  /** Hamming distance between two packed-64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** Whitespace token array / count. */
   def tokens(c: Column): Column = split(trim(c), " +")

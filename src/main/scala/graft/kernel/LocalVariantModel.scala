@@ -204,8 +204,6 @@ final class LocalVariantModel(
   def intoNgram(id: Long): Vector[Long] =
     entries(id.toInt).text.split(' ').iterator.map(encodeToken).toVector
 
-  def ngramCount(ngram: Vector[Long]): Option[Long] = ngramCounts.get(ngram)
-
   /** Add a weighted VariantOf edge variant -> target (reference:
     * src/lib.rs:478-514 add_variant; used by the error-list reader).
     */

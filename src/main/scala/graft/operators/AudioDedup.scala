@@ -257,7 +257,7 @@ object AudioDedup {
       collectMetrics: Boolean = true): (DataFrame, AudioDedupMetrics) = {
     val (vCut, m) = nearDupPairs(spark, df, idCol, bytesCol, cfg)
     val (assignments, nClusters) = ConnectedComponents.assignClusters(
-      spark, df.select(col(idCol).as("id")), vCut, "a", "b")
+      spark, df.select(col(idCol).as("id")), vCut, m.nVerifiedEdges, "a", "b")
     (assignments, m.copy(nClusters = nClusters))
   }
 }

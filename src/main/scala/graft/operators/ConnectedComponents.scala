@@ -207,9 +207,10 @@ object ConnectedComponents {
       if (edgesMaterialized) None else Some(Checkpoints.cut(edges))
     var transferred = false
     try {
-      val (result, ownsInput) = runCutOnEdges(spark,
-        inputCut.map(_.df).getOrElse(edges), srcCol, dstCol, maxIterations,
-        withAllNodes, localKernelMaxEdges, resumeKey, inputCut)
+      val input = inputCut.map(_.df).getOrElse(edges)
+      val (result, ownsInput) = runCutOnEdges(spark, input, input.count(),
+        srcCol, dstCol, maxIterations, withAllNodes, localKernelMaxEdges,
+        resumeKey, inputCut)
       transferred = ownsInput
       result
     } finally if (!transferred) inputCut.foreach(_.release())
@@ -220,14 +221,20 @@ object ConnectedComponents {
     * small-graph kernel runs inside the assignments job. Returned with
     * the cluster count, observed as the rows whose cluster is their own
     * id, so ids must be unique.
+    *
+    * @param nEdges the edges' row count as the caller observed it on the
+    *        cut's job, which elects the strategy without a counting job.
+    *        An observed count can only over-count (a re-run task counts
+    *        its rows twice), which can only elect the distributed loop
+    *        or oversize the union-find: both are safe.
     */
   def assignClusters(spark: SparkSession, ids: DataFrame,
-      edges: Checkpoints.Cut, srcCol: String,
+      edges: Checkpoints.Cut, nEdges: Long, srcCol: String,
       dstCol: String): (DataFrame, Long) = {
     // withAllNodes=false: the left join supplies the full id universe
-    val (cc, ownsEdges) = runCutOnEdges(spark, edges.df, srcCol, dstCol,
-      maxIterations = 50, withAllNodes = false, defaultLocalKernelMaxEdges,
-      resumeKey = None, inputOwner = Some(edges))
+    val (cc, ownsEdges) = runCutOnEdges(spark, edges.df, nEdges, srcCol,
+      dstCol, maxIterations = 50, withAllNodes = false,
+      defaultLocalKernelMaxEdges, resumeKey = None, inputOwner = Some(edges))
     // SHUFFLE_HASH: both sides are stat-less checkpoints and would plan
     // as a SortMergeJoin — at 3M rows that is two full sorts for a join a
     // hash build does sort-free
@@ -243,16 +250,18 @@ object ConnectedComponents {
   }
 
   /** [[runCut]] body over edges whose plan is already materialized (every
-    * full pass over them is a cheap block read, never a DAG re-run).
-    * Returns (result, ownsInput): ownsInput=true means the result is a
-    * LAZY plan over `inputOwner`'s blocks and has taken over their
-    * release — the single-task union-find is cheap enough that running
-    * it inside the consumer's one action beats materializing it in an
-    * extra eager job, and Cut.release() then frees the edge blocks.
+    * full pass over them is a cheap block read, never a DAG re-run) and
+    * whose row count is `edgeCount`. Returns (result, ownsInput):
+    * ownsInput=true means the result is a LAZY plan over `inputOwner`'s
+    * blocks and has taken over their release — the single-task
+    * union-find is cheap enough that running it inside the consumer's
+    * one action beats materializing it in an extra eager job, and
+    * Cut.release() then frees the edge blocks.
     */
   private def runCutOnEdges(
       spark: SparkSession,
       edges: DataFrame,
+      edgeCount: Long,
       srcCol: String,
       dstCol: String,
       maxIterations: Int,
@@ -324,7 +333,6 @@ object ConnectedComponents {
     val localMaxEdges =
       if (wideKeys) math.min(localKernelMaxEdges, defaultLocalKernelMaxEdgesWide)
       else localKernelMaxEdges
-    val edgeCount = edges.count()
     if (edgeCount <= localMaxEdges) {
       import spark.implicits._
       val pairs = if (!wideKeys) {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{FastHash, Kernels}
 import graft.kernel.{Alphabet, SearchParameters, Weights}
 import graft.spark.Checkpoints
-import graft.spark.Checkpoints.{countedOrZero, observeCount}
+import graft.spark.Checkpoints.countedOrZero
 
 /** Configuration of the near-duplicate pipeline — the fixed
   * "shingle/signature config" (BASELINE.json): holding these constant is
@@ -89,19 +89,39 @@ final case class DedupMetrics(
   * dedup operator shares ([[CappedPairs.verified]],
   * [[ConnectedComponents.assignClusters]]).
   *
-  * Stage layout and shuffle budget (at N input rows):
-  *   1. normalize: narrow map (one text pass per row), cut
-  *   2. sketch distinct norms: 1 shuffle (groupBy norm hash), cut; the
-  *      exact-dup star edges: 1 shuffle (window on the same hash)
-  *   3. candidates: ONE fused explode of the band, simhash-chunk and
-  *      anagram keys ([[candidateKeys]]) -> 1 shuffle (count agg) +
-  *      broadcast hot keys + 1 shuffle (capped buckets), in-row
-  *      length-prefiltered pair expansion — no self-join
-  *   4. verify: the a-keyed pair dedup exchange doubles as join 1's,
-  *      join 2 on b, native pair_accept filter — the kernel only ever
-  *      sees candidate pairs, never the N-row table
-  *   5. one observed edge cut (verified + exact + containment edges),
-  *      connected components over it, left-join onto the N row ids
+  * The jobs of one pass, in order (12 at local[4] on the dedup_near
+  * input; the cuts are eager, and adaptive execution runs the map side
+  * of each exchange as a job of its own):
+  *   1. front cut, map side: normalize each row (one text pass) to
+  *      (id, norm, nh, lc), exchanged on nh
+  *   2. front cut ([[rooted]]): a window on nh roots each row at its
+  *      exact group's min id and the roots are sketched; materializes
+  *      the rows, the sketch base and the exact-star edges in one cut,
+  *      observes nRows and nExactGroups
+  *   3. candidate keys: ONE fused explode of the band, simhash-chunk and
+  *      anagram keys ([[candidateKeys]]), exchanged on the key for the
+  *      count agg
+  *   4. hot-key broadcast: the keys with 2..cap rows, observes
+  *      nDroppedBuckets
+  *   5. bucket collect: the keys joined to the hot keys, exchanged on the
+  *      key
+  *   6. verify join 1's text side: the base's (id, norm, lc), exchanged
+  *      on a (join 2's text side reuses this exchange)
+  *   7. candidate pairs, expanded in-row from each capped bucket (no
+  *      self-join) and length-prefiltered, exchanged on a: the pair
+  *      dedup's exchange doubles as join 1's
+  *   8. the dedup and join 1, exchanged on b for join 2; observes
+  *      nCandidatePairs
+  *   9. edge cut: join 2 and the native pair_accept filter (the kernel
+  *      only ever sees candidate pairs, never the N-row table), unioned
+  *      with the exact-star edges read off the front cut and the
+  *      containment edges when that pass is on; observes nVerifiedEdges
+  *   10-12. clustering ([[ConnectedComponents.assignClusters]]): the row
+  *      ids and the union-find's (node, component) rows, each exchanged
+  *      on id, then the left-join cut; observes nClusters
+  * At one partition the exchanges of jobs 1 and 8 and one of 10-11 are
+  * already satisfied and skipped: 9 jobs. The containment pass, when
+  * on, adds the jobs of its own exchanges.
   *
   * Candidate generation never compares texts; verification never sees
   * more than the candidate pairs. This is the structure that holds at
@@ -140,9 +160,9 @@ object DedupPipeline {
     // anyway (the eager cuts, the hot-key count agg, the candidate
     // dedup), filled by that plan's own job: no metric costs a job of its
     // own (except nDroppedBuckets on inputs without candidate buckets)
-    val groupsObs = Observation()
+    val frontObs = Observation()
 
-    // ---- 1a. normalize (one narrow pass over all rows) ----
+    // ---- 1. normalize, root and sketch: the one front cut ----
     // id keying is type-agnostic downstream (every stage uses generic
     // orderable/groupable column ops): LONG ids for the 64-bit path,
     // BINARY (128-bit) ids pass through untouched for the 10^12-row
@@ -154,24 +174,21 @@ object DedupPipeline {
     val idExpr = if (wide) col(idCol) else col(idCol).cast("long")
     val nhExpr: Column => Column =
       if (wide) n => unhex(md5(n)) else n => xxhash64(n)
-    // the checkpointed row universe carries (id, norm, nh, lc) — NOT the
-    // raw text: norm is what every downstream stage consumes, and lc
-    // (first-codepoint case class) is the only other fact the verify
-    // kernel needs from the original text, so dropping text here shrinks
-    // the materialized universe and the sketch shuffle by the full text
-    // payload per row. nRows sizes the verify joins (verifyParts).
-    val (rowsCut, nRows) = Checkpoints.cutCounted(
+    // rows carry (id, norm, nh, lc) — NOT the raw text: norm is what
+    // every downstream stage consumes, and lc (first-codepoint case
+    // class) is the only other fact the verify kernel needs from the
+    // original text, so dropping text here keeps the full text payload
+    // out of the nh exchange. nRows sizes the verify joins (verifyParts).
+    val frontCut = Checkpoints.cut(rooted(
       df.select(idExpr.as("id"), col(textCol).cast("string").as("text"))
         .withColumn("norm", K.normKey(col("text")))
         .withColumn("nh", nhExpr(col("norm")))
         .withColumn("lc", K.caseClass(col("text")))
-        .drop("text"))
-    val rows = rowsCut.df // read by the exact stage, sketch and finalize
-
-    // ---- 1b. sketch DISTINCT norms only (see [[sketchBase]]) ----
-    val baseCut = Checkpoints.cut(
-      sketchBase(rows, cfg, K, exactGroups = Some(groupsObs)))
-    val base = baseCut.df // read by candidates, verify and containment
+        .drop("text"), cfg, frontObs))
+    val nRows = countedOrZero(frontObs)
+    val front = frontCut.df
+    // the sketch base: read by candidates, verify and containment
+    val base = front.filter(isRoot).drop("root")
 
     // ---- 2+3+4. capped candidates -> a-keyed dedup -> verify ----
     val v = CappedPairs.verified(spark, candidateKeys(base, cfg),
@@ -180,28 +197,58 @@ object DedupPipeline {
 
     // ---- 5. one observed edge cut (CC iterates over it): verified,
     //      exact-star and containment edges ----
+    val stars = front.filter(!isRoot)
+      .select(col("root").as("src"), col("id").as("dst"))
     val (edgesCut, nEdges) = Checkpoints.cutCounted(
-      (Seq(srcDst(v.edges), exactStarEdges(rows)) ++
+      (Seq(srcDst(v.edges), stars) ++
         Option.when(cfg.substringMinLen > 0)(containmentEdges(base, cfg)))
         .reduce(_ union _))
 
     // ---- 6. clustering; frees the edge cut ----
     val (assignments, nClusters) = ConnectedComponents.assignClusters(
-      spark, rows.select(col("id")), edgesCut, "src", "dst")
-    val m = DedupMetrics(nRows, countedOrZero(groupsObs), v.candidatePairs,
-      v.droppedBuckets, nEdges, nClusters)
+      spark, front.select(col("id")), edgesCut, nEdges, "src", "dst")
+    val m = DedupMetrics(nRows, countedOrZero(frontObs, "groups"),
+      v.candidatePairs, v.droppedBuckets, nEdges, nClusters)
     // free every intermediate checkpoint: iterative pipelines that leak
     // block-manager storage degrade the session they run in
     // (unpersist() alone never frees localCheckpoint blocks — see
     // Checkpoints)
-    rowsCut.release()
-    baseCut.release()
+    frontCut.release()
     (assignments, m)
   }
 
+  /** A front-cut row that is its exact group's root. */
+  private val isRoot: Column = col("id") === col("root")
+
+  /** The pass's front cut: (id, norm, nh, lc) rows windowed on their norm
+    * hash, each with `root`, the min id of its exact-duplicate group. A
+    * root row carries the sketch base's columns (id, norm, lc, len, sim,
+    * bands, anakey), the same as [[sketchBase]] elects by its struct min
+    * (ids are unique, so the min struct is the min-id row). A non-root
+    * row keeps only (id, root): its payload is null, so the cut holds no
+    * duplicate norm and the sketch UDF runs once per group. One nh
+    * exchange thus serves the sketch base (`id === root`), the
+    * exact-star edges (`root -> id` elsewhere, the same edges as
+    * [[exactStarEdges]]) and the row universe. `counts` observes the rows
+    * ("n") and the exact-duplicate groups ("groups") on the cut's job.
+    */
+  private def rooted(rows: DataFrame, cfg: DedupConfig,
+      counts: Observation): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("nh")
+    sketched(rows
+      .select(col("*"), min("id").over(w).as("root"),
+        count(lit(1)).over(w).as("m"))
+      .observe(counts, count(lit(1)).as("n"),
+        count(when(isRoot && col("m") > 1, 1)).as("groups"))
+      .select(col("id"), col("root"), when(isRoot, col("norm")).as("norm"),
+        when(isRoot, col("lc")).as("lc")), cfg)
+  }
+
   // ------------------------------------------------------------------
-  // Shared stage builders (used by both run() and the checkpointed
-  // ClipDedup job — one implementation, one plan shape).
+  // Public stage builders, shared with the checkpointed ClipDedup job
+  // (sketchBase and exactStarEdges are the split form of run()'s front
+  // cut).
   // ------------------------------------------------------------------
 
   /** Normalize + sketch DISTINCT norms only. Web-scale corpora are
@@ -217,28 +264,37 @@ object DedupPipeline {
     * either way because the struct min short-circuits at the unique id).
     * Output base: (id, norm, lc, len, sim, bands, anakey).
     *
-    * @param exactGroups observation that counts the exact-duplicate
-    *        groups (norm hashes shared by more than one row) while the
-    *        group-by runs
+    * run() builds the same base from its front cut ([[rooted]]), which
+    * also serves the exact-star edges. This split form stays for
+    * ClipDedup's sketches stage, whose stage-byte pins depend on its
+    * plan, and for perfbench's traced decomposition of the pass; it goes
+    * with them (ROADMAP D2, D3).
     */
-  def sketchBase(rows: DataFrame, cfg: DedupConfig, K: Kernels,
-      exactGroups: Option[Observation] = None): DataFrame =
-    observeCount(rows
+  def sketchBase(rows: DataFrame, cfg: DedupConfig, K: Kernels): DataFrame =
+    rows
       .groupBy("nh")
-      .agg(min(struct(col("id"), col("norm"), col("lc"))).as("r"),
-        count(lit(1)).as("m")), exactGroups, col("m") > 1)
+      .agg(min(struct(col("id"), col("norm"), col("lc"))).as("r"))
       .select(col("r.id").as("id"), col("r.norm").as("norm"),
         col("r.lc").as("lc"))
-      .withColumn("sk", FastHash.sketchFull(col("norm"), cfg.shingleN,
+      .transform(sketched(_, cfg))
+
+  /** `df` plus the sketch of its `norm` column: (len, sim, bands,
+    * anakey), all null where norm is.
+    */
+  private def sketched(df: DataFrame, cfg: DedupConfig): DataFrame =
+    df.withColumn("sk", FastHash.sketchFull(col("norm"), cfg.shingleN,
         cfg.minhashK, cfg.bands, cfg.rowsPerBand))
-      .select(col("id"), col("norm"), col("lc"),
-        length(col("norm")).as("len"),
+      .select(df.columns.map(col) ++ Seq(length(col("norm")).as("len"),
         col("sk._1").as("sim"), col("sk._2").as("bands"),
-        col("sk._3").as("anakey"))
+        col("sk._3").as("anakey")): _*)
 
   /** Exact duplicates: window-min star edges, not collect_list — a
     * pathological million-copy text must not materialize a
     * million-element array in one row. Input needs (id, nh).
+    *
+    * run() reads these edges off its front cut ([[rooted]]); this form
+    * stays for ClipDedup's edges stage and perfbench's traced
+    * decomposition, like [[sketchBase]].
     */
   def exactStarEdges(rows: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -230,7 +230,7 @@ object EmbDedup {
       collectMetrics: Boolean = true): (DataFrame, EmbDedupMetrics) = {
     val (vCut, m) = nearDupPairs(spark, df, idCol, embCol, cfg)
     val (assignments, nClusters) = ConnectedComponents.assignClusters(
-      spark, df.select(col(idCol).as("id")), vCut, "a", "b")
+      spark, df.select(col(idCol).as("id")), vCut, m.nVerifiedEdges, "a", "b")
     (assignments, m.copy(nClusters = nClusters))
   }
 }

@@ -70,16 +70,17 @@ object Checkpoints {
       cond: Column = lit(true)): DataFrame =
     obs.fold(df)(o => df.observe(o, count(when(cond, 1)).as("n")))
 
-  /** The count an [[observeCount]] observation collected. Blocks until
-    * the job that runs the observed plan has finished; None if that job
-    * skipped the observed node (adaptive execution drops a join input
-    * once the join is proven empty).
+  /** The count `name` (an [[observeCount]]'s is "n") an observation
+    * collected. Blocks until the job that runs the observed plan has
+    * finished; None if that job skipped the observed node (adaptive
+    * execution drops a join input once the join is proven empty).
     */
-  def counted(o: Observation): Option[Long] =
-    o.get.get("n").map(_.asInstanceOf[Long])
+  def counted(o: Observation, name: String = "n"): Option[Long] =
+    o.get.get(name).map(_.asInstanceOf[Long])
 
   /** [[counted]] for a node that runs unless its input is empty, so a
     * count the job never filled is 0.
     */
-  def countedOrZero(o: Observation): Long = counted(o).getOrElse(0L)
+  def countedOrZero(o: Observation, name: String = "n"): Long =
+    counted(o, name).getOrElse(0L)
 }

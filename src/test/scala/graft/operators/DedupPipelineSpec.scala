@@ -290,26 +290,80 @@ class DedupPipelineSpec extends SparkSpecBase {
   object planHelper
       extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-  test("run()'s edge cut fuses the candidate dedup with verify join 1") {
+  /** The dedup_near input (ClipGen seed 1, 2,000 clusters), cached. */
+  lazy val nearInput: org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, substring_index}
-    import org.apache.spark.sql.execution.exchange.Exchange
-    // the dedup_near input (ClipGen seed 1, 2,000 clusters)
     val in = graft.sources.ClipGen.transcriptTable(spark, 1L, 2000)
       .select((col("cluster_id") * 4 + substring_index(col("clip_id"), "_", -1)
         .cast("long")).as("id"), col("transcript"))
+      .cache()
+    in.count()
+    in
+  }
+
+  test("run()'s edge cut fuses the candidate dedup with verify join 1") {
+    import org.apache.spark.sql.execution.exchange.Exchange
     var m: DedupMetrics = null
     val plans = executedPlans {
-      m = DedupPipeline.run(spark, in, "id", "transcript")._2
+      m = DedupPipeline.run(spark, nearInput, "id", "transcript")._2
     }
     assert(m.nCandidatePairs == 35998 && m.nVerifiedEdges == 4540, m)
     val verify = plans.filter(_.toString.contains("pair_accept("))
     assert(verify.size == 1, s"${verify.size} plans run the verify kernel")
     // count agg, hot-key broadcast, bucket collect, the a-keyed dedup
     // that is also join 1's pair-side exchange, join 1's text side (which
-    // join 2's text side reuses), join 2's pair side and the exact-star
-    // window: a dedup split from join 1 adds one
+    // join 2's text side reuses) and join 2's pair side: a dedup split
+    // from join 1 adds one. The exact-star edges read the front cut
+    // without an exchange.
     val exchanges = planHelper.collect(verify.head) { case e: Exchange => e }
-    assert(exchanges.size == 7, verify.head.toString)
+    assert(exchanges.size == 6, verify.head.toString)
+  }
+
+  /** The number of jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.atomic.AtomicBoolean
+    // jobs inherit the starting thread's local properties, including the
+    // broadcast and query-stage jobs adaptive execution starts for it
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("body")   => jobs.incrementAndGet()
+          case Some("marker") => marked.set(true)
+          case _              =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      // listener events arrive asynchronously but in order: once the
+      // marker job's start is in, so are the body's
+      sc.setLocalProperty(tag, "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!marked.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked.get, "the marker job's start never arrived")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("a run() pass takes at most 12 jobs") {
+    // one windowed front cut serves the rows, the sketch base and the
+    // exact-star edges, and the clustering takes the edge count the edge
+    // cut observed: 16 jobs before both
+    var m: DedupMetrics = null
+    val jobs = jobsOf {
+      m = DedupPipeline.run(spark, nearInput, "id", "transcript")._2
+    }
+    assert(m == DedupMetrics(5062, 21, 35998, 356, 4540, 2000), m)
+    assert(jobs <= 12, s"$jobs jobs")
   }
 
   test("verifyPairs skips join 2's pair-side exchange at one partition") {
