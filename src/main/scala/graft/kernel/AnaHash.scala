@@ -154,10 +154,11 @@ object AnaHash {
   }
 
   /** Presence-mask bit for alphabet class i (classes >= 63 share bit 63,
-    * which is then conservative-only). Invariant used by the containment
-    * prefilter: bag(probe) ⊆ bag(candidate) ⟹
-    * (probeMask & ~candMask) == 0 — the mask test never rejects a true
-    * containment, it only skips most guaranteed-false BigInteger mods.
+    * which is then conservative-only). Invariant behind the matcher's
+    * per-letter postings: bag(probe) ⊆ bag(candidate) ⟹ every sub-63 bit
+    * of probeMask is set in candMask, so intersecting the postings of the
+    * probe's bits never drops a true containment, it only skips most
+    * guaranteed-false divisibility tests.
     */
   @inline def maskBit(classIndex: Int): Long = 1L << math.min(classIndex, 63)
 
@@ -229,7 +230,8 @@ object AnaHash {
 
   /** [[deletionNeighborhoodWithMasks]] in native long arithmetic —
     * identical traversal order and yields, one % and one / per edge
-    * instead of BigInteger divides (profiled on the matcher hot path).
+    * instead of BigInteger divides, with the visited set and the frontier
+    * held in primitive long arrays (profiled on the matcher hot path).
     */
   private def deletionNeighborhoodWithMasksLong(
       focus: Long,
@@ -237,14 +239,22 @@ object AnaHash {
       alphabetSizeWithUnk: Int,
       maxDistance: Int
   ): Vector[(BigInteger, Long, Int)] = {
-    val visited = new java.util.HashSet[java.lang.Long]()
+    val visited = new LongSet
     visited.add(focus)
-    var frontier = List((focus, focusMask))
+    // frontier as parallel (value, mask) arrays, refilled level by level
+    var vals = Array(focus)
+    var masks = Array(focusMask)
+    var n = 1
     val out = Vector.newBuilder[(BigInteger, Long, Int)]
     var depth = 1
-    while (depth <= maxDistance && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-      for ((v, mask) <- frontier) {
+    while (depth <= maxDistance && n > 0) {
+      var nextVals = new Array[Long](math.max(16, n * 4))
+      var nextMasks = new Array[Long](nextVals.length)
+      var nn = 0
+      var k = 0
+      while (k < n) {
+        val v = vals(k)
+        val mask = masks(k)
         var i = alphabetSizeWithUnk - 1
         while (i >= 0) {
           if ((mask & maskBit(i)) != 0) {
@@ -255,7 +265,13 @@ object AnaHash {
                 val pm =
                   if (i < 63 && parent % p != 0L) mask & ~maskBit(i)
                   else mask
-                next += ((parent, pm))
+                if (nn == nextVals.length) {
+                  nextVals = java.util.Arrays.copyOf(nextVals, nn * 2)
+                  nextMasks = java.util.Arrays.copyOf(nextMasks, nn * 2)
+                }
+                nextVals(nn) = parent
+                nextMasks(nn) = pm
+                nn += 1
                 if (parent > 1L)
                   out += ((BigInteger.valueOf(parent), pm, depth))
               }
@@ -263,11 +279,51 @@ object AnaHash {
           }
           i -= 1
         }
+        k += 1
       }
-      frontier = next.toList
+      vals = nextVals
+      masks = nextMasks
+      n = nn
       depth += 1
     }
     out.result()
+  }
+
+  /** Open-addressing set of positive longs with Fibonacci hashing (0 marks
+    * an empty slot; anagram values are products of primes, never 0).
+    */
+  private final class LongSet {
+    private var slots = new Array[Long](64)
+    private var shift = 64 - 6
+    private var size = 0
+
+    @inline private def home(v: Long): Int = ((v * 0x9e3779b97f4a7c15L) >>> shift).toInt
+
+    /** Insert `v`; false when it was already present. */
+    def add(v: Long): Boolean = {
+      val mask = slots.length - 1
+      var i = home(v)
+      while (slots(i) != 0L) {
+        if (slots(i) == v) return false
+        i = (i + 1) & mask
+      }
+      slots(i) = v
+      size += 1
+      if (2 * size > slots.length) grow()
+      true
+    }
+
+    private def grow(): Unit = {
+      val old = slots
+      slots = new Array[Long](old.length * 2)
+      shift -= 1
+      val mask = slots.length - 1
+      for (v <- old if v != 0L) {
+        var i = home(v)
+        while (slots(i) != 0L) i = (i + 1) & mask
+        slots(i) = v
+      }
+    }
   }
 
   /** Canonical unsigned big-endian bytes (no redundant leading zero) for

@@ -66,7 +66,14 @@ object Distances {
     i = 0
     while (i <= lenT) { mat(i + 1) = inf; mat(w + i + 1) = i; i += 1 }
 
-    val charMap = new java.util.HashMap[Int, Int]()
+    // last row (1-based) of each class in s, indexed by class: classes are
+    // small non-negative ints, so a flat array replaces a boxed map
+    var maxClass = 0
+    i = 0
+    while (i < lenS) { if (s(i) > maxClass) maxClass = s(i); i += 1 }
+    i = 0
+    while (i < lenT) { if (t(i) > maxClass) maxClass = t(i); i += 1 }
+    val lastRow = new Array[Int](maxClass + 1)
     i = 0
     while (i < lenS) {
       val sChar = s(i)
@@ -76,7 +83,7 @@ object Distances {
       while (j < lenT) {
         val jj = j + 1
         val tChar = t(j)
-        val last = charMap.getOrDefault(tChar, 0)
+        val last = lastRow(tChar)
         val cost = if (sChar == tChar) 0 else 1
         val del = mat((ii + 1) * w + jj) + 1
         val ins = mat(ii * w + jj + 1) + 1
@@ -90,7 +97,7 @@ object Distances {
         if (cost == 0) db = jj
         j += 1
       }
-      charMap.put(sChar, ii)
+      lastRow(sChar) = ii
       i += 1
     }
     val result = mat((lenS + 1) * w + lenT + 1)

@@ -96,17 +96,10 @@ final class LocalVariantModel(
   // primary anagram index: anavalue -> vocab ids in insertion order
   // (reference: src/index.rs:5-12)
   private var index: Map[BigInteger, Vector[Long]] = Map.empty
-  // secondary index: charcount -> numerically ascending anavalues as
-  // parallel primitive-friendly arrays (values + presence masks) so the
-  // containment scan is a tight loop with a 1-AND prefilter
-  // (reference: src/lib.rs:222-245; scan lib.rs:1266-1281)
-  /** charcount -> (sorted anavalues, presence masks, long fast-path
-    * values: the anavalue when it fits 62 bits, else 0 — most words'
-    * prime products fit a Long, turning the containment scan's dominant
-    * BigInteger.mod into a native long remainder).
-    */
-  private var sortedIndex: Map[Int, (Array[BigInteger], Array[Long], Array[Long])] =
-    Map.empty
+  // secondary index: charcount -> numerically ascending anavalues plus
+  // per-letter postings (reference: src/lib.rs:222-245; the reference
+  // scans every value of the bucket, lib.rs:1266-1281)
+  private var sortedIndex: Map[Int, LocalVariantModel.Bucket] = Map.empty
   // presence set of index keys that fit 62 bits (the vast majority):
   // the deletion-BFS membership probes hit this with one long hash
   // instead of a BigInteger hashCode+equals chain
@@ -417,8 +410,7 @@ final class LocalVariantModel(
       .groupBy(_._1)
       .map { case (cc, vs) =>
         val sorted = vs.map(_._2).sortBy(identity).toArray
-        cc -> ((sorted, sorted.map(masks),
-          sorted.map(v => if (v.bitLength <= 62) v.longValueExact else 0L)))
+        cc -> LocalVariantModel.Bucket(sorted, sorted.map(masks))
       }
     // language model (reference: lib.rs:247-297)
     val lmCounts = mutable.HashMap.empty[Vector[Long], Long]
@@ -509,55 +501,53 @@ final class LocalVariantModel(
 
     // containment scan: per target charcount, keep index values divisible
     // by any scheduled lookup value (reference: src/lib.rs:1266-1281).
-    // Tight loop with a presence-mask prefilter — the vast majority of
-    // (candidate, probe) tests die on one AND instead of a BigInteger mod.
+    // A value can only contain a probe if it holds every letter of it, so
+    // each probe tests just the AND of its letters' postings; a candidate
+    // that one probe already kept is masked out for the later ones.
     val byCc = lookups.keysIterator.toVector.groupBy(_._2)
     for ((cc, probeKeys) <- byCc; bucket <- sortedIndex.get(cc)) {
-      val (candidates, candMasks, candLongs) = bucket
-      val values = probeKeys.map(_._1).toArray
-      val probeMasks = probeKeys.map(k => lookups(k)).toArray
-      // long fast path (0 = does not fit 62 bits): when BOTH sides fit,
-      // divisibility is one native % instead of a BigInteger mod — the
-      // scan's dominant cost (profiled at >50% of query wall). A probe
-      // that overflows Long is strictly larger than any Long candidate,
-      // so the mixed case is a constant false.
-      val probeLongs = values.map(v => if (v.bitLength <= 62) v.longValueExact else 0L)
-      // chars present in EVERY probe of this bucket: a candidate missing
-      // any of them can satisfy no probe, so it dies on ONE mask AND
-      // without entering the probe loop. Deletion probes only remove up
-      // to maxDistance chars from the focus, so this common mask keeps
-      // most focus chars and rejects the typical candidate outright.
-      var commonMask = -1L
-      var cmI = 0
-      while (cmI < probeMasks.length) {
-        commonMask &= probeMasks(cmI); cmI += 1
-      }
-      var ci = 0
-      while (ci < candidates.length) {
-        // only candMasks streams on the (dominant) reject path — the
-        // candLongs read is deferred until a probe's mask fits, halving
-        // the bytes touched per rejected candidate; this scan is the
-        // matcher's memory-bandwidth hot spot at multi-core
-        val cMask = candMasks(ci)
-        if ((commonMask & ~cMask) == 0) {
-          var pi = 0
-          var found = false
-          while (pi < values.length && !found) {
-            if ((probeMasks(pi) & ~cMask) == 0) {
-              val cL = candLongs(ci)
-              val pL = probeLongs(pi)
-              val hit =
-                if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
-                else AnaHash.contains(candidates(ci), values(pi))
-              if (hit) {
-                nearest += candidates(ci)
-                found = true
-              }
-            }
-            pi += 1
-          }
+      val candidates = bucket.values
+      val candLongs = bucket.longs
+      val nWords = bucket.words
+      val found = new Array[Long](nWords)
+      val acc = new Array[Long](nWords)
+      for (key <- probeKeys) {
+        val probe = key._1
+        // bit 63 is shared by every class >= 63 and deletion masks keep it
+        // after the last such letter goes, so it is never required
+        var bits = lookups(key) & ~AnaHash.maskBit(63)
+        var w = 0
+        while (w < nWords) { acc(w) = ~found(w); w += 1 }
+        acc(nWords - 1) &= bucket.tailMask
+        var live = true
+        while (bits != 0L && live) {
+          val posting = bucket.postings(java.lang.Long.numberOfTrailingZeros(bits))
+          if (posting == null) live = false
+          else { w = 0; while (w < nWords) { acc(w) &= posting(w); w += 1 } }
+          bits &= bits - 1
         }
-        ci += 1
+        // long fast path (0 = does not fit 62 bits): when BOTH sides fit,
+        // divisibility is one native % instead of a BigInteger mod. A
+        // probe that overflows Long is strictly larger than any Long
+        // candidate, so the mixed case is a constant false.
+        val pL = if (probe.bitLength <= 62) probe.longValueExact else 0L
+        w = 0
+        while (live && w < nWords) {
+          var word = acc(w)
+          while (word != 0L) {
+            val ci = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
+            val cL = candLongs(ci)
+            val hit =
+              if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
+              else AnaHash.contains(candidates(ci), probe)
+            if (hit) {
+              nearest += candidates(ci)
+              found(w) |= word & -word
+            }
+            word &= word - 1
+          }
+          w += 1
+        }
       }
     }
     // ascending order (the reference's BTreeSet iteration order) with
@@ -832,4 +822,42 @@ object LocalVariantModel {
   val BOS = 0L
   val EOS = 1L
   val UNK = 2L
+
+  /** One charcount bucket of the secondary index: ascending anavalues,
+    * their long fast-path values (the anavalue when it fits 62 bits, else
+    * 0 — most words' prime products fit a Long, so the divisibility test
+    * is mostly a native remainder) and, for each presence-mask bit below
+    * 63, a posting bitset over bucket positions: bit i of posting b is set
+    * iff values(i) holds a letter of mask bit b (null when no value does).
+    */
+  private final class Bucket(
+      val values: Array[BigInteger],
+      val longs: Array[Long],
+      val postings: Array[Array[Long]]
+  ) extends Serializable {
+    def words: Int = (values.length + 63) >>> 6
+    /** the positions of the last word that hold a value */
+    def tailMask: Long = -1L >>> (-values.length & 63)
+  }
+
+  private object Bucket {
+    def apply(sorted: Array[BigInteger], masks: Array[Long]): Bucket = {
+      val words = (sorted.length + 63) >>> 6
+      val postings = new Array[Array[Long]](63)
+      var i = 0
+      while (i < sorted.length) {
+        var bits = masks(i) & ~AnaHash.maskBit(63)
+        while (bits != 0L) {
+          val b = java.lang.Long.numberOfTrailingZeros(bits)
+          if (postings(b) == null) postings(b) = new Array[Long](words)
+          postings(b)(i >>> 6) |= 1L << i
+          bits &= bits - 1
+        }
+        i += 1
+      }
+      new Bucket(sorted,
+        sorted.map(v => if (v.bitLength <= 62) v.longValueExact else 0L),
+        postings)
+    }
+  }
 }

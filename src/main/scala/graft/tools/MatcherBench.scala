@@ -5,7 +5,9 @@ import graft.kernel._
 /** Single-threaded kernel microbenchmark: variant-query throughput
   * against a large synthetic lexicon — compare with the reference's
   * published single-thread items/sec (BASELINE.md: 538-687 items/s on
-  * 120-220k lexicons, i7-4770K).
+  * 120-220k lexicons, i7-4770K). A `[phase]` line then splits the query
+  * time into findVariants' three stages: nearest-anahash search, gather +
+  * DL verify, and score + rank.
   *
   * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries]
   */
@@ -36,6 +38,31 @@ object MatcherBench {
     queries.foreach(q => results += model.findVariants(q, params).length)
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"[query] $nQueries queries in $sec%.2fs = ${nQueries / sec}%.1f items/s (1 thread), $results results")
+
+    // per-phase split: findVariants' three public stages, each run over
+    // every query before the next starts (normalize + anahash untimed)
+    val prepared = queries
+      .map(q => (q, model.alphabet.normalize(q), model.alphabet.anahash(q)))
+      .filter(_._2.nonEmpty)
+    def usPerQuery[T](f: => T): (T, Double) = {
+      val t = System.nanoTime()
+      val out = f
+      (out, (System.nanoTime() - t) / 1e3 / nQueries)
+    }
+    val (nearest, usNearest) = usPerQuery(prepared.map { case (_, norm, focus) =>
+      model.findNearestAnahashes(focus, params.maxAnagramDistance
+        .resolve(norm.length, DistanceThreshold.MaxAnagramDistance), params.stopCriterion)
+    })
+    val (instances, usGather) = usPerQuery(prepared.zip(nearest).map {
+      case ((q, norm, _), near) =>
+        model.gatherInstances(near, norm, q, params.maxEditDistance
+          .resolve(norm.length, DistanceThreshold.MaxEditDistance))
+    })
+    val (ranked, usRank) = usPerQuery(prepared.zip(instances).map {
+      case ((q, norm, _), inst) => model.scoreAndRank(inst, norm.length, params, q).length.toLong
+    })
+    println(f"[phase] us/query: nearest $usNearest%.1f, gather+dl $usGather%.1f, " +
+      f"score+rank $usRank%.1f (${ranked.sum} results)")
 
     // optional multi-thread sweep (pure JVM, no Spark): the achievable
     // kernel scaling ceiling on this host

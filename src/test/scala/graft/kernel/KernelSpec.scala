@@ -272,4 +272,64 @@ class KernelSpec extends AnyFunSuite {
     }
     assert(sortedNum == sortedBytes)
   }
+
+  // --- nearest-anagram search (reference: src/lib.rs:1143-1308) ---
+
+  /** findNearestAnahashes with no index narrowing: every (probe, target
+    * charcount) lookup tests every indexed value of that charcount with
+    * plain divisibility, as the reference's scan does (lib.rs:1266-1281).
+    */
+  def bruteNearest(m: LocalVariantModel): (BigInteger, Int) => Vector[BigInteger] = {
+    val indexed = m.vocab.filter(_.indexed)
+      .map(e => (m.alphabet.anahash(e.text), e.norm.length))
+    val keys = indexed.map(_._1).toSet
+    val buckets = indexed.groupBy(_._2).map { case (cc, vs) => cc -> vs.map(_._1).distinct }
+    (focus, maxDistance) => {
+      val (upper, cc) = AnaHash.alphabetUpperBound(focus, m.alphabetSizeWithUnk)
+      val dels = AnaHash.deletionNeighborhood(focus, upper + 2, maxDistance)
+      val lookups = (1 to maxDistance).map(d => (focus, cc + d)) ++
+        dels.flatMap { case (v, dist) =>
+          (1 to maxDistance - dist).map(sd => (v, cc - dist + sd))
+        }
+      val hits = lookups.flatMap { case (probe, c) =>
+        buckets.getOrElse(c, Vector.empty).filter(AnaHash.contains(_, probe))
+      }
+      ((focus +: dels.map(_._1)).filter(keys) ++ hits).distinct
+        .sortBy(identity)(AnaHash.bigIntegerOrdering).toVector
+    }
+  }
+
+  test("nearest-anahash scan equals a brute-force containment oracle") {
+    val rng = new scala.util.Random(11L)
+    def word(letters: IndexedSeq[String], maxLen: Int): String =
+      Iterator.fill(1 + rng.nextInt(maxLen))(letters(rng.nextInt(letters.length))).mkString
+    // 80 one-letter classes: classes 63..79 share presence bit 63
+    val wide = Alphabet((0 until 80).map(i => IndexedSeq((0x3b1 + i).toChar.toString)))
+    val latin = ('a' to 'z').map(_.toString)
+    for ((alphabet, letters, maxLen) <- Seq(
+        (Alphabet.simpleLatin, latin, 14),
+        (wide, wide.classes.map(_.head), 9))) {
+      val m = new LocalVariantModel(alphabet)
+      Vector.fill(1500)(word(letters, maxLen)).foreach(m.add(_))
+      m.build()
+      val oracle = bruteNearest(m)
+      val lexicon = m.vocab.filter(_.indexed).map(_.text)
+      val queries = Vector.fill(150)(word(letters, maxLen)) ++
+        Vector.fill(150)(word(letters, 3)) ++
+        Vector.fill(150)(lexicon(rng.nextInt(lexicon.length))) :+ ""
+      for (q <- queries; d <- 1 to 3) {
+        val focus = alphabet.anahash(q)
+        assert(m.findNearestAnahashes(focus, d) == oracle(focus, d),
+          s"query '$q' at distance $d")
+      }
+      // the cases the scan must get right are all present
+      val sizes = lexicon.groupBy(alphabet.normalize(_).length).values
+        .map(_.map(alphabet.anahash).distinct.size)
+      assert(sizes.exists(n => n > 64 && n % 64 != 0))
+      assert(lexicon.exists(alphabet.anahash(_).bitLength > 62))
+      assert(queries.exists(q => q.nonEmpty && q.length <= 3))
+      if (alphabet.size >= 70)
+        assert(queries.exists(alphabet.normalize(_).exists(_ >= 63)))
+    }
+  }
 }
