@@ -105,54 +105,6 @@ object AnaHash {
     (maxIdx, count)
   }
 
-  /** All distinct single-deletion parents of `v`, i.e. v / p for each
-    * distinct prime factor p among classes [0, alphabetSize), yielded in
-    * the reference's order: descending class index
-    * (reference: src/iterators.rs:21-70).
-    */
-  def parents(v: BigInteger, alphabetSizeWithUnk: Int): List[BigInteger] = {
-    val out = List.newBuilder[BigInteger]
-    var i = alphabetSizeWithUnk - 1
-    while (i >= 0) {
-      val p = primesBig(i)
-      if (v.mod(p).signum == 0) out += v.divide(p)
-      i -= 1
-    }
-    out.result()
-  }
-
-  /** Breadth-first unique deletion neighborhood: every distinct anagram
-    * value reachable from `focus` by 1..maxDistance single-character
-    * deletions, excluding the empty value, paired with its depth
-    * (reference: RecurseDeletionIterator with breadthfirst=true,
-    * unique=true, empty_leaves=false — src/iterators.rs:95-236 as invoked
-    * from src/lib.rs:1202-1261). BFS guarantees minimal depth per value.
-    */
-  def deletionNeighborhood(
-      focus: BigInteger,
-      alphabetSizeWithUnk: Int,
-      maxDistance: Int
-  ): Vector[(BigInteger, Int)] = {
-    if (maxDistance <= 0) return Vector.empty
-    val visited = scala.collection.mutable.HashSet[BigInteger](focus)
-    var frontier = List(focus)
-    val out = Vector.newBuilder[(BigInteger, Int)]
-    var depth = 1
-    while (depth <= maxDistance && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ListBuffer.empty[BigInteger]
-      for (v <- frontier; parent <- parents(v, alphabetSizeWithUnk)) {
-        if (!visited.contains(parent)) {
-          visited += parent
-          next += parent
-          if (!isEmpty(parent)) out += ((parent, depth))
-        }
-      }
-      frontier = next.toList
-      depth += 1
-    }
-    out.result()
-  }
-
   /** Presence-mask bit for alphabet class i (classes >= 63 share bit 63,
     * which is then conservative-only). Invariant behind the matcher's
     * per-letter postings: bag(probe) ⊆ bag(candidate) ⟹ every sub-63 bit
@@ -162,168 +114,184 @@ object AnaHash {
     */
   @inline def maskBit(classIndex: Int): Long = 1L << math.min(classIndex, 63)
 
-  /** Presence mask of an anagram value (factorize up to alphabet size). */
-  def maskOf(v: BigInteger, alphabetSizeWithUnk: Int): Long = {
-    var mask = 0L
-    var cur = v
-    var i = 0
-    while (i < alphabetSizeWithUnk && cur.compareTo(BigInteger.ONE) > 0) {
-      val p = primesBig(i)
-      if (cur.mod(p).signum == 0) {
-        mask |= maskBit(i)
-        var qr = cur.divideAndRemainder(p)
-        while (qr(1).signum == 0) { cur = qr(0); qr = cur.divideAndRemainder(p) }
-      }
-      i += 1
-    }
-    mask
-  }
-
-  /** Deletion BFS that also tracks presence masks (cleared only when the
-    * last occurrence of a sub-63 class is removed). Yield order matches
-    * [[deletionNeighborhood]].
-    */
-  def deletionNeighborhoodWithMasks(
-      focus: BigInteger,
-      focusMask: Long,
-      alphabetSizeWithUnk: Int,
-      maxDistance: Int
-  ): Vector[(BigInteger, Long, Int)] = {
-    if (maxDistance <= 0) return Vector.empty
-    // long fast path: every BFS descendant divides focus, so when focus
-    // fits 62 bits the whole lattice walk runs in native long arithmetic
-    // (same yield order, same values — divides of the same primes)
-    if (focus.bitLength <= 62)
-      return deletionNeighborhoodWithMasksLong(focus.longValueExact,
-        focusMask, alphabetSizeWithUnk, maxDistance)
-    val visited = scala.collection.mutable.HashSet[BigInteger](focus)
-    var frontier = List((focus, focusMask))
-    val out = Vector.newBuilder[(BigInteger, Long, Int)]
-    var depth = 1
-    while (depth <= maxDistance && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ListBuffer.empty[(BigInteger, Long)]
-      for ((v, mask) <- frontier) {
-        var i = alphabetSizeWithUnk - 1
-        while (i >= 0) {
-          val p = primesBig(i)
-          if ((mask & maskBit(i)) != 0 && v.mod(p).signum == 0) {
-            val parent = v.divide(p)
-            if (!visited.contains(parent)) {
-              visited += parent
-              val pm =
-                if (i < 63 && parent.mod(p).signum != 0) mask & ~maskBit(i)
-                else mask
-              next += ((parent, pm))
-              if (!isEmpty(parent)) out += ((parent, pm, depth))
-            }
-          }
-          i -= 1
-        }
-      }
-      frontier = next.toList
-      depth += 1
-    }
-    out.result()
-  }
-
   private val primesLong: Array[Long] = PRIMES.map(_.toLong)
 
-  /** [[deletionNeighborhoodWithMasks]] in native long arithmetic —
-    * identical traversal order and yields, one % and one / per edge
-    * instead of BigInteger divides, with the visited set and the frontier
-    * held in primitive long arrays (profiled on the matcher hot path).
+  /** Breadth-first unique deletion neighborhood: every distinct anagram
+    * value reachable from `focus` by 1..maxDistance single-character
+    * deletions, excluding the empty value, paired with its depth
+    * (reference: RecurseDeletionIterator with breadthfirst=true,
+    * unique=true, empty_leaves=false — src/iterators.rs:95-236 as invoked
+    * from src/lib.rs:1202-1261), in the reference's order. See
+    * [[deletions]] for how that order is produced without a visited set.
     */
-  private def deletionNeighborhoodWithMasksLong(
-      focus: Long,
-      focusMask: Long,
+  def deletionNeighborhood(
+      focus: BigInteger,
       alphabetSizeWithUnk: Int,
       maxDistance: Int
-  ): Vector[(BigInteger, Long, Int)] = {
-    val visited = new LongSet
-    visited.add(focus)
-    // frontier as parallel (value, mask) arrays, refilled level by level
-    var vals = Array(focus)
-    var masks = Array(focusMask)
-    var n = 1
-    val out = Vector.newBuilder[(BigInteger, Long, Int)]
-    var depth = 1
-    while (depth <= maxDistance && n > 0) {
-      var nextVals = new Array[Long](math.max(16, n * 4))
-      var nextMasks = new Array[Long](nextVals.length)
-      var nn = 0
-      var k = 0
-      while (k < n) {
-        val v = vals(k)
-        val mask = masks(k)
-        var i = alphabetSizeWithUnk - 1
-        while (i >= 0) {
-          if ((mask & maskBit(i)) != 0) {
-            val p = primesLong(i)
-            if (v % p == 0L) {
-              val parent = v / p
-              if (visited.add(parent)) {
-                val pm =
-                  if (i < 63 && parent % p != 0L) mask & ~maskBit(i)
-                  else mask
-                if (nn == nextVals.length) {
-                  nextVals = java.util.Arrays.copyOf(nextVals, nn * 2)
-                  nextMasks = java.util.Arrays.copyOf(nextMasks, nn * 2)
-                }
-                nextVals(nn) = parent
-                nextMasks(nn) = pm
-                nn += 1
-                if (parent > 1L)
-                  out += ((BigInteger.valueOf(parent), pm, depth))
-              }
-            }
-          }
-          i -= 1
-        }
-        k += 1
-      }
-      vals = nextVals
-      masks = nextMasks
-      n = nn
-      depth += 1
-    }
-    out.result()
+  ): Vector[(BigInteger, Int)] = {
+    val d = deletions(focus, alphabetSizeWithUnk, maxDistance)
+    Vector.tabulate(d.size - 1)(k => (d.value(k + 1), d.depth(k + 1)))
   }
 
-  /** Open-addressing set of positive longs with Fibonacci hashing (0 marks
-    * an empty slot; anagram values are products of primes, never 0).
+  /** The deletion neighborhood of a focus as parallel primitive arrays.
+    * Node 0 is the focus itself at depth 0; nodes 1 until [[size]] are
+    * the distinct non-empty sub-bags at depths 1..maxDistance, in the
+    * order of [[deletionNeighborhood]]. A node's value is held as a long
+    * while it fits 62 bits ([[big]] is then null), else as a BigInteger
+    * ([[long]] is then 0). [[mask]] is the node's presence mask: a sub-63
+    * bit is cleared when the last letter of its class goes, bit 63 stays.
+    * Nodes are in depth order; [[depthStart]] gives the first node of a
+    * depth.
     */
-  private final class LongSet {
-    private var slots = new Array[Long](64)
-    private var shift = 64 - 6
-    private var size = 0
+  final class Deletions private[AnaHash] (
+      /** letters of the focus over the classes enumerated */
+      val charCount: Int,
+      val size: Int,
+      longs: Array[Long],
+      bigs: Array[BigInteger],
+      masks: Array[Long],
+      depths: Array[Int],
+      depthStarts: Array[Int]
+  ) {
+    /** index of the first node at depth >= d (size past the last depth) */
+    def depthStart(d: Int): Int =
+      if (d < depthStarts.length) depthStarts(math.max(0, d)) else size
+    @inline def long(k: Int): Long = longs(k)
+    @inline def big(k: Int): BigInteger = if (bigs == null) null else bigs(k)
+    @inline def mask(k: Int): Long = masks(k)
+    @inline def depth(k: Int): Int = depths(k)
+    def value(k: Int): BigInteger = {
+      val b = big(k)
+      if (b != null) b else BigInteger.valueOf(longs(k))
+    }
+  }
 
-    @inline private def home(v: Long): Int = ((v * 0x9e3779b97f4a7c15L) >>> shift).toInt
-
-    /** Insert `v`; false when it was already present. */
-    def add(v: Long): Boolean = {
-      val mask = slots.length - 1
-      var i = home(v)
-      while (slots(i) != 0L) {
-        if (slots(i) == v) return false
-        i = (i + 1) & mask
+  /** Enumerate the deletion neighborhood of `focus` over classes
+    * [0, alphabetSizeWithUnk) up to `maxDistance` deletions, each distinct
+    * sub-bag exactly once, with no visited set and no divisibility test.
+    *
+    * The focus is factored once into its per-class counts. A node is
+    * then reached only by deleting classes in non-increasing class order:
+    * each node carries the last class it deleted and how many times in a
+    * row it deleted it, and its children delete either that class again
+    * (while letters of it remain) or any lower class present. Every
+    * sub-bag has exactly one such deletion sequence, its deleted letters
+    * sorted descending, so it is reached once; its canonical parent is
+    * the sub-bag with one letter of its smallest deleted class restored.
+    *
+    * Why this is the reference's breadth-first unique order: the
+    * reference expands each frontier node's parents in descending class
+    * order and keeps the first visit. Ordering the nodes of one depth by
+    * their descending deletion sequences, lexicographically with the
+    * higher class first, the canonical parent of a sub-bag precedes every
+    * other parent of it: restoring a letter of a larger deleted class
+    * puts a smaller class earlier in the sequence. So the reference first
+    * visits each sub-bag from its canonical parent, and a frontier node's
+    * first visits are exactly its canonical children, in descending class
+    * order. Appending each node's canonical children to one queue thus
+    * yields the reference's sequence (pinned by KernelSpec "0203" and the
+    * spec's visited-set BFS).
+    *
+    * Values are longs while they fit 62 bits; below an overflowing focus
+    * each node does one BigInteger divide until its value fits.
+    */
+  def deletions(
+      focus: BigInteger,
+      alphabetSizeWithUnk: Int,
+      maxDistance: Int
+  ): Deletions = {
+    // factor the focus once, highest class first: present classes + counts
+    val classes = new Array[Int](alphabetSizeWithUnk)
+    val counts = new Array[Int](alphabetSizeWithUnk)
+    var nClasses = 0
+    var charCount = 0
+    var focusMask = 0L
+    var restBig = if (focus.bitLength > 62) focus else null
+    var rest = if (restBig == null) focus.longValue else 0L
+    var c = alphabetSizeWithUnk - 1
+    while (c >= 0 && (restBig != null || rest > 1L)) {
+      var n = 0
+      if (restBig != null) {
+        var qr = restBig.divideAndRemainder(primesBig(c))
+        while (qr(1).signum == 0) {
+          n += 1; restBig = qr(0); qr = restBig.divideAndRemainder(primesBig(c))
+        }
+        if (restBig.bitLength <= 62) { rest = restBig.longValue; restBig = null }
+      } else {
+        val p = primesLong(c)
+        while (rest % p == 0L) { n += 1; rest /= p }
       }
-      slots(i) = v
-      size += 1
-      if (2 * size > slots.length) grow()
-      true
+      if (n > 0) {
+        classes(nClasses) = c; counts(nClasses) = n; nClasses += 1
+        charCount += n
+        focusMask |= maskBit(c)
+      }
+      c -= 1
     }
 
-    private def grow(): Unit = {
-      val old = slots
-      slots = new Array[Long](old.length * 2)
-      shift -= 1
-      val mask = slots.length - 1
-      for (v <- old if v != 0L) {
-        var i = home(v)
-        while (slots(i) != 0L) i = (i + 1) & mask
-        slots(i) = v
+    // one queue in yield order; per node: value, mask, depth, the position
+    // (in `classes`) of the last deleted class and its run length
+    var cap = 16
+    var longs = new Array[Long](cap)
+    var bigs: Array[BigInteger] =
+      if (focus.bitLength > 62) new Array[BigInteger](cap) else null
+    var masks = new Array[Long](cap)
+    var depths = new Array[Int](cap)
+    var lasts = new Array[Int](cap)
+    var runs = new Array[Int](cap)
+    if (bigs != null) bigs(0) = focus else longs(0) = focus.longValue
+    masks(0) = focusMask
+    var size = 1
+    var k = 0
+    while (k < size && depths(k) < maxDistance) {
+      val last = lasts(k)
+      var q = last
+      while (q < nClasses) {
+        val run = if (q == last) runs(k) + 1 else 1
+        if (run <= counts(q)) {
+          val cls = classes(q)
+          var vLong = 0L
+          var vBig: BigInteger = null
+          val parentBig = if (bigs == null) null else bigs(k)
+          if (parentBig == null) vLong = longs(k) / primesLong(cls)
+          else {
+            vBig = parentBig.divide(primesBig(cls))
+            if (vBig.bitLength <= 62) { vLong = vBig.longValue; vBig = null }
+          }
+          if (vBig != null || vLong != 1L) {
+            if (size == cap) {
+              cap *= 2
+              longs = java.util.Arrays.copyOf(longs, cap)
+              if (bigs != null) bigs = java.util.Arrays.copyOf(bigs, cap)
+              masks = java.util.Arrays.copyOf(masks, cap)
+              depths = java.util.Arrays.copyOf(depths, cap)
+              lasts = java.util.Arrays.copyOf(lasts, cap)
+              runs = java.util.Arrays.copyOf(runs, cap)
+            }
+            longs(size) = vLong
+            if (bigs != null) bigs(size) = vBig
+            masks(size) =
+              if (run == counts(q) && cls < 63) masks(k) & ~maskBit(cls)
+              else masks(k)
+            depths(size) = depths(k) + 1
+            lasts(size) = q
+            runs(size) = run
+            size += 1
+          }
+        }
+        q += 1
       }
+      k += 1
     }
+    val depthStarts = new Array[Int](math.max(0, maxDistance) + 1)
+    var d = 1
+    k = 0
+    while (d < depthStarts.length) {
+      while (k < size && depths(k) < d) k += 1
+      depthStarts(d) = k
+      d += 1
+    }
+    new Deletions(charCount, size, longs, bigs, masks, depths, depthStarts)
   }
 
   /** Canonical unsigned big-endian bytes (no redundant leading zero) for

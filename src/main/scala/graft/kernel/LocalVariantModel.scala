@@ -100,11 +100,20 @@ final class LocalVariantModel(
   // per-letter postings (reference: src/lib.rs:222-245; the reference
   // scans every value of the bucket, lib.rs:1266-1281)
   private var sortedIndex: Map[Int, LocalVariantModel.Bucket] = Map.empty
-  // presence set of index keys that fit 62 bits (the vast majority):
-  // the deletion-BFS membership probes hit this with one long hash
-  // instead of a BigInteger hashCode+equals chain
-  private var indexKeysLong: java.util.HashSet[java.lang.Long] =
-    new java.util.HashSet[java.lang.Long]()
+  // presence set of the index keys that fit 62 bits (the vast majority):
+  // the deletion probes' membership test is one primitive hash probe.
+  // Rebuilt from `index` where it is first needed, so it never travels
+  // in the serialized (broadcast) model.
+  @transient @volatile private var keySetLong: LocalVariantModel.LongSet = _
+  private def indexKeysLong: LocalVariantModel.LongSet = {
+    var s = keySetLong
+    if (s == null) {
+      s = new LocalVariantModel.LongSet(index.keysIterator
+        .filter(_.bitLength <= 62).map(_.longValue).toArray)
+      keySetLong = s
+    }
+    s
+  }
   /** Index membership with the long fast path — a value that fits 62
     * bits can never equal an overflowing key, so the long set answers
     * exactly for fitting probes.
@@ -398,12 +407,7 @@ final class LocalVariantModel(
       counts.getOrElseUpdate(av, e.norm.length)
     }
     index = idx.toMap
-    indexKeysLong = {
-      val s = new java.util.HashSet[java.lang.Long](index.size * 2)
-      index.keysIterator.foreach(k =>
-        if (k.bitLength <= 62) s.add(k.longValueExact))
-      s
-    }
+    keySetLong = null
     anavalues = avs.toMap
     sortedIndex = index.keysIterator.toVector
       .map(av => (counts(av), av))
@@ -459,10 +463,10 @@ final class LocalVariantModel(
   def anagramInstances(av: BigInteger): Vector[Long] =
     index.getOrElse(av, Vector.empty)
 
-  /** Candidate anagram values near `focus`: exact probe + deletion BFS +
-    * containment scan over the charcount-bucketed secondary index
-    * (reference: src/lib.rs:1143-1308). Returned ascending (BTreeSet order)
-    * so downstream gather order is deterministic.
+  /** Candidate anagram values near `focus`: exact probe + deletion
+    * neighborhood + containment scan over the charcount-bucketed secondary
+    * index (reference: src/lib.rs:1143-1308). Returned ascending (BTreeSet
+    * order) so downstream gather order is deterministic.
     */
   def findNearestAnahashes(
       focus: BigInteger,
@@ -480,75 +484,88 @@ final class LocalVariantModel(
       if (stopCriterion == StopCriterion.StopAtExactMatch &&
         index(focus).nonEmpty) return nearest.toVector
     }
-    val focusMask = AnaHash.maskOf(focus, alphabetSizeWithUnk)
-    val (focusUpper, focusCharCount) =
-      AnaHash.alphabetUpperBound(focus, alphabetSizeWithUnk)
-    val focusAlphabetSize = focusUpper + 1
-
-    // (lookup value, mask, target charcount) containment probes
-    val lookups = mutable.LinkedHashMap.empty[(BigInteger, Int), Long]
-    for (d <- 1 to maxDistance)
-      lookups((focus, focusCharCount + d)) = focusMask
-
-    val deletions = AnaHash.deletionNeighborhoodWithMasks(
-      focus, focusMask, focusAlphabetSize + 1, maxDistance)
-    for ((del, mask, dist) <- deletions) {
-      if (indexHas(del)) nearest += del
-      val delCharCount = focusCharCount - dist
-      for (sd <- 1 to (maxDistance - dist))
-        lookups.getOrElseUpdate((del, delCharCount + sd), mask)
+    // node 0 is the focus; nodes 1.. are its distinct deletions in the
+    // reference's breadth-first order, each yielded once
+    val dels = AnaHash.deletions(focus, alphabetSizeWithUnk, maxDistance)
+    val focusCharCount = dels.charCount
+    val keys = indexKeysLong
+    var k = 1
+    while (k < dels.size) {
+      val b = dels.big(k)
+      if (if (b == null) keys.contains(dels.long(k)) else index.contains(b))
+        nearest += dels.value(k)
+      k += 1
     }
 
-    // containment scan: per target charcount, keep index values divisible
-    // by any scheduled lookup value (reference: src/lib.rs:1266-1281).
-    // A value can only contain a probe if it holds every letter of it, so
-    // each probe tests just the AND of its letters' postings; a candidate
-    // that one probe already kept is masked out for the later ones.
-    val byCc = lookups.keysIterator.toVector.groupBy(_._2)
-    for ((cc, probeKeys) <- byCc; bucket <- sortedIndex.get(cc)) {
-      val candidates = bucket.values
-      val candLongs = bucket.longs
-      val nWords = bucket.words
-      val found = new Array[Long](nWords)
-      val acc = new Array[Long](nWords)
-      for (key <- probeKeys) {
-        val probe = key._1
-        // bit 63 is shared by every class >= 63 and deletion masks keep it
-        // after the last such letter goes, so it is never required
-        var bits = lookups(key) & ~AnaHash.maskBit(63)
-        var w = 0
-        while (w < nWords) { acc(w) = ~found(w); w += 1 }
-        acc(nWords - 1) &= bucket.tailMask
-        var live = true
-        while (bits != 0L && live) {
-          val posting = bucket.postings(java.lang.Long.numberOfTrailingZeros(bits))
-          if (posting == null) live = false
-          else { w = 0; while (w < nWords) { acc(w) &= posting(w); w += 1 } }
-          bits &= bits - 1
-        }
-        // long fast path (0 = does not fit 62 bits): when BOTH sides fit,
-        // divisibility is one native % instead of a BigInteger mod. A
-        // probe that overflows Long is strictly larger than any Long
-        // candidate, so the mixed case is a constant false.
-        val pL = if (probe.bitLength <= 62) probe.longValueExact else 0L
-        w = 0
-        while (live && w < nWords) {
-          var word = acc(w)
-          while (word != 0L) {
-            val ci = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
-            val cL = candLongs(ci)
-            val hit =
-              if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
-              else AnaHash.contains(candidates(ci), probe)
-            if (hit) {
-              nearest += candidates(ci)
-              found(w) |= word & -word
-            }
-            word &= word - 1
+    // containment probes: node k at depth dist probes the charcounts
+    // focusCharCount - dist + sd, sd in 1..maxDistance - dist. So target
+    // charcount focusCharCount - maxDistance + t (t in 1..2*maxDistance)
+    // is probed by the nodes at depths maxDistance - t + 1 ..
+    // maxDistance - ceil(t / 2): one contiguous range of nodes, in node
+    // order. Nodes are distinct, so no (value, charcount) probe repeats.
+    // Containment scan: per target charcount, keep index values divisible
+    // by any probe value (reference: src/lib.rs:1266-1281). A value can
+    // only contain a probe if it holds every letter of it, so each probe
+    // tests just the AND of its letters' postings; a candidate that one
+    // probe already kept is masked out for the later ones.
+    var t = 1
+    while (t <= 2 * maxDistance) {
+      val from = dels.depthStart(maxDistance - t + 1)
+      val until = dels.depthStart(maxDistance - (t + 1) / 2 + 1)
+      val bucket =
+        if (from == until) null
+        else sortedIndex.getOrElse(focusCharCount - maxDistance + t, null)
+      if (bucket != null) {
+        val candidates = bucket.values
+        val candLongs = bucket.longs
+        val nWords = bucket.words
+        val found = new Array[Long](nWords)
+        val acc = new Array[Long](nWords)
+        var pk = from
+        while (pk < until) {
+          // bit 63 is shared by every class >= 63 and deletion masks keep
+          // it after the last such letter goes, so it is never required
+          var bits = dels.mask(pk) & ~AnaHash.maskBit(63)
+          var w = 0
+          while (w < nWords) { acc(w) = ~found(w); w += 1 }
+          acc(nWords - 1) &= bucket.tailMask
+          var live = true
+          while (bits != 0L && live) {
+            val posting = bucket.postings(java.lang.Long.numberOfTrailingZeros(bits))
+            if (posting == null) live = false
+            else { w = 0; while (w < nWords) { acc(w) &= posting(w); w += 1 } }
+            bits &= bits - 1
           }
-          w += 1
+          // long fast path (0 = does not fit 62 bits): when BOTH sides
+          // fit, divisibility is one native % instead of a BigInteger mod.
+          // A probe that overflows Long is strictly larger than any Long
+          // candidate, so the mixed case is a constant false.
+          val pL = dels.long(pk)
+          var pBig: BigInteger = null
+          w = 0
+          while (live && w < nWords) {
+            var word = acc(w)
+            while (word != 0L) {
+              val ci = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
+              val cL = candLongs(ci)
+              val hit =
+                if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
+                else {
+                  if (pBig == null) pBig = dels.value(pk)
+                  AnaHash.contains(candidates(ci), pBig)
+                }
+              if (hit) {
+                nearest += candidates(ci)
+                found(w) |= word & -word
+              }
+              word &= word - 1
+            }
+            w += 1
+          }
+          pk += 1
         }
       }
+      t += 1
     }
     // ascending order (the reference's BTreeSet iteration order) with
     // cross-source dedup: deletion values have charcount < focus <= scan
@@ -858,6 +875,34 @@ object LocalVariantModel {
       new Bucket(sorted,
         sorted.map(v => if (v.bitLength <= 62) v.longValueExact else 0L),
         postings)
+    }
+  }
+
+  /** Open-addressing set of positive longs with Fibonacci hashing (0 marks
+    * an empty slot; anagram values are products of primes, never 0),
+    * filled once at construction to at most half full.
+    */
+  private final class LongSet(values: Array[Long]) {
+    private val slots =
+      new Array[Long](Integer.highestOneBit(math.max(1, values.length)) << 2)
+    private val shift = 64 - Integer.numberOfTrailingZeros(slots.length)
+
+    @inline private def home(v: Long): Int =
+      ((v * 0x9e3779b97f4a7c15L) >>> shift).toInt
+
+    values.foreach { v =>
+      var i = home(v)
+      while (slots(i) != 0L && slots(i) != v) i = (i + 1) & (slots.length - 1)
+      slots(i) = v
+    }
+
+    def contains(v: Long): Boolean = {
+      var i = home(v)
+      while (slots(i) != 0L) {
+        if (slots(i) == v) return true
+        i = (i + 1) & (slots.length - 1)
+      }
+      false
     }
   }
 }

@@ -188,28 +188,27 @@ object VariantMatcher {
     //     deletions present in index checked via join) and containment
     //     probes (value, target charcount) ---
     val alphaWithUnk = alphabet.size + 1
+    // both read the focus's one deletion enumeration (node 0 = the focus,
+    // then each distinct deletion once), so neither needs a dedup
     val eqProbesUdf = udf { (q: String) =>
-      val focus = alphabet.anahash(q)
       val norm = alphabet.normalize(q)
       val maxAna = params.maxAnagramDistance
         .resolve(norm.length, DistanceThreshold.MaxAnagramDistance)
-      val (upper, _) = AnaHash.alphabetUpperBound(focus, alphaWithUnk)
-      val dels = AnaHash.deletionNeighborhood(focus, upper + 2, maxAna)
-      (AnaHash.toBytes(focus) +: dels.map(d => AnaHash.toBytes(d._1))).distinct
+      val dels = AnaHash.deletions(alphabet.anahash(q), alphaWithUnk, maxAna)
+      Vector.tabulate(dels.size)(k => AnaHash.toBytes(dels.value(k)))
     }
     val containProbesUdf = udf { (q: String) =>
-      val focus = alphabet.anahash(q)
-      val norm = alphabet.normalize(q)
-      val cc = norm.length
+      val cc = alphabet.normalize(q).length
       val maxAna = params.maxAnagramDistance
         .resolve(cc, DistanceThreshold.MaxAnagramDistance)
-      val (upper, _) = AnaHash.alphabetUpperBound(focus, alphaWithUnk)
-      val dels = AnaHash.deletionNeighborhood(focus, upper + 2, maxAna)
-      val probes = scala.collection.mutable.LinkedHashSet.empty[(Array[Byte], Int)]
-      for (d <- 1 to maxAna) probes += ((AnaHash.toBytes(focus), cc + d))
-      for ((del, dist) <- dels; sd <- 1 to (maxAna - dist))
-        probes += ((AnaHash.toBytes(del), cc - dist + sd))
-      probes.toSeq.map { case (v, t) => (v, t) }
+      val dels = AnaHash.deletions(alphabet.anahash(q), alphaWithUnk, maxAna)
+      // nodes below the last depth are the ones with probes left to make
+      for {
+        k <- 0 until dels.depthStart(maxAna)
+        dist = dels.depth(k)
+        value = AnaHash.toBytes(dels.value(k))
+        sd <- 1 to (maxAna - dist)
+      } yield (value, cc - dist + sd)
     }
     val q0 = queries.select(col(queryCol).cast("string").as("query")).distinct()
       .withColumn("qnorm", normUdf(col("query")))

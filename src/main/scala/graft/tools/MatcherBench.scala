@@ -7,7 +7,8 @@ import graft.kernel._
   * published single-thread items/sec (BASELINE.md: 538-687 items/s on
   * 120-220k lexicons, i7-4770K). A `[phase]` line then splits the query
   * time into findVariants' three stages: nearest-anahash search, gather +
-  * DL verify, and score + rank.
+  * DL verify, and score + rank, and reports the nearest search apart for
+  * the foci that fit 62 bits and those that overflow them.
   *
   * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries]
   */
@@ -49,10 +50,21 @@ object MatcherBench {
       val out = f
       (out, (System.nanoTime() - t) / 1e3 / nQueries)
     }
+    // the nearest search is also timed per query, split by whether the
+    // focus fits 62 bits: a focus that does not walks its deletions in
+    // BigInteger arithmetic until the values fit
+    val nearestNs = Array(0L, 0L) // (fits, over 62 bits)
+    val nearestN = Array(0, 0)
     val (nearest, usNearest) = usPerQuery(prepared.map { case (_, norm, focus) =>
-      model.findNearestAnahashes(focus, params.maxAnagramDistance
+      val t = System.nanoTime()
+      val near = model.findNearestAnahashes(focus, params.maxAnagramDistance
         .resolve(norm.length, DistanceThreshold.MaxAnagramDistance), params.stopCriterion)
+      val over = if (focus.bitLength > 62) 1 else 0
+      nearestNs(over) += System.nanoTime() - t
+      nearestN(over) += 1
+      near
     })
+    def usSplit(i: Int): Double = nearestNs(i) / 1e3 / math.max(1, nearestN(i))
     val (instances, usGather) = usPerQuery(prepared.zip(nearest).map {
       case ((q, norm, _), near) =>
         model.gatherInstances(near, norm, q, params.maxEditDistance
@@ -62,7 +74,9 @@ object MatcherBench {
       case ((q, norm, _), inst) => model.scoreAndRank(inst, norm.length, params, q).length.toLong
     })
     println(f"[phase] us/query: nearest $usNearest%.1f, gather+dl $usGather%.1f, " +
-      f"score+rank $usRank%.1f (${ranked.sum} results)")
+      f"score+rank $usRank%.1f (${ranked.sum} results); nearest by focus: " +
+      f"${nearestN(0)} fitting 62 bits ${usSplit(0)}%.1f, " +
+      f"${nearestN(1)} over 62 bits ${usSplit(1)}%.1f")
 
     // optional multi-thread sweep (pure JVM, no Spark): the achievable
     // kernel scaling ceiling on this host

@@ -103,6 +103,49 @@ class KernelSpec extends AnyFunSuite {
     assert(d1.map(_._2).forall(_ == 1) && d1.size == 4)
   }
 
+  /** The reference's breadth-first unique deletion walk, kept here as an
+    * independent oracle: each frontier node deletes one letter of each
+    * class present, highest class first, and the first visit of a value
+    * wins (src/iterators.rs:95-236).
+    */
+  def visitedSetBfs(focus: BigInteger, nClasses: Int, maxDistance: Int): Vector[(BigInteger, Int)] = {
+    val visited = scala.collection.mutable.HashSet(focus)
+    val out = Vector.newBuilder[(BigInteger, Int)]
+    var frontier = Vector(focus)
+    for (depth <- 1 to maxDistance) {
+      val next = Vector.newBuilder[BigInteger]
+      for (v <- frontier; i <- nClasses - 1 to 0 by -1) {
+        val p = AnaHash.primeFor(i)
+        if (v.mod(p).signum == 0) {
+          val parent = v.divide(p)
+          if (visited.add(parent)) {
+            next += parent
+            if (!AnaHash.isEmpty(parent)) out += ((parent, depth))
+          }
+        }
+      }
+      frontier = next.result()
+    }
+    out.result()
+  }
+
+  test("canonical deletion enumeration equals a visited-set BFS") {
+    val rng = new scala.util.Random(203L)
+    val focuses = for (nClasses <- Seq(5, 27, 80); depth <- 1 to 5; _ <- 1 to 120) yield {
+      // letters drawn from a few classes so that bags repeat letters
+      val pool = Vector.fill(1 + rng.nextInt(6))(rng.nextInt(nClasses))
+      val bag = Vector.fill(1 + rng.nextInt(12))(pool(rng.nextInt(pool.length)))
+      val focus = bag.foldLeft(AnaHash.empty)((v, c) => AnaHash.insert(v, AnaHash.primeFor(c)))
+      assert(AnaHash.deletionNeighborhood(focus, nClasses, depth) ==
+        visitedSetBfs(focus, nClasses, depth), s"bag $bag at depth $depth")
+      (bag, depth, focus)
+    }
+    // overflowing foci, repeated letters and walks down to the empty bag
+    assert(focuses.exists(_._3.bitLength > 62))
+    assert(focuses.exists { case (bag, _, _) => bag.distinct.size < bag.size })
+    assert(focuses.exists { case (bag, depth, _) => bag.size <= depth })
+  }
+
   // --- 03xx: normalization + distances (tests/main.rs:558-807) ---
 
   test("0301 normalize") {
@@ -286,7 +329,7 @@ class KernelSpec extends AnyFunSuite {
     val buckets = indexed.groupBy(_._2).map { case (cc, vs) => cc -> vs.map(_._1).distinct }
     (focus, maxDistance) => {
       val (upper, cc) = AnaHash.alphabetUpperBound(focus, m.alphabetSizeWithUnk)
-      val dels = AnaHash.deletionNeighborhood(focus, upper + 2, maxDistance)
+      val dels = visitedSetBfs(focus, upper + 2, maxDistance)
       val lookups = (1 to maxDistance).map(d => (focus, cc + d)) ++
         dels.flatMap { case (v, dist) =>
           (1 to maxDistance - dist).map(sd => (v, cc - dist + sd))
