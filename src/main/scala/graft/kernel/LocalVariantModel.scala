@@ -3,8 +3,6 @@ package graft.kernel
 import java.math.BigInteger
 import scala.collection.mutable
 
-import AnaHash.bigIntegerOrdering
-
 /** A vocabulary entry (reference: src/vocab.rs:8-29, simplified to the
   * fields the matching path reads).
   */
@@ -93,35 +91,8 @@ final class LocalVariantModel(
 
   private val entries = mutable.ArrayBuffer.empty[VocabEntry]
   private val encoder = mutable.HashMap.empty[String, Int]
-  // primary anagram index: anavalue -> vocab ids in insertion order
-  // (reference: src/index.rs:5-12)
-  private var index: Map[BigInteger, Vector[Long]] = Map.empty
-  // secondary index: charcount -> numerically ascending anavalues plus
-  // per-letter postings (reference: src/lib.rs:222-245; the reference
-  // scans every value of the bucket, lib.rs:1266-1281)
-  private var sortedIndex: Map[Int, LocalVariantModel.Bucket] = Map.empty
-  // presence set of the index keys that fit 62 bits (the vast majority):
-  // the deletion probes' membership test is one primitive hash probe.
-  // Rebuilt from `index` where it is first needed, so it never travels
-  // in the serialized (broadcast) model.
-  @transient @volatile private var keySetLong: LocalVariantModel.LongSet = _
-  private def indexKeysLong: LocalVariantModel.LongSet = {
-    var s = keySetLong
-    if (s == null) {
-      s = new LocalVariantModel.LongSet(index.keysIterator
-        .filter(_.bitLength <= 62).map(_.longValue).toArray)
-      keySetLong = s
-    }
-    s
-  }
-  /** Index membership with the long fast path — a value that fits 62
-    * bits can never equal an overflowing key, so the long set answers
-    * exactly for fitting probes.
-    */
-  @inline private def indexHas(v: BigInteger): Boolean =
-    if (v.bitLength <= 62) indexKeysLong.contains(v.longValueExact)
-    else index.contains(v)
-  private var anavalues: Map[Long, BigInteger] = Map.empty
+  // the anagram index (see LocalVariantModel.AnagramIndex), built by build()
+  private var anagrams = LocalVariantModel.AnagramIndex(Vector.empty, alphabet)
   var haveFreq: Boolean = false
   // language model state (reference: lib.rs ngrams/have_lm)
   private var ngramCounts: Map[Vector[Long], Long] = Map.empty
@@ -390,32 +361,11 @@ final class LocalVariantModel(
     }
   }
 
-  /** Build the anagram index + charcount-partitioned secondary index
-    * (reference: src/lib.rs:190-245).
+  /** Build the anagram index (reference: src/lib.rs:190-245) and the
+    * language model.
     */
   def build(): this.type = {
-    val idx = mutable.LinkedHashMap.empty[BigInteger, Vector[Long]]
-    val avs = mutable.HashMap.empty[Long, BigInteger]
-    val masks = mutable.HashMap.empty[BigInteger, Long]
-    val counts = mutable.HashMap.empty[BigInteger, Int]
-    for (e <- entries if e.indexed) {
-      val (av, mask) = alphabet.anahashWithMask(e.text)
-      avs(e.id) = av
-      idx(av) = idx.getOrElse(av, Vector.empty) :+ e.id
-      masks(av) = mask
-      // charcount == normalized length for values built from text
-      counts.getOrElseUpdate(av, e.norm.length)
-    }
-    index = idx.toMap
-    keySetLong = null
-    anavalues = avs.toMap
-    sortedIndex = index.keysIterator.toVector
-      .map(av => (counts(av), av))
-      .groupBy(_._1)
-      .map { case (cc, vs) =>
-        val sorted = vs.map(_._2).sortBy(identity).toArray
-        cc -> LocalVariantModel.Bucket(sorted, sorted.map(masks))
-      }
+    anagrams = LocalVariantModel.AnagramIndex(entries.filter(_.indexed), alphabet)
     // language model (reference: lib.rs:247-297)
     val lmCounts = mutable.HashMap.empty[Vector[Long], Long]
     for (e <- entries if e.lm) {
@@ -460,40 +410,52 @@ final class LocalVariantModel(
   }
 
 
-  def anagramInstances(av: BigInteger): Vector[Long] =
-    index.getOrElse(av, Vector.empty)
+  /** Vocab ids of the entries whose anagram value is `av`, in insertion
+    * order (empty when none is).
+    */
+  def anagramInstances(av: BigInteger): Vector[Long] = {
+    val o =
+      if (av.bitLength <= 62) anagrams.ordinal(av.longValue)
+      else anagrams.search(av, AnaHash.charCount(av, alphabetSizeWithUnk))
+    if (o < 0) Vector.empty else anagrams.instances(o).iterator.map(_.toLong).toVector
+  }
+
+  /** The anagram value of an index ordinal (see [[findNearestAnahashes]]). */
+  def anagramValue(ordinal: Int): BigInteger = anagrams.values(ordinal)
 
   /** Candidate anagram values near `focus`: exact probe + deletion
-    * neighborhood + containment scan over the charcount-bucketed secondary
-    * index (reference: src/lib.rs:1143-1308). Returned ascending (BTreeSet
-    * order) so downstream gather order is deterministic.
+    * neighborhood + containment scan over the charcount ranges of the
+    * index (reference: src/lib.rs:1143-1308). Returns their index
+    * ordinals in ascending value order (BTreeSet order) so downstream
+    * gather order is deterministic; [[anagramValue]] gives the values.
     */
   def findNearestAnahashes(
       focus: BigInteger,
       maxDistance: Int,
       stopCriterion: StopCriterion = StopCriterion.Exhaustive
-  ): Vector[BigInteger] = {
-    // collected unsorted, sorted+deduped once at the end: a TreeSet of
-    // BigInteger pays a log-n compareTo chain per insert (profiled ~13%
-    // of query wall); the three sources (focus, deletion hits, scan
-    // hits) are each internally duplicate-free, so one final sort is the
-    // same BTreeSet order at a fraction of the comparisons
-    val nearest = mutable.ArrayBuffer.empty[BigInteger]
-    if (indexHas(focus)) {
-      nearest += focus
-      if (stopCriterion == StopCriterion.StopAtExactMatch &&
-        index(focus).nonEmpty) return nearest.toVector
-    }
+  ): Array[Int] = {
+    val idx = anagrams
     // node 0 is the focus; nodes 1.. are its distinct deletions in the
-    // reference's breadth-first order, each yielded once
+    // reference's breadth-first order, each yielded once. A node at depth
+    // d has focusCharCount - d letters, which places an overflowing value
+    // in the index without factoring it.
     val dels = AnaHash.deletions(focus, alphabetSizeWithUnk, maxDistance)
     val focusCharCount = dels.charCount
-    val keys = indexKeysLong
-    var k = 1
+    // hits are collected unsorted as (value rank, ordinal) keys and sorted
+    // + deduped once at the end: the three sources (focus, deletion hits,
+    // scan hits) are each internally duplicate-free
+    val hits = new mutable.ArrayBuilder.ofLong
+    var k = 0
     while (k < dels.size) {
       val b = dels.big(k)
-      if (if (b == null) keys.contains(dels.long(k)) else index.contains(b))
-        nearest += dels.value(k)
+      val o =
+        if (b == null) idx.ordinal(dels.long(k))
+        else idx.search(b, focusCharCount - dels.depth(k))
+      if (o >= 0) {
+        if (k == 0 && stopCriterion == StopCriterion.StopAtExactMatch)
+          return Array(o)
+        hits += idx.key(o)
+      }
       k += 1
     }
 
@@ -512,13 +474,13 @@ final class LocalVariantModel(
     while (t <= 2 * maxDistance) {
       val from = dels.depthStart(maxDistance - t + 1)
       val until = dels.depthStart(maxDistance - (t + 1) / 2 + 1)
-      val bucket =
-        if (from == until) null
-        else sortedIndex.getOrElse(focusCharCount - maxDistance + t, null)
-      if (bucket != null) {
-        val candidates = bucket.values
-        val candLongs = bucket.longs
-        val nWords = bucket.words
+      val target = focusCharCount - maxDistance + t
+      val postings = if (from == until) null else idx.postings(target)
+      if (postings != null) {
+        // bit i of a posting is ordinal base + i
+        val base = idx.start(target)
+        val len = idx.start(target + 1) - base
+        val nWords = (len + 63) >>> 6
         val found = new Array[Long](nWords)
         val acc = new Array[Long](nWords)
         var pk = from
@@ -528,10 +490,10 @@ final class LocalVariantModel(
           var bits = dels.mask(pk) & ~AnaHash.maskBit(63)
           var w = 0
           while (w < nWords) { acc(w) = ~found(w); w += 1 }
-          acc(nWords - 1) &= bucket.tailMask
+          acc(nWords - 1) &= -1L >>> (-len & 63)
           var live = true
           while (bits != 0L && live) {
-            val posting = bucket.postings(java.lang.Long.numberOfTrailingZeros(bits))
+            val posting = postings(java.lang.Long.numberOfTrailingZeros(bits))
             if (posting == null) live = false
             else { w = 0; while (w < nWords) { acc(w) &= posting(w); w += 1 } }
             bits &= bits - 1
@@ -546,16 +508,16 @@ final class LocalVariantModel(
           while (live && w < nWords) {
             var word = acc(w)
             while (word != 0L) {
-              val ci = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
-              val cL = candLongs(ci)
+              val o = base + (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
+              val cL = idx.longs(o)
               val hit =
                 if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
                 else {
                   if (pBig == null) pBig = dels.value(pk)
-                  AnaHash.contains(candidates(ci), pBig)
+                  AnaHash.contains(idx.values(o), pBig)
                 }
               if (hit) {
-                nearest += candidates(ci)
+                hits += idx.key(o)
                 found(w) |= word & -word
               }
               word &= word - 1
@@ -567,38 +529,38 @@ final class LocalVariantModel(
       }
       t += 1
     }
-    // ascending order (the reference's BTreeSet iteration order) with
-    // cross-source dedup: deletion values have charcount < focus <= scan
-    // hits, so overlaps are only theoretical, but equal neighbors are
-    // dropped for safety
-    val arr = nearest.toArray
-    java.util.Arrays.sort(arr.asInstanceOf[Array[Object]])
-    val out = Vector.newBuilder[BigInteger]
+    // ascending value order (the reference's BTreeSet iteration order)
+    // with cross-source dedup: deletion values have charcount < focus <=
+    // scan hits, so overlaps are only theoretical, but equal neighbors
+    // are dropped for safety
+    val keys = hits.result()
+    java.util.Arrays.sort(keys)
+    val out = new mutable.ArrayBuilder.ofInt
     var i = 0
-    while (i < arr.length) {
-      if (i == 0 || arr(i) != arr(i - 1)) out += arr(i)
+    while (i < keys.length) {
+      if (i == 0 || keys(i) != keys(i - 1)) out += keys(i).toInt
       i += 1
     }
     out.result()
   }
 
-  /** Gather vocab instances under the nearest anagram values and verify
-    * with the DL kernel (reference: src/lib.rs:1311-1402). Order =
-    * ascending anavalue, then insertion order — this order feeds the
-    * stable ranking sort and is part of the reference's deterministic
-    * tie-breaking.
+  /** Gather vocab instances under the nearest anagram values (index
+    * ordinals, from [[findNearestAnahashes]]) and verify with the DL
+    * kernel (reference: src/lib.rs:1311-1402). Order = the given value
+    * order, then insertion order — this order feeds the stable ranking
+    * sort and is part of the reference's deterministic tie-breaking.
     */
   def gatherInstances(
-      nearest: Vector[BigInteger],
+      nearest: Array[Int],
       queryNorm: Array[Int],
       queryText: String,
       maxEditDistance: Int
   ): Vector[(Long, Distance)] = {
     val out = Vector.newBuilder[(Long, Distance)]
-    for (av <- nearest; id <- index.getOrElse(av, Vector.empty)) {
-      val e = entries(id.toInt)
+    for (o <- nearest; j <- anagrams.idStart(o) until anagrams.idStart(o + 1)) {
+      val e = entries(anagrams.ids(j))
       Scoring.distanceFeatures(queryNorm, queryText, e.norm, e.text,
-        maxEditDistance, weights).foreach(d => out += ((id, d)))
+        maxEditDistance, weights).foreach(d => out += ((e.id, d)))
     }
     out.result()
   }
@@ -607,13 +569,6 @@ final class LocalVariantModel(
     * dedup, tie-aware top-k and relative cutoff
     * (reference: src/lib.rs:1405-1653).
     */
-  def scoreAndRank(
-      instances: Vector[(Long, Distance)],
-      inputLength: Int,
-      params: SearchParameters
-  ): Vector[VariantResult] =
-    scoreAndRank(instances, inputLength, params, input = "")
-
   def scoreAndRank(
       instances: Vector[(Long, Distance)],
       inputLength: Int,
@@ -722,10 +677,9 @@ final class LocalVariantModel(
     * dump is deterministic and goldenable.
     */
   def indexDump: Seq[(BigInteger, Seq[String])] =
-    index.toSeq
-      .filter(_._2.nonEmpty)
-      .sortWith((a, b) => a._1.compareTo(b._1) < 0)
-      .map { case (v, ids) => (v, ids.map(id => entries(id.toInt).text)) }
+    anagrams.values.indices.sortBy(anagrams.rank(_)).map { o =>
+      (anagrams.values(o), anagrams.instances(o).toSeq.map(entries(_).text))
+    }
 
   /** L1 learn mode (reference: learn_variants src/lib.rs:1062-1139): match
     * every input (strict = find_variants per line; otherwise search mode's
@@ -840,69 +794,107 @@ object LocalVariantModel {
   val EOS = 1L
   val UNK = 2L
 
-  /** One charcount bucket of the secondary index: ascending anavalues,
-    * their long fast-path values (the anavalue when it fits 62 bits, else
-    * 0 — most words' prime products fit a Long, so the divisibility test
-    * is mostly a native remainder) and, for each presence-mask bit below
-    * 63, a posting bitset over bucket positions: bit i of posting b is set
-    * iff values(i) holds a letter of mask bit b (null when no value does).
+  /** The anagram index (reference: the value -> instances map of
+    * src/index.rs:5-12 plus the charcount-sorted values of
+    * src/lib.rs:222-245) in flat arrays, built once. Ordinals number the
+    * distinct values of the indexed entries by (charcount, value):
+    *  - `values(o)`, and `longs(o)` the same value when it fits 62 bits
+    *    (else 0), so most divisibility tests are a native remainder;
+    *  - charcount c owns the ordinals `start(c)` until `start(c + 1)`;
+    *  - `postings(c)(b)`, for presence-mask bit b below 63: a bitset over
+    *    the positions i of that range, bit i set iff ordinal
+    *    `start(c) + i` holds a letter of bit b (null when none does; the
+    *    row is null for an empty range);
+    *  - the vocab ids of o, in insertion order, are `ids(idStart(o))`
+    *    until `ids(idStart(o + 1))`;
+    *  - `rank(o)`: the value's position in ascending value order;
+    *  - `slots` / `slotOrdinals`: open addressing (Fibonacci hashing, at
+    *    most half full, 0 marks an empty slot: anagram values are never
+    *    0) from each value that fits 62 bits to its ordinal. Such a value
+    *    never equals one that does not, so an overflowing value is found
+    *    by binary search in its charcount range instead.
     */
-  private final class Bucket(
+  private final class AnagramIndex(
       val values: Array[BigInteger],
       val longs: Array[Long],
-      val postings: Array[Array[Long]]
+      starts: Array[Int],
+      postingsByCount: Array[Array[Array[Long]]],
+      val idStart: Array[Int],
+      val ids: Array[Int],
+      val rank: Array[Int],
+      slots: Array[Long],
+      slotOrdinals: Array[Int]
   ) extends Serializable {
-    def words: Int = (values.length + 63) >>> 6
-    /** the positions of the last word that hold a value */
-    def tailMask: Long = -1L >>> (-values.length & 63)
-  }
+    def start(c: Int): Int = starts(math.min(math.max(c, 0), starts.length - 1))
 
-  private object Bucket {
-    def apply(sorted: Array[BigInteger], masks: Array[Long]): Bucket = {
-      val words = (sorted.length + 63) >>> 6
-      val postings = new Array[Array[Long]](63)
-      var i = 0
-      while (i < sorted.length) {
-        var bits = masks(i) & ~AnaHash.maskBit(63)
-        while (bits != 0L) {
-          val b = java.lang.Long.numberOfTrailingZeros(bits)
-          if (postings(b) == null) postings(b) = new Array[Long](words)
-          postings(b)(i >>> 6) |= 1L << i
-          bits &= bits - 1
-        }
-        i += 1
-      }
-      new Bucket(sorted,
-        sorted.map(v => if (v.bitLength <= 62) v.longValueExact else 0L),
-        postings)
-    }
-  }
+    def postings(c: Int): Array[Array[Long]] =
+      if (c >= 0 && c < postingsByCount.length) postingsByCount(c) else null
 
-  /** Open-addressing set of positive longs with Fibonacci hashing (0 marks
-    * an empty slot; anagram values are products of primes, never 0),
-    * filled once at construction to at most half full.
-    */
-  private final class LongSet(values: Array[Long]) {
-    private val slots =
-      new Array[Long](Integer.highestOneBit(math.max(1, values.length)) << 2)
-    private val shift = 64 - Integer.numberOfTrailingZeros(slots.length)
+    def instances(o: Int): Array[Int] =
+      java.util.Arrays.copyOfRange(ids, idStart(o), idStart(o + 1))
 
-    @inline private def home(v: Long): Int =
-      ((v * 0x9e3779b97f4a7c15L) >>> shift).toInt
+    /** a sort key in ascending value order that carries the ordinal */
+    @inline def key(o: Int): Long = (rank(o).toLong << 32) | o
 
-    values.foreach { v =>
-      var i = home(v)
-      while (slots(i) != 0L && slots(i) != v) i = (i + 1) & (slots.length - 1)
-      slots(i) = v
-    }
-
-    def contains(v: Long): Boolean = {
-      var i = home(v)
+    /** ordinal of a value that fits 62 bits, or -1 */
+    def ordinal(v: Long): Int = {
+      var i = AnagramIndex.home(v, slots.length)
       while (slots(i) != 0L) {
-        if (slots(i) == v) return true
+        if (slots(i) == v) return slotOrdinals(i)
         i = (i + 1) & (slots.length - 1)
       }
-      false
+      -1
+    }
+
+    /** ordinal of a value with `charCount` letters, or -1 */
+    def search(v: BigInteger, charCount: Int): Int = math.max(-1,
+      java.util.Arrays.binarySearch(values.asInstanceOf[Array[Object]],
+        start(charCount), start(charCount + 1), v))
+  }
+
+  private object AnagramIndex {
+    def home(v: Long, nSlots: Int): Int =
+      ((v * 0x9e3779b97f4a7c15L) >>> (64 - Integer.numberOfTrailingZeros(nSlots))).toInt
+
+    def apply(indexed: collection.IndexedSeq[VocabEntry], alphabet: Alphabet): AnagramIndex = {
+      // (charcount, value, mask, id) per entry, charcount == normalized
+      // length; the sort is stable, so one value's ids stay in insertion order
+      val rows = indexed.map { e =>
+        val (v, mask) = alphabet.anahashWithMask(e.text)
+        (e.norm.length, v, mask, e.id.toInt)
+      }.sortWith((a, b) => a._1 < b._1 || a._1 == b._1 && a._2.compareTo(b._2) < 0)
+      val firsts = rows.indices.filter(j => j == 0 || !rows(j)._2.equals(rows(j - 1)._2))
+      val values = firsts.map(rows(_)._2).toArray
+      val counts = firsts.map(rows(_)._1).toArray
+      val longs = values.map(v => if (v.bitLength <= 62) v.longValue else 0L)
+      val starts = Array.tabulate(counts.lastOption.getOrElse(-1) + 2)(c => counts.count(_ < c))
+      val postings = Array.tabulate(starts.length - 1) { c =>
+        val len = starts(c + 1) - starts(c)
+        val p = if (len == 0) null else new Array[Array[Long]](63)
+        for (i <- 0 until len) {
+          var bits = rows(firsts(starts(c) + i))._3 & ~AnaHash.maskBit(63)
+          while (bits != 0L) {
+            val b = java.lang.Long.numberOfTrailingZeros(bits)
+            if (p(b) == null) p(b) = new Array[Long]((len + 63) >>> 6)
+            p(b)(i >>> 6) |= 1L << i
+            bits &= bits - 1
+          }
+        }
+        p
+      }
+      val rank = new Array[Int](values.length)
+      values.indices.sortWith((a, b) => values(a).compareTo(values(b)) < 0)
+        .zipWithIndex.foreach { case (o, r) => rank(o) = r }
+      val slots = new Array[Long](Integer.highestOneBit(math.max(1, values.length)) << 2)
+      val slotOrdinals = new Array[Int](slots.length)
+      for (o <- values.indices if longs(o) != 0L) {
+        var i = home(longs(o), slots.length)
+        while (slots(i) != 0L) i = (i + 1) & (slots.length - 1)
+        slots(i) = longs(o)
+        slotOrdinals(i) = o
+      }
+      new AnagramIndex(values, longs, starts, postings, (firsts :+ rows.length).toArray,
+        rows.map(_._4).toArray, rank, slots, slotOrdinals)
     }
   }
 }

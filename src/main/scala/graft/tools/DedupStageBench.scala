@@ -130,8 +130,7 @@ object DedupStageBench {
     val n = args(1).toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       // native kernel expressions (codegen'd pair_score_max on the

@@ -5,10 +5,12 @@ import graft.kernel._
 /** Single-threaded kernel microbenchmark: variant-query throughput
   * against a large synthetic lexicon — compare with the reference's
   * published single-thread items/sec (BASELINE.md: 538-687 items/s on
-  * 120-220k lexicons, i7-4770K). A `[phase]` line then splits the query
-  * time into findVariants' three stages: nearest-anahash search, gather +
-  * DL verify, and score + rank, and reports the nearest search apart for
-  * the foci that fit 62 bits and those that overflow them.
+  * 120-220k lexicons, i7-4770K). The `[build]` line also reports the
+  * Java-serialized model size, the payload a broadcast ships. A `[phase]`
+  * line then splits the query time into findVariants' three stages:
+  * nearest-anahash search, gather + DL verify, and score + rank, and
+  * reports the nearest search apart for the foci that fit 62 bits and
+  * those that overflow them.
   *
   * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries]
   */
@@ -25,7 +27,9 @@ object MatcherBench {
     lexicon.foreach(model.add(_))
     var t0 = System.nanoTime()
     model.build()
-    println(f"[build] ${lexicon.size} entries in ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    val buildS = (System.nanoTime() - t0) / 1e9
+    val bytes = org.apache.commons.lang3.SerializationUtils.serialize(model).length
+    println(f"[build] ${lexicon.size} entries in $buildS%.2fs, serialized model $bytes bytes")
 
     val queries = (0 until nQueries).map { i =>
       graft.sources.SyntheticText.corrupt(rng,

@@ -43,9 +43,8 @@ object MatcherSparkBench {
       // tasks ≫ cores (4 waves) so per-query cost variance can't
       // straggle a level: with one task per core a single heavy
       // partition sets the wall clock; 4 waves let the scheduler
-      // rebalance. Env-overridable for scaling experiments.
-      val parts = sys.env.get("SPARK_GRAFT_MATCHER_PARTS").map(_.toInt)
-        .getOrElse(math.max(cpus * 4, 4))
+      // rebalance.
+      val parts = math.max(cpus * 4, 4)
       val qdf = queries.toDF("query").repartition(parts).cache()
       qdf.count()
       val params = SearchParameters()

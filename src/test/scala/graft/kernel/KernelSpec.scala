@@ -353,23 +353,39 @@ class KernelSpec extends AnyFunSuite {
         (Alphabet.simpleLatin, latin, 14),
         (wide, wide.classes.map(_.head), 9))) {
       val m = new LocalVariantModel(alphabet)
-      Vector.fill(1500)(word(letters, maxLen)).foreach(m.add(_))
+      val words = Vector.fill(1500)(word(letters, maxLen))
+      // reversed words: anagram values with several instances
+      (words ++ words.take(100).map(_.reverse)).foreach(m.add(_))
       m.build()
       val oracle = bruteNearest(m)
       val lexicon = m.vocab.filter(_.indexed).map(_.text)
+      // vocab ids per anagram value, in insertion order
+      val instances = m.vocab.filter(_.indexed)
+        .groupBy(e => alphabet.anahash(e.text)).map { case (v, es) => v -> es.map(_.id) }
       val queries = Vector.fill(150)(word(letters, maxLen)) ++
         Vector.fill(150)(word(letters, 3)) ++
         Vector.fill(150)(lexicon(rng.nextInt(lexicon.length))) :+ ""
       for (q <- queries; d <- 1 to 3) {
         val focus = alphabet.anahash(q)
-        assert(m.findNearestAnahashes(focus, d) == oracle(focus, d),
+        val exhaustive = oracle(focus, d)
+        val nearest = m.findNearestAnahashes(focus, d)
+        assert(nearest.map(m.anagramValue).toVector == exhaustive,
           s"query '$q' at distance $d")
+        val exact = if (instances.contains(focus)) Vector(focus) else exhaustive
+        assert(m.findNearestAnahashes(focus, d, StopCriterion.StopAtExactMatch)
+          .map(m.anagramValue).toVector == exact, s"query '$q' at distance $d, exact stop")
+        // with an edit bound no pair reaches, the gather keeps every
+        // instance: ascending value, then insertion order
+        assert(m.gatherInstances(nearest, alphabet.normalize(q), q, 1000).map(_._1) ==
+          exhaustive.flatMap(instances), s"query '$q' at distance $d, gather")
       }
       // the cases the scan must get right are all present
       val sizes = lexicon.groupBy(alphabet.normalize(_).length).values
         .map(_.map(alphabet.anahash).distinct.size)
       assert(sizes.exists(n => n > 64 && n % 64 != 0))
       assert(lexicon.exists(alphabet.anahash(_).bitLength > 62))
+      assert(instances.values.exists(_.size > 1))
+      assert(queries.exists(q => instances.contains(alphabet.anahash(q))))
       assert(queries.exists(q => q.nonEmpty && q.length <= 3))
       if (alphabet.size >= 70)
         assert(queries.exists(alphabet.normalize(_).exists(_ >= 63)))
