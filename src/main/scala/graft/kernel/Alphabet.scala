@@ -37,21 +37,8 @@ final case class Alphabet(classes: IndexedSeq[IndexedSeq[String]]) {
     * same greedy scan as [[normalize]] but with the hash-path UNK index
     * (reference: src/anahash.rs:16-47). Empty string hashes to 1.
     */
-  def anahash(s: String): java.math.BigInteger = anahashWithMask(s)._1
-
-  /** Anagram value plus its class presence mask (see AnaHash.maskBit). */
-  def anahashWithMask(s: String): (java.math.BigInteger, Long) = {
-    val idxs = normalizeImpl(s, unkHashIndex)
-    var acc = java.math.BigInteger.ONE
-    var mask = 0L
-    var i = 0
-    while (i < idxs.length) {
-      acc = acc.multiply(AnaHash.primeFor(idxs(i)))
-      mask |= AnaHash.maskBit(idxs(i))
-      i += 1
-    }
-    (acc, mask)
-  }
+  def anahash(s: String): java.math.BigInteger =
+    AnaHash.valueOf(normalizeImpl(s, unkHashIndex), unkHashIndex)
 
   /** First-char dispatch for the greedy scan: for each possible leading
     * UTF-16 unit, every (form, class) whose surface form starts with it,

@@ -42,6 +42,28 @@ object AnaHash {
 
   val empty: BigInteger = BigInteger.ONE
 
+  private val primesLong: Array[Long] = PRIMES.map(_.toLong)
+
+  /** The anagram value of a bag given by its class indices, where an index
+    * above `unk` counts as `unk`: so a normalized form, whose UNK index is
+    * one above the hash path's (see [[Alphabet.unkNormIndex]]), gives the
+    * value [[Alphabet.anahash]] gives its text. Multiplies in a long while
+    * the product fits.
+    */
+  def valueOf(classes: Array[Int], unk: Int): BigInteger = {
+    var v = 1L
+    var big: BigInteger = null
+    var i = 0
+    while (i < classes.length) {
+      val p = primesLong(math.min(classes(i), unk))
+      if (big != null) big = big.multiply(BigInteger.valueOf(p))
+      else if (v <= Long.MaxValue / p) v *= p
+      else big = BigInteger.valueOf(v).multiply(BigInteger.valueOf(p))
+      i += 1
+    }
+    if (big != null) big else BigInteger.valueOf(v)
+  }
+
   def isEmpty(v: BigInteger): Boolean =
     v.signum == 0 || v.equals(BigInteger.ONE)
 
@@ -105,17 +127,6 @@ object AnaHash {
     (maxIdx, count)
   }
 
-  /** Presence-mask bit for alphabet class i (classes >= 63 share bit 63,
-    * which is then conservative-only). Invariant behind the matcher's
-    * per-letter postings: bag(probe) ⊆ bag(candidate) ⟹ every sub-63 bit
-    * of probeMask is set in candMask, so intersecting the postings of the
-    * probe's bits never drops a true containment, it only skips most
-    * guaranteed-false divisibility tests.
-    */
-  @inline def maskBit(classIndex: Int): Long = 1L << math.min(classIndex, 63)
-
-  private val primesLong: Array[Long] = PRIMES.map(_.toLong)
-
   /** Breadth-first unique deletion neighborhood: every distinct anagram
     * value reachable from `focus` by 1..maxDistance single-character
     * deletions, excluding the empty value, paired with its depth
@@ -137,33 +148,23 @@ object AnaHash {
     * Node 0 is the focus itself at depth 0; nodes 1 until [[size]] are
     * the distinct non-empty sub-bags at depths 1..maxDistance, in the
     * order of [[deletionNeighborhood]]. A node's value is held as a long
-    * while it fits 62 bits ([[big]] is then null), else as a BigInteger
-    * ([[long]] is then 0). [[mask]] is the node's presence mask: a sub-63
-    * bit is cleared when the last letter of its class goes, bit 63 stays.
+    * while it fits 62 bits, else as a BigInteger; [[value]] gives it.
     * Nodes are in depth order; [[depthStart]] gives the first node of a
     * depth.
     */
   final class Deletions private[AnaHash] (
-      /** letters of the focus over the classes enumerated */
-      val charCount: Int,
       val size: Int,
       longs: Array[Long],
       bigs: Array[BigInteger],
-      masks: Array[Long],
       depths: Array[Int],
       depthStarts: Array[Int]
   ) {
     /** index of the first node at depth >= d (size past the last depth) */
     def depthStart(d: Int): Int =
       if (d < depthStarts.length) depthStarts(math.max(0, d)) else size
-    @inline def long(k: Int): Long = longs(k)
-    @inline def big(k: Int): BigInteger = if (bigs == null) null else bigs(k)
-    @inline def mask(k: Int): Long = masks(k)
     @inline def depth(k: Int): Int = depths(k)
-    def value(k: Int): BigInteger = {
-      val b = big(k)
-      if (b != null) b else BigInteger.valueOf(longs(k))
-    }
+    def value(k: Int): BigInteger =
+      if (bigs != null && bigs(k) != null) bigs(k) else BigInteger.valueOf(longs(k))
   }
 
   /** Enumerate the deletion neighborhood of `focus` over classes
@@ -204,8 +205,6 @@ object AnaHash {
     val classes = new Array[Int](alphabetSizeWithUnk)
     val counts = new Array[Int](alphabetSizeWithUnk)
     var nClasses = 0
-    var charCount = 0
-    var focusMask = 0L
     var restBig = if (focus.bitLength > 62) focus else null
     var rest = if (restBig == null) focus.longValue else 0L
     var c = alphabetSizeWithUnk - 1
@@ -223,24 +222,20 @@ object AnaHash {
       }
       if (n > 0) {
         classes(nClasses) = c; counts(nClasses) = n; nClasses += 1
-        charCount += n
-        focusMask |= maskBit(c)
       }
       c -= 1
     }
 
-    // one queue in yield order; per node: value, mask, depth, the position
+    // one queue in yield order; per node: value, depth, the position
     // (in `classes`) of the last deleted class and its run length
     var cap = 16
     var longs = new Array[Long](cap)
     var bigs: Array[BigInteger] =
       if (focus.bitLength > 62) new Array[BigInteger](cap) else null
-    var masks = new Array[Long](cap)
     var depths = new Array[Int](cap)
     var lasts = new Array[Int](cap)
     var runs = new Array[Int](cap)
     if (bigs != null) bigs(0) = focus else longs(0) = focus.longValue
-    masks(0) = focusMask
     var size = 1
     var k = 0
     while (k < size && depths(k) < maxDistance) {
@@ -263,16 +258,12 @@ object AnaHash {
               cap *= 2
               longs = java.util.Arrays.copyOf(longs, cap)
               if (bigs != null) bigs = java.util.Arrays.copyOf(bigs, cap)
-              masks = java.util.Arrays.copyOf(masks, cap)
               depths = java.util.Arrays.copyOf(depths, cap)
               lasts = java.util.Arrays.copyOf(lasts, cap)
               runs = java.util.Arrays.copyOf(runs, cap)
             }
             longs(size) = vLong
             if (bigs != null) bigs(size) = vBig
-            masks(size) =
-              if (run == counts(q) && cls < 63) masks(k) & ~maskBit(cls)
-              else masks(k)
             depths(size) = depths(k) + 1
             lasts(size) = q
             runs(size) = run
@@ -291,7 +282,7 @@ object AnaHash {
       depthStarts(d) = k
       d += 1
     }
-    new Deletions(charCount, size, longs, bigs, masks, depths, depthStarts)
+    new Deletions(size, longs, bigs, depths, depthStarts)
   }
 
   /** Canonical unsigned big-endian bytes (no redundant leading zero) for

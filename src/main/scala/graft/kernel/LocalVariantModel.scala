@@ -414,134 +414,92 @@ final class LocalVariantModel(
     * order (empty when none is).
     */
   def anagramInstances(av: BigInteger): Vector[Long] = {
-    val o =
-      if (av.bitLength <= 62) anagrams.ordinal(av.longValue)
-      else anagrams.search(av, AnaHash.charCount(av, alphabetSizeWithUnk))
-    if (o < 0) Vector.empty else anagrams.instances(o).iterator.map(_.toLong).toVector
+    // the values of one charcount range ascend with the ordinal
+    val c = AnaHash.charCount(av, alphabetSizeWithUnk)
+    var lo = anagrams.start(c)
+    var hi = anagrams.start(c + 1) - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val cmp = anagramValue(mid).compareTo(av)
+      if (cmp == 0) return anagrams.instances(mid).iterator.map(_.toLong).toVector
+      if (cmp < 0) lo = mid + 1 else hi = mid - 1
+    }
+    Vector.empty
   }
 
-  /** The anagram value of an index ordinal (see [[findNearestAnahashes]]). */
-  def anagramValue(ordinal: Int): BigInteger = anagrams.values(ordinal)
+  /** The anagram value of an index ordinal (see [[findNearestAnahashes]]),
+    * computed from the normalized form of one of its instances.
+    */
+  def anagramValue(ordinal: Int): BigInteger =
+    AnaHash.valueOf(entries(anagrams.ids(anagrams.idStart(ordinal))).norm, alphabet.size)
 
-  /** Candidate anagram values near `focus`: exact probe + deletion
-    * neighborhood + containment scan over the charcount ranges of the
-    * index (reference: src/lib.rs:1143-1308). Returns their index
-    * ordinals in ascending value order (BTreeSet order) so downstream
-    * gather order is deterministic; [[anagramValue]] gives the values.
+  /** Candidate anagram values near the query whose normalized form is
+    * `norm` (the focus f, |f| letters), as index ordinals in ascending
+    * value order (BTreeSet order), so downstream gather order is
+    * deterministic; [[anagramValue]] gives the values.
+    *
+    * The reference (src/lib.rs:1143-1308) probes the index with each
+    * non-empty sub-bag S of f that has d <= maxDistance letters deleted:
+    * for equality at charcount |f| - d, and for containment (v divisible
+    * by S) at charcounts |f| - d + sd, sd in 1..maxDistance - d. A value
+    * v holds some sub-bag of f with d letters deleted iff it misses at
+    * most d of f's letters, misses(v) = Σ_class max(0, f_class - v_class);
+    * and at |v| = |f| - d, holding such a sub-bag means equal to it. So v
+    * is a hit iff misses(v) <= d for some d that probes its charcount c:
+    * 0 <= d <= maxDistance, S non-empty (d = 0 or d < |f|) and
+    * 0 <= c - |f| + d <= maxDistance - d. Those d form an interval and the
+    * test is monotone in d, so v is a hit iff misses(v) <= D(c), the
+    * largest such d (no d: no hits at c). Each charcount c in
+    * |f| - maxDistance .. |f| + maxDistance is therefore one miss-count
+    * scan of its range (see AnagramIndex.scan).
+    *
+    * With StopAtExactMatch the charcount |f| range is scanned first with
+    * budget 0: a zero-miss value of |f| letters is f itself, the only hit
+    * then returned.
     */
   def findNearestAnahashes(
-      focus: BigInteger,
+      norm: Array[Int],
       maxDistance: Int,
       stopCriterion: StopCriterion = StopCriterion.Exhaustive
   ): Array[Int] = {
     val idx = anagrams
-    // node 0 is the focus; nodes 1.. are its distinct deletions in the
-    // reference's breadth-first order, each yielded once. A node at depth
-    // d has focusCharCount - d letters, which places an overflowing value
-    // in the index without factoring it.
-    val dels = AnaHash.deletions(focus, alphabetSizeWithUnk, maxDistance)
-    val focusCharCount = dels.charCount
-    // hits are collected unsorted as (value rank, ordinal) keys and sorted
-    // + deduped once at the end: the three sources (focus, deletion hits,
-    // scan hits) are each internally duplicate-free
-    val hits = new mutable.ArrayBuilder.ofLong
-    var k = 0
-    while (k < dels.size) {
-      val b = dels.big(k)
-      val o =
-        if (b == null) idx.ordinal(dels.long(k))
-        else idx.search(b, focusCharCount - dels.depth(k))
-      if (o >= 0) {
-        if (k == 0 && stopCriterion == StopCriterion.StopAtExactMatch)
-          return Array(o)
-        hits += idx.key(o)
-      }
-      k += 1
-    }
-
-    // containment probes: node k at depth dist probes the charcounts
-    // focusCharCount - dist + sd, sd in 1..maxDistance - dist. So target
-    // charcount focusCharCount - maxDistance + t (t in 1..2*maxDistance)
-    // is probed by the nodes at depths maxDistance - t + 1 ..
-    // maxDistance - ceil(t / 2): one contiguous range of nodes, in node
-    // order. Nodes are distinct, so no (value, charcount) probe repeats.
-    // Containment scan: per target charcount, keep index values divisible
-    // by any probe value (reference: src/lib.rs:1266-1281). A value can
-    // only contain a probe if it holds every letter of it, so each probe
-    // tests just the AND of its letters' postings; a candidate that one
-    // probe already kept is masked out for the later ones.
-    var t = 1
-    while (t <= 2 * maxDistance) {
-      val from = dels.depthStart(maxDistance - t + 1)
-      val until = dels.depthStart(maxDistance - (t + 1) / 2 + 1)
-      val target = focusCharCount - maxDistance + t
-      val postings = if (from == until) null else idx.postings(target)
-      if (postings != null) {
-        // bit i of a posting is ordinal base + i
-        val base = idx.start(target)
-        val len = idx.start(target + 1) - base
-        val nWords = (len + 63) >>> 6
-        val found = new Array[Long](nWords)
-        val acc = new Array[Long](nWords)
-        var pk = from
-        while (pk < until) {
-          // bit 63 is shared by every class >= 63 and deletion masks keep
-          // it after the last such letter goes, so it is never required
-          var bits = dels.mask(pk) & ~AnaHash.maskBit(63)
-          var w = 0
-          while (w < nWords) { acc(w) = ~found(w); w += 1 }
-          acc(nWords - 1) &= -1L >>> (-len & 63)
-          var live = true
-          while (bits != 0L && live) {
-            val posting = postings(java.lang.Long.numberOfTrailingZeros(bits))
-            if (posting == null) live = false
-            else { w = 0; while (w < nWords) { acc(w) &= posting(w); w += 1 } }
-            bits &= bits - 1
-          }
-          // long fast path (0 = does not fit 62 bits): when BOTH sides
-          // fit, divisibility is one native % instead of a BigInteger mod.
-          // A probe that overflows Long is strictly larger than any Long
-          // candidate, so the mixed case is a constant false.
-          val pL = dels.long(pk)
-          var pBig: BigInteger = null
-          w = 0
-          while (live && w < nWords) {
-            var word = acc(w)
-            while (word != 0L) {
-              val o = base + (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
-              val cL = idx.longs(o)
-              val hit =
-                if (cL != 0L) pL != 0L && pL <= cL && cL % pL == 0L
-                else {
-                  if (pBig == null) pBig = dels.value(pk)
-                  AnaHash.contains(idx.values(o), pBig)
-                }
-              if (hit) {
-                hits += idx.key(o)
-                found(w) |= word & -word
-              }
-              word &= word - 1
-            }
-            w += 1
-          }
-          pk += 1
-        }
-      }
-      t += 1
-    }
-    // ascending value order (the reference's BTreeSet iteration order)
-    // with cross-source dedup: deletion values have charcount < focus <=
-    // scan hits, so overlaps are only theoretical, but equal neighbors
-    // are dropped for safety
-    val keys = hits.result()
-    java.util.Arrays.sort(keys)
-    val out = new mutable.ArrayBuilder.ofInt
+    // the focus's class counts over the hash classes, and its classes
+    val unk = alphabet.size
+    val counts = new Array[Int](unk + 1)
+    val present = new mutable.ArrayBuilder.ofInt
     var i = 0
-    while (i < keys.length) {
-      if (i == 0 || keys(i) != keys(i - 1)) out += keys(i).toInt
+    while (i < norm.length) {
+      val k = math.min(norm(i), unk)
+      if (counts(k) == 0) present.addOne(k)
+      counts(k) += 1
       i += 1
     }
-    out.result()
+    val classes = present.result()
+    val f = norm.length
+    val occ = new Array[Int](f)
+    if (stopCriterion == StopCriterion.StopAtExactMatch) {
+      val exact = new mutable.ArrayBuilder.ofLong
+      idx.scan(f, 0, counts, classes, occ, exact)
+      if (exact.length > 0) return Array(exact.result()(0).toInt)
+    }
+    // hits as (value rank, ordinal) keys; each ordinal sits in one range
+    val hits = new mutable.ArrayBuilder.ofLong
+    // a negative distance probes the focus alone, as distance 0 does
+    val maxD = math.max(0, maxDistance)
+    var c = f - maxD
+    while (c <= f + maxD) {
+      var d = maxD
+      while (d >= 0 && !((d == 0 || d < f) && c - f + d >= 0 && c - f + 2 * d <= maxD))
+        d -= 1
+      if (d >= 0) idx.scan(c, d, counts, classes, occ, hits)
+      c += 1
+    }
+    val keys = hits.result()
+    java.util.Arrays.sort(keys)
+    val out = new Array[Int](keys.length)
+    i = 0
+    while (i < keys.length) { out(i) = keys(i).toInt; i += 1 }
+    out
   }
 
   /** Gather vocab instances under the nearest anagram values (index
@@ -655,10 +613,9 @@ final class LocalVariantModel(
   def findVariants(input: String, params: SearchParameters): Vector[VariantResult] = {
     val norm = alphabet.normalize(input)
     if (norm.isEmpty) return Vector.empty
-    val focus = alphabet.anahash(input)
     val maxAna = params.maxAnagramDistance
       .resolve(norm.length, DistanceThreshold.MaxAnagramDistance)
-    val nearest = findNearestAnahashes(focus, maxAna, params.stopCriterion)
+    val nearest = findNearestAnahashes(norm, maxAna, params.stopCriterion)
     val maxEdit = params.maxEditDistance
       .resolve(norm.length, DistanceThreshold.MaxEditDistance)
     val instances = gatherInstances(nearest, norm, input, maxEdit)
@@ -677,8 +634,8 @@ final class LocalVariantModel(
     * dump is deterministic and goldenable.
     */
   def indexDump: Seq[(BigInteger, Seq[String])] =
-    anagrams.values.indices.sortBy(anagrams.rank(_)).map { o =>
-      (anagrams.values(o), anagrams.instances(o).toSeq.map(entries(_).text))
+    anagrams.rank.indices.sortBy(anagrams.rank(_)).map { o =>
+      (anagramValue(o), anagrams.instances(o).toSeq.map(entries(_).text))
     }
 
   /** L1 learn mode (reference: learn_variants src/lib.rs:1062-1139): match
@@ -797,38 +754,29 @@ object LocalVariantModel {
   /** The anagram index (reference: the value -> instances map of
     * src/index.rs:5-12 plus the charcount-sorted values of
     * src/lib.rs:222-245) in flat arrays, built once. Ordinals number the
-    * distinct values of the indexed entries by (charcount, value):
-    *  - `values(o)`, and `longs(o)` the same value when it fits 62 bits
-    *    (else 0), so most divisibility tests are a native remainder;
+    * distinct anagram values of the indexed entries by (charcount, value);
+    * the values are not kept (an instance's normalized form gives one):
     *  - charcount c owns the ordinals `start(c)` until `start(c + 1)`;
-    *  - `postings(c)(b)`, for presence-mask bit b below 63: a bitset over
-    *    the positions i of that range, bit i set iff ordinal
-    *    `start(c) + i` holds a letter of bit b (null when none does; the
-    *    row is null for an empty range);
+    *  - multiplicity postings P(c, k, j), for hash class k (UNK is
+    *    `alphabet.size`) and j >= 1: a bitset of ⌈range length / 64⌉
+    *    longs over the positions i of that range, bit i set iff ordinal `start(c) + i`
+    *    holds at least j letters of class k. They sit in `bits`, P(c, k, 1),
+    *    P(c, k, 2), ... from `postingAt(c)(k)` until `postingAt(c)(k + 1)`,
+    *    so a multiplicity no value of the range reaches has no posting
+    *    (`postingAt(c)` is null for an empty range);
     *  - the vocab ids of o, in insertion order, are `ids(idStart(o))`
     *    until `ids(idStart(o + 1))`;
-    *  - `rank(o)`: the value's position in ascending value order;
-    *  - `slots` / `slotOrdinals`: open addressing (Fibonacci hashing, at
-    *    most half full, 0 marks an empty slot: anagram values are never
-    *    0) from each value that fits 62 bits to its ordinal. Such a value
-    *    never equals one that does not, so an overflowing value is found
-    *    by binary search in its charcount range instead.
+    *  - `rank(o)`: the value's position in ascending value order.
     */
   private final class AnagramIndex(
-      val values: Array[BigInteger],
-      val longs: Array[Long],
       starts: Array[Int],
-      postingsByCount: Array[Array[Array[Long]]],
+      postingAt: Array[Array[Int]],
+      bits: Array[Long],
       val idStart: Array[Int],
       val ids: Array[Int],
-      val rank: Array[Int],
-      slots: Array[Long],
-      slotOrdinals: Array[Int]
+      val rank: Array[Int]
   ) extends Serializable {
     def start(c: Int): Int = starts(math.min(math.max(c, 0), starts.length - 1))
-
-    def postings(c: Int): Array[Array[Long]] =
-      if (c >= 0 && c < postingsByCount.length) postingsByCount(c) else null
 
     def instances(o: Int): Array[Int] =
       java.util.Arrays.copyOfRange(ids, idStart(o), idStart(o + 1))
@@ -836,65 +784,130 @@ object LocalVariantModel {
     /** a sort key in ascending value order that carries the ordinal */
     @inline def key(o: Int): Long = (rank(o).toLong << 32) | o
 
-    /** ordinal of a value that fits 62 bits, or -1 */
-    def ordinal(v: Long): Int = {
-      var i = AnagramIndex.home(v, slots.length)
-      while (slots(i) != 0L) {
-        if (slots(i) == v) return slotOrdinals(i)
-        i = (i + 1) & (slots.length - 1)
+    /** Add `key(o)` to `out` for each ordinal o of charcount c that misses
+      * at most `budget` letters of the focus, given as its class `counts`
+      * over its `classes`. `occ` is scratch space for |focus| ints.
+      *
+      * A miss is a focus letter occurrence (k, j), the j-th letter of
+      * class k, that v does not hold: a zero bit of P(c, k, j). Misses are
+      * counted bit-sliced, 64 values per word: m(s) holds the values with
+      * more than s misses, so m(budget) marks the dead ones and a word
+      * stops once every value of it is dead. An occurrence with no
+      * posting is a miss for the whole range and lowers the budget.
+      */
+    def scan(c: Int, budget: Int, counts: Array[Int], classes: Array[Int],
+        occ: Array[Int], out: mutable.ArrayBuilder.ofLong): Unit = {
+      if (c < 0 || c >= postingAt.length || postingAt(c) == null) return
+      val at = postingAt(c)
+      val base = starts(c)
+      val len = starts(c + 1) - base
+      val nWords = (len + 63) >>> 6
+      var b = budget
+      var n = 0
+      var q = 0
+      while (q < classes.length) {
+        val k = classes(q)
+        val held = math.min(counts(k), (at(k + 1) - at(k)) / nWords)
+        // highest multiplicity first: the sparser postings kill words sooner
+        var j = 0
+        while (j < held) { occ(n) = at(k) + (held - 1 - j) * nWords; n += 1; j += 1 }
+        b -= counts(k) - held
+        q += 1
       }
-      -1
+      if (b < 0) return
+      val m = if (b > 3) new Array[Long](b + 1) else null
+      var w = 0
+      while (w < nWords) {
+        val valid = if (w == nWords - 1) -1L >>> (-len & 63) else -1L
+        var live = valid
+        var i = 0
+        if (b == 0) {
+          // no miss allowed: the values that hold every occurrence
+          while (i < n && live != 0L) { live &= bits(occ(i) + w); i += 1 }
+        } else if (m == null) {
+          var m0 = 0L; var m1 = 0L; var m2 = 0L; var m3 = 0L
+          while (i < n && live != 0L) {
+            val x = ~bits(occ(i) + w)
+            m3 |= m2 & x; m2 |= m1 & x; m1 |= m0 & x; m0 |= x
+            live = valid & ~(if (b == 1) m1 else if (b == 2) m2 else m3)
+            i += 1
+          }
+        } else {
+          java.util.Arrays.fill(m, 0L)
+          while (i < n && live != 0L) {
+            val x = ~bits(occ(i) + w)
+            var s = b
+            while (s > 0) { m(s) |= m(s - 1) & x; s -= 1 }
+            m(0) |= x
+            live = valid & ~m(b)
+            i += 1
+          }
+        }
+        // addOne, not +=: Growable.+= takes a generic element and boxes it
+        while (live != 0L) {
+          out.addOne(key(base + (w << 6) + java.lang.Long.numberOfTrailingZeros(live)))
+          live &= live - 1
+        }
+        w += 1
+      }
     }
-
-    /** ordinal of a value with `charCount` letters, or -1 */
-    def search(v: BigInteger, charCount: Int): Int = math.max(-1,
-      java.util.Arrays.binarySearch(values.asInstanceOf[Array[Object]],
-        start(charCount), start(charCount + 1), v))
   }
 
   private object AnagramIndex {
-    def home(v: Long, nSlots: Int): Int =
-      ((v * 0x9e3779b97f4a7c15L) >>> (64 - Integer.numberOfTrailingZeros(nSlots))).toInt
-
     def apply(indexed: collection.IndexedSeq[VocabEntry], alphabet: Alphabet): AnagramIndex = {
-      // (charcount, value, mask, id) per entry, charcount == normalized
+      val unk = alphabet.size
+      // (charcount, value, entry) per entry, charcount == normalized
       // length; the sort is stable, so one value's ids stay in insertion order
-      val rows = indexed.map { e =>
-        val (v, mask) = alphabet.anahashWithMask(e.text)
-        (e.norm.length, v, mask, e.id.toInt)
-      }.sortWith((a, b) => a._1 < b._1 || a._1 == b._1 && a._2.compareTo(b._2) < 0)
-      val firsts = rows.indices.filter(j => j == 0 || !rows(j)._2.equals(rows(j - 1)._2))
-      val values = firsts.map(rows(_)._2).toArray
-      val counts = firsts.map(rows(_)._1).toArray
-      val longs = values.map(v => if (v.bitLength <= 62) v.longValue else 0L)
-      val starts = Array.tabulate(counts.lastOption.getOrElse(-1) + 2)(c => counts.count(_ < c))
-      val postings = Array.tabulate(starts.length - 1) { c =>
-        val len = starts(c + 1) - starts(c)
-        val p = if (len == 0) null else new Array[Array[Long]](63)
-        for (i <- 0 until len) {
-          var bits = rows(firsts(starts(c) + i))._3 & ~AnaHash.maskBit(63)
-          while (bits != 0L) {
-            val b = java.lang.Long.numberOfTrailingZeros(bits)
-            if (p(b) == null) p(b) = new Array[Long]((len + 63) >>> 6)
-            p(b)(i >>> 6) |= 1L << i
-            bits &= bits - 1
-          }
+      val rows = indexed.map(e => (e.norm.length, AnaHash.valueOf(e.norm, unk), e))
+        .sortWith((a, b) => a._1 < b._1 || a._1 == b._1 && a._2.compareTo(b._2) < 0)
+      val firsts = rows.indices.filter(j => j == 0 || !rows(j)._2.equals(rows(j - 1)._2)).toArray
+      val starts = new Array[Int]((if (rows.isEmpty) -1 else rows.last._1) + 2)
+      for (o <- firsts.indices) starts(rows(firsts(o))._1 + 1) = o + 1
+      for (c <- 1 until starts.length) starts(c) = math.max(starts(c), starts(c - 1))
+      // pass 1 sizes each range's postings by its classes' largest
+      // multiplicity, pass 2 sets bit i of P(c, k, j) for the j-th letter
+      // of class k in the value at position i; `seen` counts the letters
+      // of one value's classes so far (its first instance's norm)
+      val seen = new Array[Int](unk + 1)
+      def eachLetter(o: Int)(f: (Int, Int) => Unit): Unit = {
+        val norm = rows(firsts(o))._3.norm
+        var i = 0
+        while (i < norm.length) {
+          val k = math.min(norm(i), unk)
+          f(k, seen(k))
+          seen(k) += 1
+          i += 1
         }
-        p
+        i = 0
+        while (i < norm.length) { seen(math.min(norm(i), unk)) = 0; i += 1 }
       }
-      val rank = new Array[Int](values.length)
-      values.indices.sortWith((a, b) => values(a).compareTo(values(b)) < 0)
+      var nBits = 0
+      val postingAt = Array.tabulate(starts.length - 1) { c =>
+        val nWords = (starts(c + 1) - starts(c) + 63) >>> 6
+        if (nWords == 0) null
+        else {
+          val held = new Array[Int](unk + 1)
+          for (o <- starts(c) until starts(c + 1))
+            eachLetter(o)((k, j) => held(k) = math.max(held(k), j + 1))
+          val at = new Array[Int](unk + 2)
+          at(0) = nBits
+          for (k <- 0 to unk) at(k + 1) = at(k) + held(k) * nWords
+          nBits = at(unk + 1)
+          at
+        }
+      }
+      val bits = new Array[Long](nBits)
+      for (c <- postingAt.indices if postingAt(c) != null) {
+        val nWords = (starts(c + 1) - starts(c) + 63) >>> 6
+        for (i <- 0 until starts(c + 1) - starts(c))
+          eachLetter(starts(c) + i)((k, j) =>
+            bits(postingAt(c)(k) + j * nWords + (i >>> 6)) |= 1L << i)
+      }
+      val rank = new Array[Int](firsts.length)
+      firsts.indices.sortWith((a, b) => rows(firsts(a))._2.compareTo(rows(firsts(b))._2) < 0)
         .zipWithIndex.foreach { case (o, r) => rank(o) = r }
-      val slots = new Array[Long](Integer.highestOneBit(math.max(1, values.length)) << 2)
-      val slotOrdinals = new Array[Int](slots.length)
-      for (o <- values.indices if longs(o) != 0L) {
-        var i = home(longs(o), slots.length)
-        while (slots(i) != 0L) i = (i + 1) & (slots.length - 1)
-        slots(i) = longs(o)
-        slotOrdinals(i) = o
-      }
-      new AnagramIndex(values, longs, starts, postings, (firsts :+ rows.length).toArray,
-        rows.map(_._4).toArray, rank, slots, slotOrdinals)
+      new AnagramIndex(starts, postingAt, bits, firsts :+ rows.length,
+        rows.map(_._3.id.toInt).toArray, rank)
     }
   }
 }

@@ -25,8 +25,8 @@ final case class VariantMatch(
   *     partition. Zero shuffle, embarrassingly parallel: the Spark
   *     analogue of the reference's rayon batch loop, and the strategy of
   *     choice at reference scale (lexicons ≤ a few 100k entries; the
-  *     serialized model, the broadcast payload, measures 4,437,786
-  *     bytes in `MatcherBench 20000` and 24,796,879 in
+  *     serialized model, the broadcast payload, measures 2,797,178
+  *     bytes in `MatcherBench 20000` and 16,891,492 in
   *     `MatcherBench 120000`). This is what keeps verify-stage scaling
   *     efficiency near 1.0 — there is no shuffle to contend on.
   *

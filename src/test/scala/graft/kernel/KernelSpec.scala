@@ -346,16 +346,19 @@ class KernelSpec extends AnyFunSuite {
     val rng = new scala.util.Random(11L)
     def word(letters: IndexedSeq[String], maxLen: Int): String =
       Iterator.fill(1 + rng.nextInt(maxLen))(letters(rng.nextInt(letters.length))).mkString
-    // 80 one-letter classes: classes 63..79 share presence bit 63
+    // 80 one-letter classes: more classes than a long has bits
     val wide = Alphabet((0 until 80).map(i => IndexedSeq((0x3b1 + i).toChar.toString)))
     val latin = ('a' to 'z').map(_.toString)
+    // characters outside both alphabets: the normalized form puts them at
+    // class size + 1, the anagram value at class size
+    val oov = Seq("!", "?", "ß")
     for ((alphabet, letters, maxLen) <- Seq(
-        (Alphabet.simpleLatin, latin, 14),
-        (wide, wide.classes.map(_.head), 9))) {
+        (Alphabet.simpleLatin, latin ++ oov, 14),
+        (wide, wide.classes.map(_.head) ++ oov.take(2), 9))) {
       val m = new LocalVariantModel(alphabet)
       val words = Vector.fill(1500)(word(letters, maxLen))
       // reversed words: anagram values with several instances
-      (words ++ words.take(100).map(_.reverse)).foreach(m.add(_))
+      (words ++ words.take(100).map(_.reverse) ++ Seq("", "!")).foreach(m.add(_))
       m.build()
       val oracle = bruteNearest(m)
       val lexicon = m.vocab.filter(_.indexed).map(_.text)
@@ -364,19 +367,23 @@ class KernelSpec extends AnyFunSuite {
         .groupBy(e => alphabet.anahash(e.text)).map { case (v, es) => v -> es.map(_.id) }
       val queries = Vector.fill(150)(word(letters, maxLen)) ++
         Vector.fill(150)(word(letters, 3)) ++
-        Vector.fill(150)(lexicon(rng.nextInt(lexicon.length))) :+ ""
-      for (q <- queries; d <- 1 to 3) {
+        Vector.fill(150)(lexicon(rng.nextInt(lexicon.length))) ++ Seq("", "!", "a!")
+      // distances 4..5 (the scan's array path) on a sample: the oracle's
+      // probe count grows fast with the distance
+      val cases = for (q <- queries; d <- 0 to 5 if d <= 3 || q.hashCode % 5 == 0) yield (q, d)
+      for ((q, d) <- cases) {
+        val norm = alphabet.normalize(q)
         val focus = alphabet.anahash(q)
         val exhaustive = oracle(focus, d)
-        val nearest = m.findNearestAnahashes(focus, d)
+        val nearest = m.findNearestAnahashes(norm, d)
         assert(nearest.map(m.anagramValue).toVector == exhaustive,
           s"query '$q' at distance $d")
         val exact = if (instances.contains(focus)) Vector(focus) else exhaustive
-        assert(m.findNearestAnahashes(focus, d, StopCriterion.StopAtExactMatch)
+        assert(m.findNearestAnahashes(norm, d, StopCriterion.StopAtExactMatch)
           .map(m.anagramValue).toVector == exact, s"query '$q' at distance $d, exact stop")
         // with an edit bound no pair reaches, the gather keeps every
         // instance: ascending value, then insertion order
-        assert(m.gatherInstances(nearest, alphabet.normalize(q), q, 1000).map(_._1) ==
+        assert(m.gatherInstances(nearest, norm, q, 1000).map(_._1) ==
           exhaustive.flatMap(instances), s"query '$q' at distance $d, gather")
       }
       // the cases the scan must get right are all present
@@ -386,7 +393,11 @@ class KernelSpec extends AnyFunSuite {
       assert(lexicon.exists(alphabet.anahash(_).bitLength > 62))
       assert(instances.values.exists(_.size > 1))
       assert(queries.exists(q => instances.contains(alphabet.anahash(q))))
-      assert(queries.exists(q => q.nonEmpty && q.length <= 3))
+      assert(Seq(alphabet.anahash(""), alphabet.anahash("!")).forall(instances.contains))
+      for (side <- Seq(lexicon, queries))
+        assert(side.exists(alphabet.normalize(_).count(_ == alphabet.unkNormIndex) > 1))
+      assert(cases.exists { case (q, d) => d >= 4 && alphabet.normalize(q).length > d })
+      assert(cases.exists { case (q, d) => q.nonEmpty && alphabet.normalize(q).length <= d })
       if (alphabet.size >= 70)
         assert(queries.exists(alphabet.normalize(_).exists(_ >= 63)))
     }
