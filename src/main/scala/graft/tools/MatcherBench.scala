@@ -10,7 +10,12 @@ import graft.kernel._
   * line then splits the query time into findVariants' three stages:
   * nearest-anahash search, gather + DL verify, and score + rank.
   *
-  * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries]
+  * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries] [threads]
+  *   [anagramDistance]
+  *
+  * `threads` > 0 adds a multi-thread pass; `anagramDistance` replaces the
+  * default Absolute(3) anagram distance (distances above 3 run the
+  * nearest-anahash scan's array miss counter).
   */
 object MatcherBench {
   def main(args: Array[String]): Unit = {
@@ -33,7 +38,8 @@ object MatcherBench {
       graft.sources.SyntheticText.corrupt(rng,
         lexicon(rng.nextInt(lexicon.size)), 1 + (i % 2))
     }
-    val params = SearchParameters()
+    val params = args.lift(3).map(_.toInt).fold(SearchParameters())(d =>
+      SearchParameters(maxAnagramDistance = DistanceThreshold.Absolute(d)))
     // warmup
     queries.take(2000).foreach(model.findVariants(_, params))
     t0 = System.nanoTime()
@@ -67,7 +73,7 @@ object MatcherBench {
 
     // optional multi-thread sweep (pure JVM, no Spark): the achievable
     // kernel scaling ceiling on this host
-    for (threads <- args.lift(2).map(_.toInt)) {
+    for (threads <- args.lift(2).map(_.toInt) if threads > 0) {
       val chunks = queries.grouped(math.max(1, queries.size / threads)).toVector
       val t1 = System.nanoTime()
       val ts = chunks.map { chunk =>
