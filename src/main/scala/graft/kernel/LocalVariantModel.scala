@@ -1,6 +1,7 @@
 package graft.kernel
 
 import java.math.BigInteger
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 
 /** A vocabulary entry (reference: src/vocab.rs:8-29, simplified to the
@@ -48,13 +49,15 @@ final case class VocabEntry(
   *     graft.operators.VariantMatcher covers the huge-lexicon case and is
   *     tested equal to this one.
   *
-  * Instances are immutable after build(); safe to broadcast.
+  * Instances are immutable after build(); safe to broadcast. Java
+  * serialization (what a broadcast uses) ships the flat columns of
+  * [[LocalVariantModel.Wire]] instead of this object graph.
   */
 final class LocalVariantModel(
     val alphabet: Alphabet,
     val weights: Weights = Weights(),
     // reference default is Max (vocab.rs VocabParams::default)
-    frequencyHandling: String = "max",
+    private val frequencyHandling: String = "max",
     /** apply confusable rescoring before pruning/expansion instead of the
       * default after-truncation point (reference: lib.rs:96-97,1505-1508)
       */
@@ -465,25 +468,27 @@ final class LocalVariantModel(
     val idx = anagrams
     // the focus's class counts over the hash classes, and its classes
     val unk = alphabet.size
+    val f = norm.length
     val counts = new Array[Int](unk + 1)
-    val present = new mutable.ArrayBuilder.ofInt
+    val present = new Array[Int](math.min(f, unk + 1))
+    var n = 0
     var i = 0
-    while (i < norm.length) {
+    while (i < f) {
       val k = math.min(norm(i), unk)
-      if (counts(k) == 0) present.addOne(k)
+      if (counts(k) == 0) { present(n) = k; n += 1 }
       counts(k) += 1
       i += 1
     }
-    val classes = present.result()
-    val f = norm.length
+    val classes = java.util.Arrays.copyOf(present, n)
     val occ = new Array[Int](f)
     if (stopCriterion == StopCriterion.StopAtExactMatch) {
-      val exact = new mutable.ArrayBuilder.ofLong
+      // the one zero-miss value of |f| letters, if any
+      val exact = new LocalVariantModel.Keys(1)
       idx.scan(f, 0, counts, classes, occ, exact)
-      if (exact.length > 0) return Array(exact.result()(0).toInt)
+      if (exact.length > 0) return Array(exact.keys(0).toInt)
     }
     // hits as (value rank, ordinal) keys; each ordinal sits in one range
-    val hits = new mutable.ArrayBuilder.ofLong
+    val hits = new LocalVariantModel.Keys(LocalVariantModel.HitsHint)
     // a negative distance probes the focus alone, as distance 0 does
     val maxD = math.max(0, maxDistance)
     var c = f - maxD
@@ -494,11 +499,10 @@ final class LocalVariantModel(
       if (d >= 0) idx.scan(c, d, counts, classes, occ, hits)
       c += 1
     }
-    val keys = hits.result()
-    java.util.Arrays.sort(keys)
-    val out = new Array[Int](keys.length)
+    java.util.Arrays.sort(hits.keys, 0, hits.length)
+    val out = new Array[Int](hits.length)
     i = 0
-    while (i < keys.length) { out(i) = keys(i).toInt; i += 1 }
+    while (i < out.length) { out(i) = hits.keys(i).toInt; i += 1 }
     out
   }
 
@@ -743,6 +747,8 @@ final class LocalVariantModel(
       }
       (e.text +: parts).mkString("\t")
     }
+
+  private def writeReplace(): AnyRef = LocalVariantModel.Wire(this)
 }
 
 object LocalVariantModel {
@@ -796,7 +802,7 @@ object LocalVariantModel {
       * posting is a miss for the whole range and lowers the budget.
       */
     def scan(c: Int, budget: Int, counts: Array[Int], classes: Array[Int],
-        occ: Array[Int], out: mutable.ArrayBuilder.ofLong): Unit = {
+        occ: Array[Int], out: Keys): Unit = {
       if (c < 0 || c >= postingAt.length || postingAt(c) == null) return
       val at = postingAt(c)
       val base = starts(c)
@@ -842,13 +848,31 @@ object LocalVariantModel {
             i += 1
           }
         }
-        // addOne, not +=: Growable.+= takes a generic element and boxes it
         while (live != 0L) {
-          out.addOne(key(base + (w << 6) + java.lang.Long.numberOfTrailingZeros(live)))
+          out.add(key(base + (w << 6) + java.lang.Long.numberOfTrailingZeros(live)))
           live &= live - 1
         }
         w += 1
       }
+    }
+  }
+
+  /** Capacity a query's [[Keys]] starts with. `MatcherBench` queries
+    * have 2 hits in the median and 18 at the 99th percentile at 20k
+    * entries (8 and 78 at 120k), so most queries never grow it.
+    */
+  private final val HitsHint = 64
+
+  /** The scan's output: a growable array of [[AnagramIndex.key]]s, the
+    * first `length` of `keys` in insertion order.
+    */
+  private final class Keys(capacity: Int) {
+    var keys = new Array[Long](capacity)
+    var length = 0
+    def add(k: Long): Unit = {
+      if (length == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * length)
+      keys(length) = k
+      length += 1
     }
   }
 
@@ -907,6 +931,182 @@ object LocalVariantModel {
         .zipWithIndex.foreach { case (o, r) => rank(o) = r }
       new AnagramIndex(starts, postingAt, bits, firsts :+ rows.length,
         rows.map(_._3.id.toInt).toArray, rank)
+    }
+  }
+
+  /** The serialized form of a model: columns of flat arrays in place of
+    * the `VocabEntry` object graph, so a broadcast (and every
+    * `DistributedLearn` round) writes and reads a few primitive arrays.
+    * Entry i has vocab id i:
+    *  - text: UTF-8 bytes `texts(textAt(i))` until `texts(textAt(i + 1))`;
+    *  - normalized form: `normAt(i)` until `normAt(i + 1)` in `norms`, each
+    *    class index in [[normWidth]] little-endian bytes;
+    *  - `frequency(i)`, `lexindex(i)`, and the flags byte `flags(i)`
+    *    (Transparent, Indexed, Lm);
+    *  - its variantOf and referenceFor lists in the sparse [[Edges]].
+    * The anagram index ships as its own arrays and the n-gram counts as
+    * ragged id lists (`lmAt`, `lmIds`) with their `lmCounts`. The encoder
+    * is not shipped: read rebuilds it from the texts.
+    */
+  private final class Wire(
+      alphabet: Alphabet,
+      weights: Weights,
+      frequencyHandling: String,
+      confusablesBeforePruning: Boolean,
+      confusables: Array[Confusable],
+      lexicons: Array[String],
+      tags: Array[String],
+      contextRules: Array[ContextRule],
+      haveFreq: Boolean,
+      haveLm: Boolean,
+      texts: Array[Byte],
+      textAt: Array[Int],
+      norms: Array[Byte],
+      normAt: Array[Int],
+      frequency: Array[Long],
+      lexindex: Array[Long],
+      flags: Array[Byte],
+      variantOf: Edges,
+      referenceFor: Edges,
+      anagrams: AnagramIndex,
+      lmAt: Array[Int],
+      lmIds: Array[Long],
+      lmCounts: Array[Long]
+  ) extends Serializable {
+    private def readResolve(): AnyRef = {
+      val m = new LocalVariantModel(alphabet, weights, frequencyHandling,
+        confusablesBeforePruning)
+      m.confusablesList ++= confusables
+      m.lexicons ++= lexicons
+      m.tags ++= tags
+      m.contextRulesList ++= contextRules
+      m.haveFreq = haveFreq
+      val n = flags.length
+      val vOf = variantOf.lists(n)
+      val rFor = referenceFor.lists(n)
+      val w = normWidth(alphabet)
+      // drop the special tokens the constructor seeds: the columns hold them
+      m.entries.clear()
+      m.entries.sizeHint(n)
+      m.encoder.clear()
+      m.encoder.sizeHint(n)
+      var i = 0
+      while (i < n) {
+        val text = new String(texts, textAt(i), textAt(i + 1) - textAt(i), UTF_8)
+        val norm = new Array[Int](normAt(i + 1) - normAt(i))
+        var j = 0
+        while (j < norm.length) {
+          val p = (normAt(i) + j) * w
+          var b = 0
+          while (b < w) { norm(j) |= (norms(p + b) & 0xff) << (8 * b); b += 1 }
+          j += 1
+        }
+        m.entries += VocabEntry(i, text, norm, frequency(i),
+          transparent = (flags(i) & Transparent) != 0, vOf(i).toList,
+          indexed = (flags(i) & Indexed) != 0, lm = (flags(i) & Lm) != 0,
+          lexindex = lexindex(i), referenceFor = rFor(i))
+        m.encoder(text) = i
+        i += 1
+      }
+      m.anagrams = anagrams
+      m.ngramCounts = lmCounts.indices.iterator.map(k =>
+        lmIds.slice(lmAt(k), lmAt(k + 1)).toVector -> lmCounts(k)).toMap
+      m.haveLm = haveLm
+      m
+    }
+  }
+
+  private object Wire {
+    def apply(m: LocalVariantModel): Wire = {
+      val es = m.entries
+      val n = es.length
+      val w = normWidth(m.alphabet)
+      val textBytes = new Array[Array[Byte]](n)
+      val textAt = new Array[Int](n + 1)
+      val normAt = new Array[Int](n + 1)
+      val frequency = new Array[Long](n)
+      val lexindex = new Array[Long](n)
+      val flags = new Array[Byte](n)
+      var i = 0
+      while (i < n) {
+        val e = es(i)
+        textBytes(i) = e.text.getBytes(UTF_8)
+        textAt(i + 1) = textAt(i) + textBytes(i).length
+        normAt(i + 1) = normAt(i) + e.norm.length
+        frequency(i) = e.frequency
+        lexindex(i) = e.lexindex
+        flags(i) = ((if (e.transparent) Transparent else 0) |
+          (if (e.indexed) Indexed else 0) | (if (e.lm) Lm else 0)).toByte
+        i += 1
+      }
+      val texts = new Array[Byte](textAt(n))
+      val norms = new Array[Byte](normAt(n) * w)
+      i = 0
+      while (i < n) {
+        System.arraycopy(textBytes(i), 0, texts, textAt(i), textBytes(i).length)
+        val norm = es(i).norm
+        var j = 0
+        while (j < norm.length) {
+          val p = (normAt(i) + j) * w
+          var b = 0
+          while (b < w) { norms(p + b) = (norm(j) >>> (8 * b)).toByte; b += 1 }
+          j += 1
+        }
+        i += 1
+      }
+      val lm = m.ngramCounts.toArray
+      new Wire(m.alphabet, m.weights, m.frequencyHandling,
+        m.confusablesBeforePruning, m.confusablesList.toArray, m.lexicons.toArray,
+        m.tags.toArray, m.contextRulesList.toArray, m.haveFreq, m.haveLm,
+        texts, textAt, norms, normAt, frequency, lexindex, flags,
+        Edges(es, _.variantOf), Edges(es, _.referenceFor), m.anagrams,
+        lm.scanLeft(0)(_ + _._1.length), lm.flatMap(_._1), lm.map(_._2))
+    }
+  }
+
+  private final val Transparent = 1
+  private final val Indexed = 2
+  private final val Lm = 4
+
+  /** Bytes per class index in [[Wire]]'s norms: enough for the largest
+    * index the alphabet's normalized forms hold (its UNK).
+    */
+  private def normWidth(alphabet: Alphabet): Int =
+    (39 - Integer.numberOfLeadingZeros(alphabet.unkNormIndex)) / 8
+
+  /** (id, score) lists of the entries that have one, in CSR form: entry
+    * `owners(k)`'s list is `targets`/`scores` from `at(k)` until `at(k + 1)`.
+    */
+  private final class Edges(
+      owners: Array[Int],
+      at: Array[Int],
+      targets: Array[Long],
+      scores: Array[Double]
+  ) extends Serializable {
+    /** the list of each of `n` entries */
+    def lists(n: Int): Array[Vector[(Long, Double)]] = {
+      val out = Array.fill(n)(Vector.empty[(Long, Double)])
+      for (k <- owners.indices)
+        out(owners(k)) = (at(k) until at(k + 1)).map(j => (targets(j), scores(j))).toVector
+      out
+    }
+  }
+
+  private object Edges {
+    def apply(es: collection.IndexedSeq[VocabEntry],
+        list: VocabEntry => Seq[(Long, Double)]): Edges = {
+      val owners = mutable.ArrayBuilder.make[Int]
+      val edges = mutable.ArrayBuffer.empty[(Long, Double)]
+      val at = mutable.ArrayBuilder.make[Int]
+      at.addOne(0)
+      var i = 0
+      while (i < es.length) {
+        val l = list(es(i))
+        if (l.nonEmpty) { owners.addOne(i); edges ++= l; at.addOne(edges.length) }
+        i += 1
+      }
+      new Edges(owners.result(), at.result(), edges.map(_._1).toArray,
+        edges.map(_._2).toArray)
     }
   }
 }

@@ -25,9 +25,10 @@ final case class VariantMatch(
   *     partition. Zero shuffle, embarrassingly parallel: the Spark
   *     analogue of the reference's rayon batch loop, and the strategy of
   *     choice at reference scale (lexicons ≤ a few 100k entries; the
-  *     serialized model, the broadcast payload, measures 2,797,178
-  *     bytes in `MatcherBench 20000` and 16,891,492 in
-  *     `MatcherBench 120000`). This is what keeps verify-stage scaling
+  *     serialized model, the broadcast payload, measures 1,277,008
+  *     bytes in `MatcherBench 20000` and 7,784,429 in
+  *     `MatcherBench 120000`, about 65 B per entry, written as flat
+  *     columns by `LocalVariantModel.Wire`). This is what keeps verify-stage scaling
   *     efficiency near 1.0 — there is no shuffle to contend on.
   *
   *  2. [[matchJoin]] — fully declarative plan for lexicons too large to

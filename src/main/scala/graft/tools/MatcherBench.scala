@@ -6,7 +6,8 @@ import graft.kernel._
   * against a large synthetic lexicon — compare with the reference's
   * published single-thread items/sec (BASELINE.md: 538-687 items/s on
   * 120-220k lexicons, i7-4770K). The `[build]` line also reports the
-  * Java-serialized model size, the payload a broadcast ships. A `[phase]`
+  * Java-serialized model size, the payload a broadcast ships, and the
+  * milliseconds of one cold serialize and deserialize of it. A `[phase]`
   * line then splits the query time into findVariants' three stages:
   * nearest-anahash search, gather + DL verify, and score + rank.
   *
@@ -31,8 +32,14 @@ object MatcherBench {
     var t0 = System.nanoTime()
     model.build()
     val buildS = (System.nanoTime() - t0) / 1e9
-    val bytes = org.apache.commons.lang3.SerializationUtils.serialize(model).length
-    println(f"[build] ${lexicon.size} entries in $buildS%.2fs, serialized model $bytes bytes")
+    t0 = System.nanoTime()
+    val bytes = org.apache.commons.lang3.SerializationUtils.serialize(model)
+    val serMs = (System.nanoTime() - t0) / 1e6
+    t0 = System.nanoTime()
+    org.apache.commons.lang3.SerializationUtils.deserialize[LocalVariantModel](bytes)
+    val deserMs = (System.nanoTime() - t0) / 1e6
+    println(f"[build] ${lexicon.size} entries in $buildS%.2fs, serialized model " +
+      f"${bytes.length} bytes (serialize $serMs%.1f ms, deserialize $deserMs%.1f ms)")
 
     val queries = (0 until nQueries).map { i =>
       graft.sources.SyntheticText.corrupt(rng,
