@@ -14,9 +14,10 @@ import graft.kernel.{Distance, Distances, Scoring, Weights}
 /** JVM entry points shared by the [[PairScoreMax]] / [[PairAccept]]
   * codegen paths and their interpreted evals: the symmetric analiticcl
   * verification score over precomputed normKey strings + case classes —
-  * [[graft.kernel.Scoring.score]] of the same [[Distance]] features in
-  * both directions, max (KernelExprsSpec pins it bit-for-bit against
-  * `Scoring` over the normalized texts). NaN encodes null (no DL within
+  * [[graft.kernel.Scoring.score]] of the matcher's own
+  * [[graft.kernel.Scoring.distanceFeatures]] in both directions, max
+  * (KernelExprsSpec pins it bit-for-bit against an unstripped full-DP
+  * scoring of the normalized texts). NaN encodes null (no DL within
   * maxEditDistance, or an empty/null side); a legitimate score is a
   * finite weighted mean in [0,1], never NaN.
   */
@@ -29,20 +30,11 @@ object KernelExprs {
     val a = na.toString
     val b = nb.toString
     if (a.isEmpty || b.isEmpty) return Double.NaN
-    val ld = Distances.dlChars(a, b, maxEditDistance)
-    if (ld < 0) return Double.NaN
     val w = Weights(wLd, wLcs, wPrefix, wSuffix, wCase)
-    val d = Distance(
-      ld = ld,
-      lcs = if (w.lcs > 0.0) Distances.lcsChars(a, b) else 0,
-      prefixLen = if (w.prefix > 0.0) Distances.prefixChars(a, b) else 0,
-      suffixLen = if (w.suffix > 0.0) Distances.suffixChars(a, b) else 0,
-      sameCase =
-        if (w.caseW > 0.0 && la != 2.toByte && lb != 2.toByte) la == lb
-        else true)
-    math.max(
-      Scoring.score(d, a.length, w),
-      Scoring.score(d, b.length, w))
+    Scoring.distanceFeatures(a, b, Scoring.sameCase(la, lb, w), maxEditDistance, w) match {
+      case Some(d) => math.max(Scoring.score(d, a.length, w), Scoring.score(d, b.length, w))
+      case None => Double.NaN
+    }
   }
 
   /** Decision form of [[pairScoreMax]] for the dedup verify filter:
@@ -89,9 +81,7 @@ object KernelExprs {
     val w = Weights(wLd, wLcs, wPrefix, wSuffix, wCase)
     val pre = if (w.prefix > 0.0) Distances.prefixChars(a, b) else 0
     val suf = if (w.suffix > 0.0) Distances.suffixChars(a, b) else 0
-    val same =
-      if (w.caseW > 0.0 && la != 2.toByte && lb != 2.toByte) la == lb
-      else true
+    val same = Scoring.sameCase(la, lb, w)
     def s(lcs: Int): Double = {
       val d = Distance(ld, lcs, pre, suf, same)
       math.max(

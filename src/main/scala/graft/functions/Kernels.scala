@@ -42,21 +42,13 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
   }
 
   /** P1 (internal form): normalized text as a compact string — one char
-    * per alphabet-class index (codepoint 33 + idx, collision-free for
-    * alphabets up to 168 classes). The dedup pipeline shingles THIS, so
-    * shingle identity == normalized-class n-gram identity, exactly the
-    * reference's alphabet semantics.
+    * per alphabet-class index ([[Alphabet.normKey]]: codepoint 33 + idx,
+    * one char per class, so distinct forms give distinct keys). The dedup
+    * pipeline shingles THIS, so shingle identity == normalized-class
+    * n-gram identity, exactly the reference's alphabet semantics.
     */
   val normKey: Column => Column = {
-    val f = udf { (s: String) =>
-      Option(s).map { x =>
-        val n = alphabet.normalize(x)
-        val sb = new java.lang.StringBuilder(n.length)
-        var i = 0
-        while (i < n.length) { sb.append((33 + n(i)).toChar); i += 1 }
-        sb.toString
-      }
-    }
+    val f = udf((s: String) => Option(s).map(alphabet.normKey))
     (c: Column) => f(c)
   }
 
@@ -71,7 +63,7 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
   /** P4: character count of the normalized form. */
   val charCount: Column => Column = {
     val f = udf { (s: String) =>
-      Option(s).map(x => alphabet.normalize(x).length)
+      Option(s).map(x => alphabet.normKey(x).length)
     }
     (c: Column) => f(c)
   }
@@ -86,17 +78,14 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
   }
 
   /** P6: full Damerau-Levenshtein over normalized forms; -1 = exceeded
-    * max. This is the dedup verification kernel. Computed via the banded
-    * zero-allocation [[Distances.dlChars]] over the compact normKey
-    * rendering (one char per class index — identical integers to the
-    * parity matrix implementation, pinned by DistancesPropSpec's 20k-case
-    * equivalence property).
+    * max. This is the dedup verification kernel: the banded
+    * zero-allocation [[Distances.dlChars]] over the texts' [[normKey]]s
+    * (DistancesPropSpec pins it to an unstripped full DP).
     */
   def damerau(a: Column, b: Column, maxDistance: Int): Column = {
     val f = udf { (x: String, y: String) =>
       if (x == null || y == null) -1
-      else Distances.dlChars(Kernels.toNormKey(alphabet.normalize(x)),
-        Kernels.toNormKey(alphabet.normalize(y)), maxDistance)
+      else Distances.dlChars(alphabet.normKey(x), alphabet.normKey(y), maxDistance)
     }
     f(a, b)
   }
@@ -106,11 +95,7 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
     * semantics: empty side => sameCase true, lib.rs:1367-1377).
     */
   val caseClass: Column => Column = {
-    val f = udf { (s: String) =>
-      if (s == null || s.isEmpty) 2.toByte
-      else if (Character.isLowerCase(s.codePointAt(0))) 0.toByte
-      else 1.toByte
-    }
+    val f = udf((s: String) => Scoring.caseClass(s))
     (c: Column) => f(c)
   }
 
@@ -147,14 +132,4 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
 object Kernels {
   lazy val test = new Kernels(Alphabet.test)
   lazy val simpleLatin = new Kernels(Alphabet.simpleLatin)
-
-  /** Compact one-char-per-class rendering of a normalized form (codepoint
-    * 33 + class index; collision-free for alphabets up to 168 classes).
-    */
-  private[functions] def toNormKey(n: Array[Int]): String = {
-    val sb = new java.lang.StringBuilder(n.length)
-    var i = 0
-    while (i < n.length) { sb.append((33 + n(i)).toChar); i += 1 }
-    sb.toString
-  }
 }

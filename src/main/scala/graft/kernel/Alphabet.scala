@@ -28,17 +28,67 @@ final case class Alphabet(classes: IndexedSeq[IndexedSeq[String]]) {
     * first match wins and consumes its full length; unmatched codepoints
     * emit the UNK norm index (reference: src/anahash.rs:50-80).
     *
-    * Returns alphabet-class indices; values fit in 0..169 so callers may
-    * pack them into bytes with (x & 0xFF) round-trips.
+    * Returns alphabet-class indices, 0 to [[unkNormIndex]]: the classes
+    * of [[normKey]], each char minus 33.
     */
-  def normalize(s: String): Array[Int] = normalizeImpl(s, unkNormIndex)
+  def normalize(s: String): Array[Int] = {
+    val key = normKey(s)
+    Array.tabulate(key.length)(key.charAt(_) - 33)
+  }
 
-  /** Anagram hash: product of one prime per consumed position, using the
-    * same greedy scan as [[normalize]] but with the hash-path UNK index
+  /** The normalized form as a compact string, one char per consumed
+    * position: codepoint 33 + class index, UNK at 33 + [[unkNormIndex]].
+    * This is the form the matcher's vocabulary, the dedup pipeline's
+    * `norm` column and the char distance kernels
+    * ([[Distances.dlChars]] etc.) share. Every alphabet the anagram hash
+    * accepts (at most 167 classes, see [[AnaHash.valueOf]]) keeps every
+    * char at or below 255, so the string is stored one byte per letter.
+    * The key itself has no class limit.
+    */
+  def normKey(s: String): String = {
+    val (dForms, dCls) = dispatch
+    // each consumed position emits exactly one char for >= 1 char, so
+    // s.length bounds the output
+    val out = new Array[Char](s.length)
+    val unk = (33 + unkNormIndex).toChar
+    var n = 0
+    var pos = 0
+    while (pos < s.length) {
+      var matched = false
+      val forms = dForms(s.charAt(pos).toInt)
+      if (forms != null) {
+        val cls = dCls(s.charAt(pos).toInt)
+        var i = 0
+        while (!matched && i < forms.length) {
+          val f = forms(i)
+          // f.charAt(0) == s.charAt(pos) by dispatch construction: a
+          // single-char form is already a full match
+          if (f.length == 1 || s.startsWith(f, pos)) {
+            out(n) = (33 + cls(i)).toChar
+            n += 1
+            pos += f.length
+            matched = true
+          }
+          i += 1
+        }
+      }
+      if (!matched) {
+        out(n) = unk
+        n += 1
+        // advance one codepoint (reference iterates char_indices =
+        // unicode scalar values; surrogate pairs advance by 2 UTF-16 units)
+        pos += Character.charCount(s.codePointAt(pos))
+      }
+    }
+    new String(out, 0, n)
+  }
+
+  /** Anagram hash: product of one prime per consumed position of the
+    * same greedy scan as [[normalize]], with the hash path's UNK index
     * (reference: src/anahash.rs:16-47). Empty string hashes to 1.
     */
   def anahash(s: String): java.math.BigInteger =
-    AnaHash.valueOf(normalizeImpl(s, unkHashIndex), unkHashIndex)
+    AnaHash.valueOf(normKey(s), unkHashIndex)
 
   /** First-char dispatch for the greedy scan: for each possible leading
     * UTF-16 unit, every (form, class) whose surface form starts with it,
@@ -81,43 +131,6 @@ final case class Alphabet(classes: IndexedSeq[IndexedSeq[String]]) {
       c += 1
     }
     (dForms, dCls)
-  }
-
-  private def normalizeImpl(s: String, unkIndex: Int): Array[Int] = {
-    val (dForms, dCls) = dispatch
-    // each consumed position emits exactly one index for >= 1 char, so
-    // s.length bounds the output
-    val out = new Array[Int](s.length)
-    var n = 0
-    var pos = 0
-    while (pos < s.length) {
-      var matched = false
-      val forms = dForms(s.charAt(pos).toInt)
-      if (forms != null) {
-        val cls = dCls(s.charAt(pos).toInt)
-        var i = 0
-        while (!matched && i < forms.length) {
-          val f = forms(i)
-          // f.charAt(0) == s.charAt(pos) by dispatch construction: a
-          // single-char form is already a full match
-          if (f.length == 1 || s.startsWith(f, pos)) {
-            out(n) = cls(i)
-            n += 1
-            pos += f.length
-            matched = true
-          }
-          i += 1
-        }
-      }
-      if (!matched) {
-        out(n) = unkIndex
-        n += 1
-        // advance one codepoint (reference iterates char_indices =
-        // unicode scalar values; surrogate pairs advance by 2 UTF-16 units)
-        pos += Character.charCount(s.codePointAt(pos))
-      }
-    }
-    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 }
 

@@ -44,18 +44,24 @@ object AnaHash {
 
   private val primesLong: Array[Long] = PRIMES.map(_.toLong)
 
-  /** The anagram value of a bag given by its class indices, where an index
-    * above `unk` counts as `unk`: so a normalized form, whose UNK index is
-    * one above the hash path's (see [[Alphabet.unkNormIndex]]), gives the
-    * value [[Alphabet.anahash]] gives its text. Multiplies in a long while
-    * the product fits.
+  /** The anagram value of a normalized form given as its key (see
+    * [[Alphabet.normKey]]: class `char - 33` per letter), where a class
+    * above `unk` counts as `unk`: so the key's UNK, one above the hash
+    * path's (see [[Alphabet.unkNormIndex]]), gives the value
+    * [[Alphabet.anahash]] gives its text. `unk` is the alphabet's size,
+    * and the prime table holds one prime per class plus one for UNK, so
+    * an alphabet of more than `PRIMES.length - 1` classes is rejected
+    * here. Multiplies in a long while the product fits.
     */
-  def valueOf(classes: Array[Int], unk: Int): BigInteger = {
+  def valueOf(key: String, unk: Int): BigInteger = {
+    if (unk >= PRIMES.length)
+      throw new IllegalArgumentException(s"alphabet of $unk classes: the anagram " +
+        s"hash has primes for at most ${PRIMES.length - 1} classes plus unknown")
     var v = 1L
     var big: BigInteger = null
     var i = 0
-    while (i < classes.length) {
-      val p = primesLong(math.min(classes(i), unk))
+    while (i < key.length) {
+      val p = primesLong(math.min(key.charAt(i) - 33, unk))
       if (big != null) big = big.multiply(BigInteger.valueOf(p))
       else if (v <= Long.MaxValue / p) v *= p
       else big = BigInteger.valueOf(v).multiply(BigInteger.valueOf(p))

@@ -10,7 +10,8 @@ import scala.collection.mutable
 final case class VocabEntry(
     id: Long,
     text: String,
-    norm: Array[Int],
+    /** the normalized form as its key (see [[Alphabet.normKey]]) */
+    norm: String,
     frequency: Long,
     transparent: Boolean,
     /** outgoing VariantOf edges: (targetId, score) (reference: src/types.rs:316-324) */
@@ -102,11 +103,11 @@ final class LocalVariantModel(
   var haveLm: Boolean = false
 
   // special tokens pre-seeded like the reference (vocab.rs:145-181)
-  entries += VocabEntry(0, "<bos>", Array.empty, 0, transparent = false, Nil,
+  entries += VocabEntry(0, "<bos>", "", 0, transparent = false, Nil,
     indexed = false)
-  entries += VocabEntry(1, "<eos>", Array.empty, 0, transparent = false, Nil,
+  entries += VocabEntry(1, "<eos>", "", 0, transparent = false, Nil,
     indexed = false)
-  entries += VocabEntry(2, "<unk>", Array.empty, 0, transparent = false, Nil,
+  entries += VocabEntry(2, "<unk>", "", 0, transparent = false, Nil,
     indexed = false)
   encoder("<bos>") = 0; encoder("<eos>") = 1; encoder("<unk>") = 2
 
@@ -152,7 +153,7 @@ final class LocalVariantModel(
         e.id
       case None =>
         val id = entries.length.toLong
-        entries += VocabEntry(id, text, alphabet.normalize(text), freq,
+        entries += VocabEntry(id, text, alphabet.normKey(text), freq,
           transparent, Nil, indexed = indexed, lm = lm,
           lexindex = 1L << lexIndex)
         encoder(text) = entries.length - 1
@@ -436,8 +437,8 @@ final class LocalVariantModel(
   def anagramValue(ordinal: Int): BigInteger =
     AnaHash.valueOf(entries(anagrams.ids(anagrams.idStart(ordinal))).norm, alphabet.size)
 
-  /** Candidate anagram values near the query whose normalized form is
-    * `norm` (the focus f, |f| letters), as index ordinals in ascending
+  /** Candidate anagram values near the query whose normalized form has
+    * the key `norm` (the focus f, |f| letters), as index ordinals in ascending
     * value order (BTreeSet order), so downstream gather order is
     * deterministic; [[anagramValue]] gives the values.
     *
@@ -461,7 +462,7 @@ final class LocalVariantModel(
     * then returned.
     */
   def findNearestAnahashes(
-      norm: Array[Int],
+      norm: String,
       maxDistance: Int,
       stopCriterion: StopCriterion = StopCriterion.Exhaustive
   ): Array[Int] = {
@@ -474,7 +475,7 @@ final class LocalVariantModel(
     var n = 0
     var i = 0
     while (i < f) {
-      val k = math.min(norm(i), unk)
+      val k = math.min(norm.charAt(i) - 33, unk)
       if (counts(k) == 0) { present(n) = k; n += 1 }
       counts(k) += 1
       i += 1
@@ -511,18 +512,30 @@ final class LocalVariantModel(
     * kernel (reference: src/lib.rs:1311-1402). Order = the given value
     * order, then insertion order — this order feeds the stable ranking
     * sort and is part of the reference's deterministic tie-breaking.
+    * `queryKey` is the query's normalized form as its key.
     */
   def gatherInstances(
       nearest: Array[Int],
-      queryNorm: Array[Int],
+      queryKey: String,
       queryText: String,
       maxEditDistance: Int
   ): Vector[(Long, Distance)] = {
     val out = Vector.newBuilder[(Long, Distance)]
-    for (o <- nearest; j <- anagrams.idStart(o) until anagrams.idStart(o + 1)) {
-      val e = entries(anagrams.ids(j))
-      Scoring.distanceFeatures(queryNorm, queryText, e.norm, e.text,
-        maxEditDistance, weights).foreach(d => out += ((e.id, d)))
+    val queryCase = Scoring.caseClass(queryText)
+    // plain loops: a for over the index Ranges timed ~15% slower here in
+    // MatcherBench's gather+dl phase
+    var k = 0
+    while (k < nearest.length) {
+      var j = anagrams.idStart(nearest(k))
+      val end = anagrams.idStart(nearest(k) + 1)
+      while (j < end) {
+        val e = entries(anagrams.ids(j))
+        val sameCase = Scoring.sameCase(queryCase, Scoring.caseClass(e.text), weights)
+        Scoring.distanceFeatures(queryKey, e.norm, sameCase, maxEditDistance, weights)
+          .foreach(d => out += ((e.id, d)))
+        j += 1
+      }
+      k += 1
     }
     out.result()
   }
@@ -615,15 +628,15 @@ final class LocalVariantModel(
     * (reference: src/lib.rs:972-1027).
     */
   def findVariants(input: String, params: SearchParameters): Vector[VariantResult] = {
-    val norm = alphabet.normalize(input)
-    if (norm.isEmpty) return Vector.empty
+    val key = alphabet.normKey(input)
+    if (key.isEmpty) return Vector.empty
     val maxAna = params.maxAnagramDistance
-      .resolve(norm.length, DistanceThreshold.MaxAnagramDistance)
-    val nearest = findNearestAnahashes(norm, maxAna, params.stopCriterion)
+      .resolve(key.length, DistanceThreshold.MaxAnagramDistance)
+    val nearest = findNearestAnahashes(key, maxAna, params.stopCriterion)
     val maxEdit = params.maxEditDistance
-      .resolve(norm.length, DistanceThreshold.MaxEditDistance)
-    val instances = gatherInstances(nearest, norm, input, maxEdit)
-    scoreAndRank(instances, norm.length, params, input)
+      .resolve(key.length, DistanceThreshold.MaxEditDistance)
+    val instances = gatherInstances(nearest, key, input, maxEdit)
+    scoreAndRank(instances, key.length, params, input)
   }
 
   /** Resolve a result id back to its text. */
@@ -896,13 +909,13 @@ object LocalVariantModel {
         val norm = rows(firsts(o))._3.norm
         var i = 0
         while (i < norm.length) {
-          val k = math.min(norm(i), unk)
+          val k = math.min(norm.charAt(i) - 33, unk)
           f(k, seen(k))
           seen(k) += 1
           i += 1
         }
         i = 0
-        while (i < norm.length) { seen(math.min(norm(i), unk)) = 0; i += 1 }
+        while (i < norm.length) { seen(math.min(norm.charAt(i) - 33, unk)) = 0; i += 1 }
       }
       var nBits = 0
       val postingAt = Array.tabulate(starts.length - 1) { c =>
@@ -940,7 +953,7 @@ object LocalVariantModel {
     * Entry i has vocab id i:
     *  - text: UTF-8 bytes `texts(textAt(i))` until `texts(textAt(i + 1))`;
     *  - normalized form: `normAt(i)` until `normAt(i + 1)` in `norms`, each
-    *    class index in [[normWidth]] little-endian bytes;
+    *    class index (key char - 33) in [[normWidth]] little-endian bytes;
     *  - `frequency(i)`, `lexindex(i)`, and the flags byte `flags(i)`
     *    (Transparent, Indexed, Lm);
     *  - its variantOf and referenceFor lists in the sparse [[Edges]].
@@ -993,15 +1006,17 @@ object LocalVariantModel {
       var i = 0
       while (i < n) {
         val text = new String(texts, textAt(i), textAt(i + 1) - textAt(i), UTF_8)
-        val norm = new Array[Int](normAt(i + 1) - normAt(i))
+        val norm = new Array[Char](normAt(i + 1) - normAt(i))
         var j = 0
         while (j < norm.length) {
           val p = (normAt(i) + j) * w
+          var c = 33
           var b = 0
-          while (b < w) { norm(j) |= (norms(p + b) & 0xff) << (8 * b); b += 1 }
+          while (b < w) { c += (norms(p + b) & 0xff) << (8 * b); b += 1 }
+          norm(j) = c.toChar
           j += 1
         }
-        m.entries += VocabEntry(i, text, norm, frequency(i),
+        m.entries += VocabEntry(i, text, new String(norm), frequency(i),
           transparent = (flags(i) & Transparent) != 0, vOf(i).toList,
           indexed = (flags(i) & Indexed) != 0, lm = (flags(i) & Lm) != 0,
           lexindex = lexindex(i), referenceFor = rFor(i))
@@ -1049,7 +1064,7 @@ object LocalVariantModel {
         while (j < norm.length) {
           val p = (normAt(i) + j) * w
           var b = 0
-          while (b < w) { norms(p + b) = (norm(j) >>> (8 * b)).toByte; b += 1 }
+          while (b < w) { norms(p + b) = ((norm.charAt(j) - 33) >>> (8 * b)).toByte; b += 1 }
           j += 1
         }
         i += 1

@@ -29,42 +29,48 @@ final case class VariantResult(
 
 object Scoring {
 
-  /** Compute the distance features the scoring formula needs; features
-    * whose weight is zero are skipped exactly like the reference
-    * (src/lib.rs:1343-1378). Returns None when DL exceeds maxEditDistance.
+  /** Compute the distance features the scoring formula needs over two
+    * normalized forms given as keys (see [[Alphabet.normKey]]), with the
+    * banded char kernels of [[Distances]]; features whose weight is zero
+    * are skipped exactly like the reference (src/lib.rs:1343-1378).
+    * `sameCase` comes from [[sameCase]]. Returns None when DL exceeds
+    * maxEditDistance.
     */
   def distanceFeatures(
-      queryNorm: Array[Int],
-      queryText: String,
-      candNorm: Array[Int],
-      candText: String,
+      a: String,
+      b: String,
+      sameCase: Boolean,
       maxEditDistance: Int,
       weights: Weights
   ): Option[Distance] = {
-    val ld = Distances.damerauLevenshtein(queryNorm, candNorm, maxEditDistance)
+    val ld = Distances.dlChars(a, b, maxEditDistance)
     if (ld < 0) None
     else
       Some(
         Distance(
           ld = ld,
-          lcs =
-            if (weights.lcs > 0.0)
-              Distances.longestCommonSubstring(queryNorm, candNorm)
-            else 0,
-          prefixLen =
-            if (weights.prefix > 0.0) Distances.commonPrefix(queryNorm, candNorm)
-            else 0,
-          suffixLen =
-            if (weights.suffix > 0.0) Distances.commonSuffix(queryNorm, candNorm)
-            else 0,
-          sameCase =
-            if (weights.caseW > 0.0 && queryText.nonEmpty && candText.nonEmpty)
-              Character.isLowerCase(candText.codePointAt(0)) ==
-                Character.isLowerCase(queryText.codePointAt(0))
-            else true
+          lcs = if (weights.lcs > 0.0) Distances.lcsChars(a, b) else 0,
+          prefixLen = if (weights.prefix > 0.0) Distances.prefixChars(a, b) else 0,
+          suffixLen = if (weights.suffix > 0.0) Distances.suffixChars(a, b) else 0,
+          sameCase = sameCase
         )
       )
   }
+
+  /** A text's first-char case class: 0 = lowercase, 1 = not lowercase,
+    * 2 = empty (or null).
+    */
+  def caseClass(text: String): Byte =
+    if (text == null || text.isEmpty) 2
+    else if (Character.isLowerCase(text.codePointAt(0))) 0
+    else 1
+
+  /** The case feature of two texts given their [[caseClass]]es: equal
+    * first-char lowercasing, and true when the case weight is zero or a
+    * text is empty (reference: src/lib.rs:1367-1377).
+    */
+  def sameCase(a: Byte, b: Byte, weights: Weights): Boolean =
+    if (weights.caseW > 0.0 && a != 2 && b != 2) a == b else true
 
   /** The weighted similarity score in [0,1]; exact match = 1.0.
     * All factors are normalized by the query's normalized length

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Kernels
 import graft.kernel._
 
 /** Result row of the variant matcher (one per (query, match)). */
@@ -164,10 +165,10 @@ object VariantMatcher {
     import spark.implicits._
     val weights = params.weights
 
-    // --- index build (A1-A3): id = insertion order = file order ---
-    val normUdf = udf((s: String) => alphabet.normalize(s).map(_.toByte))
-    val anaUdf = udf((s: String) => AnaHash.toBytes(alphabet.anahash(s)))
-    val ccUdf = udf((s: String) => alphabet.normalize(s).length)
+    // --- index build (A1-A3): id = insertion order = file order; norm is
+    // the normalized form's key, so its length is the charcount ---
+    val K = new Kernels(alphabet)
+    val anaUdf = udf((norm: String) => AnaHash.toBytes(AnaHash.valueOf(norm, alphabet.size)))
     // insertion id: the reference's vocab id (file order) — pass an
     // explicit `id` column for exact tie parity; monotonically_increasing_id
     // preserves per-partition file order otherwise (adequate for dedup use)
@@ -175,9 +176,9 @@ object VariantMatcher {
       if (lexicon.columns.contains("id")) lexicon
       else lexicon.withColumn("id", monotonically_increasing_id())
     val lex = lexWithId
-      .withColumn("anavalue", anaUdf(col("text")))
-      .withColumn("cc", ccUdf(col("text")))
-      .withColumn("norm", normUdf(col("text")))
+      .withColumn("norm", K.normKey(col("text")))
+      .withColumn("anavalue", anaUdf(col("norm")))
+      .withColumn("cc", length(col("norm")))
       .withColumn("freq",
         if (lexicon.columns.contains("freq")) coalesce(col("freq"), lit(1L))
         else lit(1L))
@@ -192,18 +193,17 @@ object VariantMatcher {
     val alphaWithUnk = alphabet.size + 1
     // both read the focus's one deletion enumeration (node 0 = the focus,
     // then each distinct deletion once), so neither needs a dedup
-    val eqProbesUdf = udf { (q: String) =>
-      val norm = alphabet.normalize(q)
-      val maxAna = params.maxAnagramDistance
-        .resolve(norm.length, DistanceThreshold.MaxAnagramDistance)
-      val dels = AnaHash.deletions(alphabet.anahash(q), alphaWithUnk, maxAna)
+    def maxAnaOf(cc: Int): Int =
+      params.maxAnagramDistance.resolve(cc, DistanceThreshold.MaxAnagramDistance)
+    val eqProbesUdf = udf { (qnorm: String) =>
+      val dels = AnaHash.deletions(AnaHash.valueOf(qnorm, alphabet.size), alphaWithUnk,
+        maxAnaOf(qnorm.length))
       Vector.tabulate(dels.size)(k => AnaHash.toBytes(dels.value(k)))
     }
-    val containProbesUdf = udf { (q: String) =>
-      val cc = alphabet.normalize(q).length
-      val maxAna = params.maxAnagramDistance
-        .resolve(cc, DistanceThreshold.MaxAnagramDistance)
-      val dels = AnaHash.deletions(alphabet.anahash(q), alphaWithUnk, maxAna)
+    val containProbesUdf = udf { (qnorm: String) =>
+      val cc = qnorm.length
+      val maxAna = maxAnaOf(cc)
+      val dels = AnaHash.deletions(AnaHash.valueOf(qnorm, alphabet.size), alphaWithUnk, maxAna)
       // nodes below the last depth are the ones with probes left to make
       for {
         k <- 0 until dels.depthStart(maxAna)
@@ -213,11 +213,11 @@ object VariantMatcher {
       } yield (value, cc - dist + sd)
     }
     val q0 = queries.select(col(queryCol).cast("string").as("query")).distinct()
-      .withColumn("qnorm", normUdf(col("query")))
-      .filter(length(col("qnorm")) > 0) // qnorm is BinaryType
+      .withColumn("qnorm", K.normKey(col("query")))
+      .filter(length(col("qnorm")) > 0)
 
     val eqCands = q0
-      .select(col("query"), col("qnorm"), explode(eqProbesUdf(col("query"))).as("anavalue"))
+      .select(col("query"), col("qnorm"), explode(eqProbesUdf(col("qnorm"))).as("anavalue"))
       .join(lex, Seq("anavalue"))
 
     val modZeroUdf = udf { (candidate: Array[Byte], probe: Array[Byte]) =>
@@ -225,7 +225,7 @@ object VariantMatcher {
     }
     val containCands = q0
       .select(col("query"), col("qnorm"),
-        explode(containProbesUdf(col("query"))).as("p"))
+        explode(containProbesUdf(col("qnorm"))).as("p"))
       .select(col("query"), col("qnorm"),
         col("p._1").as("probe"), col("p._2").as("cc"))
       .join(lex, Seq("cc"))
@@ -239,14 +239,13 @@ object VariantMatcher {
 
     // --- verify + score (J4/R1) ---
     val scoreUdf = udf {
-      (qnorm: Array[Byte], q: String, cnorm: Array[Byte], ctext: String) =>
-        val qn = qnorm.map(b => (b & 0xff))
-        val cn = cnorm.map(b => (b & 0xff))
+      (qnorm: String, q: String, cnorm: String, ctext: String) =>
         val maxEdit = params.maxEditDistance
-          .resolve(qn.length, DistanceThreshold.MaxEditDistance)
+          .resolve(qnorm.length, DistanceThreshold.MaxEditDistance)
+        val sameCase = Scoring.sameCase(Scoring.caseClass(q), Scoring.caseClass(ctext), weights)
         Scoring
-          .distanceFeatures(qn, q, cn, ctext, maxEdit, weights)
-          .map(dist => Scoring.score(dist, qn.length, weights))
+          .distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
+          .map(dist => Scoring.score(dist, qnorm.length, weights))
     }
     import org.apache.spark.sql.expressions.Window
     val wq = Window.partitionBy("query")

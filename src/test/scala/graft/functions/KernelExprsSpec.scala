@@ -4,12 +4,13 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.kernel.{Alphabet, Scoring, Weights}
+import graft.kernel.{Alphabet, FullDpOracle, Scoring, Weights}
 
 /** Parity pin for the native codegen verify kernels: the PairScoreMax
   * expression, fed the production normKey/caseClass columns, must be
-  * BIT-identical to the reference scoring ([[Scoring]] over the
-  * normalized texts, computed in the driver) on every input class; the
+  * BIT-identical to the reference scoring ([[Scoring.score]] of the
+  * unstripped full-DP [[FullDpOracle]] features of the normalized texts,
+  * computed in the driver) on every input class; the
   * PairAccept decision must equal score >= threshold. The spec guards the
   * expression plumbing — null channels, byte case classes, literal
   * embedding in generated code — and the SQL seam's argument handling.
@@ -84,7 +85,7 @@ class KernelExprsSpec extends SparkSpecBase {
       val nx = Alphabet.test.normalize(x)
       val ny = Alphabet.test.normalize(y)
       if (nx.isEmpty || ny.isEmpty) None
-      else Scoring.distanceFeatures(nx, x, ny, y, maxEditDistance, w)
+      else FullDpOracle.distanceFeatures(nx, x, ny, y, maxEditDistance, w)
         .map(d => math.max(Scoring.score(d, nx.length, w),
           Scoring.score(d, ny.length, w)))
     }

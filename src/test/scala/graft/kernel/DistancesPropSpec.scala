@@ -3,8 +3,10 @@ package graft.kernel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the zero-allocation char-based kernels (Distances.dlChars etc.,
-  * the dedup verify hot path) to the reference-parity Array[Int]
-  * implementations, over seeded random strings and distance caps.
+  * the dedup verify hot path and the matcher's distance features) to the
+  * unstripped full-DP oracle over class-index arrays ([[FullDpOracle]]),
+  * over seeded random strings, texts normalized through real alphabets
+  * and distance caps.
   */
 class DistancesPropSpec extends AnyFunSuite {
 
@@ -21,7 +23,7 @@ class DistancesPropSpec extends AnyFunSuite {
       val b = randKey(24)
       val max = rng.nextInt(13)
       assert(Distances.dlChars(a, b, max) ==
-        Distances.damerauLevenshtein(ints(a), ints(b), max),
+        FullDpOracle.damerauLevenshtein(ints(a), ints(b), max),
         s"a=$a b=$b max=$max")
     }
   }
@@ -32,7 +34,7 @@ class DistancesPropSpec extends AnyFunSuite {
       val b = graft.sources.SyntheticText.corrupt(rng, a, rng.nextInt(4))
       for (max <- Seq(1, 2, 3, 5)) {
         assert(Distances.dlChars(a, b, max) ==
-          Distances.damerauLevenshtein(ints(a), ints(b), max),
+          FullDpOracle.damerauLevenshtein(ints(a), ints(b), max),
           s"a=$a b=$b max=$max")
       }
     }
@@ -53,7 +55,7 @@ class DistancesPropSpec extends AnyFunSuite {
     }
     for (a <- strings; b <- strings; max <- Seq(0, 1, 2, 3, 6)) {
       assert(Distances.dlChars(a, b, max) ==
-        Distances.damerauLevenshtein(ints(a), ints(b), max),
+        FullDpOracle.damerauLevenshtein(ints(a), ints(b), max),
         s"a=$a b=$b max=$max")
     }
   }
@@ -66,7 +68,7 @@ class DistancesPropSpec extends AnyFunSuite {
       val b = String.valueOf(Array.fill(rng.nextInt(13))(('a' + rng.nextInt(2)).toChar))
       val max = rng.nextInt(7)
       assert(Distances.dlChars(a, b, max) ==
-        Distances.damerauLevenshtein(ints(a), ints(b), max),
+        FullDpOracle.damerauLevenshtein(ints(a), ints(b), max),
         s"a=$a b=$b max=$max")
     }
   }
@@ -76,9 +78,50 @@ class DistancesPropSpec extends AnyFunSuite {
       val a = randKey(24)
       val b = randKey(24)
       assert(Distances.lcsChars(a, b) ==
-        Distances.longestCommonSubstring(ints(a), ints(b)))
-      assert(Distances.prefixChars(a, b) == Distances.commonPrefix(ints(a), ints(b)))
-      assert(Distances.suffixChars(a, b) == Distances.commonSuffix(ints(a), ints(b)))
+        FullDpOracle.longestCommonSubstring(ints(a), ints(b)))
+      assert(Distances.prefixChars(a, b) == FullDpOracle.commonPrefix(ints(a), ints(b)))
+      assert(Distances.suffixChars(a, b) == FullDpOracle.commonSuffix(ints(a), ints(b)))
+    }
+  }
+
+  test("distanceFeatures over normKeys == the full-DP oracle over normalize, real alphabets") {
+    // simpleLatin with two digraph classes in front (multi-char surface
+    // forms win the greedy scan), and KernelSpec's 80-class alphabet
+    val digraphs = Alphabet(IndexedSeq(IndexedSeq("ch", "Ch", "CH"), IndexedSeq("ij", "IJ")) ++
+      Alphabet.simpleLatin.classes)
+    val wide = Alphabet((0 until 80).map(i => IndexedSeq((0x3b1 + i).toChar.toString)))
+    // characters outside every alphabet here: each normalizes to UNK
+    val oov = Seq("!", "ß", "\u4e00", "\ud83d\ude00")
+    val r = new scala.util.Random(54321)
+    val weightSets = Seq(Weights(), Weights(ld = 1.0, lcs = 0.0, prefix = 0.0, suffix = 0.0,
+      caseW = 0.0), Weights(ld = 0.6, lcs = 0.2, prefix = 0.0, suffix = 0.1, caseW = 0.1))
+    for ((a, letters) <- Seq(
+        digraphs -> (Seq("ch", "Ch", "ij", "IJ", "é", "Ö", "ç", "7") ++
+          ('a' to 'z').map(_.toString) ++ ('A' to 'F').map(_.toString) ++ oov),
+        wide -> (wide.classes.map(_.head) ++ oov))) {
+      def word(): String =
+        Iterator.fill(r.nextInt(13))(letters(r.nextInt(letters.length))).mkString
+      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+      val lds = scala.collection.mutable.Set.empty[Int]
+      for (_ <- 0 until 3000) {
+        val x = word()
+        val y = if (r.nextBoolean()) word()
+          else graft.sources.SyntheticText.corrupt(r, x, 1 + r.nextInt(3))
+        val (kx, ky) = (a.normKey(x), a.normKey(y))
+        keys += kx
+        assert(kx.map(_ - 33) == a.normalize(x).toSeq)
+        for (max <- 0 to 5; w <- weightSets) {
+          val same = Scoring.sameCase(Scoring.caseClass(x), Scoring.caseClass(y), w)
+          val got = Scoring.distanceFeatures(kx, ky, same, max, w)
+          assert(got == FullDpOracle.distanceFeatures(a.normalize(x), x, a.normalize(y), y, max, w),
+            s"x=$x y=$y max=$max w=$w")
+          got.foreach(lds += _.ld)
+        }
+      }
+      // every distance up to the largest cap, UNK, and multi-char forms
+      assert(lds == (0 to 5).toSet)
+      assert(keys.exists(_.contains((33 + a.unkNormIndex).toChar)))
+      if (a == digraphs) assert(keys.exists(_.contains('!')) && keys.exists(_.contains('"')))
     }
   }
 
@@ -118,7 +161,7 @@ class DistancesPropSpec extends AnyFunSuite {
       val a = graft.sources.SyntheticText.phrase(rng, 5 + rng.nextInt(59))
       val b = graft.sources.SyntheticText.corrupt(rng, a, 1 + rng.nextInt(3))
       assert(Distances.lcsChars(a, b) == naiveLcs(ints(a), ints(b)))
-      assert(Distances.longestCommonSubstring(ints(a), ints(b)) ==
+      assert(FullDpOracle.longestCommonSubstring(ints(a), ints(b)) ==
         naiveLcs(ints(a), ints(b)))
     }
     // adversarial: periodic strings (long shared runs at many offsets),
@@ -135,7 +178,7 @@ class DistancesPropSpec extends AnyFunSuite {
     for ((a, b) <- cases) {
       assert(Distances.lcsChars(a, b) == naiveLcs(ints(a), ints(b)),
         s"a=$a b=$b")
-      assert(Distances.longestCommonSubstring(ints(a), ints(b)) ==
+      assert(FullDpOracle.longestCommonSubstring(ints(a), ints(b)) ==
         naiveLcs(ints(a), ints(b)), s"a=$a b=$b")
     }
   }

@@ -12,6 +12,7 @@ class KernelSpec extends AnyFunSuite {
   val alphabet = Alphabet.test
   def ana(s: String): BigInteger = alphabet.anahash(s)
   def norm(s: String): Array[Int] = alphabet.normalize(s)
+  def key(s: String): String = alphabet.normKey(s)
   def big(n: Long): BigInteger = BigInteger.valueOf(n)
 
   // --- 01xx: anagram hash algebra (tests/main.rs:29-153) ---
@@ -166,8 +167,7 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("0303 damerau levenshtein") {
-    def dl(a: String, b: String) =
-      Distances.damerauLevenshtein(norm(a), norm(b), 99)
+    def dl(a: String, b: String) = Distances.dlChars(key(a), key(b), 99)
     assert(dl("a", "a") == 0)
     assert(dl("a", "b") == 1)
     assert(dl("ab", "ac") == 1)
@@ -179,16 +179,15 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("distance max cutoffs return -1") {
-    assert(Distances.damerauLevenshtein(norm("abcdef"), norm("a"), 3) == -1)
-    assert(Distances.damerauLevenshtein(norm("abc"), norm("xyz"), 2) == -1)
+    assert(Distances.dlChars(key("abcdef"), key("a"), 3) == -1)
+    assert(Distances.dlChars(key("abc"), key("xyz"), 2) == -1)
     assert(Distances.levenshtein(norm("abc"), norm("xyz"), 2) == -1)
   }
 
   test("0304 lcs / prefix / suffix") {
-    def lcs(a: String, b: String) =
-      Distances.longestCommonSubstring(norm(a), norm(b))
-    def pre(a: String, b: String) = Distances.commonPrefix(norm(a), norm(b))
-    def suf(a: String, b: String) = Distances.commonSuffix(norm(a), norm(b))
+    def lcs(a: String, b: String) = Distances.lcsChars(key(a), key(b))
+    def pre(a: String, b: String) = Distances.prefixChars(key(a), key(b))
+    def suf(a: String, b: String) = Distances.suffixChars(key(a), key(b))
     assert(lcs("test", "testable") == 4)
     assert(lcs("fasttest", "testable") == 4)
     assert(lcs("abcdefhij", "def") == 3)
@@ -372,7 +371,7 @@ class KernelSpec extends AnyFunSuite {
       // probe count grows fast with the distance
       val cases = for (q <- queries; d <- 0 to 5 if d <= 3 || q.hashCode % 5 == 0) yield (q, d)
       for ((q, d) <- cases) {
-        val norm = alphabet.normalize(q)
+        val norm = alphabet.normKey(q)
         val focus = alphabet.anahash(q)
         val exhaustive = oracle(focus, d)
         val nearest = m.findNearestAnahashes(norm, d)

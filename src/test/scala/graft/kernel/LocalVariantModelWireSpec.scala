@@ -1,5 +1,6 @@
 package graft.kernel
 
+import java.math.BigInteger
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import org.apache.spark.SparkConf
 import org.apache.spark.serializer.JavaSerializer
@@ -24,7 +25,7 @@ class LocalVariantModelWireSpec extends AnyFunSuite {
   }
 
   private def vocab(m: LocalVariantModel) = m.vocab.map(e => (e.id, e.text,
-    e.norm.toSeq, e.frequency, e.transparent, e.variantOf, e.indexed, e.lm,
+    e.norm, e.frequency, e.transparent, e.variantOf, e.indexed, e.lm,
     e.lexindex, e.referenceFor)).toVector
 
   private val params = SearchParameters(
@@ -136,14 +137,37 @@ class LocalVariantModelWireSpec extends AnyFunSuite {
 
   test("normalized forms whose class indices need two bytes restore intact") {
     // 300 classes: more than the anagram hash has primes, so the model
-    // is never built, but its vocab still round-trips
+    // cannot be built, but its vocab still round-trips
     val cjk = Alphabet((0 until 300).map(i => IndexedSeq((0x4e00 + i).toChar.toString)))
     val m = new LocalVariantModel(cjk)
     val words = Seq("\u4e00\u4eff\u4f2b", "\u4f2b!", "\u4e10")
     words.foreach(m.add(_))
     val (c, _) = roundTrip(m)
     assert(vocab(c) == vocab(m))
-    assert(m.vocab.exists(_.norm.exists(_ > 255)))
+    assert(m.vocab.exists(_.norm.exists(_ - 33 > 255)))
     assert(words.forall(w => c.encode(w) == m.encode(w)))
+    for (fail <- Seq(() => m.build(), () => cjk.anahash(words(0)))) {
+      val e = intercept[IllegalArgumentException](fail())
+      assert(e.getMessage.contains("300 classes") && e.getMessage.contains("167"), e.getMessage)
+    }
+  }
+
+  test("an alphabet of 167 classes, the anagram hash's limit, builds and matches") {
+    val a = Alphabet((0 until 167).map(i => IndexedSeq((0x4e00 + i).toChar.toString)))
+    val rng = new scala.util.Random(5L)
+    val ls = a.classes.map(_.head) ++ oov
+    val words = Vector.fill(300)(Iterator.fill(1 + rng.nextInt(8))(ls(rng.nextInt(ls.length))).mkString)
+    val m = new LocalVariantModel(a)
+    words.foreach(m.add(_))
+    m.build()
+    // the last class and UNK take the table's last two primes
+    assert(a.anahash("\u4ea6!") == BigInteger.valueOf(991L * 997L))
+    assert(m.vocab.forall(_.norm.forall(_ <= 255)))
+    // a word with an out-of-alphabet character may tie with another UNK spelling
+    for (w <- words.filterNot(w => oov.exists(w.contains)).take(50))
+      assert(m.findVariants(w, SearchParameters()).headOption.map(r => m.text(r.vocabId)) ==
+        Some(w), s"query '$w'")
+    val (c, _) = roundTrip(m)
+    assert(vocab(c) == vocab(m) && c.indexDump == m.indexDump)
   }
 }
