@@ -133,162 +133,46 @@ object AnaHash {
     (maxIdx, count)
   }
 
-  /** Breadth-first unique deletion neighborhood: every distinct anagram
-    * value reachable from `focus` by 1..maxDistance single-character
-    * deletions, excluding the empty value, paired with its depth
-    * (reference: RecurseDeletionIterator with breadthfirst=true,
-    * unique=true, empty_leaves=false — src/iterators.rs:95-236 as invoked
-    * from src/lib.rs:1202-1261), in the reference's order. See
-    * [[deletions]] for how that order is produced without a visited set.
+  /** The nearest-anagram rule shared by both matcher strategies: the
+    * miss budget D(c) of target charcount c for a focus (the query's
+    * normalized form) of `f` letters at anagram distance `maxDistance`,
+    * or -1 when nothing at c is a candidate. A value v at charcount c is
+    * a candidate iff [[misses]](focus, v) <= D(c).
+    *
+    * Why (reference: src/lib.rs:1143-1308): the reference probes the
+    * index with each non-empty sub-bag S of the focus that has d <=
+    * maxDistance letters deleted: for equality at charcount f - d, and
+    * for containment (v divisible by S) at charcounts f - d + sd, sd in
+    * 1..maxDistance - d. A value v holds some sub-bag of the focus with
+    * d letters deleted iff it misses at most d of its letters; and at
+    * |v| = f - d, holding such a sub-bag means equal to it. So v is a
+    * candidate iff misses(v) <= d for some d that probes c: 0 <= d <=
+    * maxDistance, S non-empty (d = 0 or d < f) and 0 <= c - f + d <=
+    * maxDistance - d. Those d form an interval and the test is monotone
+    * in d, so v is a candidate iff misses(v) <= D(c), the largest such d.
+    * Only c in f - maxDistance .. f + maxDistance can have one.
     */
-  def deletionNeighborhood(
-      focus: BigInteger,
-      alphabetSizeWithUnk: Int,
-      maxDistance: Int
-  ): Vector[(BigInteger, Int)] = {
-    val d = deletions(focus, alphabetSizeWithUnk, maxDistance)
-    Vector.tabulate(d.size - 1)(k => (d.value(k + 1), d.depth(k + 1)))
+  def missBudget(c: Int, f: Int, maxDistance: Int): Int = {
+    var d = maxDistance
+    while (d >= 0 && !((d == 0 || d < f) && c - f + d >= 0 && c - f + 2 * d <= maxDistance))
+      d -= 1
+    d
   }
 
-  /** The deletion neighborhood of a focus as parallel primitive arrays.
-    * Node 0 is the focus itself at depth 0; nodes 1 until [[size]] are
-    * the distinct non-empty sub-bags at depths 1..maxDistance, in the
-    * order of [[deletionNeighborhood]]. A node's value is held as a long
-    * while it fits 62 bits, else as a BigInteger; [[value]] gives it.
-    * Nodes are in depth order; [[depthStart]] gives the first node of a
-    * depth.
+  /** The letters of the focus that `value` lacks, Σ_class
+    * max(0, focus_class - value_class), both given as normalized-form
+    * keys (see [[valueOf]] for the classes, `unk` the alphabet's size).
     */
-  final class Deletions private[AnaHash] (
-      val size: Int,
-      longs: Array[Long],
-      bigs: Array[BigInteger],
-      depths: Array[Int],
-      depthStarts: Array[Int]
-  ) {
-    /** index of the first node at depth >= d (size past the last depth) */
-    def depthStart(d: Int): Int =
-      if (d < depthStarts.length) depthStarts(math.max(0, d)) else size
-    @inline def depth(k: Int): Int = depths(k)
-    def value(k: Int): BigInteger =
-      if (bigs != null && bigs(k) != null) bigs(k) else BigInteger.valueOf(longs(k))
-  }
-
-  /** Enumerate the deletion neighborhood of `focus` over classes
-    * [0, alphabetSizeWithUnk) up to `maxDistance` deletions, each distinct
-    * sub-bag exactly once, with no visited set and no divisibility test.
-    *
-    * The focus is factored once into its per-class counts. A node is
-    * then reached only by deleting classes in non-increasing class order:
-    * each node carries the last class it deleted and how many times in a
-    * row it deleted it, and its children delete either that class again
-    * (while letters of it remain) or any lower class present. Every
-    * sub-bag has exactly one such deletion sequence, its deleted letters
-    * sorted descending, so it is reached once; its canonical parent is
-    * the sub-bag with one letter of its smallest deleted class restored.
-    *
-    * Why this is the reference's breadth-first unique order: the
-    * reference expands each frontier node's parents in descending class
-    * order and keeps the first visit. Ordering the nodes of one depth by
-    * their descending deletion sequences, lexicographically with the
-    * higher class first, the canonical parent of a sub-bag precedes every
-    * other parent of it: restoring a letter of a larger deleted class
-    * puts a smaller class earlier in the sequence. So the reference first
-    * visits each sub-bag from its canonical parent, and a frontier node's
-    * first visits are exactly its canonical children, in descending class
-    * order. Appending each node's canonical children to one queue thus
-    * yields the reference's sequence (pinned by KernelSpec "0203" and the
-    * spec's visited-set BFS).
-    *
-    * Values are longs while they fit 62 bits; below an overflowing focus
-    * each node does one BigInteger divide until its value fits.
-    */
-  def deletions(
-      focus: BigInteger,
-      alphabetSizeWithUnk: Int,
-      maxDistance: Int
-  ): Deletions = {
-    // factor the focus once, highest class first: present classes + counts
-    val classes = new Array[Int](alphabetSizeWithUnk)
-    val counts = new Array[Int](alphabetSizeWithUnk)
-    var nClasses = 0
-    var restBig = if (focus.bitLength > 62) focus else null
-    var rest = if (restBig == null) focus.longValue else 0L
-    var c = alphabetSizeWithUnk - 1
-    while (c >= 0 && (restBig != null || rest > 1L)) {
-      var n = 0
-      if (restBig != null) {
-        var qr = restBig.divideAndRemainder(primesBig(c))
-        while (qr(1).signum == 0) {
-          n += 1; restBig = qr(0); qr = restBig.divideAndRemainder(primesBig(c))
-        }
-        if (restBig.bitLength <= 62) { rest = restBig.longValue; restBig = null }
-      } else {
-        val p = primesLong(c)
-        while (rest % p == 0L) { n += 1; rest /= p }
-      }
-      if (n > 0) {
-        classes(nClasses) = c; counts(nClasses) = n; nClasses += 1
-      }
-      c -= 1
-    }
-
-    // one queue in yield order; per node: value, depth, the position
-    // (in `classes`) of the last deleted class and its run length
-    var cap = 16
-    var longs = new Array[Long](cap)
-    var bigs: Array[BigInteger] =
-      if (focus.bitLength > 62) new Array[BigInteger](cap) else null
-    var depths = new Array[Int](cap)
-    var lasts = new Array[Int](cap)
-    var runs = new Array[Int](cap)
-    if (bigs != null) bigs(0) = focus else longs(0) = focus.longValue
-    var size = 1
-    var k = 0
-    while (k < size && depths(k) < maxDistance) {
-      val last = lasts(k)
-      var q = last
-      while (q < nClasses) {
-        val run = if (q == last) runs(k) + 1 else 1
-        if (run <= counts(q)) {
-          val cls = classes(q)
-          var vLong = 0L
-          var vBig: BigInteger = null
-          val parentBig = if (bigs == null) null else bigs(k)
-          if (parentBig == null) vLong = longs(k) / primesLong(cls)
-          else {
-            vBig = parentBig.divide(primesBig(cls))
-            if (vBig.bitLength <= 62) { vLong = vBig.longValue; vBig = null }
-          }
-          if (vBig != null || vLong != 1L) {
-            if (size == cap) {
-              cap *= 2
-              longs = java.util.Arrays.copyOf(longs, cap)
-              if (bigs != null) bigs = java.util.Arrays.copyOf(bigs, cap)
-              depths = java.util.Arrays.copyOf(depths, cap)
-              lasts = java.util.Arrays.copyOf(lasts, cap)
-              runs = java.util.Arrays.copyOf(runs, cap)
-            }
-            longs(size) = vLong
-            if (bigs != null) bigs(size) = vBig
-            depths(size) = depths(k) + 1
-            lasts(size) = q
-            runs(size) = run
-            size += 1
-          }
-        }
-        q += 1
-      }
-      k += 1
-    }
-    val depthStarts = new Array[Int](math.max(0, maxDistance) + 1)
-    var d = 1
-    k = 0
-    while (d < depthStarts.length) {
-      while (k < size && depths(k) < d) k += 1
-      depthStarts(d) = k
-      d += 1
-    }
-    new Deletions(size, longs, bigs, depths, depthStarts)
+  def misses(focus: String, value: String, unk: Int): Int = {
+    val counts = new Array[Int](unk + 1)
+    var i = 0
+    while (i < focus.length) { counts(math.min(focus.charAt(i) - 33, unk)) += 1; i += 1 }
+    i = 0
+    while (i < value.length) { counts(math.min(value.charAt(i) - 33, unk)) -= 1; i += 1 }
+    var n = 0
+    i = 0
+    while (i <= unk) { if (counts(i) > 0) n += counts(i); i += 1 }
+    n
   }
 
   /** Canonical unsigned big-endian bytes (no redundant leading zero) for

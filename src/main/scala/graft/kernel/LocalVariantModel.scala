@@ -442,20 +442,12 @@ final class LocalVariantModel(
     * value order (BTreeSet order), so downstream gather order is
     * deterministic; [[anagramValue]] gives the values.
     *
-    * The reference (src/lib.rs:1143-1308) probes the index with each
-    * non-empty sub-bag S of f that has d <= maxDistance letters deleted:
-    * for equality at charcount |f| - d, and for containment (v divisible
-    * by S) at charcounts |f| - d + sd, sd in 1..maxDistance - d. A value
-    * v holds some sub-bag of f with d letters deleted iff it misses at
-    * most d of f's letters, misses(v) = Σ_class max(0, f_class - v_class);
-    * and at |v| = |f| - d, holding such a sub-bag means equal to it. So v
-    * is a hit iff misses(v) <= d for some d that probes its charcount c:
-    * 0 <= d <= maxDistance, S non-empty (d = 0 or d < |f|) and
-    * 0 <= c - |f| + d <= maxDistance - d. Those d form an interval and the
-    * test is monotone in d, so v is a hit iff misses(v) <= D(c), the
-    * largest such d (no d: no hits at c). Each charcount c in
-    * |f| - maxDistance .. |f| + maxDistance is therefore one miss-count
-    * scan of its range (see AnagramIndex.scan).
+    * The reference (src/lib.rs:1143-1308) probes the index with the
+    * focus's deletions; a value v at charcount c is one of its hits iff
+    * it misses at most [[AnaHash.missBudget]] D(c) of f's letters (the
+    * argument is there). Each charcount c in |f| - maxDistance ..
+    * |f| + maxDistance with a budget is therefore one miss-count scan of
+    * its range (see AnagramIndex.scan).
     *
     * With StopAtExactMatch the charcount |f| range is scanned first with
     * budget 0: a zero-miss value of |f| letters is f itself, the only hit
@@ -494,9 +486,7 @@ final class LocalVariantModel(
     val maxD = math.max(0, maxDistance)
     var c = f - maxD
     while (c <= f + maxD) {
-      var d = maxD
-      while (d >= 0 && !((d == 0 || d < f) && c - f + d >= 0 && c - f + 2 * d <= maxD))
-        d -= 1
+      val d = AnaHash.missBudget(c, f, maxD)
       if (d >= 0) idx.scan(c, d, counts, classes, occ, hits)
       c += 1
     }

@@ -33,11 +33,12 @@ final case class VariantMatch(
   *     efficiency near 1.0 — there is no shuffle to contend on.
   *
   *  2. [[matchJoin]] — fully declarative plan for lexicons too large to
-  *     broadcast: probes generated per query (exact + deletion BFS +
-  *     containment schedules) joined against a distributed index
-  *     DataFrame on (charcount, anavalue-divisibility), then DL-verified
-  *     and ranked with window functions. Equivalent results (tested);
-  *     shuffles on charcount buckets + input_id windows.
+  *     broadcast: each query is exploded to its target charcounts and
+  *     joined to the lexicon rows of each, keeping the rows that miss at
+  *     most the charcount's budget of its letters (the broadcast scan's
+  *     rule, [[AnaHash.missBudget]]); the survivors are DL-verified and
+  *     ranked with window functions. Equivalent results (tested);
+  *     shuffles on the charcount join + query windows.
   *
   * Both preserve the reference's deterministic tie order: ascending
   * anagram value, then vocab insertion id (see SURVEY.md §2.5 R3/R4).
@@ -133,11 +134,11 @@ object VariantMatcher {
     *
     * Plan sketch (SURVEY.md §2.4):
     *   lexicon -> index(anavalue BINARY, cc INT, id, text, norm, freq)
-    *   queries -> explode(equality probes: exact + BFS deletions)
-    *           -> equi-join index on anavalue          (J1/exact)
-    *   queries -> explode(containment probes (value, target_cc))
-    *           -> join index on cc == target_cc && index.ana % value == 0  (J2)
-    *   union -> distinct -> DL verify (J4) -> score (R1)
+    *   queries -> explode(target charcounts (c, D(c)), |c - |f|| <= maxD)
+    *           -> join index on cc == c
+    *           -> misses(qnorm, norm) <= D(c)          (J1/J2)
+    *           -> [StopAtExactMatch: the zero-miss rows at c = |f| alone]
+    *   -> DL verify (J4) -> score (R1)
     *   -> (early confusables R5) -> variant expansion (J5) -> freq-norm (R2)
     *   -> rank windows (R3) + consecutive-dup drop -> top-k (R4, tie-aware)
     *   -> late confusables R5 + re-rank -> cutoff (R6)
@@ -187,55 +188,36 @@ object VariantMatcher {
           coalesce(col("transparent"), lit(false))
         else lit(false))
 
-    // --- probe generation (J1): per query, equality probes (exact +
-    //     deletions present in index checked via join) and containment
-    //     probes (value, target charcount) ---
-    val alphaWithUnk = alphabet.size + 1
-    // both read the focus's one deletion enumeration (node 0 = the focus,
-    // then each distinct deletion once), so neither needs a dedup
-    def maxAnaOf(cc: Int): Int =
-      params.maxAnagramDistance.resolve(cc, DistanceThreshold.MaxAnagramDistance)
-    val eqProbesUdf = udf { (qnorm: String) =>
-      val dels = AnaHash.deletions(AnaHash.valueOf(qnorm, alphabet.size), alphaWithUnk,
-        maxAnaOf(qnorm.length))
-      Vector.tabulate(dels.size)(k => AnaHash.toBytes(dels.value(k)))
+    // --- candidates (J1/J2): each query joins the lexicon rows of its
+    // target charcounts c, keeping those that miss at most D(c) of its
+    // letters (AnaHash.missBudget, the rule the broadcast scan uses) ---
+    val budgetsUdf = udf { (qnorm: String) =>
+      val f = qnorm.length
+      val maxD = math.max(0, params.maxAnagramDistance
+        .resolve(f, DistanceThreshold.MaxAnagramDistance))
+      (f - maxD to f + maxD).map(c => (c, AnaHash.missBudget(c, f, maxD))).filter(_._2 >= 0)
     }
-    val containProbesUdf = udf { (qnorm: String) =>
-      val cc = qnorm.length
-      val maxAna = maxAnaOf(cc)
-      val dels = AnaHash.deletions(AnaHash.valueOf(qnorm, alphabet.size), alphaWithUnk, maxAna)
-      // nodes below the last depth are the ones with probes left to make
-      for {
-        k <- 0 until dels.depthStart(maxAna)
-        dist = dels.depth(k)
-        value = AnaHash.toBytes(dels.value(k))
-        sd <- 1 to (maxAna - dist)
-      } yield (value, cc - dist + sd)
-    }
+    val missesUdf = udf((qnorm: String, norm: String) => AnaHash.misses(qnorm, norm, alphabet.size))
     val q0 = queries.select(col(queryCol).cast("string").as("query")).distinct()
       .withColumn("qnorm", K.normKey(col("query")))
       .filter(length(col("qnorm")) > 0)
-
-    val eqCands = q0
-      .select(col("query"), col("qnorm"), explode(eqProbesUdf(col("qnorm"))).as("anavalue"))
-      .join(lex, Seq("anavalue"))
-
-    val modZeroUdf = udf { (candidate: Array[Byte], probe: Array[Byte]) =>
-      AnaHash.fromBytes(candidate).mod(AnaHash.fromBytes(probe)).signum == 0
-    }
-    val containCands = q0
-      .select(col("query"), col("qnorm"),
-        explode(containProbesUdf(col("qnorm"))).as("p"))
-      .select(col("query"), col("qnorm"),
-        col("p._1").as("probe"), col("p._2").as("cc"))
+    val joined = q0
+      .select(col("query"), col("qnorm"), explode(budgetsUdf(col("qnorm"))).as("b"))
+      .select(col("query"), col("qnorm"), col("b._1").as("cc"), col("b._2").as("budget"))
       .join(lex, Seq("cc"))
-      .filter(modZeroUdf(col("anavalue"), col("probe")))
-
-    val candCols = Seq("query", "qnorm", "id", "text", "norm", "freq",
-      "anavalue", "transparent").map(col)
-    val cands = eqCands.select(candCols: _*)
-      .union(containCands.select(candCols: _*))
-      .dropDuplicates("query", "id")
+      .withColumn("misses", missesUdf(col("qnorm"), col("norm")))
+      .filter(col("misses") <= col("budget"))
+    import org.apache.spark.sql.expressions.Window
+    val wq = Window.partitionBy("query")
+    // StopAtExactMatch: a query with an anagram in the lexicon (zero
+    // misses at its own charcount) keeps that anagram group alone
+    val cands = params.stopCriterion match {
+      case StopCriterion.StopAtExactMatch =>
+        val exact = col("misses") === 0 && col("cc") === length(col("qnorm"))
+        joined.withColumn("has_exact", max(exact.cast("int")).over(wq))
+          .filter(col("has_exact") === 0 || exact)
+      case StopCriterion.Exhaustive => joined
+    }
 
     // --- verify + score (J4/R1) ---
     val scoreUdf = udf {
@@ -247,8 +229,6 @@ object VariantMatcher {
           .distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
           .map(dist => Scoring.score(dist, qnorm.length, weights))
     }
-    import org.apache.spark.sql.expressions.Window
-    val wq = Window.partitionBy("query")
     // verified = the kernel's `instances` set (DL within bound, BEFORE the
     // score threshold): the freq-normalization denominator and the
     // has-expandable flag are both computed over THIS set, not the

@@ -9,7 +9,8 @@ import graft.kernel._
   * Java-serialized model size, the payload a broadcast ships, and the
   * milliseconds of one cold serialize and deserialize of it. A `[phase]`
   * line then splits the query time into findVariants' three stages:
-  * nearest-anahash search, gather + DL verify, and score + rank.
+  * nearest-anahash search, gather + DL verify, and score + rank, each as
+  * the median and quartiles of 5 timed passes over the queries.
   *
   * Usage: runMain graft.tools.MatcherBench [lexSize] [nQueries] [threads]
   *   [anagramDistance]
@@ -19,14 +20,26 @@ import graft.kernel._
   * nearest-anahash scan's array miss counter).
   */
 object MatcherBench {
-  def main(args: Array[String]): Unit = {
-    val lexSize = if (args.length > 0) args(0).toInt else 120000
-    val nQueries = if (args.length > 1) args(1).toInt else 2000
+  /** The lexicon (`lexSize` random words of 4-12 letters, distinct) and
+    * `nQueries` lexicon words with one or two corruptions, from seed 7.
+    */
+  def inputs(lexSize: Int, nQueries: Int): (IndexedSeq[String], IndexedSeq[String]) = {
     val rng = new scala.util.Random(7L)
     val lexicon = (0 until lexSize).map { _ =>
       val len = 4 + rng.nextInt(9)
       String.valueOf(Array.fill(len)(('a' + rng.nextInt(26)).toChar))
     }.distinct
+    val queries = (0 until nQueries).map { i =>
+      graft.sources.SyntheticText.corrupt(rng,
+        lexicon(rng.nextInt(lexicon.size)), 1 + (i % 2))
+    }
+    (lexicon, queries)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val lexSize = if (args.length > 0) args(0).toInt else 120000
+    val nQueries = if (args.length > 1) args(1).toInt else 2000
+    val (lexicon, queries) = inputs(lexSize, nQueries)
     val model = new LocalVariantModel(Alphabet.simpleLatin)
     lexicon.foreach(model.add(_))
     var t0 = System.nanoTime()
@@ -41,10 +54,6 @@ object MatcherBench {
     println(f"[build] ${lexicon.size} entries in $buildS%.2fs, serialized model " +
       f"${bytes.length} bytes (serialize $serMs%.1f ms, deserialize $deserMs%.1f ms)")
 
-    val queries = (0 until nQueries).map { i =>
-      graft.sources.SyntheticText.corrupt(rng,
-        lexicon(rng.nextInt(lexicon.size)), 1 + (i % 2))
-    }
     val params = args.lift(3).map(_.toInt).fold(SearchParameters())(d =>
       SearchParameters(maxAnagramDistance = DistanceThreshold.Absolute(d)))
     // warmup
@@ -58,10 +67,15 @@ object MatcherBench {
     // per-phase split: findVariants' three public stages, each run over
     // every query before the next starts (the query's key built untimed)
     val prepared = queries.map(q => (q, model.alphabet.normKey(q))).filter(_._2.nonEmpty)
-    def usPerQuery[T](f: => T): (T, Double) = {
-      val t = System.nanoTime()
-      val out = f
-      (out, (System.nanoTime() - t) / 1e3 / nQueries)
+    val passes = 5
+    def usPerQuery[T](f: => T): (T, String) = {
+      val runs = Seq.fill(passes) {
+        val t = System.nanoTime()
+        val out = f
+        (out, (System.nanoTime() - t) / 1e3 / nQueries)
+      }
+      val us = runs.map(_._2).sorted
+      (runs.last._1, f"${us(passes / 2)}%.1f [${us(passes / 4)}%.1f-${us(3 * passes / 4)}%.1f]")
     }
     val (nearest, usNearest) = usPerQuery(prepared.map { case (_, norm) =>
       model.findNearestAnahashes(norm, params.maxAnagramDistance
@@ -75,8 +89,8 @@ object MatcherBench {
     val (ranked, usRank) = usPerQuery(prepared.zip(instances).map {
       case ((q, norm), inst) => model.scoreAndRank(inst, norm.length, params, q).length.toLong
     })
-    println(f"[phase] us/query: nearest $usNearest%.1f, gather+dl $usGather%.1f, " +
-      f"score+rank $usRank%.1f (${ranked.sum} results)")
+    println(s"[phase] us/query, median [quartiles] of $passes passes: nearest $usNearest, " +
+      s"gather+dl $usGather, score+rank $usRank (${ranked.sum} results)")
 
     // optional multi-thread sweep (pure JVM, no Spark): the achievable
     // kernel scaling ceiling on this host

@@ -88,7 +88,7 @@ class KernelSpec extends AnyFunSuite {
   // --- 02xx: deletion BFS (tests/main.rs:396-455, unique BFS order) ---
 
   test("0203 BFS unique deletions of abcd") {
-    val got = AnaHash.deletionNeighborhood(ana("abcd"), 27, 10)
+    val got = visitedSetBfs(ana("abcd"), 27, 10)
     val expected = Vector(
       ("abc", 1), ("abd", 1), ("acd", 1), ("bcd", 1),
       ("ab", 2), ("ac", 2), ("bc", 2), ("ad", 2), ("bd", 2), ("cd", 2),
@@ -98,16 +98,17 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("BFS respects max distance and excludes empty") {
-    val got = AnaHash.deletionNeighborhood(ana("ab"), 27, 5)
+    val got = visitedSetBfs(ana("ab"), 27, 5)
     assert(got == Vector((ana("a"), 1), (ana("b"), 1)))
-    val d1 = AnaHash.deletionNeighborhood(ana("abcd"), 27, 1)
+    val d1 = visitedSetBfs(ana("abcd"), 27, 1)
     assert(d1.map(_._2).forall(_ == 1) && d1.size == 4)
   }
 
-  /** The reference's breadth-first unique deletion walk, kept here as an
-    * independent oracle: each frontier node deletes one letter of each
-    * class present, highest class first, and the first visit of a value
-    * wins (src/iterators.rs:95-236).
+  /** The reference's breadth-first unique deletion walk, the deletion
+    * oracle of [[bruteNearest]] (the 0203 vectors above pin its order):
+    * each frontier node deletes one letter of each class present, highest
+    * class first, and the first visit of a value wins
+    * (src/iterators.rs:95-236).
     */
   def visitedSetBfs(focus: BigInteger, nClasses: Int, maxDistance: Int): Vector[(BigInteger, Int)] = {
     val visited = scala.collection.mutable.HashSet(focus)
@@ -130,21 +131,22 @@ class KernelSpec extends AnyFunSuite {
     out.result()
   }
 
-  test("canonical deletion enumeration equals a visited-set BFS") {
-    val rng = new scala.util.Random(203L)
-    val focuses = for (nClasses <- Seq(5, 27, 80); depth <- 1 to 5; _ <- 1 to 120) yield {
-      // letters drawn from a few classes so that bags repeat letters
-      val pool = Vector.fill(1 + rng.nextInt(6))(rng.nextInt(nClasses))
-      val bag = Vector.fill(1 + rng.nextInt(12))(pool(rng.nextInt(pool.length)))
-      val focus = bag.foldLeft(AnaHash.empty)((v, c) => AnaHash.insert(v, AnaHash.primeFor(c)))
-      assert(AnaHash.deletionNeighborhood(focus, nClasses, depth) ==
-        visitedSetBfs(focus, nClasses, depth), s"bag $bag at depth $depth")
-      (bag, depth, focus)
+  test("misses counts the focus letters a value lacks, unknowns as one class") {
+    val a = Alphabet.simpleLatin
+    def key(s: String) = a.normKey(s)
+    assert(AnaHash.misses(key("tires"), key("rite"), a.size) == 1)
+    assert(AnaHash.misses(key("tires"), key("rites"), a.size) == 0)
+    assert(AnaHash.misses(key("aab"), key("abcc"), a.size) == 1)
+    assert(AnaHash.misses(key("a!?"), key("aß"), a.size) == 1)
+    val rng = new scala.util.Random(5L)
+    for (_ <- 1 to 500) {
+      val f = Vector.fill(rng.nextInt(10))(rng.nextInt(30))
+      val v = Vector.fill(rng.nextInt(10))(rng.nextInt(30))
+      val asKey = (cs: Vector[Int]) => cs.map(c => (c + 33).toChar).mkString
+      // the multiset difference, classes above 26 counted as 26
+      val unk = (cs: Vector[Int]) => cs.map(math.min(_, 26))
+      assert(AnaHash.misses(asKey(f), asKey(v), 26) == unk(f).diff(unk(v)).size, s"$f $v")
     }
-    // overflowing foci, repeated letters and walks down to the empty bag
-    assert(focuses.exists(_._3.bitLength > 62))
-    assert(focuses.exists { case (bag, _, _) => bag.distinct.size < bag.size })
-    assert(focuses.exists { case (bag, depth, _) => bag.size <= depth })
   }
 
   // --- 03xx: normalization + distances (tests/main.rs:558-807) ---

@@ -117,6 +117,49 @@ class VariantMatcherSpec extends SparkSpecBase {
     }
   }
 
+  /** matchJoin == findVariants per query and rank, on the model's lexicon */
+  private def assertJoinParity(m: LocalVariantModel, qs: Seq[String],
+      p: SearchParameters, what: String): Unit = {
+    import spark.implicits._
+    val got = VariantMatcher
+      .matchJoin(spark, m.alphabet, VariantMatcher.modelFrames(spark, m)._1, qs.toDF("query"), p)
+      .select(col("query"), col("rank"), col("match_text"), col("dist_score"), col("freq_score"))
+      .collect()
+      .groupBy(_.getString(0))
+      .view.mapValues(_.sortBy(_.getInt(1))
+        .map(r => (r.getString(2), r.getDouble(3), r.getDouble(4))).toSeq)
+      .toMap
+    for (q <- qs) {
+      val expected = m.findVariants(q, p)
+        .map(r => (m.text(r.vocabId), r.distScore, r.freqScore))
+      assert(got.getOrElse(q, Seq.empty) == expected, s"query=$q $what")
+    }
+  }
+
+  test("join strategy == local model under StopAtExactMatch") {
+    val p = params.copy(stopCriterion = StopCriterion.StopAtExactMatch)
+    // tires and tire have anagrams in the lexicon, so neither keeps the
+    // words one letter away (rite for tires; tires and tiers for tire)
+    val small = VariantMatcher.buildModel(Alphabet.test,
+      Seq("rites", "tiers", "tires", "rite").map(w => (w, None)))
+    assert(small.findVariants("tires", p).map(r => small.text(r.vocabId)).toSet ==
+      Set("rites", "tiers", "tires"))
+    assertJoinParity(small, Seq("tires", "tire", "tirs", "rtes"), p, "small lexicon")
+    assertJoinParity(model, queries, p, "default lexicon")
+  }
+
+  test("join strategy == local model over a 20,000-entry lexicon") {
+    val (lex, generated) = graft.kernel.MatcherParity.inputs(1L)
+    val m = VariantMatcher.buildModel(Alphabet.simpleLatin, lex)
+    val qs = (generated.take(1000) ++ lex.takeRight(100).map(_._1) ++
+      graft.kernel.MatcherParity.edgeStrings).distinct
+    val distances = (0 to 5).map(DistanceThreshold.Absolute(_)) :+ DistanceThreshold.Ratio(0.5f)
+    for (dist <- distances; stop <- Seq(StopCriterion.Exhaustive, StopCriterion.StopAtExactMatch)) {
+      val p = SearchParameters(maxAnagramDistance = dist, stopCriterion = stop)
+      assertJoinParity(m, qs, p, s"distance=$dist stop=$stop")
+    }
+  }
+
   test("huys parity through the distributed path") {
     import spark.implicits._
     val m = VariantMatcher.buildModel(Alphabet.test,
