@@ -7,7 +7,7 @@ import java.math.BigInteger
   * containment = divisibility (reference: src/anahash.rs:139-261,
   * primes table src/types.rs:20-30). Values overflow 64 bits quickly,
   * hence BigInteger; on Spark columns they travel as canonical
-  * big-endian BinaryType (see [[toBytes]]/[[fromBytes]]).
+  * big-endian BinaryType (see [[toBytes]]).
   */
 object AnaHash {
 
@@ -70,69 +70,6 @@ object AnaHash {
     if (big != null) big else BigInteger.valueOf(v)
   }
 
-  def isEmpty(v: BigInteger): Boolean =
-    v.signum == 0 || v.equals(BigInteger.ONE)
-
-  def insert(v: BigInteger, ch: BigInteger): BigInteger =
-    if (v.signum == 0) ch else v.multiply(ch)
-
-  /** Does `v` contain the character bag `value`? (divisibility;
-    * reference: src/anahash.rs:165-171)
-    */
-  def contains(v: BigInteger, value: BigInteger): Boolean =
-    value.compareTo(v) <= 0 && v.mod(value).signum == 0
-
-  /** Delete the characters of `value` from `v` if present
-    * (reference: src/anahash.rs:154-162).
-    */
-  def delete(v: BigInteger, value: BigInteger): Option[BigInteger] =
-    if (contains(v, value)) Some(v.divide(value)) else None
-
-  /** Number of characters (prime factors with multiplicity over the
-    * alphabet's primes, UNK included). Equals the normalized length for a
-    * value produced by [[Alphabet.anahash]] (reference: src/anahash.rs:107-110).
-    */
-  def charCount(v: BigInteger, alphabetSizeWithUnk: Int): Int = {
-    var count = 0
-    var cur = v
-    var i = 0
-    while (i < alphabetSizeWithUnk && cur.compareTo(BigInteger.ONE) > 0) {
-      val p = primesBig(i)
-      var qr = cur.divideAndRemainder(p)
-      while (qr(1).signum == 0) {
-        count += 1
-        cur = qr(0)
-        qr = cur.divideAndRemainder(p)
-      }
-      i += 1
-    }
-    count
-  }
-
-  /** Highest alphabet class index present plus char count
-    * (reference: src/anahash.rs:126-136).
-    */
-  def alphabetUpperBound(v: BigInteger, alphabetSizeWithUnk: Int): (Int, Int) = {
-    var maxIdx = 0
-    var count = 0
-    var cur = v
-    var i = 0
-    while (i < alphabetSizeWithUnk && cur.compareTo(BigInteger.ONE) > 0) {
-      val p = primesBig(i)
-      var divided = false
-      var qr = cur.divideAndRemainder(p)
-      while (qr(1).signum == 0) {
-        count += 1
-        divided = true
-        cur = qr(0)
-        qr = cur.divideAndRemainder(p)
-      }
-      if (divided) maxIdx = i
-      i += 1
-    }
-    (maxIdx, count)
-  }
-
   /** The nearest-anagram rule shared by both matcher strategies: the
     * miss budget D(c) of target charcount c for a focus (the query's
     * normalized form) of `f` letters at anagram distance `maxDistance`,
@@ -185,6 +122,4 @@ object AnaHash {
     if (b.length > 1 && b(0) == 0) java.util.Arrays.copyOfRange(b, 1, b.length)
     else b
   }
-
-  def fromBytes(b: Array[Byte]): BigInteger = new BigInteger(1, b)
 }

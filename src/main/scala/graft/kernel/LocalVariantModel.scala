@@ -414,12 +414,14 @@ final class LocalVariantModel(
   }
 
 
-  /** Vocab ids of the entries whose anagram value is `av`, in insertion
-    * order (empty when none is).
+  /** Vocab ids of the entries that are anagrams of `text` (share its
+    * anagram value), in insertion order (empty when none is).
     */
-  def anagramInstances(av: BigInteger): Vector[Long] = {
+  def anagramInstances(text: String): Vector[Long] = {
+    val key = alphabet.normKey(text)
+    val av = AnaHash.valueOf(key, alphabet.size)
     // the values of one charcount range ascend with the ordinal
-    val c = AnaHash.charCount(av, alphabetSizeWithUnk)
+    val c = key.length
     var lo = anagrams.start(c)
     var hi = anagrams.start(c + 1) - 1
     while (lo <= hi) {
@@ -530,9 +532,9 @@ final class LocalVariantModel(
     out.result()
   }
 
-  /** Score, threshold, expand variants, normalize frequencies, rank,
-    * dedup, tie-aware top-k and relative cutoff
-    * (reference: src/lib.rs:1405-1653).
+  /** Score and rank the gathered instances with
+    * [[LocalVariantModel.scoreAndRank]], reading each instance's facts
+    * from this model's entries.
     */
   def scoreAndRank(
       instances: Vector[(Long, Distance)],
@@ -540,78 +542,17 @@ final class LocalVariantModel(
       params: SearchParameters,
       input: String
   ): Vector[VariantResult] = {
-    // R5 confusable rescoring (reference: lib.rs:1655-1663)
-    def rescoreConfusables(rs: Vector[VariantResult]): Vector[VariantResult] =
-      rs.map(r => r.copy(distScore = r.distScore *
-        Confusable.weightFor(confusablesList.toSeq, input, entries(r.vocabId.toInt).text)))
-    var maxFreq = 0.0
-    var hasExpandable = false
-    val results = Vector.newBuilder[VariantResult]
-    for ((id, dist) <- instances) {
+    val candidates = instances.map { case (id, dist) =>
       val e = entries(id.toInt)
-      val s = Scoring.score(dist, inputLength, weights)
-      val freqScore = if (haveFreq) e.frequency.toDouble else 1.0
-      if (freqScore > maxFreq) maxFreq = freqScore
-      // INTENTIONAL divergence from upstream: the reference's
-      // has_expandable_variants (lib.rs:1414-1427) triggers on
-      // vocabitem.variants.is_some(), which includes ReferenceFor-ONLY
-      // entries — expansion then finds nothing to expand but the
-      // transparent-drop/dedup passes still run. We trigger only on
-      // outgoing variantOf edges (what expansion actually consumes); a
-      // result set whose only "variants" are reference-for-only entries
-      // keeps transparent rows upstream would drop. Both graft strategies
-      // (this kernel and VariantMatcher.matchJoin) share this rule, so
-      // they stay mutually consistent (VariantMatcherSpec parity grid).
-      if (!hasExpandable && e.variantOf.nonEmpty) hasExpandable = true
-      if (s >= params.scoreThreshold)
-        results += VariantResult(id, s, freqScore)
-    }
-    var rs = results.result()
-    // early confusable rescoring (reference: lib.rs:1505-1508)
-    if (confusablesList.nonEmpty && confusablesBeforePruning)
-      rs = rescoreConfusables(rs)
-    if (hasExpandable) {
-      rs = expandVariants(rs)
-      for (r <- rs) if (r.freqScore > maxFreq) maxFreq = r.freqScore
-    }
-    if (maxFreq > 0.0) rs = rs.map(r => r.copy(freqScore = r.freqScore / maxFreq))
-    rs = Scoring.rank(rs, params.freqWeight)
-    if (hasExpandable) {
-      // dedup consecutive duplicates by vocab id, keeping first
-      // (reference: Vec::dedup_by_key, src/lib.rs:1530-1533)
-      val b = Vector.newBuilder[VariantResult]
-      var last = -1L
-      for (r <- rs) { if (r.vocabId != last) b += r; last = r.vocabId }
-      rs = b.result()
-    }
-    rs = Scoring.truncateTieAware(rs, params.maxMatches, params.freqWeight)
-    // late confusable rescoring + re-rank (default; reference: lib.rs:1591-1595)
-    if (confusablesList.nonEmpty && !confusablesBeforePruning) {
-      rs = Scoring.rank(rescoreConfusables(rs), params.freqWeight)
-    }
-    Scoring.applyCutoff(rs, params.cutoffThreshold, params.freqWeight)
-  }
-
-  /** Expand VariantOf edges; transparent originals are dropped
-    * (reference: src/lib.rs:1677-1727).
-    */
-  def expandVariants(results: Vector[VariantResult]): Vector[VariantResult] = {
-    val out = Vector.newBuilder[VariantResult]
-    for (r <- results) {
-      val e = entries(r.vocabId.toInt)
-      // edges are stored in insertion (file) order like the reference
-      for ((targetId, edgeScore) <- e.variantOf) {
-        val target = entries(targetId.toInt)
-        out += VariantResult(
-          targetId,
-          r.distScore * edgeScore,
-          math.min(target.frequency.toDouble, r.freqScore),
-          via = Some(r.vocabId)
-        )
+      val edges = e.variantOf.map { case (targetId, score) =>
+        val t = entries(targetId.toInt)
+        LocalVariantModel.Edge(targetId, t.text, t.frequency.toDouble, score)
       }
-      if (!e.transparent) out += r
+      LocalVariantModel.Candidate(id, e.text, dist,
+        if (haveFreq) e.frequency.toDouble else 1.0, e.transparent, edges)
     }
-    out.result()
+    LocalVariantModel.scoreAndRank(candidates, inputLength, input, params,
+      weights, confusables, confusablesBeforePruning)
   }
 
   /** The flagship entry point: ranked variants for one input string
@@ -759,6 +700,113 @@ object LocalVariantModel {
   val BOS = 0L
   val EOS = 1L
   val UNK = 2L
+
+  /** One verified candidate of a query, as [[scoreAndRank]] reads it: its
+    * vocab id and text, its distance features, its frequency (1 when the
+    * lexicon has none), its transparent flag and its outgoing VariantOf
+    * edges in insertion order.
+    */
+  final case class Candidate(id: Long, text: String, dist: Distance, frequency: Double,
+      transparent: Boolean, variantOf: Seq[Edge])
+
+  /** An outgoing VariantOf edge: its target's id, text and frequency, and
+    * the edge score.
+    */
+  final case class Edge(targetId: Long, targetText: String, targetFrequency: Double,
+      score: Double)
+
+  /** The text of every id a ranking of `candidates` can return. */
+  def texts(candidates: Seq[Candidate]): Map[Long, String] =
+    candidates.iterator.flatMap(c => Iterator(c.id -> c.text) ++
+      c.variantOf.iterator.map(e => e.targetId -> e.targetText)).toMap
+
+  /** Score, threshold, expand variants, normalize frequencies, rank,
+    * dedup, tie-aware top-k and relative cutoff
+    * (reference: src/lib.rs:1405-1653), the one ranking both matcher
+    * strategies run: findVariants on its gathered instances,
+    * VariantMatcher.matchJoin on each query's verified rows. The
+    * candidates come in gather order (ascending anagram value, then
+    * insertion id), which the stable rank sort keeps among ties.
+    */
+  def scoreAndRank(
+      candidates: Seq[Candidate],
+      inputLength: Int,
+      input: String,
+      params: SearchParameters,
+      weights: Weights,
+      confusables: Seq[Confusable],
+      confusablesBeforePruning: Boolean
+  ): Vector[VariantResult] = {
+    // R5 confusable rescoring (reference: lib.rs:1655-1663)
+    lazy val textOf = texts(candidates)
+    def rescoreConfusables(rs: Vector[VariantResult]): Vector[VariantResult] =
+      rs.map(r => r.copy(distScore = r.distScore *
+        Confusable.weightFor(confusables, input, textOf(r.vocabId))))
+    var maxFreq = 0.0
+    var hasExpandable = false
+    val results = Vector.newBuilder[VariantResult]
+    val kept = Vector.newBuilder[Candidate]
+    for (c <- candidates) {
+      val s = Scoring.score(c.dist, inputLength, weights)
+      if (c.frequency > maxFreq) maxFreq = c.frequency
+      // INTENTIONAL divergence from upstream: the reference's
+      // has_expandable_variants (lib.rs:1414-1427) triggers on
+      // vocabitem.variants.is_some(), which includes ReferenceFor-ONLY
+      // entries — expansion then finds nothing to expand but the
+      // transparent-drop/dedup passes still run. We trigger only on
+      // outgoing variantOf edges (what expansion actually consumes); a
+      // result set whose only "variants" are reference-for-only entries
+      // keeps transparent rows upstream would drop.
+      if (!hasExpandable && c.variantOf.nonEmpty) hasExpandable = true
+      if (s >= params.scoreThreshold) {
+        results += VariantResult(c.id, s, c.frequency)
+        kept += c
+      }
+    }
+    var rs = results.result()
+    // early confusable rescoring (reference: lib.rs:1505-1508)
+    if (confusables.nonEmpty && confusablesBeforePruning)
+      rs = rescoreConfusables(rs)
+    if (hasExpandable) {
+      rs = expandVariants(rs.zip(kept.result()))
+      for (r <- rs) if (r.freqScore > maxFreq) maxFreq = r.freqScore
+    }
+    if (maxFreq > 0.0) rs = rs.map(r => r.copy(freqScore = r.freqScore / maxFreq))
+    rs = Scoring.rank(rs, params.freqWeight)
+    if (hasExpandable) {
+      // dedup consecutive duplicates by vocab id, keeping first
+      // (reference: Vec::dedup_by_key, src/lib.rs:1530-1533)
+      val b = Vector.newBuilder[VariantResult]
+      var last = -1L
+      for (r <- rs) { if (r.vocabId != last) b += r; last = r.vocabId }
+      rs = b.result()
+    }
+    rs = Scoring.truncateTieAware(rs, params.maxMatches, params.freqWeight)
+    // late confusable rescoring + re-rank (default; reference: lib.rs:1591-1595)
+    if (confusables.nonEmpty && !confusablesBeforePruning) {
+      rs = Scoring.rank(rescoreConfusables(rs), params.freqWeight)
+    }
+    Scoring.applyCutoff(rs, params.cutoffThreshold, params.freqWeight)
+  }
+
+  /** Expand VariantOf edges of each result's candidate; transparent
+    * originals are dropped (reference: src/lib.rs:1677-1727).
+    */
+  private def expandVariants(results: Vector[(VariantResult, Candidate)]): Vector[VariantResult] = {
+    val out = Vector.newBuilder[VariantResult]
+    for ((r, c) <- results) {
+      // edges are stored in insertion (file) order like the reference
+      for (e <- c.variantOf)
+        out += VariantResult(
+          e.targetId,
+          r.distScore * e.score,
+          math.min(e.targetFrequency, r.freqScore),
+          via = Some(r.vocabId)
+        )
+      if (!c.transparent) out += r
+    }
+    out.result()
+  }
 
   /** The anagram index (reference: the value -> instances map of
     * src/index.rs:5-12 plus the charcount-sorted values of

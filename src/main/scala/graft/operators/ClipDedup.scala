@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,8 @@ import graft.kernel.Alphabet
   * Iceberg seam: production swaps in an Iceberg-backed store (snapshot
   * commits), the sandbox uses [[ParquetStageStore]] (parquet + _SUCCESS,
   * same commit-visibility contract). Resume = rerun the job with the same workDir:
-  * completed stages are read back, not recomputed. A per-stage,
+  * completed stages whose fingerprint matches are read back, not
+  * recomputed. A per-stage,
   * per-partition lineage row (stage, partition, rows) plus stage wall
   * times land in `<workDir>/metrics`.
   *
@@ -27,28 +29,36 @@ object ClipDedup {
   final case class StageResult(name: String, seconds: Double, rows: Long,
       resumed: Boolean)
 
-  final class Runner(spark: SparkSession, store: StageStore) {
-    def this(spark: SparkSession, workDir: String) =
-      this(spark, new ParquetStageStore(spark, workDir))
+  /** A hex SHA-256 of `parts`' strings: a stage's fingerprint. */
+  def fingerprint(parts: Seq[Any]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(parts.mkString("\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  /** Runs the stages of one job; `jobKey` fingerprints what the job's
+    * stages depend on besides their own names and columns.
+    */
+  final class Runner(spark: SparkSession, store: StageStore, jobKey: String = "") {
     val stageLog = scala.collection.mutable.ArrayBuffer.empty[StageResult]
 
     /** Run-or-resume one stage; always returns the materialized output.
-      * A resumed stage is only trusted when its stored schema matches the
-      * expected columns — a workDir written by an older code/config
-      * version is recomputed instead of silently mixing stage semantics.
+      * A stored stage is only resumed when the fingerprint committed with
+      * it is this stage's: the hash of its name, its expected columns and
+      * `jobKey`. A stage stored with another config, input or column list
+      * is recomputed instead of silently mixing stage semantics.
       * (`expect` is a literal list, NOT derived from the plan: deriving
       * it would force plan construction — and for stages whose builder
       * runs driver actions, the whole computation — on every resume.)
       */
     def stage(name: String, expect: Seq[String])(f: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
-      var resumed = store.exists(name)
-      if (resumed && store.read(name).columns.toSeq != expect) {
-        System.err.println(s"[clipdedup] stage $name: stored schema differs " +
-          "from current plan (older code/config version) — recomputing")
-        resumed = false
-      }
-      if (!resumed) store.write(name, f)
+      val key = fingerprint(name +: expect :+ jobKey)
+      val stored = store.exists(name)
+      val resumed = stored && store.key(name).contains(key)
+      if (stored && !resumed)
+        System.err.println(s"[clipdedup] stage $name: stored under another " +
+          "fingerprint (config, input or columns) — recomputing")
+      if (!resumed) store.write(name, f, key)
       val out = store.read(name)
       val rows = out.count()
       stageLog += StageResult(name, (System.nanoTime() - t0) / 1e9, rows, resumed)
@@ -71,6 +81,11 @@ object ClipDedup {
     *        including CC's local union-find, which gets a binary-keyed
     *        kernel) is key-type agnostic, so the plans are unchanged in
     *        shape; cluster_id comes out binary.
+    *
+    * Resume fingerprints each stage with `cfg`, `alphabet`, `wideIds` and
+    * the identity of `clips`' input files (sorted paths, lengths and
+    * modification times). In-memory inputs have no input files, so for
+    * them a rerun resumes whatever the same config stored.
     */
   def run(
       spark: SparkSession,
@@ -81,7 +96,13 @@ object ClipDedup {
       wideIds: Boolean = false
   ): (DataFrame, Seq[StageResult]) = {
     val K = new Kernels(alphabet)
-    val r = new Runner(spark, workDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val inputs = clips.inputFiles.sorted.map { f =>
+      val st = new Path(f).getFileSystem(conf).getFileStatus(new Path(f))
+      s"$f:${st.getLen}:${st.getModificationTime}"
+    }
+    val r = new Runner(spark, new ParquetStageStore(spark, workDir),
+      fingerprint(Seq(cfg, alphabet, wideIds) ++ inputs))
     def keyOf(c: org.apache.spark.sql.Column) =
       if (wideIds) unhex(md5(c)) else xxhash64(c)
 

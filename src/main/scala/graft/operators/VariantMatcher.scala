@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Kernels
@@ -32,13 +32,14 @@ final case class VariantMatch(
   *     columns by `LocalVariantModel.Wire`). This is what keeps verify-stage scaling
   *     efficiency near 1.0 — there is no shuffle to contend on.
   *
-  *  2. [[matchJoin]] — fully declarative plan for lexicons too large to
-  *     broadcast: each query is exploded to its target charcounts and
-  *     joined to the lexicon rows of each, keeping the rows that miss at
-  *     most the charcount's budget of its letters (the broadcast scan's
-  *     rule, [[AnaHash.missBudget]]); the survivors are DL-verified and
-  *     ranked with window functions. Equivalent results (tested);
-  *     shuffles on the charcount join + query windows.
+  *  2. [[matchJoin]] — join plan for lexicons too large to broadcast:
+  *     each query is exploded to its target charcounts and joined to the
+  *     lexicon rows of each, keeping the rows that miss at most the
+  *     charcount's budget of its letters (the broadcast scan's rule,
+  *     [[AnaHash.missBudget]]); the survivors are DL-verified, grouped
+  *     per query and ranked by [[LocalVariantModel.scoreAndRank]], the
+  *     routine findVariants runs. Equivalent results (tested); shuffles
+  *     on the charcount join + one exchange on the query.
   *
   * Both preserve the reference's deterministic tie order: ascending
   * anagram value, then vocab insertion id (see SURVEY.md §2.5 R3/R4).
@@ -137,11 +138,16 @@ object VariantMatcher {
     *   queries -> explode(target charcounts (c, D(c)), |c - |f|| <= maxD)
     *           -> join index on cc == c
     *           -> misses(qnorm, norm) <= D(c)          (J1/J2)
-    *           -> [StopAtExactMatch: the zero-miss rows at c = |f| alone]
-    *   -> DL verify (J4) -> score (R1)
-    *   -> (early confusables R5) -> variant expansion (J5) -> freq-norm (R2)
-    *   -> rank windows (R3) + consecutive-dup drop -> top-k (R4, tie-aware)
-    *   -> late confusables R5 + re-rank -> cutoff (R6)
+    *   -> DL verify (J4), keeping StopAtExactMatch's zero-miss rows at
+    *      c = |f| even beyond the edit bound
+    *   -> left join each variant's edge array (edges ⋈ lexicon on ref_id,
+    *      by edge_seq)
+    *   -> group by query, rows sorted by (|anavalue|, anavalue, id)
+    *   -> LocalVariantModel.scoreAndRank per query: [StopAtExactMatch:
+    *      the zero-miss rows alone] -> score (R1) -> (early confusables
+    *      R5) -> expansion (J5) -> freq-norm (R2) -> rank (R3) + dedup ->
+    *      tie-aware top-k (R4) -> late confusables R5 -> cutoff (R6)
+    *   -> posexplode into (query, rank, match_text, dist_score, freq_score)
     *
     * @param variantEdges optional VariantOf edge table
     *        (variant_id, ref_id, edge_score, edge_seq) — J5 expansion
@@ -163,7 +169,6 @@ object VariantMatcher {
       confusables: Seq[Confusable] = Seq.empty,
       confusablesBeforePruning: Boolean = false
   ): DataFrame = {
-    import spark.implicits._
     val weights = params.weights
 
     // --- index build (A1-A3): id = insertion order = file order; norm is
@@ -207,194 +212,77 @@ object VariantMatcher {
       .join(lex, Seq("cc"))
       .withColumn("misses", missesUdf(col("qnorm"), col("norm")))
       .filter(col("misses") <= col("budget"))
-    import org.apache.spark.sql.expressions.Window
-    val wq = Window.partitionBy("query")
     // StopAtExactMatch: a query with an anagram in the lexicon (zero
-    // misses at its own charcount) keeps that anagram group alone
-    val cands = params.stopCriterion match {
+    // misses at its own charcount) keeps that anagram group alone; the
+    // flag rides to the per-query ranking, so an anagram beyond the edit
+    // bound still marks its query
+    val exact = params.stopCriterion match {
       case StopCriterion.StopAtExactMatch =>
-        val exact = col("misses") === 0 && col("cc") === length(col("qnorm"))
-        joined.withColumn("has_exact", max(exact.cast("int")).over(wq))
-          .filter(col("has_exact") === 0 || exact)
-      case StopCriterion.Exhaustive => joined
+        col("misses") === 0 && col("cc") === length(col("qnorm"))
+      case StopCriterion.Exhaustive => lit(false)
     }
 
-    // --- verify + score (J4/R1) ---
-    val scoreUdf = udf {
+    // --- verify (J4): the distance features within the edit bound ---
+    val distUdf = udf {
       (qnorm: String, q: String, cnorm: String, ctext: String) =>
         val maxEdit = params.maxEditDistance
           .resolve(qnorm.length, DistanceThreshold.MaxEditDistance)
         val sameCase = Scoring.sameCase(Scoring.caseClass(q), Scoring.caseClass(ctext), weights)
-        Scoring
-          .distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
-          .map(dist => Scoring.score(dist, qnorm.length, weights))
+        Scoring.distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
     }
-    // verified = the kernel's `instances` set (DL within bound, BEFORE the
-    // score threshold): the freq-normalization denominator and the
-    // has-expandable flag are both computed over THIS set, not the
-    // thresholded survivors (ref lib.rs:1454-1475 — the maxFreq loop runs
-    // over all gathered instances). freq was coalesced to 1 in the index
-    // build, so an all-null (or absent) freq column yields
-    // freq_score = 1/max(1) = 1 for every row.
-    val verified0 = cands
-      .withColumn("dist_score",
-        scoreUdf(col("qnorm"), col("query"), col("norm"), col("text")))
-      .filter(col("dist_score").isNotNull)
-      .withColumn("freq_raw", col("freq").cast("double"))
-    val verified = variantEdges match {
-      case Some(edges) =>
-        // per-query expandability (ref lib.rs:1464: any INSTANCE with
-        // outgoing VariantOf edges turns expansion on for that query)
-        val hasEdges = edges.select(col("variant_id").as("id")).distinct()
-          .withColumn("has_edges", lit(1))
-        verified0.join(hasEdges, Seq("id"), "left")
-          .withColumn("has_exp",
-            max(coalesce(col("has_edges"), lit(0))).over(wq))
-          .drop("has_edges")
-      case None => verified0.withColumn("has_exp", lit(0))
-    }
-    val thresholded0 = verified
-      .withColumn("maxf", max("freq_raw").over(wq))
-      .filter(col("dist_score") >= params.scoreThreshold)
+    val verified = joined
+      .withColumn("exact", exact)
+      .withColumn("dist", distUdf(col("qnorm"), col("query"), col("norm"), col("text")))
+      .filter(col("dist").isNotNull || col("exact"))
 
-    // --- R5 early confusable rescoring (ref lib.rs:1505-1508) ---
+    // --- each verified variant's outgoing edges (J5), in insertion order
+    // (`edge_seq`), with the target's text and frequency ---
+    val edgesType = "array<struct<seq:bigint,id:bigint,text:string,freq:double,score:double>>"
+    val withEdges = variantEdges match {
+      case Some(edges) =>
+        val refs = lex.select(col("id").as("ref_id"), col("text").as("ref_text"),
+          col("freq").as("ref_freq"))
+        val perVariant = edges.join(refs, Seq("ref_id"))
+          .groupBy(col("variant_id").as("id"))
+          .agg(sort_array(collect_list(struct(
+            col("edge_seq").cast("long").as("seq"), col("ref_id").cast("long").as("id"),
+            col("ref_text").as("text"), col("ref_freq").cast("double").as("freq"),
+            col("edge_score").cast("double").as("score")))).as("edges"))
+        verified.join(perVariant, Seq("id"), "left")
+      case None => verified.withColumn("edges", lit(null).cast(edgesType))
+    }
+
+    // --- score, expansion, freq-norm, rank, dedup, tie-aware top-k,
+    // confusables and cutoff (R1-R6, J5): each query's verified rows, in
+    // gather order (ascending anagram value, then insertion id), go
+    // through the ranking findVariants runs ---
     val confList = confusables.toIndexedSeq
-    lazy val cweightUdf = udf { (q: String, c: String) =>
-      graft.kernel.Confusable.weightFor(confList, q, c)
+    val rankUdf = udf { (query: String, rows: Seq[Row]) =>
+      val stopped =
+        if (rows.exists(_.getAs[Boolean]("exact"))) rows.filter(_.getAs[Boolean]("exact"))
+        else rows
+      val candidates = stopped.filter(r => r.getAs[Row]("dist") != null).map { r =>
+        val d = r.getAs[Row]("dist")
+        val edges = Option(r.getAs[Seq[Row]]("edges")).getOrElse(Nil).map(e =>
+          LocalVariantModel.Edge(e.getLong(1), e.getString(2), e.getDouble(3), e.getDouble(4)))
+        LocalVariantModel.Candidate(r.getAs[Long]("id"), r.getAs[String]("text"),
+          Distance(d.getInt(0), d.getInt(1), d.getInt(2), d.getInt(3), d.getBoolean(4)),
+          r.getAs[Double]("freq"), r.getAs[Boolean]("transparent"), edges)
+      }
+      val textOf = LocalVariantModel.texts(candidates)
+      LocalVariantModel.scoreAndRank(candidates, alphabet.normKey(query).length, query, params,
+        weights, confList, confusablesBeforePruning)
+        .map(r => (textOf(r.vocabId), r.distScore, r.freqScore))
     }
-    val thresholded =
-      if (confusables.nonEmpty && confusablesBeforePruning)
-        thresholded0.withColumn("dist_score",
-          col("dist_score") * cweightUdf(col("query"), col("text")))
-      else thresholded0
-
-    // --- J5 variant expansion (ref lib.rs:1677-1727). Stable-order keys:
-    // a result's position in the kernel's vector is (gather order of its
-    // parent instance: ascending anavalue then insertion id) x (edge
-    // insertion order, with the non-transparent parent AFTER its edges =
-    // Long.MaxValue). The rank sort below uses these as its stability
-    // suffix, reproducing Rust's stable sort exactly. ---
-    val withStable = thresholded
-      .withColumn("g_len", length(col("anavalue")))
-      .withColumn("g_ana", col("anavalue"))
-      .withColumn("g_id", col("id"))
-      .withColumn("g_seq", lit(Long.MaxValue))
-    val outCols = Seq("query", "id", "text", "dist_score", "freq_raw",
-      "maxf", "g_len", "g_ana", "g_id", "g_seq").map(col)
-    val expanded = variantEdges match {
-      case Some(edges) =>
-        val refs = lex.select(col("id").as("ref_id"),
-          col("text").as("ref_text"), col("freq").as("ref_freq"))
-        val exp = withStable.filter(col("has_exp") === 1)
-          .join(edges, col("id") === edges("variant_id"))
-          .join(refs, Seq("ref_id"))
-          .select(col("query"), col("ref_id").as("id"),
-            col("ref_text").as("text"),
-            (col("dist_score") * col("edge_score")).as("dist_score"),
-            least(col("ref_freq").cast("double"), col("freq_raw"))
-              .as("freq_raw"),
-            col("maxf"), col("g_len"), col("g_ana"), col("g_id"),
-            col("edge_seq").cast("long").as("g_seq"))
-        // transparent originals dropped — but ONLY for queries where
-        // expansion ran (ref lib.rs:1714-1717)
-        val kept = withStable
-          .filter(col("has_exp") === 0 || !col("transparent"))
-          .select(outCols: _*)
-        kept.unionByName(exp)
-      case None => withStable.select(outCols: _*)
-    }
-
-    // --- R2 freq normalization (denominator fixed pre-expansion; an
-    // expanded row's freq = min(target, parent) can never exceed it) ---
-    val normed = expanded.withColumn("freq_score",
-      when(col("maxf") > 0, col("freq_raw") / col("maxf"))
-        .otherwise(col("freq_raw")))
-
-    // --- R3 ranking (ref types.rs:335-365): blended score when
-    // freqWeight > 0, else dist desc + freq tie-break; stability suffix =
-    // the gather/edge keys above ---
-    val fw = params.freqWeight.toDouble
-    def blendOf(dist: Column, freqSc: Column): Column =
-      if (fw == 0.0) dist else (dist + lit(fw) * freqSc) / lit(1.0 + fw)
-    def orderKeys(dist: Column, freqSc: Column): Seq[Column] =
-      (if (fw == 0.0) Seq(dist.desc, freqSc.desc)
-       else Seq(blendOf(dist, freqSc).desc)) ++
-        Seq(col("g_len"), col("g_ana"), col("g_id"), col("g_seq"))
-    val ord1 = orderKeys(col("dist_score"), col("freq_score"))
-    val wOrd1 = Window.partitionBy("query").orderBy(ord1: _*)
-    // consecutive-duplicate drop after the rank sort, keeping the first
-    // (ref Vec::dedup_by_key, lib.rs:1530-1533) — only expansion can
-    // produce duplicates (upstream candidates are already distinct on
-    // (query, id)), so the extra window pass is skipped entirely when no
-    // edge table is supplied
-    val deduped =
-      if (variantEdges.isEmpty) normed
-      else normed
-        .withColumn("prev_id", lag(col("id"), 1).over(wOrd1))
-        .filter(col("prev_id").isNull || col("prev_id") =!= col("id"))
-        .drop("prev_id")
-    val ranked = deduped.withColumn("rank", row_number().over(wOrd1))
-
-    // --- R4 tie-aware top-k (ref lib.rs:1536-1589): last/cropped compare
-    // BLENDED scores; the early/late scan compares dist_score against the
-    // cropped blended value — faithful to the reference, odd as it looks.
-    val blend1 = blendOf(col("dist_score"), col("freq_score"))
-    val maxM = params.maxMatches
-    val cropped = if (maxM > 0) {
-      val lastScore = max(when(col("rank") === maxM, blend1)).over(wq)
-      val croppedScore = max(when(col("rank") === maxM + 1, blend1)).over(wq)
-      val withB = ranked
-        .withColumn("last_s", lastScore)
-        .withColumn("crop_s", croppedScore)
-      val earlyCut = min(when(col("dist_score") === col("crop_s"),
-        col("rank"))).over(wq)
-      val lateCut = min(when(col("dist_score") < col("crop_s"),
-        col("rank"))).over(wq)
-      withB
-        .withColumn("early", earlyCut)
-        .withColumn("late", lateCut)
-        .filter(
-          col("crop_s").isNull || // <= maxM results: keep all
-            (when(col("crop_s") < col("last_s"), col("rank") <= maxM)
-              .otherwise( // boundary splits a tie group
-                when(col("early") > 1, col("rank") <= col("early"))
-                  .otherwise(when(col("late") > 1, col("rank") <= col("late"))
-                    .otherwise(lit(true))))))
-        .drop("last_s", "crop_s", "early", "late")
-    } else ranked
-
-    // --- R5 late confusable rescoring + re-rank (ref lib.rs:1591-1595);
-    // stability of the re-rank = the pre-rescore rank ---
-    val rescored =
-      if (confusables.nonEmpty && !confusablesBeforePruning) {
-        val r2 = cropped.withColumn("dist_score",
-          col("dist_score") * cweightUdf(col("query"), col("text")))
-        val ord2 =
-          (if (fw == 0.0) Seq(col("dist_score").desc, col("freq_score").desc)
-           else Seq(blendOf(col("dist_score"), col("freq_score")).desc)) :+
-            col("rank").asc
-        r2.withColumn("rank",
-          row_number().over(Window.partitionBy("query").orderBy(ord2: _*)))
-      } else cropped
-
-    // --- R6 relative cutoff (ref lib.rs:1597-1622, blended scores) ---
-    val blendF = blendOf(col("dist_score"), col("freq_score"))
-    val withBest = rescored.withColumn("best_s",
-      max(when(col("rank") === 1, blendF)).over(wq))
-    val cut =
-      if (params.cutoffThreshold >= 1.0) {
-        val cutRank = min(when(col("rank") > 1 &&
-          blendF <= col("best_s") / params.cutoffThreshold,
-          col("rank"))).over(wq)
-        withBest.withColumn("cut_rank", cutRank)
-          .filter(col("cut_rank").isNull || col("rank") < col("cut_rank"))
-          .drop("cut_rank")
-      } else withBest
-
-    cut.select(col("query"), col("rank").cast("int").as("rank"),
-      col("text").as("match_text"),
-      col("dist_score").as("dist_score"),
-      col("freq_score").as("freq_score"))
+    withEdges
+      .groupBy("query")
+      .agg(sort_array(collect_list(struct(
+        length(col("anavalue")).as("ana_len"), col("anavalue"), col("id").cast("long").as("id"),
+        col("text"), col("dist"), col("freq").cast("double").as("freq"), col("transparent"),
+        col("exact"), col("edges")))).as("rows"))
+      .select(col("query"), posexplode(rankUdf(col("query"), col("rows"))))
+      .select(col("query"), (col("pos") + 1).as("rank"), col("col._1").as("match_text"),
+        col("col._2").as("dist_score"), col("col._3").as("freq_score"))
       .orderBy(col("query"), col("rank"))
   }
 }

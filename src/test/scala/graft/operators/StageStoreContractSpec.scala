@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkSpecBase
+import graft.sources.ClipGen
 
 /** In-memory snapshot-commit store: the Iceberg-shaped mock. `write`
   * stages the full output first and swaps the committed snapshot pointer
@@ -15,7 +16,7 @@ import graft.SparkSpecBase
   * snapshot-isolation contract the production Iceberg impl provides.
   */
 final class InMemorySnapshotStore(spark: SparkSession) extends StageStore {
-  final case class Snapshot(schema: StructType, rows: Seq[Row])
+  final case class Snapshot(schema: StructType, rows: Seq[Row], key: String = "")
   private val committed = scala.collection.mutable.Map.empty[String, Snapshot]
   private val metrics = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
   /** Test hook: injected failure fired after staging, before commit. */
@@ -23,6 +24,7 @@ final class InMemorySnapshotStore(spark: SparkSession) extends StageStore {
   var commitCount: Int = 0
 
   def exists(name: String): Boolean = committed.contains(name)
+  def key(name: String): Option[String] = committed.get(name).map(_.key)
   def read(name: String): DataFrame = {
     val s = committed.getOrElse(name,
       sys.error(s"read of uncommitted snapshot: $name"))
@@ -30,8 +32,8 @@ final class InMemorySnapshotStore(spark: SparkSession) extends StageStore {
       spark.sparkContext.parallelize(s.rows, math.max(1, s.rows.size min 4)),
       s.schema)
   }
-  def write(name: String, df: DataFrame): Unit = {
-    val staged = Snapshot(df.schema, df.collect().toSeq) // stage fully...
+  def write(name: String, df: DataFrame, key: String): Unit = {
+    val staged = Snapshot(df.schema, df.collect().toSeq, key) // stage fully...
     if (failBeforeCommit) sys.error("injected failure before snapshot commit")
     committed(name) = staged // ...then one atomic pointer swap
     commitCount += 1
@@ -63,7 +65,7 @@ class StageStoreContractSpec extends SparkSpecBase {
     test(s"$label: write-then-read round-trips; exists flips on commit") {
       val s = mkStore()
       assert(!s.exists("a"))
-      s.write("a", df(10))
+      s.write("a", df(10), "k")
       assert(s.exists("a"))
       val back = s.read("a")
       assert(back.columns.toSeq == Seq("k", "v"))
@@ -73,8 +75,8 @@ class StageStoreContractSpec extends SparkSpecBase {
 
     test(s"$label: overwrite replaces the committed output") {
       val s = mkStore()
-      s.write("b", df(5))
-      s.write("b", df(3))
+      s.write("b", df(5), "k")
+      s.write("b", df(3), "k")
       assert(s.read("b").count() == 3)
     }
 
@@ -116,15 +118,30 @@ class StageStoreContractSpec extends SparkSpecBase {
 
   test("snapshot-mock: a failed write never becomes visible (atomic commit)") {
     val s = new InMemorySnapshotStore(spark)
-    s.write("c", df(6))
+    s.write("c", df(6), "k")
     s.failBeforeCommit = true
-    intercept[RuntimeException] { s.write("c", df(1)) }
+    intercept[RuntimeException] { s.write("c", df(1), "k") }
     s.failBeforeCommit = false
     // the previous snapshot is still what readers see — snapshot isolation
     assert(s.exists("c") && s.read("c").count() == 6)
-    intercept[RuntimeException] { s.failBeforeCommit = true; s.write("d", df(1)) }
+    intercept[RuntimeException] { s.failBeforeCommit = true; s.write("d", df(1), "k") }
     s.failBeforeCommit = false
     assert(!s.exists("d"))
+  }
+
+  test("parquet: ClipDedup.run recomputes stages stored under another config") {
+    val clips = ClipGen.transcriptTable(spark, seed = 7L, nClusters = 60)
+    val dir = Files.createTempDirectory("stagestore-config").toString
+    def rows(df: DataFrame): Set[(String, Long)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val (loose, _) = ClipDedup.run(spark, clips, s"$dir/job")
+    val looseRows = rows(loose)
+    val strict = DedupConfig(scoreThreshold = 0.99)
+    val (rerun, log) = ClipDedup.run(spark, clips, s"$dir/job", strict)
+    assert(log.forall(!_.resumed), log.map(s => s.name -> s.resumed))
+    val (fresh, _) = ClipDedup.run(spark, clips, s"$dir/fresh", strict)
+    assert(rows(rerun) == rows(fresh))
+    assert(rows(fresh) != looseRows)
   }
 
   test("parquet: partial output without _SUCCESS does not exist") {
@@ -140,7 +157,7 @@ class StageStoreContractSpec extends SparkSpecBase {
       new java.io.File(stage, datafile.getName).toPath)
     assert(!s.exists("part"))
     // a later complete write of the same stage commits and is visible
-    s.write("part", df(3))
+    s.write("part", df(3), "k")
     assert(s.exists("part") && s.read("part").count() == 3)
   }
 }

@@ -172,5 +172,9 @@ class VariantMatcherSpec extends SparkSpecBase {
       .collect().sortBy(_.rank)
     assert(rs.map(_.matchText).toSeq == Seq("huis", "huls"))
     assert(rs(0).distScore == 0.65625 && rs(1).distScore == 0.65625)
+    // the full tie straddles maxMatches = 1: the crop keeps the first of
+    // the gather order (ascending anagram value), so the join must rank
+    // each query's rows in that order
+    assertJoinParity(m, Seq("huys"), p.copy(maxMatches = 1), "tie at maxMatches")
   }
 }
