@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.functions.{Kernels, TextFns => T}
+import graft.functions.{FastHash, Kernels, TextFns => T}
+import graft.kernel.{Scoring, VariantResult}
+import graft.operators.AnnIvf
 import graft.spark.Tables
 
 /** Oracle-checked operator queries (driver contract: each entry has a
@@ -28,18 +30,11 @@ object Queries {
   )
 
   /** 8 deterministic integer hyperplanes over the 64-dim embedding space
-    * for the sign-LSH ANN query: fixed LCG, weights in [-500, 500]. The
-    * same literals are interpolated into the DuckDB oracle, so the bucket
+    * for the sign-LSH ANN query ([[FastHash.intPlanes]]). The same
+    * literals are interpolated into the DuckDB oracle, so the bucket
     * bits are exact integer math on both engines.
     */
-  val annPlanes: Seq[Seq[Long]] = {
-    var state = 0x5DEECE66DL
-    def next(): Long = {
-      state = state * 6364136223846793005L + 1442695040888963407L
-      (state >>> 33) % 1001L - 500L
-    }
-    Seq.fill(8)(Seq.fill(64)(next()))
-  }
+  val annPlanes: Array[Array[Long]] = FastHash.intPlanes(8, 64, 0x5DEECE66DL)
 
   /** dedup_embcos config: the production [[graft.operators.EmbDedup]]
     * operator at 4 bands x 16-bit keys — wide enough that no band key
@@ -114,6 +109,27 @@ object Queries {
       "cand AS (SELECT DISTINCT x.vec_id a_id, y.vec_id b_id " +
       "FROM probes x JOIN probes y " +
       "ON x.band = y.band AND x.bits = y.bits AND x.vec_id < y.vec_id)"
+  }
+
+  /** Each q_id's (m_id, score) rows, sorted by (score desc, m_id),
+    * through the production ranking rule `rule` — a [[Scoring]] routine
+    * at freqWeight 0, so the score is the distScore. Returns
+    * (q_id, rank: int, m_id, score: double).
+    */
+  private def rankPerQuery(scored: DataFrame)(
+      rule: Vector[VariantResult] => Vector[VariantResult]): DataFrame = {
+    val ranked = udf { (rows: Seq[Row]) =>
+      val sorted = rows.map(r => VariantResult(r.getLong(0), r.getDouble(1), 0.0))
+        .sortWith((a, b) => a.distScore > b.distScore ||
+          (a.distScore == b.distScore && a.vocabId < b.vocabId))
+      rule(sorted.toVector).map(r => (r.vocabId, r.distScore))
+    }
+    scored.groupBy(col("q_id"))
+      .agg(ranked(collect_list(struct(col("m_id"),
+        col("score").cast("double")))).as("r"))
+      .select(col("q_id"), posexplode(col("r")))
+      .select(col("q_id"), (col("pos") + 1).as("rank"),
+        col("col._1").as("m_id"), col("col._2").as("score"))
   }
 
   // canonical cleaned text key shared by the dedup queries
@@ -560,16 +576,14 @@ object Queries {
       (s, d) => {
         val qexpr = transform(col("embedding"),
           x => round(x.cast("double") * 1000).cast("long"))
-        val sig = Queries.annPlanes.zipWithIndex.map { case (p, b) =>
-          val dot = aggregate(
-            zip_with(col("q"), array(p.map(lit): _*), (x, y) => x * y),
-            lit(0L), (acc, v) => acc + v)
-          when(dot > 0, lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _)
+        // one band of 8 sign bits; a null vector has no positive dot
+        val sig = udf((q: Seq[Long]) =>
+          if (q == null) 0L
+          else FastHash.signBands(q.toArray, Queries.annPlanes, 1, 8)(0))
         val e = fanout(Tables.embeddings(s, d))
           .select(col("vec_id"), qexpr.as("q"),
             transform(col("embedding"), _.cast("double")).as("emb"))
-          .withColumn("bucket", sig)
+          .withColumn("bucket", sig(col("q")))
         val probes = e.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
             col("bucket"))
@@ -758,15 +772,7 @@ object Queries {
               col("a.doc_id") =!= col("b.doc_id"))
           .select(col("a.doc_id").as("q_id"), col("b.doc_id").as("m_id"),
             (lit(1.0) - levenshtein(col("a.k"), col("b.k")) / lit(16.0)).as("score"))
-        val wq = Window.partitionBy("q_id")
-        val wr = wq.orderBy(col("score").desc, col("m_id"))
-        val ranked = scored.withColumn("rank", row_number().over(wr))
-          .withColumn("best", max(when(col("rank") === 1, col("score"))).over(wq))
-        val cutRank = min(when(col("rank") > 1 &&
-          col("score") <= col("best") / 2.0, col("rank"))).over(wq)
-        ranked.withColumn("cut", cutRank)
-          .filter(col("cut").isNull || col("rank") < col("cut"))
-          .select(col("q_id"), col("rank"), col("m_id"), col("score"))
+        rankPerQuery(scored)(Scoring.applyCutoff(_, 2.0, 0.0f))
       },
       Some(
         s"WITH t AS (SELECT doc_id, substr($cleanSql,1,16) k, source FROM documents), " +
@@ -784,7 +790,11 @@ object Queries {
     ),
 
     // --- R4: tie-aware top-k truncation (reference lib.rs:1536-1589) —
-    //     integer DL scores create real tie groups at the k boundary ---
+    //     integer DL scores create real tie groups at the k boundary.
+    //     Not Scoring.truncateTieAware: when the crop's tie group starts
+    //     at rank 1, the reference reads an early cutoff of 0 as unset
+    //     and keeps the group's first two rows, while this query (and
+    //     its oracle) keeps through the first lower-scored row ---
     "r4_tie_topk" -> Q(
       (s, d) => {
         val t = Tables.documents(s, d)
@@ -1070,43 +1080,19 @@ object Queries {
     ),
 
     // --- Embeddings: IVF approximate nearest neighbor (the scale path
-    //     beyond sign-LSH): coarse-quantize every vector to its nearest
-    //     centroid (deterministic centroid set: vec_id % 50 == 0;
-    //     argmax via map-side-combinable max_by aggregation, NOT a
-    //     window — the all-vectors assignment never single-partitions),
-    //     then probe only the query's top-2 cells. Broadcast centroids
-    //     keep assignment shuffle-free up to ~10^5 cells. ---
+    //     beyond sign-LSH): every vector is coarse-quantized to its
+    //     nearest centroid (deterministic centroid set: vec_id % 50 == 0)
+    //     and each query probes only its top-2 cells — the shared
+    //     AnnIvf.search. Broadcast centroids keep assignment
+    //     shuffle-free up to ~10^5 cells. ---
     "emb_ann_ivf" -> Q(
       (s, d) => {
         val e = fanout(Tables.embeddings(s, d))
-          .select(col("vec_id"),
+          .select(col("vec_id").as("id"),
             transform(col("embedding"), _.cast("double")).as("emb"))
-        val cents = e.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-        val cellCos = e.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("emb"), col("c_id"),
-            round(T.cosineSim(col("emb"), col("c_emb")), 6).as("ccos"))
-        // ONE ranked pass serves both consumers: rn=1 is exactly the
-        // former max_by(struct(ccos, -c_id)) nearest-cell assignment, and
-        // rn<=2 the probe cells — sharing the window's exchange means the
-        // crossJoin+cosine subtree is computed once, not once per branch
-        // (row_number is per-vec_id, so filtering probes AFTER the window
-        // changes nothing)
-        val wq = Window.partitionBy(col("vec_id"))
-          .orderBy(col("ccos").desc, col("c_id"))
-        val ranked = cellCos.withColumn("rn", row_number().over(wq))
-        val asgn = ranked.filter(col("rn") === 1)
-          .select(col("vec_id"), col("c_id"), col("emb"))
-        val probes = ranked
-          .filter(col("vec_id") % 100 === 0 && col("rn") <= 2)
-          .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("c_id"))
-        val scored = probes.hint("SHUFFLE_HASH").join(asgn, Seq("c_id"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("n_id"),
-            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id"))
-        scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        val cents = e.filter(col("id") % 50 === 0)
+          .select(col("id").as("c_id"), col("emb").as("c_emb"))
+        AnnIvf.search(e, cents, col("id") % 100 === 0, nprobe = 2, topK = 3)
           .select(col("q_id"), col("n_id"), col("cos"))
       },
       Some(
@@ -1132,19 +1118,18 @@ object Queries {
       )
     ),
 
-    // --- ANN-IVF, trained-centroid production path: 3 Lloyd iterations
-    //     refining the modulo-50 init — INTEGER-EXACT end-to-end
-    //     (AnnIvf.trainCentroidsQuant): vectors live on the fixed-point
-    //     grid round(x*1000), per-cell means re-quantize to the grid via
+    // --- ANN-IVF, trained centroids — the AnnIvf production path:
+    //     3 Lloyd iterations of AnnIvf.trainCentroidsQuant refine the
+    //     modulo-50 init, then AnnIvf.search probes the top-2 cells.
+    //     INTEGER-EXACT end-to-end: vectors live on the fixed-point grid
+    //     round(x*1000), per-cell means re-quantize to the grid via
     //     round(sum/count) with exact integer sums, and every cosine the
     //     training or the search orders by is computed from
     //     integer-valued doubles (dots and norms < 2^53, hence exact),
     //     rounded to 6 decimals. The oracle unrolls the SAME three
     //     iterations as SQL CTEs — the centroids, assignments and top-k
-    //     are bit-identical across engines, which is what flips this
-    //     entry from rows-only to a full hash-match row. The float
-    //     production path (AnnIvf.trainCentroids, k~sqrt(N) via
-    //     kForScale) keeps its recall >=0.9 pin in AnnIvfSpec. ---
+    //     are bit-identical across engines, so the entry is a full
+    //     hash-match row. ---
     "emb_ann_ivf_trained" -> Q(
       (s, d) => {
         val e = fanout(Tables.embeddings(s, d))
@@ -1153,34 +1138,12 @@ object Queries {
               x => round(x.cast("double") * 1000).cast("long")).as("q"))
         val init = e.filter(col("id") % 50 === 0)
           .select(col("id").as("c_id"), col("q").as("c_emb"))
-        val cents = graft.operators.AnnIvf
-          .trainCentroidsQuant(e, init, iterations = 3)
-        val eD = e.select(col("id"),
-          transform(col("q"), _.cast("double")).as("emb"))
-        val cD = cents.select(col("c_id"),
-          transform(col("c_emb"), _.cast("double")).as("c_emb"))
-        val cellCos = eD.crossJoin(broadcast(cD))
-          .select(col("id"), col("emb"), col("c_id"),
-            round(T.cosineSim(col("emb"), col("c_emb")), 6).as("ccos"))
-        // shared ranked pass (see emb_ann_ivf): rn=1 == the former
-        // max_by(struct(ccos, -c_id)) assignment; one exchange, one
-        // crossJoin+cosine evaluation for both branches
-        val wq = Window.partitionBy(col("id"))
-          .orderBy(col("ccos").desc, col("c_id"))
-        val ranked = cellCos.withColumn("rn", row_number().over(wq))
-        val asgn = ranked.filter(col("rn") === 1)
-          .select(col("id"), col("c_id"), col("emb"))
-        val probes = ranked
-          .filter(col("id") % 100 === 0 && col("rn") <= 2)
-          .select(col("id").as("q_id"), col("emb").as("q_emb"), col("c_id"))
-        val scored = probes.hint("SHUFFLE_HASH").join(asgn, Seq("c_id"))
-          .filter(col("id") =!= col("q_id"))
-          .select(col("q_id"), col("id").as("n_id"),
-            round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id"))
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
+        val cents = AnnIvf.trainCentroidsQuant(e, init, iterations = 3)
+        AnnIvf.search(
+          e.select(col("id"), transform(col("q"), _.cast("double")).as("emb")),
+          cents.select(col("c_id"),
+            transform(col("c_emb"), _.cast("double")).as("c_emb")),
+          col("id") % 100 === 0, nprobe = 2, topK = 3)
           .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
       },
       Some {

@@ -153,6 +153,46 @@ object FastHash {
     out
   }
 
+  /** Deterministic integer hyperplanes for sign-LSH: `n` planes of
+    * `dims` weights in [-500, 500] from a fixed LCG of `seed`. Integer
+    * planes over an integer-quantized vector make every sign decision
+    * exact, so the same planes interpolated into SQL as literals give
+    * the same bits on any engine.
+    */
+  def intPlanes(n: Int, dims: Int, seed: Long): Array[Array[Long]] = {
+    var state = seed
+    def next(): Long = {
+      state = state * 6364136223846793005L + 1442695040888963407L
+      (state >>> 33) % 1001L - 500L
+    }
+    Array.fill(n)(Array.fill(dims)(next()))
+  }
+
+  /** Sign-LSH signatures of a quantized vector: one Long of
+    * `bitsPerBand` bits per band, bit j of band b set iff
+    * q . planes(b·bitsPerBand + j) > 0. Pure integer math.
+    */
+  def signBands(q: Array[Long], planes: Array[Array[Long]], bands: Int,
+      bitsPerBand: Int): Array[Long] = {
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var sig = 0L
+      var j = 0
+      while (j < bitsPerBand) {
+        val p = planes(b * bitsPerBand + j)
+        var dot = 0L
+        var i = 0
+        while (i < q.length) { dot += q(i) * p(i); i += 1 }
+        if (dot > 0) sig |= (1L << j)
+        j += 1
+      }
+      out(b) = sig
+      b += 1
+    }
+    out
+  }
+
   /** LSH band keys from a MinHash signature, numerically (band index
     * mixed with the band's rows — no string building): one Long per band.
     */

@@ -52,31 +52,6 @@ final class Kernels(alphabet: Alphabet) extends Serializable {
     (c: Column) => f(c)
   }
 
-  /** P2 (internal form): anagram value as canonical big-endian bytes. */
-  val anahashBytes: Column => Column = {
-    val f = udf { (s: String) =>
-      Option(s).map(x => AnaHash.toBytes(alphabet.anahash(x)))
-    }
-    (c: Column) => f(c)
-  }
-
-  /** P4: character count of the normalized form. */
-  val charCount: Column => Column = {
-    val f = udf { (s: String) =>
-      Option(s).map(x => alphabet.normKey(x).length)
-    }
-    (c: Column) => f(c)
-  }
-
-  /** P5: plain Levenshtein over normalized forms; -1 = exceeded max. */
-  def levenshtein(a: Column, b: Column, maxDistance: Int): Column = {
-    val f = udf { (x: String, y: String) =>
-      if (x == null || y == null) -1
-      else Distances.levenshtein(alphabet.normalize(x), alphabet.normalize(y), maxDistance)
-    }
-    f(a, b)
-  }
-
   /** P6: full Damerau-Levenshtein over normalized forms; -1 = exceeded
     * max. This is the dedup verification kernel: the banded
     * zero-allocation [[Distances.dlChars]] over the texts' [[normKey]]s

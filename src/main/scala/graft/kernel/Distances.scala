@@ -7,43 +7,6 @@ package graft.kernel
   */
 object Distances {
 
-  /** Plain Levenshtein with early length-band abort
-    * (reference: src/distance.rs:7-82). Returns -1 if > maxDistance.
-    */
-  def levenshtein(a: Array[Int], b: Array[Int], maxDistance: Int): Int = {
-    if (java.util.Arrays.equals(a, b)) return 0
-    val la = a.length
-    val lb = b.length
-    if (la == 0) return if (lb > maxDistance) -1 else lb
-    if (la > lb && la - lb > maxDistance) return -1
-    if (lb == 0) return if (la > maxDistance) -1 else la
-    if (lb > la && lb - la > maxDistance) return -1
-
-    val cache = new Array[Int](la)
-    var i = 0
-    while (i < la) { cache(i) = i + 1; i += 1 }
-    var result = 0
-    var ib = 0
-    while (ib < lb) {
-      val eb = b(ib)
-      result = ib
-      var distA = ib
-      var ia = 0
-      while (ia < la) {
-        val distB = if (a(ia) == eb) distA else distA + 1
-        distA = cache(ia)
-        result =
-          if (distA > result) { if (distB > result) result + 1 else distB }
-          else if (distB > distA) distA + 1
-          else distB
-        cache(ia) = result
-        ia += 1
-      }
-      ib += 1
-    }
-    if (result > maxDistance) -1 else result
-  }
-
   // -------------------------------------------------------------------
   // Zero-allocation char-based kernels: the dedup verify hot path and the
   // matcher's gather (Scoring.distanceFeatures). They operate on the

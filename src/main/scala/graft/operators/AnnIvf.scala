@@ -1,149 +1,92 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns => T}
 
 /** IVF (inverted-file) approximate nearest neighbor over an embedding
   * column — the scale path past brute-force cosine: vectors are
-  * coarse-quantized to their nearest trained centroid, and a query only
-  * scans its top-`nprobe` cells instead of the whole table.
+  * coarse-quantized to their nearest centroid, and a query only scans
+  * its top-`nprobe` cells instead of the whole table.
   *
-  * All plans are broadcast-centroid shaped: the centroid set (k cells,
-  * k ≤ ~10^5) broadcasts; assignment is a broadcast crossJoin + map-side
-  * combinable max_by aggregation — never a window over all vectors, and
-  * the only shuffles are the per-cell/per-query aggregations.
-  *
-  * Training is deterministic Lloyd's k-means, each iteration one Spark
-  * job over the (sampled) vectors:
-  *  - init: the k vectors with the smallest xxhash64(vec_id, seed) — a
-  *    seeded pseudo-random sample with no Math.random anywhere;
-  *  - assign: nearest centroid by cosine (broadcast, max_by);
-  *  - update: element-wise mean per cell via posexplode + avg (two
-  *    narrow-keyed aggregations, no collect_list of vectors);
-  *  - empty cells keep their previous centroid.
-  * The pinned-oracle `emb_ann_ivf` query keeps its deterministic modulo
-  * centroid set (DuckDB-checkable semantics); this operator is the
-  * production path whose recall is quantified by AnnIvfSpec against
-  * brute-force top-k.
+  * One path, integer-exact end to end:
+  *  - quantize: the caller puts the embeddings on the fixed-point grid
+  *    round(x*1000) (array<long>);
+  *  - init: [[seededInit]], the k vectors with the smallest
+  *    xxhash64(id, seed) — a seeded pseudo-random sample with no
+  *    Math.random anywhere (or any init the caller builds, e.g. the
+  *    oracle queries' modulo set);
+  *  - train: [[trainCentroidsQuant]], Lloyd's k-means on the grid, each
+  *    iteration a broadcast crossJoin + map-side combinable max_by
+  *    assignment and one keyed per-cell aggregation; bit-identical
+  *    centroids on any engine or partitioning;
+  *  - search: [[search]], one ranked pass over the broadcast-centroid
+  *    cosines (per-vector partitions, never a single-partition window)
+  *    serving both the cell assignment and the query probes.
+  * Cosine is scale-invariant, so the grid centroids search float
+  * vectors unchanged. The `emb_ann_ivf` and `emb_ann_ivf_trained` oracle
+  * queries run exactly this search (the latter after this trainer), and
+  * AnnIvfSpec quantifies its recall against brute-force top-k.
   */
 object AnnIvf {
 
-  /** Scale-aware cell count: k ~ sqrt(N) (see [[trainCentroids]]),
-    * clamped to [16, 10^5] — the upper bound keeps the centroid set
-    * comfortably broadcastable (10^5 x 1k-dim doubles ~ 800 MB is the
-    * ceiling; past that, shard queries by a coarse first-level quantizer
-    * instead of growing one broadcast).
+  /** Scale-aware cell count: k ~ sqrt(N), clamped to [16, 10^5] — the
+    * upper bound keeps the centroid set comfortably broadcastable
+    * (10^5 x 1k-dim doubles ~ 800 MB is the ceiling; past that, shard
+    * queries by a coarse first-level quantizer instead of growing one
+    * broadcast).
+    *
+    * Per-query scan cost is O(nprobe·N/k) rows and assignment cost
+    * O(N·k) cosines, so k ~ sqrt(N) balances them (k=1000 at 10^6 rows,
+    * k~10^5 at 10^10). Use this rather than a fixed constant: a frozen k
+    * makes query cost LINEAR in N.
     */
   def kForScale(expectedRows: Long): Int =
     math.min(100000L,
       math.max(16L, math.round(math.sqrt(expectedRows.toDouble)))).toInt
 
-  /** Nearest-centroid assignment: one row per vector with its cell id.
-    * `vectors` must have (id, emb: array<double>); `centroids`
-    * (c_id, c_emb). Ties break to the lowest c_id, matching the pinned
-    * oracle query's ordering.
+  /** Seeded init for [[trainCentroidsQuant]] over (id, q) vectors:
+    * returns (train, init). `init` is the k vectors with the smallest
+    * xxhash64(id, seed), renumbered c_id 0..k-1 in hash order, as
+    * (c_id, c_emb). `train` is `vectors`, or with `sampleN` > 0 the
+    * sampleN vectors with the smallest seeded hash (training cost is
+    * O(sample·k·iters); requires sampleN >= k, so the sample holds the
+    * same k init vectors and sampling never changes the init).
     */
-  def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val cellCos = vectors.crossJoin(broadcast(centroids))
-      .select(col("id"), col("emb"), col("c_id"),
-        T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
-    cellCos.groupBy(col("id"))
-      .agg(
-        max_by(col("c_id"), struct(col("ccos"), col("c_id") * -1)).as("c_id"),
-        first(col("emb")).as("emb"))
-  }
-
-  /** k-means training over (id, emb) vectors. Returns the centroid
-    * DataFrame (c_id: 0..k-1, c_emb). `sampleN`: train on the sampleN
-    * vectors with the smallest seeded hash instead of the full table
-    * (training cost is O(sample·k·iters); assignment of the full table
-    * happens once, at query build; requires sampleN >= k).
-    *
-    * SCALE the cell count with the corpus: per-query scan cost is
-    * O(nprobe·N/k) rows and assignment cost O(N·k) cosines, so k ~ sqrt(N)
-    * balances them (k=1000 at 10^6 rows, k~10^5 at 10^10 — still a
-    * broadcastable centroid set). Use [[kForScale]] rather than a fixed
-    * constant: a frozen k makes query cost LINEAR in N.
-    *
-    * Deterministic up to floating-point summation order: init and
-    * assignment are exact (seeded hashes, cosine comparisons on fixed
-    * inputs), but the centroid update averages doubles with avg(), whose
-    * partial-aggregate merge order Spark does not pin across shuffle
-    * fetches — same seed means same centroids only to ~1 ulp
-    * reassociation noise, not necessarily bit-identity (AnnIvfSpec
-    * compares with tolerance).
-    */
-  def trainCentroids(
+  def seededInit(
       vectors: DataFrame,
       k: Int,
-      iterations: Int = 3,
       seed: Long = 42L,
       sampleN: Int = 0
-  ): DataFrame = {
+  ): (DataFrame, DataFrame) = {
     require(sampleN == 0 || sampleN >= k,
       s"sampleN ($sampleN) must be 0 (train on all) or >= k ($k)")
-    val hashed = vectors
-      .withColumn("h", xxhash64(col("id"), lit(seed)))
-    // the seeded hash rides along so centroid init reads the (persisted)
-    // sample, never a second full-table TakeOrdered pass
-    val train0 =
-      if (sampleN > 0) hashed.orderBy(col("h")).limit(sampleN)
-      else hashed
-    val train = train0.persist()
-    try {
-      // init: k smallest seeded hashes, renumbered 0..k-1 in hash order
-      // (two-phase rank — no no-partition window even on the k-row set);
-      // for sampleN >= k these are exactly the k smallest of the full
-      // table, so sampling never changes the init
-      var cents = graft.spark.Ranks
-        .globalSortId(train.orderBy(col("h")).limit(k), col("h"), "c_id")
-        .select(col("c_id"), col("emb").as("c_emb"))
-        .persist()
-      cents.count() // materialize before the loop re-plans
-      for (_ <- 1 to iterations) {
-        val asgn = assign(train, cents)
-        // element-wise mean per cell: (c_id, pos) keyed avg, then one
-        // bounded per-cell gather (dim entries) back into an array
-        val means = asgn
-          .select(col("c_id"), posexplode(col("emb")).as(Seq("pos", "v")))
-          .groupBy(col("c_id"), col("pos"))
-          .agg(avg(col("v")).as("v"))
-          .groupBy(col("c_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("v")))),
-            e => e.getField("v")).as("c_emb"))
-        // empty cells keep their previous centroid
-        val next = cents.select(col("c_id"), col("c_emb").as("prev_emb"))
-          .join(means, Seq("c_id"), "left")
-          .select(col("c_id"), coalesce(col("c_emb"), col("prev_emb")).as("c_emb"))
-          .persist()
-        next.count()
-        cents.unpersist()
-        cents = next
-      }
-      cents
-    } finally train.unpersist()
+    val hashed = vectors.withColumn("h", xxhash64(col("id"), lit(seed)))
+    def smallest(n: Int) = hashed.orderBy(col("h")).limit(n)
+    val train = if (sampleN > 0) smallest(sampleN).drop("h") else vectors
+    // two-phase rank: no no-partition window even on the k-row set
+    val init = graft.spark.Ranks.globalSortId(smallest(k), col("h"), "c_id")
+      .select(col("c_id"), col("q").as("c_emb"))
+    (train, init)
   }
 
   /** Integer-exact Lloyd training on the fixed-point grid: `vectors` is
     * (id, q: array<long>) — embeddings quantized round(x*scale) — and
-    * `init` provides the starting centroids (c_id, c_emb: array<long>).
-    * Each iteration assigns by round(cosine, 6) (ties to the lowest
-    * c_id) and re-quantizes the per-cell mean back to the grid via
-    * round(sum/count); the sums are exact integer arithmetic (longs of
-    * magnitude ~scale, partial double sums stay below 2^53, hence exact
-    * in ANY accumulation order), so the trained centroids are
-    * BIT-IDENTICAL across engines, partitionings and hardware — unlike
-    * [[trainCentroids]], whose float avg() is deterministic only to ~1
-    * ulp. This is what lets the `emb_ann_ivf_trained` query carry a
+    * `init` provides the starting centroids (c_id, c_emb: array<long>),
+    * e.g. from [[seededInit]]. Each iteration assigns by round(cosine, 6)
+    * (ties to the lowest c_id) and re-quantizes the per-cell mean back
+    * to the grid via round(sum/count); the sums are exact integer
+    * arithmetic (longs of magnitude ~scale, partial double sums stay
+    * below 2^53, hence exact in ANY accumulation order), so the trained
+    * centroids are BIT-IDENTICAL across engines, partitionings and
+    * hardware. This is what lets the `emb_ann_ivf_trained` query carry a
     * full DuckDB oracle (the oracle unrolls the same iterations in SQL).
-    * Empty cells keep their previous centroid, as in [[trainCentroids]].
+    * Empty cells keep their previous centroid.
     *
-    * Same scale shape as the float path: broadcast centroids, max_by
-    * assignment, two keyed aggregations per iteration — the grid only
-    * changes the element type, not the plan.
+    * Assignment is max_by, not a window: training needs only the
+    * nearest cell, and the map-side combinable aggregation pays no sort.
     */
   def trainCentroidsQuant(
       vectors: DataFrame,
@@ -201,33 +144,42 @@ object AnnIvf {
     cents
   }
 
-  /** ANN top-k: for each query vector, the k nearest non-self vectors by
-    * cosine among the query's top-`nprobe` cells. `vectors` and `queries`
-    * both (id, emb); output (q_id, n_id, cos, rank).
+  /** IVF probe search: for each query vector, the `topK` nearest
+    * non-self vectors among its top-`nprobe` cells. `vectors` is
+    * (id, emb: array<double>), `centroids` (c_id, c_emb: array<double>);
+    * `isQuery` (over `id`) selects the query vectors. Output
+    * (q_id, n_id, cos, rank); both the cell and the result order are by
+    * round(cosine, 6) descending, ties to the lowest id.
+    *
+    * ONE ranked pass per vector over the broadcast-centroid cosines
+    * serves both consumers: rn = 1 is the nearest-cell assignment (the
+    * same cell as [[trainCentroidsQuant]]'s max_by), and the query
+    * vectors' rn <= nprobe rows are their probe cells. Sharing the
+    * window's exchange computes the crossJoin + cosine subtree once, not
+    * once per branch.
     */
-  def queryTopK(
+  def search(
       vectors: DataFrame,
-      queries: DataFrame,
       centroids: DataFrame,
-      topK: Int = 3,
-      nprobe: Int = 2
+      isQuery: Column,
+      nprobe: Int,
+      topK: Int
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val asgn = assign(vectors, centroids)
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .select(col("id").as("q_id"), col("emb").as("q_emb"), col("c_id"),
-        T.cosineSim(col("emb"), col("c_emb")).as("ccos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("ccos").desc, col("c_id"))))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("c_id"))
-    val scored = qCells.join(asgn, Seq("c_id"))
+    val cellCos = vectors.crossJoin(broadcast(centroids))
+      .select(col("id"), col("emb"), col("c_id"),
+        round(T.cosineSim(col("emb"), col("c_emb")), 6).as("ccos"))
+    val ranked = cellCos.withColumn("rn", row_number().over(
+      Window.partitionBy(col("id")).orderBy(col("ccos").desc, col("c_id"))))
+    val asgn = ranked.filter(col("rn") === 1)
+      .select(col("id"), col("c_id"), col("emb"))
+    val probes = ranked.filter(isQuery && col("rn") <= nprobe)
+      .select(col("id").as("q_id"), col("emb").as("q_emb"), col("c_id"))
+    probes.hint("SHUFFLE_HASH").join(asgn, Seq("c_id"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        T.cosineSim(col("q_emb"), col("emb")).as("cos"))
-    scored
+        round(T.cosineSim(col("q_emb"), col("emb")), 6).as("cos"))
       .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))))
+        Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))))
       .filter(col("rank") <= topK)
   }
 
@@ -239,7 +191,6 @@ object AnnIvf {
       queries: DataFrame,
       topK: Int = 3
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     queries.select(col("id").as("q_id"), col("emb").as("q_emb"))
       .crossJoin(vectors.select(col("id").as("n_id"), col("emb")))
       .filter(col("n_id") =!= col("q_id"))

@@ -127,52 +127,19 @@ object AudioDedup {
     */
   val verifyBuildRows: Long = 125000L
 
-  /** Deterministic integer hyperplanes for the profile sign-LSH —
-    * `profileBands·profileBits` planes of `nBands` weights in
-    * [-500, 500] from a fixed LCG (the [[EmbDedup.planes]]
-    * construction, seeded independently).
-    */
-  def profilePlanes(cfg: AudioDedupConfig): Array[Array[Long]] = {
-    var state = cfg.planeSeed
-    def next(): Long = {
-      state = state * 6364136223846793005L + 1442695040888963407L
-      (state >>> 33) % 1001L - 500L
-    }
-    Array.fill(cfg.profileBands * cfg.profileBits)(
-      Array.fill(cfg.nBands)(next()))
-  }
-
   /** Profile sign-LSH band keys: quantize the centered profile to the
     * integer grid (round(x·quantScale) — exact sign decisions on any
-    * engine or partitioning), one key per band of `profileBits` plane
-    * signs; keys are salted into a namespace distinct from the
-    * word-minhash family's.
+    * engine or partitioning), one key per band of `profileBits` signs
+    * of the integer planes ([[FastHash.intPlanes]] of `planeSeed`);
+    * keys are salted into a namespace distinct from the word-minhash
+    * family's.
     */
   private def profileKeys(profile: Array[Double], planes: Array[Array[Long]],
       cfg: AudioDedupConfig): Array[Long] = {
-    val q = new Array[Long](cfg.nBands)
-    var i = 0
-    while (i < cfg.nBands) {
-      q(i) = math.round(profile(i) * cfg.quantScale)
-      i += 1
-    }
-    val out = new Array[Long](cfg.profileBands)
-    var b = 0
-    while (b < cfg.profileBands) {
-      var sig = 0L
-      var j = 0
-      while (j < cfg.profileBits) {
-        val p = planes(b * cfg.profileBits + j)
-        var dot = 0L
-        var d = 0
-        while (d < cfg.nBands) { dot += q(d) * p(d); d += 1 }
-        if (dot > 0) sig |= (1L << j)
-        j += 1
-      }
-      out(b) = FastHash.mix64(FastHash.mix64(0x5052_4f46L + b) ^ sig)
-      b += 1
-    }
-    out
+    val q = profile.map(x => math.round(x * cfg.quantScale))
+    val sigs = FastHash.signBands(q, planes, cfg.profileBands, cfg.profileBits)
+    Array.tabulate(cfg.profileBands)(b =>
+      FastHash.mix64(FastHash.mix64(0x5052_4f46L + b) ^ sigs(b)))
   }
 
   /** bytes → struct(fp words, LSH band keys — both families), ONE
@@ -182,7 +149,8 @@ object AudioDedup {
     */
   def sketchUdf(cfg: AudioDedupConfig)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val planes = profilePlanes(cfg)
+    val planes = FastHash.intPlanes(cfg.profileBands * cfg.profileBits,
+      cfg.nBands, cfg.planeSeed)
     udf { (bytes: Array[Byte]) =>
       try {
         val (pcm, sr) = Wav.decode(bytes)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.FastHash
 import graft.spark.Checkpoints
 import graft.spark.Checkpoints.{countedOrZero, observeCount}
 
@@ -103,14 +104,8 @@ object EmbDedup {
   /** Deterministic integer hyperplanes: `bands*bitsPerBand` planes of
     * `dims` weights in [-500, 500], from a fixed LCG of the config seed.
     */
-  def planes(cfg: EmbDedupConfig): Array[Array[Long]] = {
-    var state = cfg.seed
-    def next(): Long = {
-      state = state * 6364136223846793005L + 1442695040888963407L
-      (state >>> 33) % 1001L - 500L
-    }
-    Array.fill(cfg.bands * cfg.bitsPerBand)(Array.fill(cfg.dims)(next()))
-  }
+  def planes(cfg: EmbDedupConfig): Array[Array[Long]] =
+    FastHash.intPlanes(cfg.bands * cfg.bitsPerBand, cfg.dims, cfg.seed)
 
   /** Fixed-point quantization of a float/double embedding column to the
     * integer grid the plane dots run on. round() half-away-from-zero —
@@ -138,23 +133,7 @@ object EmbDedup {
       // embeddings are filtered upstream in signed
       require(qa.length == dims,
         s"embedding length ${qa.length} != configured dims $dims")
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var sig = 0L
-        var j = 0
-        while (j < bits) {
-          val p = ps(b * bits + j)
-          var dot = 0L
-          var i = 0
-          while (i < dims) { dot += qa(i) * p(i); i += 1 }
-          if (dot > 0) sig |= (1L << j)
-          j += 1
-        }
-        out(b) = sig
-        b += 1
-      }
-      out
+      FastHash.signBands(qa, ps, bands, bits)
     }
   }
 

@@ -222,14 +222,18 @@ object VariantMatcher {
       case StopCriterion.Exhaustive => lit(false)
     }
 
-    // --- verify (J4): the distance features within the edit bound ---
+    // --- verify (J4): the distance features within the edit bound.
+    // Marked nondeterministic so the optimizer keeps the null filter
+    // above the projection that computes them: as a deterministic UDF the
+    // filter was pushed into the charcount join's condition and the
+    // features ran twice per surviving row ---
     val distUdf = udf {
       (qnorm: String, q: String, cnorm: String, ctext: String) =>
         val maxEdit = params.maxEditDistance
           .resolve(qnorm.length, DistanceThreshold.MaxEditDistance)
         val sameCase = Scoring.sameCase(Scoring.caseClass(q), Scoring.caseClass(ctext), weights)
         Scoring.distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
-    }
+    }.asNondeterministic()
     val verified = joined
       .withColumn("exact", exact)
       .withColumn("dist", distUdf(col("qnorm"), col("query"), col("norm"), col("text")))

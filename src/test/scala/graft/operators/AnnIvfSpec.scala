@@ -1,13 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 
-/** Trained-IVF recall quantification (the one number the embedding path
-  * was missing): on clustered synthetic embeddings, k-means-trained
-  * centroids + top-2-cell probing must recover ≥0.9 of the brute-force
-  * cosine top-3 neighbor sets.
+/** Trained-IVF recall quantification on the production path (grid
+  * quantization, seeded init, integer Lloyd, [[AnnIvf.search]]): on
+  * clustered synthetic embeddings, trained centroids + top-2-cell
+  * probing must recover ≥0.9 of the brute-force cosine top-3 neighbor
+  * sets.
   */
 class AnnIvfSpec extends SparkSpecBase {
 
@@ -29,70 +31,73 @@ class AnnIvfSpec extends SparkSpecBase {
     }
   }
 
+  /** The production path over float (id, emb) vectors: quantize to the
+    * round(x*1000) grid, seeded init, integer Lloyd. Returns the trained
+    * grid centroids (c_id, c_emb: array<long>), still persisted.
+    */
+  private def train(vectors: DataFrame, k: Int, iterations: Int,
+      seed: Long, sampleN: Int = 0): DataFrame = {
+    val q = vectors.select(col("id"),
+      transform(col("emb"), x => round(x * 1000).cast("long")).as("q"))
+    val (sample, init) = AnnIvf.seededInit(q, k, seed, sampleN)
+    AnnIvf.trainCentroidsQuant(sample, init, iterations)
+  }
+
+  /** recall@3 of the IVF search (grid centroids over the float vectors)
+    * against brute-force cosine top-3, for the queries `isQuery` selects.
+    */
+  private def recall(vectors: DataFrame, cents: DataFrame, isQuery: Column,
+      nprobe: Int): Double = {
+    import spark.implicits._
+    val cd = cents.select(col("c_id"),
+      transform(col("c_emb"), _.cast("double")).as("c_emb"))
+    val ivf = AnnIvf.search(vectors, cd, isQuery, nprobe, topK = 3)
+      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+    val brute = AnnIvf.bruteTopK(vectors, vectors.filter(isQuery), topK = 3)
+      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+    ivf.intersect(brute).size.toDouble / brute.size
+  }
+
   test("trained IVF recall@3 >= 0.9 vs brute force on clustered embeddings") {
     import spark.implicits._
     val data = clusteredVectors(nClusters = 10, perCluster = 60, dim = 16)
     val vectors = data.toDF("id", "emb")
-    val queries = vectors.filter(col("id") % 7 === 0) // ~86 queries
-    val cents = AnnIvf.trainCentroids(vectors, k = 10,
-      iterations = 3, seed = 42L)
+    val cents = train(vectors, k = 10, iterations = 3, seed = 42L)
     assert(cents.count() == 10)
-    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
-      topK = 3, nprobe = 2)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val recall = ivf.intersect(brute).size.toDouble / brute.size
-    info(f"recall@3 = $recall%.3f (${ivf.intersect(brute).size}/${brute.size})")
-    assert(recall >= 0.9, f"recall@3 $recall%.3f below 0.9")
+    val r = recall(vectors, cents, col("id") % 7 === 0, nprobe = 2) // ~86 queries
+    info(f"recall@3 = $r%.3f")
+    assert(r >= 0.9, f"recall@3 $r%.3f below 0.9")
     cents.unpersist()
   }
 
-  test("training is reproducible: same seed, same centroids (to fp tolerance)") {
+  test("training is reproducible: same seed, same centroids") {
     import spark.implicits._
     val data = clusteredVectors(nClusters = 4, perCluster = 20, dim = 8)
     val vectors = data.toDF("id", "emb")
     def centroidRows() = {
-      val c = AnnIvf.trainCentroids(vectors, k = 4, iterations = 2,
-        seed = 7L)
-      val rows = c.orderBy("c_id").as[(Long, Seq[Double])].collect().toSeq
+      val c = train(vectors, k = 4, iterations = 2, seed = 7L)
+      val rows = c.orderBy("c_id").as[(Long, Seq[Long])].collect().toSeq
       c.unpersist()
       rows
     }
-    // avg() partial-merge order is not pinned across shuffle fetches, so
-    // same-seed runs agree only up to float reassociation (~1 ulp); the
-    // operator scaladoc states exactly this bound
-    val (a, b) = (centroidRows(), centroidRows())
-    assert(a.map(_._1) == b.map(_._1))
-    a.zip(b).foreach { case ((_, ea), (_, eb)) =>
-      ea.zip(eb).foreach { case (x, y) =>
-        assert(math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(x)),
-          s"centroid drift beyond fp tolerance: $x vs $y")
-      }
-    }
+    // seeded init and integer Lloyd: exact, not up to float reassociation
+    assert(centroidRows() == centroidRows())
   }
 
   test("non-default k via kForScale: more cells, recall holds at higher nprobe share") {
     import spark.implicits._
     val data = clusteredVectors(nClusters = 10, perCluster = 60, dim = 16)
     val vectors = data.toDF("id", "emb")
-    val queries = vectors.filter(col("id") % 13 === 0)
     val k = AnnIvf.kForScale(data.size) // 600 rows -> 24 cells (not the default 10/12)
     assert(k == 24)
-    val cents = AnnIvf.trainCentroids(vectors, k = k,
-      iterations = 2, seed = 42L)
+    val cents = train(vectors, k = k, iterations = 2, seed = 42L)
     assert(cents.count() == k)
     // finer cells need proportionally more probes for the same recall:
-    // nprobe scales with k (here 4/24 ~ the 2/10 cell share of the
+    // nprobe scales with k (here 5/24 ~ the 2/10 cell share of the
     // default test)
-    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
-      topK = 3, nprobe = 5)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val recall = ivf.intersect(brute).size.toDouble / brute.size
-    info(f"k=$k recall@3 = $recall%.3f")
-    assert(recall >= 0.85, f"recall@3 $recall%.3f below 0.85 at k=$k")
+    val r = recall(vectors, cents, col("id") % 13 === 0, nprobe = 5)
+    info(f"k=$k recall@3 = $r%.3f")
+    assert(r >= 0.85, f"recall@3 $r%.3f below 0.85 at k=$k")
     cents.unpersist()
     assert(AnnIvf.kForScale(1000000L) == 1000)
     assert(AnnIvf.kForScale(100L) == 16)
@@ -114,9 +119,9 @@ class AnnIvfSpec extends SparkSpecBase {
       c.unpersist()
       rows
     }
-    // integer grid + exact integer sums: unlike the float path's ~1 ulp
-    // tolerance, ANY partitioning must give the same longs — this is the
-    // property the emb_ann_ivf_trained DuckDB oracle relies on
+    // integer grid + exact integer sums: ANY partitioning must give the
+    // same longs — this is the property the emb_ann_ivf_trained DuckDB
+    // oracle relies on
     val (a, b) = (centroidRows(1), centroidRows(7))
     assert(a == b, "quantized centroids differ across partitionings")
     // and the centroids moved off the init (training actually trains)
@@ -128,17 +133,10 @@ class AnnIvfSpec extends SparkSpecBase {
     import spark.implicits._
     val data = clusteredVectors(nClusters = 5, perCluster = 40, dim = 8)
     val vectors = data.toDF("id", "emb")
-    val queries = vectors.filter(col("id") % 11 === 0)
-    val cents = AnnIvf.trainCentroids(vectors, k = 5,
-      iterations = 2, seed = 42L, sampleN = 100)
-    val ivf = AnnIvf.queryTopK(vectors, queries, cents,
-      topK = 3, nprobe = 2)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val brute = AnnIvf.bruteTopK(vectors, queries, topK = 3)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val recall = ivf.intersect(brute).size.toDouble / brute.size
-    info(f"sampled recall@3 = $recall%.3f")
-    assert(recall >= 0.8, f"sampled recall@3 $recall%.3f below 0.8")
+    val cents = train(vectors, k = 5, iterations = 2, seed = 42L, sampleN = 100)
+    val r = recall(vectors, cents, col("id") % 11 === 0, nprobe = 2)
+    info(f"sampled recall@3 = $r%.3f")
+    assert(r >= 0.8, f"sampled recall@3 $r%.3f below 0.8")
     cents.unpersist()
   }
 }

@@ -158,6 +158,14 @@ class VariantMatcherSpec extends SparkSpecBase {
       val p = SearchParameters(maxAnagramDistance = dist, stopCriterion = stop)
       assertJoinParity(m, qs, p, s"distance=$dist stop=$stop")
     }
+    // crops of 1 and 2 fall inside tie groups; without frequencies a
+    // distScore tie is a full tie, so the crop keeps the first rows of
+    // the gather order and these pin the order the join ranks in
+    val noFreq = VariantMatcher.buildModel(Alphabet.simpleLatin, lex.map(e => (e._1, None)))
+    for (mm <- Seq(1, 2); dist <- Seq(DistanceThreshold.Absolute(2), DistanceThreshold.Ratio(0.5f))) {
+      val p = SearchParameters(maxAnagramDistance = dist, maxMatches = mm)
+      assertJoinParity(noFreq, qs, p, s"no freq distance=$dist maxMatches=$mm")
+    }
   }
 
   test("huys parity through the distributed path") {
