@@ -111,27 +111,6 @@ object Queries {
       "ON x.band = y.band AND x.bits = y.bits AND x.vec_id < y.vec_id)"
   }
 
-  /** Each q_id's (m_id, score) rows, sorted by (score desc, m_id),
-    * through the production ranking rule `rule` — a [[Scoring]] routine
-    * at freqWeight 0, so the score is the distScore. Returns
-    * (q_id, rank: int, m_id, score: double).
-    */
-  private def rankPerQuery(scored: DataFrame)(
-      rule: Vector[VariantResult] => Vector[VariantResult]): DataFrame = {
-    val ranked = udf { (rows: Seq[Row]) =>
-      val sorted = rows.map(r => VariantResult(r.getLong(0), r.getDouble(1), 0.0))
-        .sortWith((a, b) => a.distScore > b.distScore ||
-          (a.distScore == b.distScore && a.vocabId < b.vocabId))
-      rule(sorted.toVector).map(r => (r.vocabId, r.distScore))
-    }
-    scored.groupBy(col("q_id"))
-      .agg(ranked(collect_list(struct(col("m_id"),
-        col("score").cast("double")))).as("r"))
-      .select(col("q_id"), posexplode(col("r")))
-      .select(col("q_id"), (col("pos") + 1).as("rank"),
-        col("col._1").as("m_id"), col("col._2").as("score"))
-  }
-
   // canonical cleaned text key shared by the dedup queries
   private def cleanK(len: Int): Column =
     substring(T.cleanText(col("text")), 1, len)
@@ -772,7 +751,19 @@ object Queries {
               col("a.doc_id") =!= col("b.doc_id"))
           .select(col("a.doc_id").as("q_id"), col("b.doc_id").as("m_id"),
             (lit(1.0) - levenshtein(col("a.k"), col("b.k")) / lit(16.0)).as("score"))
-        rankPerQuery(scored)(Scoring.applyCutoff(_, 2.0, 0.0f))
+        // each q_id's rows, sorted by (score desc, m_id), through the
+        // production cutoff rule at freqWeight 0 (score = distScore)
+        val cutoff = udf { (rows: Seq[Row]) =>
+          val sorted = rows.map(r => VariantResult(r.getLong(0), r.getDouble(1), 0.0))
+            .sortWith((a, b) => a.distScore > b.distScore ||
+              (a.distScore == b.distScore && a.vocabId < b.vocabId))
+          Scoring.applyCutoff(sorted.toVector, 2.0, 0.0f).map(r => (r.vocabId, r.distScore))
+        }
+        scored.groupBy(col("q_id"))
+          .agg(cutoff(collect_list(struct(col("m_id"), col("score")))).as("r"))
+          .select(col("q_id"), posexplode(col("r")))
+          .select(col("q_id"), (col("pos") + 1).as("rank"),
+            col("col._1").as("m_id"), col("col._2").as("score"))
       },
       Some(
         s"WITH t AS (SELECT doc_id, substr($cleanSql,1,16) k, source FROM documents), " +

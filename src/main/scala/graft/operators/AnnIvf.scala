@@ -51,9 +51,11 @@ object AnnIvf {
     * returns (train, init). `init` is the k vectors with the smallest
     * xxhash64(id, seed), renumbered c_id 0..k-1 in hash order, as
     * (c_id, c_emb). `train` is `vectors`, or with `sampleN` > 0 the
-    * sampleN vectors with the smallest seeded hash (training cost is
-    * O(sample·k·iters); requires sampleN >= k, so the sample holds the
-    * same k init vectors and sampling never changes the init).
+    * sampleN vectors with the smallest seeded hash, persisted so that
+    * each Lloyd iteration reads the sample, not a full-table top-sampleN
+    * pass (training cost is O(sample·k·iters)); unpersist it after
+    * training. Requires sampleN >= k, so the sample holds the same k
+    * init vectors and sampling never changes the init.
     */
   def seededInit(
       vectors: DataFrame,
@@ -63,11 +65,13 @@ object AnnIvf {
   ): (DataFrame, DataFrame) = {
     require(sampleN == 0 || sampleN >= k,
       s"sampleN ($sampleN) must be 0 (train on all) or >= k ($k)")
-    val hashed = vectors.withColumn("h", xxhash64(col("id"), lit(seed)))
-    def smallest(n: Int) = hashed.orderBy(col("h")).limit(n)
-    val train = if (sampleN > 0) smallest(sampleN).drop("h") else vectors
-    // two-phase rank: no no-partition window even on the k-row set
-    val init = graft.spark.Ranks.globalSortId(smallest(k), col("h"), "c_id")
+    def smallest(df: DataFrame, n: Int) =
+      df.withColumn("h", xxhash64(col("id"), lit(seed))).orderBy(col("h")).limit(n)
+    val train =
+      if (sampleN > 0) smallest(vectors, sampleN).drop("h").persist() else vectors
+    // init reads the sample; two-phase rank: no no-partition window even
+    // on the k-row set
+    val init = graft.spark.Ranks.globalSortId(smallest(train, k), col("h"), "c_id")
       .select(col("c_id"), col("q").as("c_emb"))
     (train, init)
   }

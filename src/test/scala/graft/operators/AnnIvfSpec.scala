@@ -40,7 +40,8 @@ class AnnIvfSpec extends SparkSpecBase {
     val q = vectors.select(col("id"),
       transform(col("emb"), x => round(x * 1000).cast("long")).as("q"))
     val (sample, init) = AnnIvf.seededInit(q, k, seed, sampleN)
-    AnnIvf.trainCentroidsQuant(sample, init, iterations)
+    try AnnIvf.trainCentroidsQuant(sample, init, iterations)
+    finally sample.unpersist()
   }
 
   /** recall@3 of the IVF search (grid centroids over the float vectors)
