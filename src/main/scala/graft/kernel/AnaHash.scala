@@ -70,11 +70,14 @@ object AnaHash {
     if (big != null) big else BigInteger.valueOf(v)
   }
 
-  /** The nearest-anagram rule shared by both matcher strategies: the
-    * miss budget D(c) of target charcount c for a focus (the query's
-    * normalized form) of `f` letters at anagram distance `maxDistance`,
-    * or -1 when nothing at c is a candidate. A value v at charcount c is
-    * a candidate iff [[misses]](focus, v) <= D(c).
+  /** The nearest-anagram rule of the one matcher kernel
+    * (`LocalVariantModel.findNearestAnahashes`, which both matcher
+    * strategies run): the miss budget D(c) of target charcount c for a
+    * focus (the query's normalized form) of `f` letters at anagram
+    * distance `maxDistance`, or -1 when nothing at c is a candidate. A
+    * value v at charcount c is a candidate iff it misses at most D(c) of
+    * the focus's letters, a miss being a focus letter occurrence v lacks:
+    * Σ_class max(0, focus_class - v_class).
     *
     * Why (reference: src/lib.rs:1143-1308): the reference probes the
     * index with each non-empty sub-bag S of the focus that has d <=
@@ -94,22 +97,6 @@ object AnaHash {
     while (d >= 0 && !((d == 0 || d < f) && c - f + d >= 0 && c - f + 2 * d <= maxDistance))
       d -= 1
     d
-  }
-
-  /** The letters of the focus that `value` lacks, Σ_class
-    * max(0, focus_class - value_class), both given as normalized-form
-    * keys (see [[valueOf]] for the classes, `unk` the alphabet's size).
-    */
-  def misses(focus: String, value: String, unk: Int): Int = {
-    val counts = new Array[Int](unk + 1)
-    var i = 0
-    while (i < focus.length) { counts(math.min(focus.charAt(i) - 33, unk)) += 1; i += 1 }
-    i = 0
-    while (i < value.length) { counts(math.min(value.charAt(i) - 33, unk)) -= 1; i += 1 }
-    var n = 0
-    i = 0
-    while (i <= unk) { if (counts(i) > 0) n += counts(i); i += 1 }
-    n
   }
 
   /** Canonical unsigned big-endian bytes (no redundant leading zero) for

@@ -42,13 +42,16 @@ final case class VocabEntry(
   *
   *  1. the parity anchor: ScalaTest asserts its outputs against the
   *     reference's own unit-test expected values (tests/main.rs 04xx/08xx);
-  *  2. the broadcastable kernel: at reference scale (lexicons ≤ a few 100k
-  *     rows) the whole index fits comfortably in executor memory, so the
-  *     Spark matcher broadcasts one of these and maps partitions — zero
-  *     shuffle in the verify stage, which is what makes the throughput
-  *     scale near-linearly with cores. The declarative join-based plan in
-  *     graft.operators.VariantMatcher covers the huge-lexicon case and is
-  *     tested equal to this one.
+  *  2. the one matcher kernel of both Spark strategies
+  *     (graft.operators.VariantMatcher): at reference scale (lexicons ≤ a
+  *     few 100k rows) the whole index fits comfortably in executor
+  *     memory, so the broadcast strategy ships one of these and maps
+  *     partitions — zero shuffle in the verify stage, which is what makes
+  *     the throughput scale near-linearly with cores. For a lexicon too
+  *     large to broadcast, the shuffled strategy builds one per charcount
+  *     slice of the lexicon ([[LocalVariantModel.ofTexts]]) and runs the
+  *     same nearest search and gather ([[nearInstances]]) in the slice's
+  *     task; it is tested equal to this one.
   *
   * Instances are immutable after build(); safe to broadcast. Java
   * serialization (what a broadcast uses) ships the flat columns of
@@ -561,13 +564,22 @@ final class LocalVariantModel(
   def findVariants(input: String, params: SearchParameters): Vector[VariantResult] = {
     val key = alphabet.normKey(input)
     if (key.isEmpty) return Vector.empty
+    scoreAndRank(nearInstances(key, input, params), key.length, params, input)
+  }
+
+  /** The verified instances near the query `input`, whose normalized form
+    * has the key `key`: [[findNearestAnahashes]] at the resolved anagram
+    * distance, then [[gatherInstances]] at the resolved edit distance
+    * (reference: src/lib.rs:1143-1402), in gather order.
+    */
+  def nearInstances(key: String, input: String,
+      params: SearchParameters): Vector[(Long, Distance)] = {
     val maxAna = params.maxAnagramDistance
       .resolve(key.length, DistanceThreshold.MaxAnagramDistance)
     val nearest = findNearestAnahashes(key, maxAna, params.stopCriterion)
     val maxEdit = params.maxEditDistance
       .resolve(key.length, DistanceThreshold.MaxEditDistance)
-    val instances = gatherInstances(nearest, key, input, maxEdit)
-    scoreAndRank(instances, key.length, params, input)
+    gatherInstances(nearest, key, input, maxEdit)
   }
 
   /** Resolve a result id back to its text. */
@@ -600,17 +612,7 @@ final class LocalVariantModel(
       strict: Boolean = true,
       autoBuild: Boolean = true
   ): Int = {
-    val allVariants: Seq[(String, VariantResult)] = inputs.flatMap { line =>
-      if (strict) findVariants(line, params).map(r => (line, r))
-      else
-        SearchEngine.findAllMatches(this, line, params).flatMap { m =>
-          for {
-            sel <- m.selected
-            vs <- m.variants
-            r <- vs.lift(sel)
-          } yield (m.text, r)
-        }
-    }
+    val allVariants = inputs.flatMap(learnMatches(_, params, strict))
     var count = 0
     var prev: Option[String] = None
     for ((inputStr, result) <- allVariants) {
@@ -631,6 +633,23 @@ final class LocalVariantModel(
     if (autoBuild) build()
     count
   }
+
+  /** The (input, match) pairs one line contributes to a learn iteration
+    * (reference: learn_variants src/lib.rs:1062-1139): strict, the line's own
+    * [[findVariants]]; otherwise the selected variant of each match of
+    * search mode ([[SearchEngine.findAllMatches]]) under its matched text.
+    */
+  def learnMatches(line: String, params: SearchParameters,
+      strict: Boolean): Seq[(String, VariantResult)] =
+    if (strict) findVariants(line, params).map(r => (line, r))
+    else
+      SearchEngine.findAllMatches(this, line, params).flatMap { m =>
+        for {
+          sel <- m.selected
+          vs <- m.variants
+          r <- vs.lift(sel)
+        } yield (m.text, r)
+      }
 
   /** Apply a pre-reduced learn delta — the driver-side half of the
     * distributed learn iteration (graft.operators.DistributedLearn).
@@ -714,6 +733,23 @@ object LocalVariantModel {
     */
   final case class Edge(targetId: Long, targetText: String, targetFrequency: Double,
       score: Double)
+
+  /** A model over the lexicon `texts` as given, for the nearest search and
+    * the gather ([[LocalVariantModel#nearInstances]],
+    * [[LocalVariantModel#anagramInstances]]): entry i, vocab id i, is
+    * `texts(i)`, indexed. Unlike `add`, equal texts stay separate entries.
+    * `VariantMatcher.matchJoin` builds one per charcount slice of its
+    * lexicon.
+    */
+  def ofTexts(alphabet: Alphabet, weights: Weights, texts: Seq[String]): LocalVariantModel = {
+    val m = new LocalVariantModel(alphabet, weights)
+    // no special tokens and no encoder: the ids are positions in `texts`
+    m.entries.clear()
+    m.encoder.clear()
+    for ((t, i) <- texts.iterator.zipWithIndex)
+      m.entries += VocabEntry(i, t, alphabet.normKey(t), 1L, transparent = false, Nil)
+    m.build()
+  }
 
   /** The text of every id a ranking of `candidates` can return. */
   def texts(candidates: Seq[Candidate]): Map[Long, String] =

@@ -200,7 +200,6 @@ object ConnectedComponents {
       maxIterations: Int = 50,
       withAllNodes: Boolean = true,
       localKernelMaxEdges: Long = defaultLocalKernelMaxEdges,
-      resumeKey: Option[String] = None,
       edgesMaterialized: Boolean = false
   ): Checkpoints.Cut = {
     val inputCut: Option[Checkpoints.Cut] =
@@ -210,7 +209,7 @@ object ConnectedComponents {
       val input = inputCut.map(_.df).getOrElse(edges)
       val (result, ownsInput) = runCutOnEdges(spark, input, input.count(),
         srcCol, dstCol, maxIterations, withAllNodes, localKernelMaxEdges,
-        resumeKey, inputCut)
+        inputCut)
       transferred = ownsInput
       result
     } finally if (!transferred) inputCut.foreach(_.release())
@@ -234,7 +233,7 @@ object ConnectedComponents {
     // withAllNodes=false: the left join supplies the full id universe
     val (cc, ownsEdges) = runCutOnEdges(spark, edges.df, nEdges, srcCol,
       dstCol, maxIterations = 50, withAllNodes = false,
-      defaultLocalKernelMaxEdges, resumeKey = None, inputOwner = Some(edges))
+      defaultLocalKernelMaxEdges, inputOwner = Some(edges))
     // SHUFFLE_HASH: both sides are stat-less checkpoints and would plan
     // as a SortMergeJoin — at 3M rows that is two full sorts for a join a
     // hash build does sort-free
@@ -267,7 +266,6 @@ object ConnectedComponents {
       maxIterations: Int,
       withAllNodes: Boolean,
       localKernelMaxEdges: Long,
-      resumeKey: Option[String],
       inputOwner: Option[Checkpoints.Cut]
   ): (Checkpoints.Cut, Boolean) = {
 
@@ -397,22 +395,6 @@ object ConnectedComponents {
       }
     }
 
-    // Mid-loop resume (reliable mode + resumeKey): each round's edge set
-    // lands as parquet under <checkpointDir>/cc-<key>/round-N before the
-    // loop advances; a driver restart with the same key seeds the loop
-    // from the highest complete round instead of round 1 — a 10^12-row
-    // CC that dies in round 7 of 9 replays 2 rounds, not 9. (Executor
-    // loss WITHIN a run is already covered by the reliable checkpoint
-    // itself; this covers whole-driver restarts.)
-    val roundDir: Option[String] = resumeKey.flatMap(key =>
-      spark.conf.getOption("spark.graft.checkpointDir")
-        .map(d => s"$d/cc-$key"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    def roundPath(i: Int) = s"${roundDir.get}/round-$i"
-    def roundComplete(i: Int): Boolean = roundDir.isDefined &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"${roundPath(i)}/_SUCCESS"))
-
     // Round 1 consumes the input edges directly (lazily oriented: callers
     // hand a checkpointed edge table, and re-running a narrow orient per
     // read is cheaper than a dedicated distinct+materialize init pass).
@@ -421,15 +403,6 @@ object ConnectedComponents {
     var e: Checkpoints.Cut = null
     var prevChecksum: Option[(Long, Long)] = None
     var iteration = 0
-    if (roundDir.isDefined) {
-      while (roundComplete(iteration + 1)) iteration += 1
-      if (iteration > 0) {
-        val (resumed, sum) =
-          checksummedCut(spark.read.parquet(roundPath(iteration)))
-        e = resumed
-        prevChecksum = Some(sum)
-      }
-    }
     var converged = false
     while (!converged && iteration < maxIterations) {
       // one materialized round per convergence check: `round` reads its
@@ -447,8 +420,6 @@ object ConnectedComponents {
       if (e != null) e.release()
       e = next
       iteration += 1
-      if (roundDir.isDefined && !roundComplete(iteration))
-        next.df.write.mode("overwrite").parquet(roundPath(iteration))
     }
 
     // components: every node points at its root (min of its final star);

@@ -83,19 +83,10 @@ object DistributedLearn {
       val pairs: Dataset[LearnPair] = corpus.mapPartitions { it =>
         val m = bc.value
         it.flatMap { case (lineNo, line) =>
-          val rs: Seq[(String, VariantResult)] =
-            if (strict) m.findVariants(line, params).map(r => (line, r))
-            else
-              SearchEngine.findAllMatches(m, line, params).flatMap { mm =>
-                for {
-                  sel <- mm.selected
-                  vs <- mm.variants
-                  r <- vs.lift(sel)
-                } yield (mm.text, r)
-              }
-          rs.iterator.zipWithIndex.map { case ((input, r), seq) =>
-            LearnPair(lineNo, seq, input, r.vocabId, r.distScore,
-              exact = m.encode(input).contains(r.vocabId))
+          m.learnMatches(line, params, strict).iterator.zipWithIndex.map {
+            case ((input, r), seq) =>
+              LearnPair(lineNo, seq, input, r.vocabId, r.distScore,
+                exact = m.encode(input).contains(r.vocabId))
           }
         }
       }

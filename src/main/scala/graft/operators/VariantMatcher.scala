@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Kernels
 import graft.kernel._
 
 /** Result row of the variant matcher (one per (query, match)). */
@@ -32,19 +31,30 @@ final case class VariantMatch(
   *     columns by `LocalVariantModel.Wire`). This is what keeps verify-stage scaling
   *     efficiency near 1.0 — there is no shuffle to contend on.
   *
-  *  2. [[matchJoin]] — join plan for lexicons too large to broadcast:
-  *     each query is exploded to its target charcounts and joined to the
-  *     lexicon rows of each, keeping the rows that miss at most the
-  *     charcount's budget of its letters (the broadcast scan's rule,
-  *     [[AnaHash.missBudget]]); the survivors are DL-verified, grouped
-  *     per query and ranked by [[LocalVariantModel.scoreAndRank]], the
-  *     routine findVariants runs. Equivalent results (tested); shuffles
-  *     on the charcount join + one exchange on the query.
+  *  2. [[matchJoin]] — shuffled plan for lexicons too large to
+  *     broadcast: the lexicon is cut into one slice per charcount, and
+  *     each slice meets, in one task, the queries that have a miss budget
+  *     at its charcount ([[AnaHash.missBudget]]). The task builds the
+  *     slice's model once and runs findVariants' own nearest search and
+  *     gather on each query; the verified rows are grouped per query and
+  *     ranked by [[LocalVariantModel.scoreAndRank]], the routine
+  *     findVariants runs. Equivalent results (tested); shuffles the
+  *     lexicon and the query targets on the charcount, plus one exchange
+  *     on the query.
   *
   * Both preserve the reference's deterministic tie order: ascending
   * anagram value, then vocab insertion id (see SURVEY.md §2.5 R3/R4).
   */
 object VariantMatcher {
+
+  /** One verified (query, lexicon row) pair of [[matchJoin]], or a row
+    * with no lexicon row (`id`, `text`, `anavalue` and `dist` null) that
+    * marks a StopAtExactMatch query whose anagram group fails the edit
+    * bound.
+    */
+  final case class Verified(query: String, id: Option[Long], text: String,
+      anavalue: Array[Byte], dist: Distance, freq: Double, transparent: Boolean,
+      exact: Boolean)
 
   /** Build the local model (driver-side) from (text, freq) pairs. */
   def buildModel(
@@ -130,16 +140,19 @@ object VariantMatcher {
     (lex, edges)
   }
 
-  /** Strategy 2: declarative join plan. Same logical result as
+  /** Strategy 2: shuffled plan. Same logical result as
     * [[matchBroadcast]]; used when the lexicon cannot be broadcast.
     *
     * Plan sketch (SURVEY.md §2.4):
-    *   lexicon -> index(anavalue BINARY, cc INT, id, text, norm, freq)
-    *   queries -> explode(target charcounts (c, D(c)), |c - |f|| <= maxD)
-    *           -> join index on cc == c
-    *           -> misses(qnorm, norm) <= D(c)          (J1/J2)
-    *   -> DL verify (J4), keeping StopAtExactMatch's zero-miss rows at
-    *      c = |f| even beyond the edit bound
+    *   lexicon -> (id, text, freq, transparent), grouped by charcount c
+    *   queries -> distinct -> (c, query) for each c with a miss budget
+    *              D(c) >= 0, |c - |f|| <= maxD, grouped by c
+    *   -> cogroup on c: per slice, LocalVariantModel.ofTexts builds its
+    *      anagram index once, and per query nearInstances runs the
+    *      miss-count scan (J1/J2) and the DL verify (J4) -> (query, id,
+    *      text, anavalue, dist, freq, transparent, exact), where exact
+    *      marks StopAtExactMatch's anagram group at c = |f|, on a row of
+    *      its own when the group fails the edit bound
     *   -> left join each variant's edge array (edges ⋈ lexicon on ref_id,
     *      by edge_seq)
     *   -> group by query, rows sorted by (|anavalue|, anavalue, id)
@@ -169,75 +182,69 @@ object VariantMatcher {
       confusables: Seq[Confusable] = Seq.empty,
       confusablesBeforePruning: Boolean = false
   ): DataFrame = {
-    val weights = params.weights
+    import spark.implicits._
 
-    // --- index build (A1-A3): id = insertion order = file order; norm is
-    // the normalized form's key, so its length is the charcount ---
-    val K = new Kernels(alphabet)
-    val anaUdf = udf((norm: String) => AnaHash.toBytes(AnaHash.valueOf(norm, alphabet.size)))
-    // insertion id: the reference's vocab id (file order) — pass an
-    // explicit `id` column for exact tie parity; monotonically_increasing_id
-    // preserves per-partition file order otherwise (adequate for dedup use)
+    // --- lexicon (A1-A3): insertion id = the reference's vocab id (file
+    // order) — pass an explicit `id` column for exact tie parity;
+    // monotonically_increasing_id preserves per-partition file order
+    // otherwise (adequate for dedup use) ---
     val lexWithId =
       if (lexicon.columns.contains("id")) lexicon
       else lexicon.withColumn("id", monotonically_increasing_id())
-    val lex = lexWithId
-      .withColumn("norm", K.normKey(col("text")))
-      .withColumn("anavalue", anaUdf(col("norm")))
-      .withColumn("cc", length(col("norm")))
-      .withColumn("freq",
-        if (lexicon.columns.contains("freq")) coalesce(col("freq"), lit(1L))
-        else lit(1L))
-      .withColumn("transparent",
-        if (lexicon.columns.contains("transparent"))
-          coalesce(col("transparent"), lit(false))
-        else lit(false))
+    val lex = lexWithId.select(col("id").cast("long").as("id"), col("text"),
+      (if (lexicon.columns.contains("freq")) coalesce(col("freq"), lit(1L))
+       else lit(1L)).cast("double").as("freq"),
+      (if (lexicon.columns.contains("transparent")) coalesce(col("transparent"), lit(false))
+       else lit(false)).as("transparent"))
 
-    // --- candidates (J1/J2): each query joins the lexicon rows of its
-    // target charcounts c, keeping those that miss at most D(c) of its
-    // letters (AnaHash.missBudget, the rule the broadcast scan uses) ---
-    val budgetsUdf = udf { (qnorm: String) =>
-      val f = qnorm.length
-      val maxD = math.max(0, params.maxAnagramDistance
-        .resolve(f, DistanceThreshold.MaxAnagramDistance))
-      (f - maxD to f + maxD).map(c => (c, AnaHash.missBudget(c, f, maxD))).filter(_._2 >= 0)
-    }
-    val missesUdf = udf((qnorm: String, norm: String) => AnaHash.misses(qnorm, norm, alphabet.size))
-    val q0 = queries.select(col(queryCol).cast("string").as("query")).distinct()
-      .withColumn("qnorm", K.normKey(col("query")))
-      .filter(length(col("qnorm")) > 0)
-    val joined = q0
-      .select(col("query"), col("qnorm"), explode(budgetsUdf(col("qnorm"))).as("b"))
-      .select(col("query"), col("qnorm"), col("b._1").as("cc"), col("b._2").as("budget"))
-      .join(lex, Seq("cc"))
-      .withColumn("misses", missesUdf(col("qnorm"), col("norm")))
-      .filter(col("misses") <= col("budget"))
-    // StopAtExactMatch: a query with an anagram in the lexicon (zero
-    // misses at its own charcount) keeps that anagram group alone; the
-    // flag rides to the per-query ranking, so an anagram beyond the edit
-    // bound still marks its query
-    val exact = params.stopCriterion match {
-      case StopCriterion.StopAtExactMatch =>
-        col("misses") === 0 && col("cc") === length(col("qnorm"))
-      case StopCriterion.Exhaustive => lit(false)
-    }
-
-    // --- verify (J4): the distance features within the edit bound.
-    // Marked nondeterministic so the optimizer keeps the null filter
-    // above the projection that computes them: as a deterministic UDF the
-    // filter was pushed into the charcount join's condition and the
-    // features ran twice per surviving row ---
-    val distUdf = udf {
-      (qnorm: String, q: String, cnorm: String, ctext: String) =>
-        val maxEdit = params.maxEditDistance
-          .resolve(qnorm.length, DistanceThreshold.MaxEditDistance)
-        val sameCase = Scoring.sameCase(Scoring.caseClass(q), Scoring.caseClass(ctext), weights)
-        Scoring.distanceFeatures(qnorm, cnorm, sameCase, maxEdit, weights)
-    }.asNondeterministic()
-    val verified = joined
-      .withColumn("exact", exact)
-      .withColumn("dist", distUdf(col("qnorm"), col("query"), col("norm"), col("text")))
-      .filter(col("dist").isNotNull || col("exact"))
+    // --- candidates and verify (J1/J2, J4): the lexicon rows of one
+    // charcount c are one slice, and the queries with a miss budget at c
+    // (AnaHash.missBudget) meet it in one task, which builds the slice's
+    // model once and runs findVariants' own nearest search and gather
+    // (LocalVariantModel.nearInstances) for each of them ---
+    val slices = lex.filter(col("text").isNotNull)
+      .as[(Long, String, Double, Boolean)]
+      .map { case (id, text, freq, transparent) =>
+        (alphabet.normKey(text).length, id, text, freq, transparent)
+      }
+      .groupBy("_1").as[Int, (Int, Long, String, Double, Boolean)]
+    // the distinct (c, query) pairs, deduplicated within the partitioning
+    // on c that the cogroup reads, so the queries shuffle once
+    val targets = queries.select(col(queryCol).cast("string").as("query"))
+      .filter(col("query").isNotNull).as[String]
+      .flatMap { q =>
+        val f = alphabet.normKey(q).length
+        val maxD = math.max(0, params.maxAnagramDistance
+          .resolve(f, DistanceThreshold.MaxAnagramDistance))
+        if (f == 0) Nil
+        else (f - maxD to f + maxD).filter(AnaHash.missBudget(_, f, maxD) >= 0).map(c => (c, q))
+      }
+      .repartition(col("_1")).distinct()
+      .groupBy("_1").as[Int, (Int, String)]
+    val stop = params.stopCriterion == StopCriterion.StopAtExactMatch
+    val verified = slices.cogroup(targets) { (c, rowIt, qs) =>
+      if (!qs.hasNext) Iterator.empty
+      else {
+        val rows = rowIt.toArray
+        val slice = LocalVariantModel.ofTexts(alphabet, params.weights, rows.map(_._3))
+        qs.flatMap { case (_, q) =>
+          val key = alphabet.normKey(q)
+          // StopAtExactMatch: a query with an anagram in the lexicon (in
+          // the slice at c = |f|) keeps that anagram group alone; the flag
+          // rides to the per-query ranking, on a row of its own when the
+          // whole group fails the edit bound
+          val exact = stop && c == key.length && slice.anagramInstances(q).nonEmpty
+          val found = slice.nearInstances(key, q, params).map { case (id, d) =>
+            val (_, lexId, text, freq, transparent) = rows(id.toInt)
+            val anavalue = AnaHash.toBytes(AnaHash.valueOf(slice.entry(id).norm, alphabet.size))
+            Verified(q, Some(lexId), text, anavalue, d, freq, transparent, exact)
+          }
+          if (exact && found.isEmpty) Iterator(Verified(q, None, null, null, null, 0.0,
+            transparent = false, exact = true))
+          else found.iterator
+        }
+      }
+    }.toDF()
 
     // --- each verified variant's outgoing edges (J5), in insertion order
     // (`edge_seq`), with the target's text and frequency ---
@@ -275,7 +282,7 @@ object VariantMatcher {
       }
       val textOf = LocalVariantModel.texts(candidates)
       LocalVariantModel.scoreAndRank(candidates, alphabet.normKey(query).length, query, params,
-        weights, confList, confusablesBeforePruning)
+        params.weights, confList, confusablesBeforePruning)
         .map(r => (textOf(r.vocabId), r.distScore, r.freqScore))
     }
     withEdges

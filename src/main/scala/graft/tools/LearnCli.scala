@@ -58,14 +58,8 @@ object LearnCli {
       // same model, same convergence loop — iterations are Spark jobs
       // (graft.operators.DistributedLearn); line numbers carry corpus
       // order through the shuffle
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.ui.enabled", "false")
-        .appName("graft-learn")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.spark.Sessions.local(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-learn")
       import spark.implicits._
       val corpusDs = corpus.zipWithIndex
         .map { case (t, n) => (n.toLong, t) }

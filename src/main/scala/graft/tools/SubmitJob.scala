@@ -25,8 +25,11 @@ import graft.operators.{ClipDedup, DedupConfig}
   * No master/parallelism is set here — spark-submit owns cluster sizing,
   * which is how the N-vs-4N scaling protocol runs the SAME artifact at
   * two executor counts. Resumability: rerun with the same `<workDir>`;
-  * completed stages are read back (schema-validated), the CC loop seeds
-  * from its last persisted round when `spark.graft.checkpointDir` is set.
+  * a completed stage is read back when its fingerprint (the DedupConfig,
+  * alphabet, id width and input files it was stored under) matches, and
+  * recomputed otherwise. With `spark.graft.checkpointDir` set, the CC
+  * loop's per-round checkpoints are reliable, so an executor loss within
+  * a run replays from the last committed round; a rerun recomputes CC.
   */
 object SubmitJob {
   def main(args: Array[String]): Unit = {

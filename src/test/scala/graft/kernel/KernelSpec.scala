@@ -175,24 +175,6 @@ class KernelSpec extends AnyFunSuite {
 
   def fromBytes(b: Array[Byte]): BigInteger = new BigInteger(1, b)
 
-  test("misses counts the focus letters a value lacks, unknowns as one class") {
-    val a = Alphabet.simpleLatin
-    def key(s: String) = a.normKey(s)
-    assert(AnaHash.misses(key("tires"), key("rite"), a.size) == 1)
-    assert(AnaHash.misses(key("tires"), key("rites"), a.size) == 0)
-    assert(AnaHash.misses(key("aab"), key("abcc"), a.size) == 1)
-    assert(AnaHash.misses(key("a!?"), key("aß"), a.size) == 1)
-    val rng = new scala.util.Random(5L)
-    for (_ <- 1 to 500) {
-      val f = Vector.fill(rng.nextInt(10))(rng.nextInt(30))
-      val v = Vector.fill(rng.nextInt(10))(rng.nextInt(30))
-      val asKey = (cs: Vector[Int]) => cs.map(c => (c + 33).toChar).mkString
-      // the multiset difference, classes above 26 counted as 26
-      val unk = (cs: Vector[Int]) => cs.map(math.min(_, 26))
-      assert(AnaHash.misses(asKey(f), asKey(v), 26) == unk(f).diff(unk(v)).size, s"$f $v")
-    }
-  }
-
   // --- 03xx: normalization + distances (tests/main.rs:558-807) ---
 
   test("0301 normalize") {

@@ -168,6 +168,47 @@ class VariantMatcherSpec extends SparkSpecBase {
     }
   }
 
+  test("join strategy == local model when the exact anagram group fails the edit bound") {
+    val p = params.copy(stopCriterion = StopCriterion.StopAtExactMatch,
+      maxEditDistance = DistanceThreshold.Absolute(1))
+    val small = VariantMatcher.buildModel(Alphabet.test,
+      Seq("rites", "tires", "srie").map(w => (w, None)))
+    // sriet's anagrams rites and tires are more than one edit away, so it
+    // keeps nothing, not srie, which it keeps when it does not stop
+    assert(small.findVariants("sriet", p).isEmpty)
+    assert(small.findVariants("sriet", p.copy(stopCriterion = StopCriterion.Exhaustive))
+      .map(r => small.text(r.vocabId)) == Seq("srie"))
+    assertJoinParity(small, Seq("sriet", "srie", "tires"), p, "anagram beyond the edit bound")
+  }
+
+  test("join strategy pairs no query with a lexicon row in a join") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val (lex, generated) = graft.kernel.MatcherParity.inputs(1L)
+    val m = VariantMatcher.buildModel(Alphabet.simpleLatin, lex)
+    val qs = (generated.take(1000) ++ lex.takeRight(100).map(_._1) ++
+      graft.kernel.MatcherParity.edgeStrings).distinct
+    val maxD = 3
+    // filters stay above the joins, so a join's numOutputRows counts every
+    // pair it forms and not only those a pushed-down condition keeps
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, "org.apache.spark.sql.catalyst.optimizer.PushDownPredicates")
+    val out = try {
+      val df = VariantMatcher.matchJoin(spark, m.alphabet, VariantMatcher.modelFrames(spark, m)._1,
+        qs.toDF("query"), SearchParameters(maxAnagramDistance = DistanceThreshold.Absolute(maxD)))
+      df.collect()
+      df
+    } finally spark.conf.unset(excluded)
+    // the final plan of the run, its adaptive query stages included
+    val joinRows = new AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) { case j: BaseJoinExec =>
+        j.nodeName -> j.metrics("numOutputRows").value
+      }
+    val bound = qs.size.toLong * (2 * maxD + 1)
+    assert(joinRows.forall(_._2 <= bound), s"joins over $bound rows: $joinRows")
+  }
+
   test("huys parity through the distributed path") {
     import spark.implicits._
     val m = VariantMatcher.buildModel(Alphabet.test,
